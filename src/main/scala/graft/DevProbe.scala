@@ -55,60 +55,6 @@ object DevProbe {
       val (j2, s2) = snap()
       println(f"[devprobe] $name rep $r construct ${(t1 - t0) / 1e9}%.2f s (${j1 - j0} jobs/${s1 - s0} stages) count ${(t2 - t1) / 1e9}%.2f s (${j2 - j1} jobs/${s2 - s1} stages)")
     }
-
-    // cAssign strategy A/B at scale (dev-only; r16): wide 64-min-column
-    // argmin vs narrow-key + vec_id rejoin, nlist = 8, synthetic 250k
-    // 64-dim grid vectors. Justifies the nlist gate in Round11.cAssign.
-    if (sys.env.contains("GRAFT_PROBE_CASSIGN")) {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val n = sys.env.getOrElse("GRAFT_PROBE_CASSIGN_N", "250000").toLong
-      val nlist = 8
-      val vecs = spark.range(n).select(col("id").as("vec_id"),
-          expr("transform(sequence(1, 64), i -> pmod(xxhash64(id * 64 + i), 2000000) - 1000000)").as("v"))
-        .repartition(32).localCheckpoint()
-      val c0 = vecs.where(col("vec_id") < nlist)
-        .select(col("vec_id").as("j"), col("v").as("c")).localCheckpoint()
-      def cDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-        import graft.plans.DotProduct.{dot, norm2}
-        val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-        (norm2(ad) + norm2(bd) - lit(2.0) * dot(ad, bd)).cast("long")
-      }
-      val keyed = vecs.crossJoin(broadcast(c0.limit(nlist)))
-        .withColumn("key", cDist(col("v"), col("c")) * lit(nlist.toLong) + col("j"))
-      def wide: DataFrame = keyed.groupBy("vec_id")
-        .agg(min("key").as("key"),
-          (1 to 64).map(i => min(expr(s"element_at(v, $i)")).as(s"v$i")): _*)
-        .select(col("vec_id"), array((1 to 64).map(i => col(s"v$i")): _*).as("v"),
-          (col("key") % nlist).as("list_id"))
-      def rejoin: DataFrame = keyed.groupBy("vec_id").agg(min("key").as("key"))
-        .select(col("vec_id"), (col("key") % nlist).as("list_id"))
-        .join(vecs, Seq("vec_id")).select(col("vec_id"), col("v"), col("list_id"))
-      for (r <- 1 to reps; (nm, df) <- Seq("wide" -> wide, "rejoin" -> rejoin)) {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[devprobe] cassign.$nm rep $r n=$n ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    }
-
-    // q254 internals, phase by phase (dev-only diagnostics)
-    if (sys.env.contains("GRAFT_PROBE_Q254")) {
-      import org.apache.spark.sql.functions._
-      for (r <- 1 to reps) {
-        def t[A](label: String)(f: => A): A = {
-          val s0 = System.nanoTime()
-          val a = f
-          println(f"[devprobe]   q254.$label%-12s ${(System.nanoTime() - s0) / 1e9}%.2f s")
-          a
-        }
-        println(s"[devprobe] q254 phases rep $r")
-        val emb = Tables.embeddings(spark, sfDir)
-        val qvT = t("qvT.ckpt") { ops.Round11.quantized(emb).localCheckpoint() }
-        val ladder = t("ladder") { ops.Round10n.pqCodebooksK(emb, ops.Round15.kcLevels) }
-        val codesCk = t("codes.ckpt") { ladder._1.localCheckpoint() }
-        t("count") { codesCk.count() }
-      }
-    }
     spark.stop()
   }
 }

@@ -180,10 +180,12 @@ object PlanAudit {
           if !isPrimitive(f.dataType) => s"first(${f.dataType.simpleString.take(30)})"
         case f: org.apache.spark.sql.catalyst.expressions.aggregate.Last
           if !isPrimitive(f.dataType) => s"last(${f.dataType.simpleString.take(30)})"
-        case f: org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
-          if !isPrimitive(f.dataType) => s"max_by(${f.dataType.simpleString.take(30)})"
-        case f: org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
-          if !isPrimitive(f.dataType) => s"min_by(${f.dataType.simpleString.take(30)})"
+        // max_by/min_by buffer the ordering value too: a string or
+        // struct ORDERING key demotes the aggregate just as the value does
+        case f: org.apache.spark.sql.catalyst.expressions.aggregate.MaxMinBy
+          if !isPrimitive(f.dataType) || !isPrimitive(f.orderingExpr.dataType) =>
+          s"${f.prettyName}(${f.dataType.simpleString.take(30)}, " +
+            s"${f.orderingExpr.dataType.simpleString.take(30)})"
       }
     }.flatten
 
@@ -197,6 +199,14 @@ object PlanAudit {
          _: org.apache.spark.sql.types.MapType |
          org.apache.spark.sql.types.StringType => false
     case _ => true
+  }
+
+  /** Poll `q` every 50 ms until its size is equal on two consecutive
+    * polls, giving up after 5 s (the caller then audits what arrived). */
+  private def awaitStable(q: java.util.Collection[_]): Unit = {
+    def poll(): Int = { Thread.sleep(50); q.size }
+    var (prev, cur, polls) = (-1, poll(), 1)
+    while (cur != prev && polls < 100) { prev = cur; cur = poll(); polls += 1 }
   }
 
   /** Walk the EXECUTED plan including adaptive and reused wrappers —
@@ -247,9 +257,9 @@ object PlanAudit {
         // drain the DataFrame's OWN plan so AQE finalizes THIS plan (a
         // derived count() would plan a separate query — CLAUDE.md gotcha)
         df.toLocalIterator().forEachRemaining(_ => ())
-        // listener bus is async: give the checkpoint-job notifications a
-        // beat to land before reading the side-execution queue
-        Thread.sleep(150)
+        // listener bus is async: read the side-execution queue only once
+        // the checkpoint-job notifications stop landing
+        awaitStable(sideExec)
         import scala.jdk.CollectionConverters._
         val sideNodes = sideExec.asScala.toVector.flatMap(allNodes)
         val nodes = allNodes(df.queryExecution.executedPlan)

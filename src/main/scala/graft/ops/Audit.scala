@@ -93,7 +93,8 @@ object Audit {
           .select("doc_id", "lang", "text", "n_toks", "quality")
           .localCheckpoint()
         val qualCond = col("quality") >= 0.55 && col("n_toks") >= 10
-        val langCond = col("lang").isin("en", "de", "fr", "es", "zh")
+        val langs = Seq("en", "de", "fr", "es", "zh") // langIdx decodes this same Seq
+        val langCond = col("lang").isin(langs: _*)
         val langKept = scored.where(qualCond && langCond)
         // exact dedup: min doc_id per identical text. The lang of the
         // winning doc rides an ENCODED PRIMITIVE key — min(doc_id·8 +
@@ -105,7 +106,6 @@ object Audit {
         // caught it hiding inside this checkpoint job); the primitive
         // form is a hash aggregate with map-side combine, O(1)/row.
         // The count equals COUNT(DISTINCT text).
-        val langs = Seq("en", "de", "fr", "es", "zh") // langCond's exact domain
         val langIdx = langs.zipWithIndex
           .foldLeft(lit(7L)) { case (e, (l, i)) => when(col("lang") === l, i.toLong).otherwise(e) }
         val exact = langKept

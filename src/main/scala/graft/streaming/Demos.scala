@@ -783,46 +783,17 @@ object Demos {
     * a stream AND replays a batch directly to prove idempotence.
     */
   def s14SnapshotUpsert(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        upsertBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
-
-  /** Prune committed snapshot versions older than `batchId - 1` after a
-    * successful commit. Keeping exactly one predecessor preserves the
-    * replay contract (a re-executed batch N reads the highest version
-    * STRICTLY below N, which is N-1; the engine never replays batches
-    * before the last unacknowledged one), while bounding on-disk state to
-    * two versions instead of O(batches) — without this, the "state is
-    * bounded" claims of s14/s16/s21 held per-version but history grew
-    * forever. */
-  private def pruneVersions(
-      spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p))
-      fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(q => q.getName.startsWith("v=") &&
-          q.getName.stripPrefix("v=").toLong < batchId - 1)
-        .foreach(q => fs.delete(q, true))
-  }
+    VersionedSink.start(events, dir)(upsertBatch(spark, _, dir, _))
 
   /** One snapshot-merge step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def upsertBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
     val cols = Seq("user_id", "ts", "event_id", "event_type", "value").map(col)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     // the newest snapshot STRICTLY below this batch: a replay of batch N
     // must never read N's own (possibly uncommitted) output
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v").select(cols: _*)
       case None    => batch.select(cols: _*).limit(0)
     }
@@ -831,7 +802,7 @@ object Demos {
     base.unionByName(batch.select(cols: _*))
       .withColumn("rn", row_number().over(latest)).where(col("rn") === 1).drop("rn")
       .write.mode("overwrite").parquet(s"$dir/v=$batchId")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s16 — streaming corpus-drift monitor: the ingest-time twin of batch
@@ -848,18 +819,12 @@ object Demos {
     * L1 numerator and final double division).
     */
   def s16DriftMonitor(spark: SparkSession, docs: DataFrame, dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        driftBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(driftBatch(spark, _, dir, _))
 
   /** One drift-monitor step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def driftBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     // the micro-batch's sampled token-type count delta (q92's carve)
     val delta = batch
       .select((col("doc_id") % 2).as("half"),
@@ -869,12 +834,8 @@ object Demos {
       .groupBy("tok").agg(
         count(when(col("half") === 0, 1)).as("c_a"),
         count(when(col("half") === 1, 1)).as("c_b"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
       case None    => delta.limit(0)
     }
@@ -897,7 +858,7 @@ object Demos {
         (col("l1_num").cast("double") /
           (col("t_a").cast("double") * col("t_b").cast("double"))).as("l1"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/drift")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s17 — rolling-active-window claims: the streaming form of batch
@@ -1128,22 +1089,16 @@ object Demos {
     * under retries). State on disk is O(d·w + |probe users|) rows at any
     * stream size — the sketch IS the bounded state — and history is
     * bounded too: after each commit, versions older than the immediate
-    * predecessor are pruned (pruneVersions), so at most two live on disk.
+    * predecessor are pruned (VersionedSink.pruneVersions), so at most two live on disk.
     */
   def s21CmsMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        cmsBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(cmsBatch(spark, _, dir, _))
 
   /** One CMS-monitor step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def cmsBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
     val P = 104729L
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val rows = spark.range(0, 4).toDF("i")
     val ev = batch.select(col("user_id"))
     val deltaCounters = ev.crossJoin(rows)
@@ -1153,12 +1108,8 @@ object Demos {
       .groupBy("i", "bucket").agg(count(lit(1)).as("c"))
     val deltaExact = ev.where(col("user_id") % 97 === 0)
       .groupBy("user_id").agg(count(lit(1)).as("exact"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val (baseC, baseE) = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val (baseC, baseE) = prevVersions.lastOption match {
       case Some(v) => (spark.read.parquet(s"$dir/v=$v/counters"),
         spark.read.parquet(s"$dir/v=$v/exact"))
       case None => (deltaCounters.limit(0), deltaExact.limit(0))
@@ -1182,7 +1133,7 @@ object Demos {
       .select(col("user_id"), col("exact"), col("est"),
         (col("est") - col("exact")).as("overcount"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/audit")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s22 — streaming heavy-hitters monitor: the ingest-time twin of batch
@@ -1203,11 +1154,7 @@ object Demos {
   def s22HeavyHittersMonitor(
       spark: SparkSession, events: DataFrame, dir: String,
       buckets: Int = 16, m: Int = 5): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        hhBatch(spark, batch.toDF(), dir, batchId, buckets, m))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(hhBatch(spark, _, dir, _, buckets, m))
 
   /** One heavy-hitters merge step (factored out so the spec can replay a
     * batch with the same batchId and fold the same merge driver-side;
@@ -1216,17 +1163,11 @@ object Demos {
   private[graft] def hhBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long,
       buckets: Int = 16, m: Int = 5): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = batch
       .select(col("user_id"), (col("user_id") % buckets).as("bucket"))
       .groupBy("bucket", "user_id").agg(count(lit(1)).as("dn"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val (baseC, baseE) = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val (baseC, baseE) = prevVersions.lastOption match {
       case Some(v) => (spark.read.parquet(s"$dir/v=$v/counters"),
         spark.read.parquet(s"$dir/v=$v/err"))
       case None => (
@@ -1253,7 +1194,7 @@ object Demos {
       .agg(greatest(max("err0"),
         coalesce(max(when(col("rk") > m, col("est"))), lit(0L))).as("err"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/err")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s23 — streaming distribution-drift monitor: the ingest-time twin of
@@ -1272,29 +1213,19 @@ object Demos {
     * predecessor-only history (exactly-once under replays).
     */
   def s23DriftMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        valueDriftBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(valueDriftBatch(spark, _, dir, _))
 
   /** One drift-monitor step (factored out so the spec can replay a batch
     * with the same batchId and assert identical output). */
   private[graft] def valueDriftBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = batch
       .select(((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
         .cast("long")).as("v"))
       .withColumn("decile", expr("v DIV 5000"))
       .groupBy("decile").agg(count(lit(1)).as("n"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val (baseH, ref0) = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val (baseH, ref0) = prevVersions.lastOption match {
       case Some(v) => (spark.read.parquet(s"$dir/v=$v/hist"),
         spark.read.parquet(s"$dir/v=$v/ref"))
       case None => (delta.limit(0), delta) // first batch freezes the reference
@@ -1326,7 +1257,7 @@ object Demos {
         (col("cur_n").cast("double") / col("ct").cast("double")).as("cur_share"))
       .withColumn("drift", abs(col("ref_share") - col("cur_share")))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/audit")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s24 — streaming freshness monitor: the ingest-time twin of batch
@@ -1339,27 +1270,17 @@ object Demos {
     * predecessor-only history (exactly-once under replays).
     */
   def s24FreshnessMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        freshnessBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(freshnessBatch(spark, _, dir, _))
 
   /** One freshness-monitor step (factored out so the spec can replay a
     * batch with the same batchId and assert identical output). */
   private[graft] def freshnessBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = batch
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
       .groupBy("event_type").agg(count(lit(1)).as("n"), max("us").as("tmax"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/state")
       case None    => delta.limit(0)
     }
@@ -1373,7 +1294,7 @@ object Demos {
       .select(col("event_type"), col("n"), col("tmax"),
         (col("gmax") - col("tmax")).as("lag_us"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/audit")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s25 — streaming CDC apply: the ingest twin of batch q145's
@@ -1390,24 +1311,14 @@ object Demos {
     * predecessor-only history (exactly-once under replays).
     */
   def s25CdcApply(spark: SparkSession, changes: DataFrame, dir: String): StreamingQuery =
-    changes.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        cdcApplyBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(changes, dir)(cdcApplyBatch(spark, _, dir, _))
 
   /** One CDC-apply step (factored out so the spec can replay a batch with
     * the same batchId and assert identical output). */
   private[graft] def cdcApplyBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val cols = Seq("k", "seq", "op", "price", "status").map(col)
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
     // Deletes persist as TOMBSTONES (op='D' rows, price null, status
     // retained): q145's batch merge resolves a D→U key to the updated row
     // with the BASE's status, and only a tombstone carrying that status
@@ -1415,7 +1326,7 @@ object Demos {
     // compaction design — the live view is op != 'D'; production prunes
     // tombstones past the changelog's max-reorder horizon, so state is
     // O(live keys + recent deletes), never O(changes).
-    val base = prevVersions.sorted.lastOption match {
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v").select(cols: _*)
       case None    => batch.select(cols: _*).limit(0)
     }
@@ -1433,7 +1344,7 @@ object Demos {
         min_by(col("status"), when(col("status").isNotNull, col("seq"))).as("status"))
       .select(cols: _*)
       .write.mode("overwrite").parquet(s"$dir/v=$batchId")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s26 — streaming per-source novelty monitor: the ingest twin of batch
@@ -1452,25 +1363,15 @@ object Demos {
     * catch one).
     */
   def s26NoveltyMonitor(spark: SparkSession, docs: DataFrame, dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        noveltyBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(noveltyBatch(spark, _, dir, _))
 
   /** One novelty-monitor step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def noveltyBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val withH = batch.select(col("doc_id"), col("source"), xxhash64(col("text")).as("h"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val (seen, counts0) = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val (seen, counts0) = prevVersions.lastOption match {
       case Some(v) => (
         spark.read.parquet(s"$dir/v=$v/seen"),
         spark.read.parquet(s"$dir/v=$v/counts"))
@@ -1493,7 +1394,7 @@ object Demos {
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
     seen.unionByName(withH.select("h")).distinct()
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/seen")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s27 — streaming burst monitor: the ingest twin of batch q169. Each
@@ -1507,27 +1408,17 @@ object Demos {
     * under retries; once the whole stream is in, the published bursts
     * equal batch q169 EXACTLY. */
   def s27BurstMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        burstBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(burstBatch(spark, _, dir, _))
 
   /** One burst-monitor step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def burstBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = graft.Tables.normalizeTs(batch)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
       .agg(count(lit(1)).as("cnt"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
       case None    => delta.limit(0)
     }
@@ -1545,7 +1436,7 @@ object Demos {
         col("cnt") * col("trail_n") * 2 > col("trail_sum") * 3)
       .select("event_type", "hour", "cnt", "trail_sum", "trail_n")
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/bursts")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s28 — streaming n-gram decontamination monitor: the ingest twin of
@@ -1562,18 +1453,12 @@ object Demos {
     * in, the snapshot equals batch q188's counts EXACTLY. */
   def s28DecontamMonitor(spark: SparkSession, docs: DataFrame,
       benchGrams: DataFrame, dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        decontamBatch(spark, batch.toDF(), benchGrams, dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(decontamBatch(spark, _, benchGrams, dir, _))
 
   /** One decontamination step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def decontamBatch(spark: SparkSession, batch: DataFrame,
       benchGrams: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val cand = graft.ops.Round10i.docToks(batch)
       .where(col("doc_id") % 50 =!= 0)
     val hit = graft.ops.Round10i.docGrams(batch)
@@ -1585,12 +1470,8 @@ object Demos {
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum("contam"), lit(0L)).as("n_contaminated"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
       case None    => delta.limit(0)
     }
@@ -1598,7 +1479,7 @@ object Demos {
       .groupBy("lang")
       .agg(sum("n_docs").as("n_docs"), sum("n_contaminated").as("n_contaminated"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s29 — streaming padding-waste monitor: the ingest twin of batch
@@ -1614,25 +1495,15 @@ object Demos {
     * once the whole corpus is in, the snapshot equals batch q191 EXACTLY. */
   def s29PaddingMonitor(spark: SparkSession, docs: DataFrame,
       dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        paddingBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(paddingBatch(spark, _, dir, _))
 
   /** One padding-waste step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def paddingBatch(spark: SparkSession, batch: DataFrame,
       dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = graft.ops.Round10j.padBucketCounts(batch)
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
       case None    => delta.limit(0)
     }
@@ -1641,7 +1512,7 @@ object Demos {
       .agg(sum("n_docs").as("n_docs"), sum("sum_tok").as("sum_tok"),
         max("max_len").as("max_len"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s30 — streaming redaction monitor: the ingest twin of batch q200.
@@ -1656,18 +1527,12 @@ object Demos {
     * protocol = s14's versioned overwrite ⇒ exactly-once under retries. */
   def s30RedactionMonitor(spark: SparkSession, events: DataFrame,
       dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        redactionBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(redactionBatch(spark, _, dir, _))
 
   /** One redaction step (factored out so the spec can replay a batch
     * with the same batchId and assert byte-identical output). */
   private[graft] def redactionBatch(spark: SparkSession, batch: DataFrame,
       dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = batch
       .select(col("event_type"), col("props"),
         regexp_replace(col("props"), "[0-9]+", "#").as("red"))
@@ -1679,12 +1544,8 @@ object Demos {
         sum((length(col("props")) - length(col("red"))).cast("long") +
           size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long"))
           .as("n_chars_masked"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
       case None    => delta.limit(0)
     }
@@ -1693,7 +1554,7 @@ object Demos {
       .agg(sum("n_events").as("n_events"), sum("n_hit").as("n_hit"),
         sum("n_runs").as("n_runs"), sum("n_chars_masked").as("n_chars_masked"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s31 — streaming data-quality monitor: the ingest twin of batch
@@ -1710,18 +1571,12 @@ object Demos {
     * overwrite ⇒ exactly-once under retries. */
   def s31DqMonitor(spark: SparkSession, orders: DataFrame,
       customerDim: DataFrame, dir: String): StreamingQuery =
-    orders.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        dqBatch(spark, batch.toDF(), customerDim, dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(orders, dir)(dqBatch(spark, _, customerDim, dir, _))
 
   /** One DQ step (factored out so the spec can replay a batch with the
     * same batchId and assert byte-identical output). */
   private[graft] def dqBatch(spark: SparkSession, batch: DataFrame,
       customerDim: DataFrame, dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val agg = batch.agg(
       count(lit(1)).as("n"),
       sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L))
@@ -1738,12 +1593,8 @@ object Demos {
         |  'orders_status_accepted', n, v_status,
         |  'orders_date_range', n, v_date)
         |AS (`constraint`, n_checked, n_violations)""".stripMargin)
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
       case None    => delta.limit(0)
     }
@@ -1752,7 +1603,7 @@ object Demos {
       .agg(sum("n_checked").as("n_checked"),
         sum("n_violations").as("n_violations"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s32 — streaming transition-matrix maintenance: the ingest twin of
@@ -1770,18 +1621,12 @@ object Demos {
     * exact-integer power iteration (spec-proven equal). */
   def s32TransitionMonitor(spark: SparkSession, events: DataFrame,
       dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        transitionBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(transitionBatch(spark, _, dir, _))
 
   /** One transition-matrix step (factored out so the spec can replay a
     * batch with the same batchId and assert byte-identical output). */
   private[graft] def transitionBatch(spark: SparkSession, batch: DataFrame,
       dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val wAsc = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val wDesc = Window.partitionBy("user_id")
       .orderBy(col("ts").desc, col("event_id").desc)
@@ -1798,12 +1643,8 @@ object Demos {
       .select(col("user_id"), col("event_type").as("first_type"))
     val lastE = marked.where(col("rnd") === 1)
       .select("user_id", "ts", "event_id", "event_type")
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val (baseC, baseL) = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val (baseC, baseL) = prevVersions.lastOption match {
       case Some(v) => (spark.read.parquet(s"$dir/v=$v/counts"),
         spark.read.parquet(s"$dir/v=$v/last"))
       case None => (intra.limit(0), lastE.limit(0))
@@ -1821,7 +1662,7 @@ object Demos {
       .withColumn("rk", row_number().over(wDesc))
       .where(col("rk") === 1).drop("rk")
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/last")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s33 — streaming seasonal-profile maintenance: the ingest twin of
@@ -1834,18 +1675,12 @@ object Demos {
     * Commit protocol = s14's versioned overwrite ⇒ exactly-once. */
   def s33SeasonalMonitor(spark: SparkSession, events: DataFrame,
       dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        seasonalBatch(spark, batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(events, dir)(seasonalBatch(spark, _, dir, _))
 
   /** One seasonal step (factored out so the spec can replay a batch with
     * the same batchId and assert byte-identical output). */
   private[graft] def seasonalBatch(spark: SparkSession, batch: DataFrame,
       dir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val delta = batch.select(
         expr("(datediff(CAST(ts AS DATE), DATE '1970-01-01') + 4) % 7")
           .cast("long").as("dow"),
@@ -1854,12 +1689,8 @@ object Demos {
       .groupBy("dow", "hr")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(graft.Det.D)).as("sum_v"))
-    val prevVersions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-    val base = prevVersions.sorted.lastOption match {
+    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
+    val base = prevVersions.lastOption match {
       case Some(v) => spark.read.parquet(s"$dir/v=$v/cells")
       case None    => delta.limit(0)
     }
@@ -1867,7 +1698,7 @@ object Demos {
       .groupBy("dow", "hr")
       .agg(sum("n").as("n"), sum("sum_v").cast(graft.Det.D).as("sum_v"))
       .write.mode("overwrite").parquet(s"$dir/v=$batchId/cells")
-    pruneVersions(spark, dir, batchId)
+    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
   }
 
   /** s34 — streaming vector ingest: the ANN family's ingest twin (the q75
@@ -1895,11 +1726,7 @@ object Demos {
     * locks equality, replay idempotence, and the bounded-state claim). */
   def s34VectorIngest(spark: SparkSession, vectors: DataFrame,
       centroids: DataFrame, dir: String): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        vectorIngestBatch(batch.toDF(), centroids, dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(vectors, dir)(vectorIngestBatch(_, centroids, dir, _))
 
   /** One ingest step (factored out so the spec can replay a batch with the
     * same batchId and assert byte-identical output). */
@@ -1952,11 +1779,7 @@ object Demos {
   def s35SemanticDedupIngest(spark: SparkSession, vectors: DataFrame,
       centroids: DataFrame, nlist: Int, dir: String,
       tau: Double = 0.8): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        semanticDedupBatch(batch.toDF(), centroids, nlist, dir, batchId, tau))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(vectors, dir)(semanticDedupBatch(_, centroids, nlist, dir, _, tau))
 
   /** One dedup-admission step (factored out so the spec can replay a
     * batch with the same batchId and assert byte-identical output). */
@@ -1972,23 +1795,13 @@ object Demos {
       .withColumn("n2", n2C(col("vd")))
       .localCheckpoint()
     val keptDir = s"$dir/kept"
-    // resolve the FS from the path's OWN scheme, not the default FS — with
-    // a local default and an s3a://…/hdfs://… dir, FileSystem.get would
-    // list the wrong filesystem, `prev` would come back empty, and a
-    // replayed batch would silently re-admit everything
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // committed prefix = partitions b < batchId ONLY (the s14 version
     // rule): on restart the engine replays batch N while b=N already
     // exists on disk — reading it would compare the batch against itself
-    val prev =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(keptDir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(keptDir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("b="))
-        .map(_.stripPrefix("b=").toLong).filter(_ < batchId)
+    val prev = VersionedSink.committed(spark, keptDir, "b=", batchId)
     val committed =
       if (prev.isEmpty) asg.limit(0)
-      else spark.read.parquet(prev.sorted.map(p => s"$keptDir/b=$p"): _*)
+      else spark.read.parquet(prev.map(p => s"$keptDir/b=$p"): _*)
     // cluster pushdown: only the ≤nlist clusters present in this batch
     val clusters = asg.select("list_id").distinct()
     val commIn = committed.join(broadcast(clusters), Seq("list_id"))
@@ -2050,11 +1863,7 @@ object Demos {
     * first-level screen). stateOperators empty, spec-locked. */
   def s36CdcDedupIngest(spark: SparkSession, docs: DataFrame,
       dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        cdcDedupBatch(batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(cdcDedupBatch(_, dir, _))
 
   /** One CDC-dedup admission step (factored out so the spec can replay a
     * batch with the same batchId and assert byte-identical output). */
@@ -2067,22 +1876,12 @@ object Demos {
       .withColumn("ck", md5(col("ctext")))
       .localCheckpoint()
     val chunkDir = s"$dir/chunks"
-    // resolve the FS from the path's OWN scheme, not the default FS — with
-    // a local default and an s3a://…/hdfs://… dir, FileSystem.get would
-    // list the wrong filesystem, `prev` would come back empty, and a
-    // replayed batch would silently re-admit everything
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // committed prefix = partitions b < batchId ONLY (the s14 version
     // rule): a replayed batch must not compare against its own output
-    val prev =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(chunkDir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(chunkDir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("b="))
-        .map(_.stripPrefix("b=").toLong).filter(_ < batchId)
+    val prev = VersionedSink.committed(spark, chunkDir, "b=", batchId)
     val committed =
       if (prev.isEmpty) chunks.select(col("ck")).limit(0)
-      else spark.read.parquet(prev.sorted.map(p => s"$chunkDir/b=$p"): _*)
+      else spark.read.parquet(prev.map(p => s"$chunkDir/b=$p"): _*)
         .select(col("ck"))
     // batch-local admission order: first occurrence per key by
     // (doc_id, chunk_id); later occurrences are duplicates even if novel
@@ -2128,11 +1927,7 @@ object Demos {
     * is one semi-join — all hash shuffles, no windows wider than a doc. */
   def s37ChunkStoreIngest(spark: SparkSession, docs: DataFrame,
       dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        chunkStoreBatch(batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(chunkStoreBatch(_, dir, _))
 
   /** One chunk-store admission step (factored so the spec can replay a
     * batch with the same batchId and assert content-identical output). */
@@ -2145,20 +1940,10 @@ object Demos {
     chunks.select("doc_id", "source", "chunk_id", "ck", "ctoks")
       .write.mode("overwrite").parquet(s"$dir/refs/b=$batchId")
     val storeDir = s"$dir/store"
-    // resolve the FS from the path's OWN scheme, not the default FS — with
-    // a local default and an s3a://…/hdfs://… dir, FileSystem.get would
-    // list the wrong filesystem, `prev` would come back empty, and a
-    // replayed batch would silently re-admit everything
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(storeDir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(storeDir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("b="))
-        .map(_.stripPrefix("b=").toLong).filter(_ < batchId)
+    val prev = VersionedSink.committed(spark, storeDir, "b=", batchId)
     val committed =
       if (prev.isEmpty) chunks.select(col("ck")).limit(0)
-      else spark.read.parquet(prev.sorted.map(p => s"$storeDir/b=$p"): _*)
+      else spark.read.parquet(prev.map(p => s"$storeDir/b=$p"): _*)
         .select(col("ck"))
     val w = Window.partitionBy("ck").orderBy("doc_id", "chunk_id")
     chunks.withColumn("rnk", row_number().over(w))
@@ -2182,7 +1967,9 @@ object Demos {
     * equality join → min id): no struct min/max (the SortAggregate
     * trap), no stream state — cross-batch knowledge is the committed
     * snapshot, keeper-count-sized (≤ |clusters| rows, broadcast-scale at
-    * any corpus size).
+    * any corpus size). History is bounded too: each snapshot folds every
+    * earlier one, so after a commit snapshots older than the predecessor
+    * are pruned (`VersionedSink.pruneVersions`) — at most two on disk.
     *
     * LATEST-VERSION-WINS (round 15 — unified with s37's chunk-store
     * rule): the snapshot carries each keeper's admission batch as `ver`,
@@ -2202,11 +1989,7 @@ object Demos {
     * idempotence. */
   def s38QualityKeeperIngest(spark: SparkSession, docs: DataFrame,
       dir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-        qualityKeeperBatch(batch.toDF(), dir, batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+    VersionedSink.start(docs, dir)(qualityKeeperBatch(_, dir, _))
 
   /** One keeper-admission step (factored so the spec can replay a batch
     * with the same batchId and assert content-identical output). */
@@ -2217,23 +2000,13 @@ object Demos {
       .select(col("lang"), col("source"), col("doc_id"), col("quality"),
         lit(batchId).as("ver"))
     val kdir = s"$dir/keepers"
-    // resolve the FS from the path's OWN scheme, not the default FS — with
-    // a local default and an s3a://…/hdfs://… dir, FileSystem.get would
-    // list the wrong filesystem, `prev` would come back empty, and a
-    // replayed batch would silently re-admit everything
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // latest committed snapshot ONLY (it already folds everything earlier
     // — the s14 version rule; a replayed batch must not see its own write)
-    val prev =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(kdir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(kdir)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("b="))
-        .map(_.stripPrefix("b=").toLong).filter(_ < batchId)
-    val all0 = (if (prev.isEmpty) cand.limit(0)
-      else spark.read.parquet(s"$kdir/b=${prev.max}")
-        .select("lang", "source", "doc_id", "quality", "ver"))
-      .unionAll(cand)
+    val all0 = (VersionedSink.committed(spark, kdir, "b=", batchId).lastOption match {
+      case Some(v) => spark.read.parquet(s"$kdir/b=$v")
+        .select("lang", "source", "doc_id", "quality", "ver")
+      case None => cand.limit(0)
+    }).unionAll(cand)
     // latest-version-wins per doc BEFORE the argmax (s37's rule): a
     // re-ingested edit replaces the committed row — demotion included.
     // Two-pass primitive form, same as the argmax below (no struct
@@ -2254,20 +2027,13 @@ object Demos {
       .join(all.select(col("doc_id"), col("ver")), Seq("doc_id"))
       .select("lang", "source", "doc_id", "quality", "ver")
       .write.mode("overwrite").parquet(s"$kdir/b=$batchId")
+    VersionedSink.pruneVersions(spark, kdir, "b=", batchId)
   }
 
   /** The verdict view of an s38 directory: the latest keeper snapshot. */
   private[graft] def keeperView(spark: SparkSession, dir: String): DataFrame = {
     val kdir = s"$dir/keepers"
-    // resolve the FS from the path's OWN scheme, not the default FS — with
-    // a local default and an s3a://…/hdfs://… dir, FileSystem.get would
-    // list the wrong filesystem, `prev` would come back empty, and a
-    // replayed batch would silently re-admit everything
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vmax = fs.listStatus(new org.apache.hadoop.fs.Path(kdir)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("b="))
-      .map(_.stripPrefix("b=").toLong).max
+    val vmax = VersionedSink.committed(spark, kdir, "b=", Long.MaxValue).max
     spark.read.parquet(s"$kdir/b=$vmax")
   }
 

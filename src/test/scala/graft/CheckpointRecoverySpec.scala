@@ -49,12 +49,12 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
-  private def addFile(name: String, events: Seq[streaming.Event]): Unit = {
+  private def addFile(name: String, events: Seq[streaming.Event], in: String = "in"): Unit = {
     val tmp = Files.createTempDirectory("graft_ckpt_w")
     events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp.resolve("o").toString)
     val part = tmp.resolve("o").toFile.listFiles()
       .find(_.getName.endsWith(".parquet")).get
-    Files.copy(part.toPath, root.resolve("in").resolve(name),
+    Files.copy(part.toPath, root.resolve(in).resolve(name),
       StandardCopyOption.REPLACE_EXISTING)
   }
 
@@ -117,14 +117,6 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("transformWithState restarted from checkpoint: open session + timer survive") {
     SharedSpark.withRocksDb {
       Files.createDirectories(root.resolve("in2"))
-      def addFile2(name: String, events: Seq[streaming.Event]): Unit = {
-        val tmp = Files.createTempDirectory("graft_ckpt_w2")
-        events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp.resolve("o").toString)
-        val part = tmp.resolve("o").toFile.listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        Files.copy(part.toPath, root.resolve("in2").resolve(name),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
       def startS12(): StreamingQuery = {
         val stream = spark.readStream
           .schema(Seq.empty[streaming.Event].toDF().schema)
@@ -140,7 +132,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
         streaming.Event(id, ts(minute), uid, "view", v, "{}")
 
       // phase 1: user 1's session is OPEN (events at 0 and 5), user 2's too
-      addFile2("a.parquet", Seq(evV(1, 0, 1, 1.0), evV(2, 5, 1, 2.0), evV(3, 3, 2, 5.0)))
+      addFile("a.parquet", Seq(evV(1, 0, 1, 1.0), evV(2, 5, 1, 2.0), evV(3, 3, 2, 5.0)), "in2")
       val q1 = startS12()
       try q1.processAllAvailable() finally q1.stop()
       // nothing may be committed yet — both sessions live ONLY in RocksDB state
@@ -150,7 +142,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
       // phase 2: restart; an in-gap event EXTENDS the recovered session,
       // then a pusher closes everything
-      addFile2("b.parquet", Seq(evV(4, 10, 1, 3.0), evV(5, 300, 9, 0.0)))
+      addFile("b.parquet", Seq(evV(4, 10, 1, 3.0), evV(5, 300, 9, 0.0)), "in2")
       val q2 = startS12()
       try q2.processAllAvailable() finally q2.stop()
       val sessions = spark.read.parquet(out2).collect()
@@ -164,5 +156,48 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
         s"user 2's session lost across restart: $sessions")
       assert(!sessions.contains(9L), "the pusher's own session must still be open")
     }
+  }
+
+  test("s14 versioned sink killed mid-stream and restarted from _ckpt: snapshot == one-shot upsert") {
+    Files.createDirectories(root.resolve("in3"))
+    val dir = root.resolve("s14").toString
+    def startS14(): StreamingQuery = streaming.Demos.s14SnapshotUpsert(spark,
+      spark.readStream
+        .schema(Seq.empty[streaming.Event].toDF().schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1") // one file per batch
+        .parquet(root.resolve("in3").toString),
+      dir)
+    def versions: Set[String] =
+      new java.io.File(dir).list().filter(_.startsWith("v=")).toSet
+    // users 1-3 get newer rows in later files; user 4 only appears late
+    val files = Seq(
+      Seq(ev(1, 0, 1, "view"), ev(2, 1, 2, "view"), ev(3, 2, 3, "click")),
+      Seq(ev(4, 10, 1, "click"), ev(5, 11, 2, "buy")),
+      Seq(ev(6, 20, 3, "view"), ev(7, 5, 1, "view")), // user 1's row here is OLDER
+      Seq(ev(8, 30, 4, "buy"), ev(9, 31, 2, "view")))
+
+    // ---- phase 1: batches 0-1, then a kill after batch 1's sink write --
+    files.take(2).zipWithIndex.foreach { case (f, i) => addFile(s"f$i.parquet", f, "in3") }
+    val q1 = startS14()
+    try q1.processAllAvailable() finally q1.stop()
+    assert(versions == Set("v=0", "v=1"))
+    // dropping batch 1's commit marker is a crash between the sink's
+    // overwrite of v=1 and the engine's commit: the restart must replay
+    // batch 1 through the wrapper's checkpoint against v=0 only
+    assert(new java.io.File(s"$dir/_ckpt/commits/1").delete())
+    new java.io.File(s"$dir/_ckpt/commits/.1.crc").delete()
+
+    // ---- phase 2: restart with more files ------------------------------
+    files.drop(2).zipWithIndex.foreach { case (f, i) => addFile(s"f${i + 2}.parquet", f, "in3") }
+    val q2 = startS14()
+    try q2.processAllAvailable() finally q2.stop()
+
+    def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val oneShot = root.resolve("s14_oneshot").toString
+    streaming.Demos.upsertBatch(spark, files.flatten.toDF(), oneShot, 0L)
+    assert(versions == Set("v=2", "v=3"), s"history not pruned to two versions: $versions")
+    assert(sorted(spark.read.parquet(s"$dir/v=3")) == sorted(spark.read.parquet(s"$oneShot/v=0")),
+      "restarted stream's snapshot diverged from the one-shot upsert")
   }
 }

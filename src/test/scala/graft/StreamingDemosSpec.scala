@@ -656,6 +656,10 @@ class StreamingDemosSpec extends AnyFunSuite {
     val (dir2, twoWay) = run(Seq(docs.take(20), docs.drop(20)))
     assert(oneShot == expected, "1-batch snapshot diverged from the JVM argmax fold")
     assert(twoWay == expected, "2-batch snapshot diverged — admission is not batching-invariant")
+    // keeper history is pruned: only the latest snapshot and its predecessor survive
+    def keeperSnapshots(d: String): Set[String] =
+      new java.io.File(s"$d/keepers").list().filter(_.startsWith("b=")).toSet
+    assert(keeperSnapshots(dir2) == Set("b=0", "b=1"))
 
     // a later better member REPLACES the committed keeper: re-ingest the
     // worst (lang, source) member boosted past its keeper (distinct-token
@@ -689,6 +693,7 @@ class StreamingDemosSpec extends AnyFunSuite {
         Seq.fill(100)("the").mkString(" "))
       assert(quality(worse.text) < quality(boosted.text))
       Demos.qualityKeeperBatch(Seq(worse).toDF(), dirB, 2L)
+      assert(keeperSnapshots(dirB) == Set("b=1", "b=2"), "keeper history not pruned")
       val afterDemote = Demos.keeperView(spark, dirB).collect()
         .map(r => (r.getAs[String]("lang"), r.getAs[String]("source")) ->
           (r.getAs[Long]("doc_id"), r.getAs[Double]("quality"))).toMap
