@@ -5,13 +5,16 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
   Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
   SupportsPushDownFilters, SupportsPushDownRequiredColumns
 }
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{
+  MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl
+}
 import org.apache.spark.sql.sources.{
   Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual
 }
@@ -65,10 +68,12 @@ object GraftGen {
 
   val langs: Array[String] = Array("en", "de", "fr", "es", "zh")
 
+  type Row = (Long, String, Long, Double)
+
   /** The generator contract, shared with the oracle: q84's DuckDB SQL
     * computes exactly these expressions over generate_series. `score` is
     * a raw int/int IEEE quotient (identical in both engines). */
-  def expected(id: Long): (Long, String, Long, Double) =
+  def expected(id: Long): Row =
     (id, langs((id % 5).toInt), 20L + (id * 37L) % 300L, (id % 97L) / 97.0)
 }
 
@@ -118,8 +123,7 @@ private[sources] class GenScan(
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GenMicroBatchStream(rows, partitions, lo, hi, required, rowsPerBatch,
-      checkpointLocation)
+    new GenMicroBatchStream(rows, partitions, lo, hi, required, rowsPerBatch)
   override def description(): String =
     s"graft-gen rows=$rows pruned=[$lo,${math.max(lo, hi)}) cols=${required.fieldNames.mkString(",")}"
 
@@ -147,57 +151,34 @@ private[sources] case class GenOffset(pos: Long) extends Offset {
   * so any [start, end) range replays to bit-identical rows: restart from a
   * checkpoint re-plans the exact same batch (exactly-once with an
   * idempotent sink), which is the whole DSv2 streaming-source contract.
-  * Each `latestOffset()` poll admits at most `rowsPerBatch` new ids
-  * (admission control), and every batch range splits into `partitions`
-  * parallel readers — the same [[GenReaderFactory]] the batch side uses.
+  * Each batch admits at most `rowsPerBatch` new ids (admission control),
+  * and every batch range splits into `partitions` parallel readers — the
+  * same [[GenReaderFactory]] the batch side uses.
   *
-  * Restart correctness: the engine polls `latestOffset()` on a FRESH
-  * stream instance before replaying any logged offset to us, so a
-  * counter-based source must recover its own admission cursor or the
-  * offset sequence runs backwards and committed batches replay (observed:
-  * a restart re-emitted every batch after the first). The cursor is
-  * therefore persisted under the engine-provided `checkpointLocation` on
-  * every `commit()` — exactly what that callback is for ("offsets at or
-  * below this will never be requested again") — and restored on
-  * construction; `deserializeOffset` additionally fast-forwards it, which
-  * covers the engine's replay-last-uncommitted-batch path where the
-  * offset log is ahead of the cursor file. GenSourceSpec locks
-  * restart-no-duplicates end-to-end through a checkpointed parquet sink.
+  * Restart correctness: the stream keeps NO cursor. Through
+  * `SupportsAdmissionControl` the engine passes every `latestOffset` the
+  * start it read from its own offset log (or `initialOffset` on a fresh
+  * checkpoint), so admission is a pure function of that start; a restart
+  * replays the last logged batch and then continues from its end.
+  * GenSourceSpec locks restart-no-duplicates through a checkpointed sink
+  * and a crash-replayed batch.
   */
 private[sources] class GenMicroBatchStream(
     rows: Long, partitions: Int, lo: Long, hi: Long, required: StructType,
-    rowsPerBatch: Long, checkpointLocation: String)
-    extends MicroBatchStream {
-
-  import org.apache.hadoop.fs.Path
+    rowsPerBatch: Long)
+    extends MicroBatchStream with SupportsAdmissionControl {
 
   private val end = math.max(lo, math.min(rows, hi))
-  private val cursorPath = new Path(checkpointLocation, "graft-gen-cursor")
-  private def fs = cursorPath.getFileSystem(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-
-  @volatile private var cursor: Long = {
-    val f = fs
-    if (f.exists(cursorPath)) {
-      val in = f.open(cursorPath)
-      try math.max(lo, new String(
-        in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    } else lo
-  }
 
   override def initialOffset(): Offset = GenOffset(lo)
 
-  override def latestOffset(): Offset = {
-    cursor = math.min(end, cursor + math.max(1L, rowsPerBatch))
-    GenOffset(cursor)
-  }
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException("latestOffset(start, limit) is the admission path")
 
-  override def deserializeOffset(json: String): Offset = {
-    val pos = json.trim.toLong
-    cursor = math.max(cursor, pos) // replayed log entries never rewind admission
-    GenOffset(pos)
-  }
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    GenOffset(math.min(end, start.asInstanceOf[GenOffset].pos + math.max(1L, rowsPerBatch)))
+
+  override def deserializeOffset(json: String): Offset = GenOffset(json.trim.toLong)
 
   override def planInputPartitions(start: Offset, stop: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GenOffset].pos
@@ -210,22 +191,7 @@ private[sources] class GenMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = new GenReaderFactory(required)
 
-  override def commit(offset: Offset): Unit = {
-    // Write-then-atomic-rename: a crash mid-write may leave a stale .tmp
-    // but never a truncated cursor file (which would make the restore
-    // block at construction throw and wedge the stream). FileContext
-    // rename with OVERWRITE is a single POSIX rename on local/HDFS —
-    // FileSystem.rename can't replace an existing destination, and
-    // delete-then-rename would reopen a lost-cursor window.
-    val f = fs
-    val tmp = new Path(checkpointLocation, "graft-gen-cursor.tmp")
-    val out = f.create(tmp, true)
-    try out.write(offset.asInstanceOf[GenOffset].pos.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, f.getConf)
-      .rename(tmp, cursorPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  override def commit(offset: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }
@@ -236,16 +202,22 @@ private[sources] class GenReaderFactory(required: StructType)
     val p = partition.asInstanceOf[GenRangePartition]
     new PartitionReader[InternalRow] {
       // resolve the pruned projection ONCE per partition, not per row
-      private val fields: Array[Long => Any] = required.fieldNames.map {
-        case "id" => (id: Long) => id
-        case "lang" => (id: Long) => UTF8String.fromString(GraftGen.expected(id)._2)
-        case "n_toks" => (id: Long) => GraftGen.expected(id)._3
-        case "score" => (id: Long) => GraftGen.expected(id)._4
+      private val fields: Array[GraftGen.Row => Any] = required.fieldNames.map {
+        case "id" => (e: GraftGen.Row) => e._1
+        case "lang" => (e: GraftGen.Row) => UTF8String.fromString(e._2)
+        case "n_toks" => (e: GraftGen.Row) => e._3
+        case "score" => (e: GraftGen.Row) => e._4
         case other => throw new IllegalArgumentException(s"unknown column $other")
       }
       private var id = p.start - 1
       override def next(): Boolean = { id += 1; id < p.end }
-      override def get(): InternalRow = InternalRow.fromSeq(fields.map(_.apply(id)).toSeq)
+      override def get(): InternalRow = {
+        val e = GraftGen.expected(id) // once per row, shared by every column
+        val values = new Array[Any](fields.length)
+        var i = 0
+        while (i < values.length) { values(i) = fields(i)(e); i += 1 }
+        new GenericInternalRow(values)
+      }
       override def close(): Unit = ()
     }
   }

@@ -346,7 +346,7 @@ class DedupWarmStartProcessor
   * Mapping (SURVEY.md §2.1):
   *  - s1 = R7–R10: broadcast state incl. rule updates between batches
   *    (processBroadcastElement == the per-batch `currentRules()` re-read;
-  *    each micro-batch joins against the then-current rules table).
+  *    each micro-batch looks events up in the then-current rules map).
   *  - s2 = R12+R14: watermark + tumbling event-time window.
   *  - s3 = R9 dedup with watermark-bounded state.
   *  - s4 = R9+R11+R13: the literal KeyedBroadcastProcessFunction
@@ -357,10 +357,16 @@ object Demos {
 
   /** s1 — the broadcast-state pattern, streaming-native. The rules
     * "stream" is low-volume control data: each micro-batch re-resolves
-    * `currentRules()` and broadcast-joins it to the batch (the rules table
-    * is replicated to every task — the MapStateDescriptor analog). Rule
-    * updates therefore apply to the NEXT micro-batch, exactly Flink's
-    * eventually-consistent broadcast-state semantics.
+    * `currentRules()` and groups it into a literal
+    * `event_type → [(threshold, severity)]` map inside the batch's plan
+    * (the rules are copied to every task with the plan — the
+    * MapStateDescriptor analog). Each event looks up its own rules and
+    * explodes the ones it meets, so the plan has no join and no exchange:
+    * a batch runs as ONE job (a broadcast join is a separate AQE query
+    * stage, i.e. a second job and a re-plan per batch). Rules with a null
+    * `event_type` never match and are dropped. Rule updates apply to the
+    * NEXT micro-batch, exactly Flink's eventually-consistent
+    * broadcast-state semantics.
     *
     * The driver-side materialization is BOUNDED: at most `maxCollect`
     * alerts per batch reach the callback (lowest event_id first — the
@@ -377,17 +383,18 @@ object Demos {
       onBatch: (Seq[Alert], Long, Long) => Unit,
       maxCollect: Int = 65536
   ): StreamingQuery = {
+    val alertEncoder = Encoders.product[Alert]
     events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val rules = currentRules().toDF()
+        val rulesByType = typedLit(currentRules().filter(_.event_type != null)
+          .groupBy(_.event_type).map { case (t, rs) => t -> rs.map(r => (r.threshold, r.severity)) })
         val alerts = batch
-          .join(broadcast(rules), Seq("event_type"))
-          .where(col("value") >= col("threshold"))
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("severity"))
-        val kept = alerts.orderBy("event_id").limit(maxCollect).as[Alert].collect().toSeq
+          .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
+            explode(filter(rulesByType(col("event_type")), r => col("value") >= r("_1"))).as("r"))
+          .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
+            col("r._2").as("severity"))
+        val kept = alerts.orderBy("event_id").limit(maxCollect).as(alertEncoder).collect().toSeq
         val overflow = if (kept.size < maxCollect) 0L else alerts.count() - kept.size
         onBatch(kept, overflow, batchId)
       }

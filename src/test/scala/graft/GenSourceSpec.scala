@@ -91,6 +91,39 @@ class GenSourceSpec extends AnyFunSuite {
     assert(ids.sorted == (0L until 800L).toSeq)
   }
 
+  test("graft-gen crash-replayed batch re-admits its logged range once, then continues") {
+    val base = java.nio.file.Files.createTempDirectory("gen_replay").toString
+    val delivered = scala.collection.mutable.Buffer[(Long, Seq[Long])]()
+    def run(rows: Long): Unit = {
+      val q = spark.readStream.format("graft-gen")
+        .option("rows", rows.toString).option("partitions", "4").option("rowsPerBatch", "250")
+        .load()
+        .writeStream.option("checkpointLocation", s"$base/ckpt")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          val ids = b.collect().map(_.getLong(0)).toSeq.sorted
+          delivered.synchronized { delivered += ((id, ids)) }
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    run(800) // batches 0-3: [0,250) [250,500) [500,750) [750,800)
+    // a crash after batch 3's sink write but before the engine's commit
+    assert(new java.io.File(s"$base/ckpt/commits/3").delete())
+    new java.io.File(s"$base/ckpt/commits/.3.crc").delete()
+    run(1200) // replays batch 3 from the offset log, then admits [800,1200)
+    val byBatch = delivered.groupBy(_._1)
+    assert(byBatch(3L).map(_._2) == Seq.fill(2)(750L until 800L),
+      s"batch 3 must replay its logged range exactly once: ${byBatch(3L)}")
+    // an idempotent sink keeps one delivery per batch id
+    val ids = byBatch.values.map(_.last._2).toSeq.flatten
+    assert(ids.sorted == (0L until 1200L), s"lost or duplicated ids after restart")
+    assert(byBatch.keySet.max == 5L, s"expected batches 4-5 after the replay: ${byBatch.keySet}")
+    val cursors = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$base/ckpt")).toArray
+      .map(_.toString).filter(_.contains("graft-gen-cursor"))
+    assert(cursors.isEmpty, s"the source must keep no cursor: ${cursors.toSeq}")
+  }
+
   test("graft-stats streaming sink: one idempotent report per committed epoch") {
     sources.StatsSinkRegistry.epochReports.filterInPlace { case ((k, _), _) => k != "sspec" }
     val ckpt = java.nio.file.Files.createTempDirectory("stats_stream").toString

@@ -3,8 +3,14 @@ package graft
 import java.sql.Timestamp
 import scala.collection.mutable
 
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming._
@@ -75,6 +81,58 @@ class StreamingDemosSpec extends AnyFunSuite {
       assert(alerts.map(_.event_id) == Seq(1L, 2L)) // deterministic: lowest ids survive
       assert(overflow == 2L)
     } finally q.stop()
+  }
+
+  test("s1: literal rules map gives the broadcast join's alerts in a join-free plan") {
+    implicit val sqlCtx = spark.sqlContext
+    val rules = Seq(Rule("purchase", 100.0, "MED"), Rule("purchase", 150.0, "HIGH"),
+      Rule(null, 0.0, "ANY"), Rule("click", 5.0, "LOW"))
+    val events = Seq(
+      ev(1, 0, 1, "purchase", 200.0), // both purchase rules fire
+      ev(2, 1, 2, "purchase", 120.0),
+      ev(3, 2, 3, "purchase", 100.0), // exactly at the MED threshold
+      ev(4, 3, 4, "click", 4.0),
+      ev(5, 4, 5, "view", 900.0), // no rule for this event_type
+      ev(6, 5, 6, null, 900.0))
+    val joined = events.toDF()
+      .join(broadcast(rules.toDF()), Seq("event_type"))
+      .where($"value" >= $"threshold")
+      .select("event_id", "user_id", "event_type", "value", "severity")
+      .as[Alert].collect().toSeq
+
+    val plans = mutable.Buffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    object Aqe extends AdaptiveSparkPlanHelper
+    def alertPlan = plans.synchronized(plans.toSeq)
+      .find(p => Aqe.find(p)(_.isInstanceOf[TakeOrderedAndProjectExec]).isDefined)
+    val input = MemoryStream[Event]
+    val seen = mutable.Buffer[Alert]()
+    spark.listenerManager.register(listener)
+    try {
+      val q = Demos.s1BroadcastRules(input.toDF(), () => rules,
+        (alerts, _, _) => seen.synchronized { seen ++= alerts })
+      try {
+        input.addData(events: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (alertPlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+
+    def key(a: Alert) = (a.event_id, a.severity)
+    assert(joined.map(key).sorted == Seq((1L, "HIGH"), (1L, "MED"), (2L, "MED"), (3L, "MED")))
+    assert(seen.synchronized(seen.toSeq).sortBy(key) == joined.sortBy(key))
+    val plan = alertPlan.getOrElse(fail(s"no alert collect plan among ${plans.size}"))
+    val bad = Aqe.collectWithSubqueries(plan) {
+      case j: BaseJoinExec => j
+      case b: BroadcastExchangeExec => b
+    }
+    assert(bad.isEmpty, s"s1's batch plan must hold no join or broadcast exchange:\n$plan")
   }
 
   test("s2: watermarked tumbling window emits finalized hourly counts") {
