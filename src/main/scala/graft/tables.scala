@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
 
 /** Table loaders over the driver-generated parquet star schema
   * (FIXTURES.md; schemas verified against /root/testdata at build time).
@@ -18,8 +21,37 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * through the same code path.
   */
 object Tables {
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Load `<sfDir>/<name>.parquet` with its schema passed to the reader, so
+    * the load runs no Spark job; a schema-less `spark.read.parquet` infers
+    * it from the footer in a job (`mergeSchemasInParallel`) on EVERY call.
+    * The schema is inferred once per process and key (`footerSchema`):
+    *   - qualified path: the file;
+    *   - length and modification time: a rewrite of that path re-infers;
+    *   - the session's explicitly set confs whose key contains `parquet`
+    *     (`legacy.parquet.nanosAsLong`, `parquet.inferTimestampNTZ.enabled`,
+    *     ...) plus `spark.sql.caseSensitive`: they change what Spark infers
+    *     from the same footer.
+    * Only the schema is shared: each call is a fresh relation, so self-joins
+    * still get fresh attribute ids. */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  private val footerSchemas =
+    new ConcurrentHashMap[(String, Long, Long, Seq[(String, String)]), StructType]()
+
+  /** Spark's inferred schema of the parquet file `path`, memoized under
+    * `t`'s key. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    val confs = spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.contains("parquet") || k == "spark.sql.caseSensitive" }
+      .sorted
+    val key = (st.getPath.toString, st.getLen, st.getModificationTime, confs)
+    footerSchemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -64,12 +96,13 @@ object Tables {
   }
 
   /** The raw (pre-normalizeTs) events schema as Spark's reader reports it,
-    * probed via a batch scan — readStream needs an explicit schema, and the
-    * driver has regenerated testdata with different ts encodings between
-    * rounds, so streaming readers must probe rather than hardcode. */
-  def eventsRawSchema(s: SparkSession, eventsParquet: String): org.apache.spark.sql.types.StructType = {
+    * probed from the footer through `t`'s memo — readStream needs an
+    * explicit schema, and the driver has regenerated testdata with different
+    * ts encodings between rounds, so streaming readers must probe rather
+    * than hardcode. */
+  def eventsRawSchema(s: SparkSession, eventsParquet: String): StructType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(eventsParquet).schema
+    footerSchema(s, eventsParquet)
   }
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")

@@ -109,4 +109,64 @@ class SchemaPreflightSpec extends AnyFunSuite {
           s"${norm.schema("ts").dataType} at $sf")
     }
   }
+
+  test("a repeated Tables.t load runs no Spark job and keeps the inferred schema") {
+    // Jobs are attributed by a thread-local tag, so suites sharing the
+    // session cannot add to the count.
+    val tagKey = "graft.preflight.load"
+    val tagged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(tagged.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      for (sf <- sfs; table <- expected.keys.toSeq.sorted :+ "events") {
+        if (table == "events") Tables.events(spark, sf) else Tables.t(spark, sf, table)
+        val inferred = spark.read.parquet(s"$sf/$table.parquet").schema
+        sc.setLocalProperty(tagKey, s"$sf/$table")
+        val again = try Tables.t(spark, sf, table) finally sc.setLocalProperty(tagKey, null)
+        assert(again.schema == inferred, s"$sf/$table: the repeated load's " +
+          s"schema ${again.schema} differs from Spark's inference $inferred")
+      }
+      // Poll until the listener bus drains (PlanAudit.awaitStable's rule).
+      def poll(): Int = { Thread.sleep(50); tagged.size }
+      var (prev, cur, polls) = (-1, poll(), 1)
+      while (cur != prev && polls < 100) { prev = cur; cur = poll(); polls += 1 }
+      import scala.jdk.CollectionConverters._
+      assert(tagged.size == 0, "repeated loads started Spark jobs (schema " +
+        s"re-inferred from the footer): ${tagged.asScala.mkString(", ")}")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the schema memo re-infers a rewritten file and a session's parquet confs") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_preflight")
+    // One parquet file (Spark writes a directory; keep its single part).
+    def writeFile(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+      val out = dir.resolve(tag)
+      df.coalesce(1).write.parquet(out.toString)
+      val parts = Files.list(out)
+      val part = try parts.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+        finally parts.close()
+      Files.copy(part, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFile(spark.range(3).toDF("a"), "v1")
+    assert(Tables.t(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+    writeFile(spark.range(3).selectExpr("id AS a", "id * 2 AS b"), "v2")
+    val rewritten = Tables.t(spark, dir.toString, "t")
+    assert(rewritten.columns.toSeq == Seq("a", "b"),
+      s"stale schema served after a rewrite: ${rewritten.schema}")
+    assert(rewritten.agg(org.apache.spark.sql.functions.sum("b")).head().getLong(0) == 6L)
+
+    def orderdate(s: org.apache.spark.sql.SparkSession): DataType =
+      Tables.t(s, SharedSpark.sf001, "orders").schema("o_orderdate").dataType
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    assert(orderdate(spark) == TimestampNTZType)
+    assert(orderdate(legacy) == TimestampType,
+      "a session with different parquet confs was served another session's schema")
+    assert(orderdate(spark) == TimestampNTZType)
+  }
 }
