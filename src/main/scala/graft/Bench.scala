@@ -1,7 +1,6 @@
 package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact machine-readable JSON summary line to
   * stdout (fixed-size — see [[Bench.stdoutLine]]) and writes the FULL record,
@@ -165,17 +164,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the per-query WARN flood (WindowExec single-partition
-    // carry frames) nearly evicted the JSON line from the driver's tail.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     // Fixed probe, also the warmup: parquet scan + groupBy/shuffle. The
     // first (untimed) call absorbs executor spin-up, codegen, and footer

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, InputAdapter, LocalTableScanExec, ProjectExec, RangeExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, FormattedMode, InputAdapter, LocalTableScanExec, ProjectExec, RangeExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
@@ -15,7 +16,14 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * an unpartitioned Window outside the documented-bounded whitelist — an
   * un-whitelisted global window is how a 100 TB query silently collapses
   * onto one task (round-6 verdict, Next round #5).
-  * Usage: runMain graft.PlanAudit [sfDir]
+  * Usage: runMain graft.PlanAudit [sfDir] [--dump <outDir> <tag>] [query ...]
+  *
+  * `--dump` also writes each audited query's `explain("formatted")` text
+  * to `<outDir>/<query>_<tag>.txt` — the before/after plan evidence kept
+  * under plans/rNN/. It is the FINAL adaptive plan of the execution just
+  * audited (`isFinalPlan=true`, with AQE's coalesced reads and re-chosen
+  * joins), not the initial pre-execution plan that dumps taken before
+  * execution show.
   */
 object PlanAudit {
 
@@ -201,12 +209,14 @@ object PlanAudit {
     case _ => true
   }
 
-  /** Poll `q` every 50 ms until its size is equal on two consecutive
-    * polls, giving up after 5 s (the caller then audits what arrived). */
-  private def awaitStable(q: java.util.Collection[_]): Unit = {
-    def poll(): Int = { Thread.sleep(50); q.size }
-    var (prev, cur, polls) = (-1, poll(), 1)
-    while (cur != prev && polls < 100) { prev = cur; cur = poll(); polls += 1 }
+  /** Poll `probe` every 50 ms until it reads equal on two consecutive
+    * polls, giving up after 5 s, and return the last read — the wait for
+    * the async listener bus to stop delivering events. */
+  private[graft] def awaitStable[A](probe: => A): A = {
+    def poll(): A = { Thread.sleep(50); probe }
+    var (prev, cur, polls) = (Option.empty[A], poll(), 1)
+    while (!prev.contains(cur) && polls < 100) { prev = Some(cur); cur = poll(); polls += 1 }
+    cur
   }
 
   /** Walk the EXECUTED plan including adaptive and reused wrappers —
@@ -223,16 +233,14 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val (dump, rest) = args.drop(1) match {
+      case Array("--dump", outDir, tag, more @ _*) => (Some((outDir, tag)), more)
+      case more => (None, more.toSeq)
+    }
+    dump.foreach { case (outDir, _) => Files.createDirectories(Paths.get(outDir)) }
     // optional extra args: audit only these queries (dev iteration)
-    val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val only = rest.toSet
+    val spark = GraftSession()
     // Capture EVERY executed QueryExecution — localCheckpoint
     // materializations included (Dataset.checkpoint runs via withAction,
     // which notifies this listener) — so the SortAggregate gate sees the
@@ -259,7 +267,7 @@ object PlanAudit {
         df.toLocalIterator().forEachRemaining(_ => ())
         // listener bus is async: read the side-execution queue only once
         // the checkpoint-job notifications stop landing
-        awaitStable(sideExec)
+        awaitStable(sideExec.size)
         import scala.jdk.CollectionConverters._
         val sideNodes = sideExec.asScala.toVector.flatMap(allNodes)
         val nodes = allNodes(df.queryExecution.executedPlan)
@@ -298,6 +306,10 @@ object PlanAudit {
         println(f"$name%-26s ${n("Exchange")}%5d ${n("BroadcastExchange")}%5d " +
           f"${n("SortMergeJoin")}%4d ${n("BroadcastHashJoin")}%4d ${n("NestedLoop")}%4d " +
           f"${n("FileScan|Scan parquet")}%5d $globalWins%4d ${npsa.size}%4d")
+        dump.foreach { case (outDir, tag) =>
+          Files.write(Paths.get(outDir, s"${name}_$tag.txt"),
+            df.queryExecution.explainString(FormattedMode).getBytes(StandardCharsets.UTF_8))
+        }
       } catch { case e: Throwable => println(f"$name%-26s ERROR ${e.getMessage.take(60)}") }
     }
     spark.stop()

@@ -1133,6 +1133,29 @@ object ScaleCurve {
     }
   }
 
+  /** The dedup/similarity pipelines over `regime`'s documents (`pick` =
+    * the pipeline names to run, default all). */
+  private def pipelineCurve(spark: SparkSession, sizes: Seq[Long], regime: String,
+      pick: Option[Seq[String]]): Unit = {
+    val all: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "minhash_lsh" -> ((d: DataFrame) =>
+        graft.ops.LlmExt2.minhashLshPairs(d, threshold = 0.6)),
+      "simhash_blocked" -> simhashBlocked _,
+      "incremental" -> incremental _,
+      "prefix_filter" -> prefixFilter _,
+      "snm_w8" -> ((d: DataFrame) => snmAt(d, 8)),
+      "snm_derived" -> snmDerived _)
+    val pipelines = pick.fold(all)(want => all.filter(p => want.contains(p._1)))
+    println(f"${"pipeline"}%-16s ${"n_docs"}%8s ${"sec"}%8s ${"pairs"}%10s")
+    for ((nm, f) <- pipelines; n <- sizes) {
+      val d = docs(spark, n, regime).localCheckpoint()
+      val t0 = System.nanoTime()
+      val pairs = f(d).count()
+      val dt = (System.nanoTime() - t0) / 1e9
+      println(f"$nm%-16s $n%8d $dt%8.2f $pairs%10d")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val regime = args.headOption.getOrElse("real")
     val sizes = (if (args.length > 1) args(1) else regime match {
@@ -1148,114 +1171,48 @@ object ScaleCurve {
       case "mhfamily" => "20000,80000,320000"
       case _          => "5000,50000,250000"
     }).split(",").map(_.trim.toLong).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (regime == "ann") {
-      // warm the session so the first size isn't charged JVM spin-up
-      vecs(spark, 1000).selectExpr("sum(element_at(embedding, 1))").collect()
-      annCurve(spark, sizes,
-        if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty)
-      spark.stop()
-      return
-    }
-    if (regime == "semdedup") {
-      vecs(spark, 1000).selectExpr("sum(element_at(embedding, 1))").collect()
-      semdedupCurve(spark, sizes)
-      spark.stop()
-      return
-    }
-    if (regime == "spans") {
-      docs(spark, 1000, "real").selectExpr("sum(length(text))").collect()
-      spansCurve(spark, sizes)
-      spark.stop()
-      return
-    }
-    if (regime == "prefix") {
-      docs(spark, 1000, "real").selectExpr("sum(length(text))").collect()
-      prefixCurve(spark, sizes)
-      spark.stop()
-      return
-    }
-    if (regime == "knngraph") {
-      vecs(spark, 1000).selectExpr("sum(element_at(embedding, 1))").collect()
-      knnGraphCurve(spark, sizes)
-      spark.stop()
-      return
-    }
-    if (regime == "clustered") {
-      // the round-13 verdict's owed measurement: does cell routing hold
-      // recall on data WITH cluster structure (vs the isotropic decay)?
-      // Same pipelines, same sizes — only the corpus changes.
-      clusteredVecs(spark, 1000).selectExpr("sum(element_at(embedding, 1))").collect()
-      knnGraphCurve(spark, sizes, clusteredVecs)
-      annCurve(spark, sizes,
-        if (args.length > 2) args(2).split(",").map(_.trim).toSet
-        else Set("ivfpq128_rr50", "ivf64_probe8"),
-        clusteredVecs)
-      spark.stop()
-      return
-    }
-    if (regime == "silh") {
-      clusteredVecs(spark, 1000).selectExpr("sum(element_at(embedding, 1))").collect()
-      silhCurve(spark, sizes)
-      spark.stop()
-      return
-    }
-    if (regime == "mhfamily") {
-      docs(spark, 1000, "adv").selectExpr("sum(length(text))").collect()
-      // optional 3rd arg picks the corpora (default both degeneracy
-      // regimes: adv = the 31-token collapse, real = wrap-anyway control)
-      mhFamilyCurve(spark, sizes,
-        if (args.length > 2) args(2).split(",").map(_.trim).toSeq
-        else Seq("adv", "real"))
-      spark.stop()
-      return
-    }
-    if (regime == "kcore") {
-      spark.read.format("graft-gen").option("rows", "1000").load()
-        .agg(sum("id")).collect() // warm
-      kcoreCurve(spark, sizes)
-      spark.stop()
-      return
-    }
-    if (regime == "snmrecall") {
-      docs(spark, 1000, "adv").selectExpr("sum(length(text))").collect()
-      // optional 3rd arg picks the corpus regime (default adv — where
-      // the fixed width degenerates; heaps shows the derivation is a
-      // no-op on natural statistics)
-      snmRecall(spark, sizes, if (args.length > 2) args(2) else "adv")
-      spark.stop()
-      return
-    }
-    // warm the session so size-1 rows aren't charged JVM spin-up
-    docs(spark, 1000, regime).selectExpr("sum(length(text))").collect()
-
-    val all: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "minhash_lsh" -> ((d: DataFrame) =>
-        graft.ops.LlmExt2.minhashLshPairs(d, threshold = 0.6)),
-      "simhash_blocked" -> simhashBlocked _,
-      "incremental" -> incremental _,
-      "prefix_filter" -> prefixFilter _,
-      "snm_w8" -> ((d: DataFrame) => snmAt(d, 8)),
-      "snm_derived" -> snmDerived _)
-    // optional 3rd arg: csv of pipeline names to run (default all)
-    val pipelines =
-      if (args.length > 2) { val want = args(2).split(",").map(_.trim).toSet
-        all.filter(p => want(p._1)) }
-      else all
-    println(f"${"pipeline"}%-16s ${"n_docs"}%8s ${"sec"}%8s ${"pairs"}%10s")
-    for ((nm, f) <- pipelines; n <- sizes) {
-      val d = docs(spark, n, regime).localCheckpoint()
-      val t0 = System.nanoTime()
-      val pairs = f(d).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"$nm%-16s $n%8d $dt%8.2f $pairs%10d")
-    }
-    spark.stop()
+    // optional 3rd arg: csv of the pipelines/variants/corpora to run
+    val pick = args.lift(2).map(_.split(",").map(_.trim).toSeq)
+    val spark = GraftSession()
+    // each regime first warms the session on a 1000-row corpus so the
+    // first size isn't charged JVM spin-up
+    def warmVecs(mk: (SparkSession, Long) => DataFrame): Unit =
+      mk(spark, 1000).selectExpr("sum(element_at(embedding, 1))").collect()
+    def warmDocs(r: String): Unit =
+      docs(spark, 1000, r).selectExpr("sum(length(text))").collect()
+    try regime match {
+      case "ann" =>
+        warmVecs(vecs)
+        annCurve(spark, sizes, pick.fold(Set.empty[String])(_.toSet))
+      case "semdedup" => warmVecs(vecs); semdedupCurve(spark, sizes)
+      case "spans" => warmDocs("real"); spansCurve(spark, sizes)
+      case "prefix" => warmDocs("real"); prefixCurve(spark, sizes)
+      case "knngraph" => warmVecs(vecs); knnGraphCurve(spark, sizes)
+      case "clustered" =>
+        // the round-13 verdict's owed measurement: does cell routing hold
+        // recall on data WITH cluster structure (vs the isotropic decay)?
+        // Same pipelines, same sizes — only the corpus changes.
+        warmVecs(clusteredVecs)
+        knnGraphCurve(spark, sizes, clusteredVecs)
+        annCurve(spark, sizes,
+          pick.fold(Set("ivfpq128_rr50", "ivf64_probe8"))(_.toSet), clusteredVecs)
+      case "silh" => warmVecs(clusteredVecs); silhCurve(spark, sizes)
+      case "mhfamily" =>
+        warmDocs("adv")
+        // corpora default to both degeneracy regimes: adv = the 31-token
+        // collapse, real = wrap-anyway control
+        mhFamilyCurve(spark, sizes, pick.getOrElse(Seq("adv", "real")))
+      case "kcore" =>
+        spark.read.format("graft-gen").option("rows", "1000").load()
+          .agg(sum("id")).collect()
+        kcoreCurve(spark, sizes)
+      case "snmrecall" =>
+        warmDocs("adv")
+        // the corpus regime defaults to adv — where the fixed width
+        // degenerates; heaps shows the derivation is a no-op on natural
+        // statistics
+        snmRecall(spark, sizes, args.lift(2).getOrElse("adv"))
+      case _ => warmDocs(regime); pipelineCurve(spark, sizes, regime, pick)
+    } finally spark.stop()
   }
 }

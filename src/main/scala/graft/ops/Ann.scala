@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** IVF (inverted-file) approximate nearest neighbor — the second two-stage
   * ANN shape SCALE.md §5 names (q52 is the LSH-bucketed one): a coarse
@@ -27,9 +28,6 @@ import org.apache.spark.sql.functions._
   * this), so the recall knob provably trades only coverage, not math.
   */
 object Ann {
-
-  private def dot(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
 
   /** Mean per dimension of an exploded (id, pos, value) frame, re-assembled
     * into centroid arrays keyed by `idCol`.
@@ -63,7 +61,7 @@ object Ann {
     * centroid table; the vector side is never shuffled. */
   def assignVectors(emb: DataFrame, cent: DataFrame): DataFrame = {
     val cs = cent.select(col("list_id"), col("ce"))
-    def dist = col("n2") + norm2(col("ce")) - lit(2.0) * dot(col("e"), col("ce"))
+    def dist = col("n2") + DotProduct.norm2(col("ce")) - lit(2.0) * DotProduct.dot(col("e"), col("ce"))
     // Argmin in two PRIMITIVE-aggregate passes instead of a per-vector
     // window: the window (and equally a min(struct) — both plan as
     // sort-based operators) shuffles the ×nlist broadcast expansion WITH
@@ -101,7 +99,7 @@ object Ann {
     * the index. Raises on the first malformed vector when the ingest
     * projection materializes; healthy rows pay one null check. */
   private[graft] def guardedNorm2(e: Column, id: Column): Column =
-    when(norm2(e).isNotNull, norm2(e))
+    when(DotProduct.norm2(e).isNotNull, DotProduct.norm2(e))
       .otherwise(raise_error(concat(
         lit("Ann ingest: vec_id "), id,
         lit(" has a NULL embedding element — the vector would silently vanish from the index")))
@@ -135,7 +133,7 @@ object Ann {
     // on the unique list_id) that makes the centroid table's bound
     // STRUCTURAL, so PlanAudit's nested-loop gate accepts every
     // `join(broadcast(centroids), lit(true))` by plan shape.
-    val centroids = refined.withColumn("cn2", norm2(col("ce"))).limit(nlist)
+    val centroids = refined.withColumn("cn2", DotProduct.norm2(col("ce"))).limit(nlist)
     (assign(centroids), centroids)
   }
 
@@ -168,10 +166,10 @@ object Ann {
       k: Int, nprobe: Int, broadcastProbed: Boolean): DataFrame = {
     val q = queries
       .select(col("qid"), col("qe").cast("array<double>").as("qe"))
-      .withColumn("qn", norm2(col("qe")))
+      .withColumn("qn", DotProduct.norm2(col("qe")))
     val wProbe = Window.partitionBy("qid").orderBy(col("dist"), col("list_id"))
     val probed = q.join(broadcast(centroids), lit(true))
-      .withColumn("dist", col("qn") + col("cn2") - lit(2.0) * dot(col("qe"), col("ce")))
+      .withColumn("dist", col("qn") + col("cn2") - lit(2.0) * DotProduct.dot(col("qe"), col("ce")))
       .withColumn("pr", row_number().over(wProbe))
       .where(col("pr") <= nprobe)
       .select(col("qid"), col("qe"), col("qn"), col("list_id"))
@@ -179,7 +177,7 @@ object Ann {
     val probeSide = if (broadcastProbed) broadcast(probed) else probed
     index.join(probeSide, Seq("list_id"))
       .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim", dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+      .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
       .withColumn("rnk", row_number().over(wRank))
       .where(col("rnk") <= k)
       .select(col("qid"), col("vec_id"), col("list_id"), col("cos_sim"),

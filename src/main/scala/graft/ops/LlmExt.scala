@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.plans.DotProduct
 
 /** LLM-training-data-pipeline operators (SURVEY.md §2.2 q39–q45 plus the
   * extended dedup/similarity/text-analysis family q46+): exact + near dedup,
@@ -16,14 +17,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object LlmExt {
   import Tables._
-
-  /** Native codegen'd dot product (graft.plans.DotProduct): bit-identical
-    * to the sequential HOF fold `aggregate(zip_with(a,b,*), 0.0, +)` and
-    * to DuckDB's list_aggregate 'sum' — NativeExprSpec asserts the
-    * equivalence — but runs as a fused primitive loop instead of an
-    * interpreted per-element lambda. */
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
 
   /** Brute-force cosine top-k: queries (vec_id < maxQid) are broadcast
     * against all vectors; dot/norms are per-row folds (codegen'd, no
@@ -41,13 +34,13 @@ object LlmExt {
     val q = emb
       .where(col("vec_id") < maxQid)
       .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qe"))
-      .withColumn("qn", norm2(col("qe")))
+      .withColumn("qn", DotProduct.norm2(col("qe")))
       .limit(maxQid)
     val a = emb
       .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("ve"), col("label"))
-      .withColumn("vn", norm2(col("ve")))
+      .withColumn("vn", DotProduct.norm2(col("ve")))
     a.join(broadcast(q), col("vid") =!= col("qid"))
-      .withColumn("cos_sim", dotCol(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
+      .withColumn("cos_sim", DotProduct.dot(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
       .withColumn(
         "rnk",
         row_number().over(

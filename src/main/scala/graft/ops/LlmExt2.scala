@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Extended training-data-pipeline operators beyond SURVEY.md's original
   * q39–q45: the SCALE PATHS for dedup and similarity search, plus deeper
@@ -23,11 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmExt2 {
   import Tables._
-
-  /** Native codegen'd dot/norm (see LlmExt + NativeExprSpec: bit-identical
-    * to the HOF fold and to DuckDB's sequential list sum). */
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
 
   /** Distinct (doc_id, lang, tok) pairs for all documents. */
   private def docToks(s: SparkSession, d: String): DataFrame =
@@ -549,10 +545,10 @@ object LlmExt2 {
         val sample = embeddings(s, d)
           .where(col("vec_id") % 5 === 0)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          .withColumn("n2", norm2(col("e")))
+          .withColumn("n2", DotProduct.norm2(col("e")))
         sample.as("x")
           .join(sample.as("y"), col("x.vec_id") < col("y.vec_id"))
-          .withColumn("cos_sim", dotCol(col("x.e"), col("y.e")) / sqrt(col("x.n2") * col("y.n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("x.e"), col("y.e")) / sqrt(col("x.n2") * col("y.n2")))
           .where(col("cos_sim") >= 0.30)
           .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"), col("cos_sim"))
           .orderBy(col("cos_sim").desc, col("vec_a"), col("vec_b"))
@@ -710,16 +706,16 @@ object LlmExt2 {
           transform(sequence(lit(0), lit(63)),
             k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
         def bucketOf(e: Column): Column =
-          (0 until 3).map(j => when(dotCol(e, hyper(j)) > 0, 1L << j).otherwise(0L)).reduce(_ + _)
+          (0 until 3).map(j => when(DotProduct.dot(e, hyper(j)) > 0, 1L << j).otherwise(0L)).reduce(_ + _)
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
           .withColumn("bucket", bucketOf(col("e")))
-          .withColumn("n2", norm2(col("e")))
+          .withColumn("n2", DotProduct.norm2(col("e")))
         val q = emb.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("bucket"), col("n2").as("qn"))
         emb.join(broadcast(q), Seq("bucket"))
           .where(col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim", dotCol(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))))
           .where(col("rnk") <= 5)

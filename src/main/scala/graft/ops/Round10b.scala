@@ -3,6 +3,7 @@ package graft.ops
 import graft.{Det, QDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-10 batch 2: cross-source corpus audits (q160 overlap matrix,
   * q162 next-token predictability), an embedding-space quality audit
@@ -18,11 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10b {
   import Tables._
-
-  private def dotCol(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: org.apache.spark.sql.Column) =
-    graft.plans.DotProduct.norm2(a)
 
   val defs: Vector[(String, QDef)] = Vector(
 
@@ -120,7 +116,7 @@ object Round10b {
             x => x.getField("cval")).as("ce"))
         emb.join(broadcast(cent), "label")
           .withColumn("cos",
-            dotCol(col("ve"), col("ce")) / sqrt(norm2(col("ve")) * norm2(col("ce"))))
+            DotProduct.dot(col("ve"), col("ce")) / sqrt(DotProduct.norm2(col("ve")) * DotProduct.norm2(col("ce"))))
           .groupBy("label")
           .agg(
             count(lit(1)).as("n_vecs"),

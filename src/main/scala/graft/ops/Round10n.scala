@@ -48,15 +48,15 @@ object Round10n {
     * distE expansion + argmin partial — 43M rows for q254's Σkc = 336 —
     * ran INSIDE the single scan task (measured: the 3 assign jobs were
     * 0.8–1.2 s each with 31 idle cores; job trace r16). An explicit
-    * numbered repartition is never coalesced by AQE; the width comes from
-    * spark.sql.shuffle.partitions (cpus-derived in the bench contract),
-    * not a hard-coded local constant. GATED on expansion width kc > 64:
+    * numbered repartition is never coalesced by AQE; the width is the
+    * session's effective shuffle-partition count (cpus-derived by
+    * GraftSession), not a hard-coded local constant. GATED on expansion width kc > 64:
     * at kc = 16 (q205/q206/pqEncode) the ×16 expansion is ~2M rows and
     * the 3–4 repartition round-trips COST more than the parallelism buys
     * (measured back-to-back: q205 1.61 → 3.09 s, q206 1.97 → 2.50 with
     * an unconditional spread; q254's Σkc = 336 chain 3.6 → 3.1 s). */
   private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** Assign every (vec_id, s) row to its nearest centroid of `cent`
     * (columns s, j, c): returns (vec_id, s, code, dist, v1..v8).

@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-11 batch 1: the two recall-bearing ANN compositions the round-10
   * measured curves (SCALE.md §11, ann regime) showed were missing.
@@ -37,9 +38,6 @@ import org.apache.spark.sql.functions._
 object Round11 {
   import Tables._
 
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
-
   /** Σ_i (a[i]−b[i])² unrolled into plain element_at arithmetic — a HOF
     * fold here is interpreted per (row × centroid) and would dominate
     * training (the q205/q206 lesson); unrolled stays in codegen. */
@@ -52,16 +50,6 @@ object Round11 {
   private[graft] def quantized(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))").as("v"))
-
-  /** The 64-dim squared distance through the native DotProduct instead
-    * of a 64-term unrolled string: n2+n2−2·dot on the 1e6 grid stays
-    * ≤ 64·(2e6)² = 2.56e14 < 2^53, so the double arithmetic is EXACT and
-    * the long cast lossless — bit-identical keys, a fraction of the
-    * per-plan codegen time (SCALE.md §12). */
-  private def cDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
-  }
 
   /** Nearest coarse centroid per vector: (vec_id, v, list_id). One
     * broadcast of the ≤nlist-row centroid table + a map-side-combinable
@@ -87,7 +75,7 @@ object Round11 {
     * it was measured. */
   private[graft] def cAssign(v: DataFrame, cent: DataFrame, nlist: Int): DataFrame =
     v.crossJoin(broadcast(cent.limit(nlist)))
-      .withColumn("key", cDist(col("v"), col("c")) * lit(nlist.toLong) + col("j"))
+      .withColumn("key", DotProduct.gridDist(col("v"), col("c")) * lit(nlist.toLong) + col("j"))
       .groupBy("vec_id")
       .agg(min("key").as("key"))
       .select(col("vec_id"), (col("key") % nlist).as("list_id"))
@@ -192,7 +180,7 @@ object Round11 {
     // — the asymmetric-distance trick that makes residual codes usable)
     val q = qv.where(col("vec_id") < 10).select(col("vec_id").as("qid"), col("v").as("qv"))
     val probed = q.crossJoin(broadcast(c1.select(col("j").as("list_id"), col("c")).limit(8)))
-      .withColumn("cdist", cDist(col("qv"), col("c")))
+      .withColumn("cdist", DotProduct.gridDist(col("qv"), col("c")))
       .withColumn("pr", row_number().over(
         Window.partitionBy("qid").orderBy(col("cdist"), col("list_id"))))
       .where(col("pr") <= nprobe)
@@ -367,10 +355,10 @@ object Round11 {
             k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
         def bucketOf(e: Column, t: Int): Column =
           (0 until b).map(jb =>
-            when(dotCol(e, hyper(t * b + jb)) > 0, 1L << jb).otherwise(0L)).reduce(_ + _)
+            when(DotProduct.dot(e, hyper(t * b + jb)) > 0, 1L << jb).otherwise(0L)).reduce(_ + _)
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          .withColumn("n2", norm2(col("e")))
+          .withColumn("n2", DotProduct.norm2(col("e")))
         val tabs = emb.select(col("vec_id"), col("e"), col("n2"),
             posexplode(array((0 until L).map(t => bucketOf(col("e"), t)): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
@@ -385,7 +373,7 @@ object Round11 {
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("n2").as("qn"))
         cand.join(emb.select("vec_id", "e", "n2"), "vec_id")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotCol(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))))
           .where(col("rnk") <= 5)
@@ -447,7 +435,7 @@ object Round11 {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         val exact = qv.crossJoin(broadcast(q))
           .where(col("vec_id") =!= col("qid"))
-          .withColumn("d2", cDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vec_id"))))
           .where(col("rnk") <= 5)

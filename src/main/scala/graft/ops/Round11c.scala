@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-11 batch 3: two missing operator families.
   *
@@ -277,14 +278,13 @@ object Round11c {
         def hyper(j: Int): Column =
           transform(sequence(lit(0), lit(63)),
             k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
-        def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-        val dots = (0 until 3).map(j => dotCol(col("e"), hyper(j)))
+        val dots = (0 until 3).map(j => DotProduct.dot(col("e"), hyper(j)))
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
           .withColumn("bucket",
             (0 until 3).map(j => when(dots(j) > 0, 1L << j).otherwise(0L)).reduce(_ + _))
-          .withColumn("n2", graft.plans.DotProduct.norm2(col("e")))
-        val m = (0 until 3).map(j => abs(dotCol(col("e"), hyper(j))))
+          .withColumn("n2", DotProduct.norm2(col("e")))
+        val m = (0 until 3).map(j => abs(DotProduct.dot(col("e"), hyper(j))))
         val jmin = when(m(0) <= m(1) && m(0) <= m(2), 0)
           .when(m(1) <= m(2), 1).otherwise(2)
         val pw = when(jmin === 0, 1L).when(jmin === 1, 2L).otherwise(4L)
@@ -295,7 +295,7 @@ object Round11c {
         emb.join(broadcast(qp), Seq("bucket"))
           .where(col("vec_id") =!= col("qid"))
           .withColumn("cos_sim",
-            dotCol(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+            DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))))
           .where(col("rnk") <= 5)

@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-12 batch: the three ANN/ER compositions the round-11 verdict named
   * as declared-contract gaps — each one existed only as a ScaleCurve
@@ -33,17 +34,6 @@ import org.apache.spark.sql.functions._
 object Round12 {
   import Tables._
 
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
-
-  /** Exact squared L2 on the 1e6 integer grid via the native DotProduct —
-    * n2+n2−2·dot stays ≤ 64·(2e6)² = 2.56e14 < 2^53, so the double
-    * arithmetic is exact and the long cast lossless (the q219 bridge). */
-  private def gridDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
-  }
-
   val defs: Vector[(String, QDef)] = Vector(
 
     // --------------------------------------------------------------- q228
@@ -64,7 +54,7 @@ object Round12 {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         short.join(qv.select(col("vec_id").as("vid"), col("v")), "vid")
           .join(broadcast(q), "qid")
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
           .where(col("rnk") <= 5)
@@ -107,10 +97,10 @@ object Round12 {
             k => ((lit(j.toLong) * 64 + k) * lit(prime(t)) % 97 - 48).cast("double"))
         def bucketOf(e: Column, t: Int): Column =
           (0 until b).map(jb =>
-            when(dotCol(e, hyper(t, jb)) > 0, 1L << jb).otherwise(0L)).reduce(_ + _)
+            when(DotProduct.dot(e, hyper(t, jb)) > 0, 1L << jb).otherwise(0L)).reduce(_ + _)
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          .withColumn("n2", norm2(col("e")))
+          .withColumn("n2", DotProduct.norm2(col("e")))
         val tabs = emb.select(col("vec_id"), col("e"), col("n2"),
             posexplode(array((0 until L).map(t => bucketOf(col("e"), t)): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
@@ -125,7 +115,7 @@ object Round12 {
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("n2").as("qn"))
         cand.join(emb.select("vec_id", "e", "n2"), "vec_id")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotCol(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))))
           .where(col("rnk") <= 5)

@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-12 batch 2: three embedding-pipeline operators a 100 TB curation
   * stack runs daily, each previously absent from the declared inventory.
@@ -31,17 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Round12b {
   import Tables._
-
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
-
-  /** Exact squared L2 on the 1e6 integer grid (the q219/q228 bridge):
-    * n2+n2−2·dot ≤ 64·(2e6)² = 2.56e14 < 2^53 — exact doubles, lossless
-    * long cast. */
-  private def gridDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
-  }
 
   val defs: Vector[(String, QDef)] = Vector(
 
@@ -74,7 +64,7 @@ object Round12b {
         val withN = Round11.cAssign(all, c1, 8)
           .select(col("vec_id"), col("list_id"),
             col("v").cast("array<double>").as("vd"))
-          .withColumn("n2", norm2(col("vd")))
+          .withColumn("n2", DotProduct.norm2(col("vd")))
           .localCheckpoint()
         val a = withN.select(col("vec_id").as("id_a"), col("list_id"),
           col("vd").as("va"), col("n2").as("na"))
@@ -82,7 +72,7 @@ object Round12b {
           col("vd").as("vb"), col("n2").as("nb"))
         val pairs = a.join(b, Seq("list_id"))
           .where(col("id_a") < col("id_b"))
-          .withColumn("cos_sim", dotCol(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+          .withColumn("cos_sim", DotProduct.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
           .where(col("cos_sim") > 0.8)
           .select(col("list_id"), col("id_a"), col("id_b"), col("cos_sim"))
         val keeper = pairs.groupBy(col("id_b").as("removed"))
@@ -178,7 +168,7 @@ object Round12b {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         short.join(qv, Seq("vec_id"))
           .join(broadcast(qq), Seq("qid"))
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vec_id"))))
           .where(col("rnk") <= 5)
@@ -252,8 +242,8 @@ object Round12b {
           col("vd").as("wd"))
         wn.join(b, Seq("list_id"))
           .where(col("vec_id") =!= col("nbr_id"))
-          .withColumn("d2", (norm2(col("vd")) + norm2(col("wd"))
-            - lit(2.0) * dotCol(col("vd"), col("wd"))).cast("long"))
+          .withColumn("d2", (DotProduct.norm2(col("vd")) + DotProduct.norm2(col("wd"))
+            - lit(2.0) * DotProduct.dot(col("vd"), col("wd"))).cast("long"))
           .withColumn("nbr_rank", row_number().over(
             Window.partitionBy("vec_id").orderBy(col("d2"), col("nbr_id"))))
           .where(col("nbr_rank") <= 3)
@@ -293,9 +283,9 @@ object Round12b {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         val joined = qv.crossJoin(broadcast(q))
           .where(col("vec_id") =!= col("qid"))
-          .withColumn("d_full", gridDist(col("v"), col("qv")))
+          .withColumn("d_full", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("d_head",
-            gridDist(expr("slice(v, 1, 16)"), expr("slice(qv, 1, 16)")))
+            DotProduct.gridDist(expr("slice(v, 1, 16)"), expr("slice(qv, 1, 16)")))
         def top5(dcol: String) = joined
           .withColumn("r", row_number().over(
             Window.partitionBy("qid").orderBy(col(dcol), col("vec_id"))))

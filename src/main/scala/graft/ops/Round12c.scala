@@ -4,6 +4,7 @@ import graft.{Det, QDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-12 batch 3: four curation/serving operators a 100 TB training-data
   * platform runs that were absent from the declared inventory.
@@ -36,9 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Round12c {
   import Tables._
-
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
 
   /** q238's core over any (doc_id, lang, text) frame — the WINDOWLESS
     * corpus-wide form (round-13 rework; the round-12 version bucketed by
@@ -93,12 +91,6 @@ object Round12c {
         sum(coalesce(col("best"), lit(0L))).as("cacheable_toks"))
       .withColumn("hit_rate",
         col("cacheable_toks").cast("double") / col("total_toks"))
-  }
-
-  /** Exact squared L2 on the 1e6 integer grid (the q219/q228 bridge). */
-  private def gridDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
   }
 
   /** q235's core over any (doc_id, text) frame — shared with ScaleCurve's
@@ -285,8 +277,8 @@ object Round12c {
         val b = wn.select(col("vec_id").as("nbr_id"), col("list_id"),
           col("vd").as("wd"))
         val sums = wn.join(b, Seq("list_id"))
-          .withColumn("d2", (norm2(col("vd")) + norm2(col("wd"))
-            - lit(2.0) * dotCol(col("vd"), col("wd"))).cast("long"))
+          .withColumn("d2", (DotProduct.norm2(col("vd")) + DotProduct.norm2(col("wd"))
+            - lit(2.0) * DotProduct.dot(col("vd"), col("wd"))).cast("long"))
           .groupBy("list_id", "vec_id")
           .agg(sum("d2").as("sum_d2"), count(lit(1)).as("n_cell"))
         val m = sums.groupBy("list_id").agg(min("sum_d2").as("min_sum"))
@@ -492,7 +484,7 @@ object Round12c {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         val exact5 = qv.crossJoin(broadcast(qq))
           .where(col("vec_id") =!= col("qid"))
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("erank", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vec_id"))))
           .where(col("erank") <= 5).select("qid", "vec_id", "erank")
@@ -665,12 +657,12 @@ object Round12c {
         val lam = 0.5
         val wn = Round11.quantized(embeddings(s, d))
           .select(col("vec_id"), col("v").cast("array<double>").as("vd"))
-          .withColumn("n2", norm2(col("vd")))
+          .withColumn("n2", DotProduct.norm2(col("vd")))
         val qvec = wn.where(col("vec_id") === 0)
           .select(col("vd").as("qv"), col("n2").as("qn")).limit(1)
         val cand = wn.where(col("vec_id") > 0 && col("vec_id") < 200)
           .crossJoin(broadcast(qvec))
-          .withColumn("rel", dotCol(col("vd"), col("qv")) / sqrt(col("n2") * col("qn")))
+          .withColumn("rel", DotProduct.dot(col("vd"), col("qv")) / sqrt(col("n2") * col("qn")))
           .select("vec_id", "vd", "n2", "rel")
           .localCheckpoint() // consumed by every round's scan + rejoin
         def selRows(pick: org.apache.spark.sql.DataFrame) =
@@ -687,7 +679,7 @@ object Round12c {
             Seq("vec_id"), "left_anti")
           .crossJoin(broadcast(selected))
           .withColumn("sim",
-            dotCol(col("vd"), col("sel_vd")) / sqrt(col("n2") * col("sel_n2")))
+            DotProduct.dot(col("vd"), col("sel_vd")) / sqrt(col("n2") * col("sel_n2")))
           .groupBy("vec_id")
           .agg(min("rel").as("rel"), max("sim").as("max_sim"))
           .withColumn("score",

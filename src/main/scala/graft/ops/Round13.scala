@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-13 batch: the four compositions the round-12 verdict named as the
   * remaining capability gaps vs the 100 TB north star.
@@ -33,17 +34,6 @@ import org.apache.spark.sql.functions._
 object Round13 {
   import Tables._
 
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
-
-  /** Exact squared L2 on the 1e6 integer grid (the q219/q228 bridge):
-    * n2+n2−2·dot ≤ 64·(2e6)² = 2.56e14 < 2^53 — exact doubles, lossless
-    * long cast. */
-  private def gridDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
-  }
-
   /** Multi-probe kNN-graph CANDIDATE set over the shared q219 coarse stage
     * (8 seeds, one Lloyd iteration, integer grid): every vector draws
     * candidates from the members of its `nprobe` nearest cells. Members
@@ -69,7 +59,7 @@ object Round13 {
         col("v").cast("array<double>").as("vd"))
       .localCheckpoint() // member side + the probe-side payload rejoin
     val probes = qv.crossJoin(broadcast(c1.select(col("j"), col("c")).limit(8)))
-      .select(col("vec_id"), col("j"), gridDist(col("v"), col("c")).as("cd"))
+      .select(col("vec_id"), col("j"), DotProduct.gridDist(col("v"), col("c")).as("cd"))
       .withColumn("probe", row_number().over(
         Window.partitionBy("vec_id").orderBy(col("cd"), col("j"))))
       .where(col("probe") <= nprobe)
@@ -80,8 +70,8 @@ object Round13 {
     probes.join(wn.select(col("vec_id"), col("vd")), Seq("vec_id"))
       .join(b, Seq("list_id"))
       .where(col("vec_id") =!= col("nbr_id"))
-      .withColumn("d2", (norm2(col("vd")) + norm2(col("wd"))
-        - lit(2.0) * dotCol(col("vd"), col("wd"))).cast("long"))
+      .withColumn("d2", (DotProduct.norm2(col("vd")) + DotProduct.norm2(col("wd"))
+        - lit(2.0) * DotProduct.dot(col("vd"), col("wd"))).cast("long"))
       .select(col("vec_id"), col("nbr_id"), col("list_id"), col("probe"),
         col("d2"))
   }
@@ -149,7 +139,7 @@ object Round13 {
           .select(col("vec_id").as("aid"), col("v").as("av")).limit(21)
         val brute = qv.crossJoin(broadcast(carve))
           .where(col("vec_id") =!= col("aid"))
-          .withColumn("d2", gridDist(col("v"), col("av")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("av")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("aid").orderBy(col("d2"), col("vec_id"))))
           .where(col("rnk") <= 3)
@@ -342,7 +332,7 @@ object Round13 {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         short.join(qv.select(col("vec_id").as("vid"), col("v")), "vid")
           .join(broadcast(q), "qid")
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
           .where(col("rnk") <= 5)

@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-13 batch 2: the two clustering/serving TUNING audits still absent
   * from the inventory — both are the numbers a platform derives before
@@ -22,14 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Round13b {
   import Tables._
-
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
-
-  private def gridDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
-  }
 
   /** q247's whole plan, parameterized by the ACCUMULATOR domain:
     * `decimalAcc = false` is the declared int64 form (exact through
@@ -184,14 +177,14 @@ object Round13b {
         val q = qv.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         val pr = q.crossJoin(broadcast(c1.select(col("j"), col("c")).limit(8)))
-          .withColumn("cd", gridDist(col("qv"), col("c")))
+          .withColumn("cd", DotProduct.gridDist(col("qv"), col("c")))
           .withColumn("pr", row_number().over(
             Window.partitionBy("qid").orderBy(col("cd"), col("j"))))
           .select(col("qid"), col("j").as("list_id"), col("pr"))
         val cand = wn.join(broadcast(pr), Seq("list_id"))
           .where(col("vec_id") =!= col("qid"))
           .join(broadcast(q), Seq("qid"))
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .select(col("qid"), col("vec_id"), col("pr"), col("d2"))
           .localCheckpoint() // ranked once per level + the truth slice
         val byLevel = cand
@@ -295,7 +288,7 @@ object Round13b {
           .where(col("srnk") <= 100)
           .join(qv.select(col("vec_id"), col("v")), Seq("vec_id"))
           .join(broadcast(q), Seq("qid"))
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .select(col("qid"), col("vec_id"), col("srnk"), col("d2"))
           .localCheckpoint() // cut the corpus-rank lineage before the ×4 level fan-out
         val byWidth = short.crossJoin(broadcast(widths))
@@ -306,7 +299,7 @@ object Round13b {
           .select(col("qid"), col("width"), col("vec_id"))
         val truth = qv.crossJoin(broadcast(q))
           .where(col("vec_id") =!= col("qid"))
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vec_id"))))
           .where(col("rnk") <= 5)

@@ -4,6 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.DotProduct
 
 /** Round-15 additions — the serving-knob family's last missing member:
   *
@@ -21,17 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Round15 {
   import Tables._
-
-  private def dotCol(a: Column, b: Column): Column = graft.plans.DotProduct.dot(a, b)
-  private def norm2(a: Column): Column = graft.plans.DotProduct.norm2(a)
-
-  /** Exact 64-dim squared distance on the 1e6 grid (the q219/q248
-    * contract: n2+n2−2·dot ≤ 2.56e14 < 2^53 stays exact double, long
-    * cast lossless). */
-  private def gridDist(a: Column, b: Column): Column = {
-    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-    (norm2(ad) + norm2(bd) - lit(2.0) * dotCol(ad, bd)).cast("long")
-  }
 
   /** The q254 capacity levels: 4-, 6-, and 8-bit codes per subspace. */
   private[graft] val kcLevels = Seq(16, 64, 256)
@@ -60,7 +50,7 @@ object Round15 {
     val top5 = short
       .join(qvT.select(col("vec_id").as("vid"), col("v")), Seq("vid"))
       .join(broadcast(q), Seq("qid"))
-      .withColumn("d2", gridDist(col("v"), col("qv")))
+      .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("kc", "qid").orderBy(col("d2"), col("vid"))))
       .where(col("rnk") <= 5)
@@ -185,7 +175,7 @@ object Round15 {
           .select(col("vec_id").as("qid"), col("v").as("qv")).limit(10)
         val truth = qvT.crossJoin(broadcast(q))
           .where(col("vec_id") =!= col("qid"))
-          .withColumn("d2", gridDist(col("v"), col("qv")))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("qv")))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("vec_id"))))
           .where(col("rnk") <= 5)

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -83,4 +84,13 @@ object DotProduct {
 
   /** Squared L2 norm as a self-dot — same generated loop. */
   def norm2(a: Column): Column = dot(a, a)
+
+  /** Exact squared L2 distance on the 1e6 integer grid, as a long (the
+    * q219/q228 bridge): for 64-dim vectors n2+n2−2·dot ≤ 64·(2e6)² =
+    * 2.56e14 < 2^53, so the double arithmetic is exact and the long cast
+    * lossless — bit-identical keys in both engines. */
+  def gridDist(a: Column, b: Column): Column = {
+    val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
+    (norm2(ad) + norm2(bd) - lit(2.0) * dot(ad, bd)).cast("long")
+  }
 }

@@ -67,7 +67,7 @@ object Tables {
     *   - LongType        → legacy nanosAsLong mode is on; floor-divide to
     *                       micros (exactly DuckDB's nanos→micros conversion).
     *   - TimestampNTZType → cast to TimestampType; the session timezone is
-    *                       pinned to UTC everywhere (Sessions/Bench/Verify),
+    *                       pinned to UTC everywhere (GraftSession, SharedSpark),
     *                       so the cast is a pure micros-preserving relabel.
     *   - TimestampType   → as-is.
     * Downstream code always sees `ts: TimestampType` with identical micros

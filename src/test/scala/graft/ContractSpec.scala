@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Driver-contract guards that need no SparkSession: the bench stdout line
   * must stay inside the driver's tail-capture window no matter how the query
   * inventory grows (rounds 3 and 5 both lost the driver's bench record to
-  * this), and the counts quoted in README.md / CLAUDE.md must track the code
-  * (drifted in rounds 2 and 4).
+  * this), the counts quoted in README.md / CLAUDE.md must track the code
+  * (drifted in rounds 2 and 4), and every main's session comes from
+  * GraftSession (nine hand-built sessions had drifted apart in cores,
+  * time zone, extensions and log level).
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -119,6 +121,18 @@ class ContractSpec extends AnyFunSuite {
     // the inventory is dense q01..qNN: the highest declared number is the size
     val maxQ = SparkEntry.queries.keys.map(_.drop(1).takeWhile(_.isDigit).toInt).max
     assert(maxQ == n, s"query names not dense: max q$maxQ vs $n declared")
+  }
+
+  test("program mains build their session only through GraftSession") {
+    val owner = Paths.get("src/main/scala/graft/GraftSession.scala")
+    assert(Files.exists(owner))
+    val others = Files.walk(Paths.get("src/main/scala")).iterator().asScala.toVector
+      .filter(p => p.toString.endsWith(".scala") && p != owner)
+    // the builder, the cpus env var and any local[N] master literal each
+    // live in one place, so session confs cannot drift apart again
+    val tokens = Seq("SparkSession.builder", "SPARK_GRAFT_CPUS", "\"local[")
+    val hits = for (p <- others; t <- tokens if read(p.toString).contains(t)) yield s"$p: $t"
+    assert(hits.isEmpty, s"session policy outside GraftSession:\n  ${hits.mkString("\n  ")}")
   }
 
   test("README.md and CLAUDE.md test/suite counts match the test tree") {
