@@ -1,5 +1,9 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** The one session policy for every program main (Bench, Verify, Smoke,
@@ -12,10 +16,20 @@ import org.apache.spark.sql.SparkSession
   *    `-Dspark.sql.session.timeZone=UTC` run;
   *  - `GraftExtensions` (the native DotProduct rewrite) and no UI;
   *  - ERROR logging: the WindowExec carry-frame WARN flood would bury
-  *    Bench's JSON line and Verify's `[verify]` failure lines.
+  *    Bench's JSON line and Verify's `[verify]` failure lines;
+  *  - a warehouse of its own per process, deleted at JVM exit: two mains in
+  *    one directory raced on a shared `spark-warehouse/` (q126's bucketed
+  *    twins failed with `LOCATION_ALREADY_EXISTS`) and left its tables on
+  *    disk. The twins are rebuilt once per JVM anyway.
   * The test suites keep their own fixed-width `SharedSpark` session.
   */
 object GraftSession {
+
+  private lazy val warehouse: File = {
+    val dir = Files.createTempDirectory("graft_warehouse").toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir))
+    dir
+  }
 
   def apply(): SparkSession = {
     val n = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
@@ -26,6 +40,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouse.getPath)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

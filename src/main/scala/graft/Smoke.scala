@@ -13,16 +13,19 @@ object Smoke {
     println(s"[smoke] multimodal features=$feats metaStats=$stats " +
       (if (feats > 0 && stats > 0) "OK" else "FAIL"))
     val cust = Tables.customer(spark, "/root/testdata/sf0.001")
-    val csvDir = java.nio.file.Files.createTempDirectory("graft_smoke").toString + "/c.csv"
-    sources.Sources.writeCsv(cust, csvDir)
-    val back = sources.Sources.readCsv(spark, csvDir, cust.schema).count()
-    println(s"[smoke] csv round-trip rows=$back " +
-      (if (back == cust.count()) "OK" else "FAIL"))
-    val pipeOut = java.nio.file.Files.createTempDirectory("graft_smoke_pipe").toString + "/docs"
-    val rep = pipeline.TrainingDataPipeline.run(spark, "/root/testdata/sf0.001", pipeOut)
-    println(s"[smoke] pipeline ${rep.input}->${rep.afterQuality}->${rep.afterLang}->" +
-      s"${rep.afterExactDedup}->${rep.afterNearDedup} " +
-      (if (rep.afterNearDedup > 0) "OK" else "FAIL"))
+    val csvTmp = java.nio.file.Files.createTempDirectory("graft_smoke").toFile
+    val pipeTmp = java.nio.file.Files.createTempDirectory("graft_smoke_pipe").toFile
+    try {
+      val csvDir = s"$csvTmp/c.csv"
+      sources.Sources.writeCsv(cust, csvDir)
+      val back = sources.Sources.readCsv(spark, csvDir, cust.schema).count()
+      println(s"[smoke] csv round-trip rows=$back " +
+        (if (back == cust.count()) "OK" else "FAIL"))
+      val rep = pipeline.TrainingDataPipeline.run(spark, "/root/testdata/sf0.001", s"$pipeTmp/docs")
+      println(s"[smoke] pipeline ${rep.input}->${rep.afterQuality}->${rep.afterLang}->" +
+        s"${rep.afterExactDedup}->${rep.afterNearDedup} " +
+        (if (rep.afterNearDedup > 0) "OK" else "FAIL"))
+    } finally Seq(csvTmp, pipeTmp).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     spark.stop()
   }
 }

@@ -34,10 +34,10 @@ object Round9 {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val (ob, lb) = (s"graft_orders_b_$tag", s"graft_lineitem_b_$tag")
       if (!bucketedFor.contains(d)) {
-        // A fresh JVM shares the warehouse DIRECTORY of previous runs but
-        // not their in-memory catalog: mode("overwrite") alone then fails
-        // with LOCATION_ALREADY_EXISTS on the orphaned files. Drop both
-        // the entry and the location before writing.
+        // A session whose warehouse DIRECTORY outlives its JVM (any not
+        // built by GraftSession) does not share the old in-memory catalog:
+        // mode("overwrite") alone then fails with LOCATION_ALREADY_EXISTS on
+        // the orphaned files. Drop both the entry and the location first.
         def reset(name: String): Unit = {
           s.sql(s"DROP TABLE IF EXISTS $name")
           val loc = new org.apache.hadoop.fs.Path(

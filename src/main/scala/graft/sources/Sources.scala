@@ -78,10 +78,9 @@ object Sources {
 
   /** Streaming file sink with checkpointing (exactly-once file output). */
   def fileSink(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    df.writeStream
+    graft.streaming.StreamStart(df)(_
       .format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      .outputMode("append"))
 }

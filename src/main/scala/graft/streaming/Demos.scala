@@ -376,6 +376,11 @@ object Demos {
     * cap is actually hit, so the common small-alert-volume path stays one
     * job. Alert floods therefore cannot OOM the driver — production
     * points the overflow at a parquet sink (the s14 versioned protocol).
+    *
+    * The query starts through [[StreamStart]], so each batch's offset and
+    * commit log files are written with `java.nio`: 0 forked processes per
+    * batch, where Spark's default manager forked 20 (`chmod`, `readlink`)
+    * on a host without libhadoop.
     */
   def s1BroadcastRules(
       events: DataFrame,
@@ -384,8 +389,7 @@ object Demos {
       maxCollect: Int = 65536
   ): StreamingQuery = {
     val alertEncoder = Encoders.product[Alert]
-    events.writeStream
-      .outputMode("append")
+    StreamStart(events)(_.outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val rulesByType = typedLit(currentRules().filter(_.event_type != null)
           .groupBy(_.event_type).map { case (t, rs) => t -> rs.map(r => (r.threshold, r.severity)) })
@@ -397,8 +401,7 @@ object Demos {
         val kept = alerts.orderBy("event_id").limit(maxCollect).as(alertEncoder).collect().toSeq
         val overflow = if (kept.size < maxCollect) 0L else alerts.count() - kept.size
         onBatch(kept, overflow, batchId)
-      }
-      .start()
+      })
   }
 
   /** s2 — watermarked tumbling window aggregation (append mode: a window
@@ -660,8 +663,7 @@ object Demos {
       onBatch: (Seq[DropVerdict], Long, Long) => Unit,
       maxCollect: Int = 65536
   ): StreamingQuery = {
-    docs.writeStream
-      .outputMode("append")
+    StreamStart(docs)(_.outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
@@ -686,8 +688,7 @@ object Demos {
         val kept = drops.orderBy("doc_id").limit(maxCollect).as[DropVerdict].collect().toSeq
         val overflow = if (kept.size < maxCollect) 0L else drops.count() - kept.size
         onBatch(kept, overflow, batchId)
-      }
-      .start()
+      })
   }
 
   /** s11 — token-budget admission on ingest: the streaming complement of

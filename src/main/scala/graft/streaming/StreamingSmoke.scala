@@ -42,15 +42,15 @@ object StreamingSmoke {
 
     // s2: tumbling counts to a memory sink (append mode — only finalized
     // windows; the unfinalized tail is expected to be withheld).
-    val q2 = Demos.s2TumblingCounts(eventStream)
-      .writeStream.outputMode("append").format("memory").queryName("smoke_s2").start()
+    val q2 = StreamStart(Demos.s2TumblingCounts(eventStream))(
+      _.outputMode("append").format("memory").queryName("smoke_s2"))
     q2.processAllAvailable(); q2.stop()
     val s2n = spark.table("smoke_s2").count()
     println(s"[stream-smoke] s2 finalized windows=$s2n " + (if (s2n > 0) "OK" else "FAIL"))
 
     // s4: stateful pattern detection over the real stream.
-    val q4 = Demos.s4PatternDetect(spark, eventStream)
-      .writeStream.outputMode("append").format("memory").queryName("smoke_s4").start()
+    val q4 = StreamStart(Demos.s4PatternDetect(spark, eventStream))(
+      _.outputMode("append").format("memory").queryName("smoke_s4"))
     q4.processAllAvailable(); q4.stop()
     val s4n = spark.table("smoke_s4").count()
     val batchMatches = graft.SparkEntry.queries("q38_pattern_detect")(spark, sfDir)
@@ -59,8 +59,8 @@ object StreamingSmoke {
       (if (s4n == batchMatches) "OK" else "MISMATCH"))
 
     // s6: stream-stream interval join vs its batch equivalent.
-    val q6 = Demos.s6StreamStreamJoin(eventStream)
-      .writeStream.outputMode("append").format("memory").queryName("smoke_s6").start()
+    val q6 = StreamStart(Demos.s6StreamStreamJoin(eventStream))(
+      _.outputMode("append").format("memory").queryName("smoke_s6"))
     q6.processAllAvailable(); q6.stop()
     val s6n = spark.table("smoke_s6").count()
     val ev = graft.Tables.events(spark, sfDir)

@@ -30,10 +30,9 @@ object VersionedSink {
 
   /** Run `step(batch, batchId)` per micro-batch, checkpointed at `dir/_ckpt`. */
   def start(df: DataFrame, dir: String)(step: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream
+    StreamStart(df)(_
       .foreachBatch((batch: Dataset[Row], batchId: Long) => step(batch.toDF(), batchId))
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .start()
+      .option("checkpointLocation", s"$dir/_ckpt"))
 
   /** The committed ids under `dir` strictly below `batchId`, ascending;
     * empty when `dir` does not exist yet. */

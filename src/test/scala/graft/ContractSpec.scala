@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * this), the counts quoted in README.md / CLAUDE.md must track the code
   * (drifted in rounds 2 and 4), and every main's session comes from
   * GraftSession (nine hand-built sessions had drifted apart in cores,
-  * time zone, extensions and log level).
+  * time zone, extensions and log level), and every program stream starts
+  * through StreamStart.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -133,6 +134,50 @@ class ContractSpec extends AnyFunSuite {
     val tokens = Seq("SparkSession.builder", "SPARK_GRAFT_CPUS", "\"local[")
     val hits = for (p <- others; t <- tokens if read(p.toString).contains(t)) yield s"$p: $t"
     assert(hits.isEmpty, s"session policy outside GraftSession:\n  ${hits.mkString("\n  ")}")
+  }
+
+  test("program streams start only through StreamStart, the one owner of the manager conf") {
+    // without libhadoop, a stream started any other way writes its offset
+    // and commit logs through forking Hadoop local FS calls (20 per s1 batch)
+    val owner = Paths.get("src/main/scala/graft/streaming/StreamStart.scala")
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala.toVector
+      .filter(p => p.toString.endsWith(".scala") && p != owner).map(p => p -> read(p.toString))
+    val keyHits = for ((p, src) <- sources
+      if src.contains("checkpointFileManagerClass") ||
+        src.contains("STREAMING_CHECKPOINT_FILE_MANAGER_CLASS")) yield s"$p: manager conf"
+    /** The method names chained onto `writeStream` at `from`. */
+    def chain(src: String, from: Int): Seq[String] = {
+      var i = from
+      def skipSpace(): Unit = while (i < src.length && src(i).isWhitespace) i += 1
+      def skipGroup(): Unit = {
+        val (open, close) = if (src(i) == '(') ('(', ')') else ('{', '}')
+        var depth = 0
+        do {
+          if (src(i) == open) depth += 1 else if (src(i) == close) depth -= 1
+          i += 1
+        } while (depth > 0 && i < src.length)
+      }
+      val names = Seq.newBuilder[String]
+      skipSpace()
+      while (i < src.length && src(i) == '.') {
+        val start = i + 1
+        i = start
+        while (i < src.length && src(i).isLetterOrDigit) i += 1
+        names += src.substring(start, i)
+        skipSpace()
+        while (i < src.length && (src(i) == '(' || src(i) == '{')) { skipGroup(); skipSpace() }
+      }
+      names.result()
+    }
+    val startHits = for {
+      (p, src) <- sources
+      m <- raw"\bwriteStream\b".r.findAllMatchIn(src)
+      if chain(src, m.end).exists(n => n == "start" || n == "toTable")
+    } yield s"$p:${src.take(m.start).count(_ == '\n') + 1}: writeStream…start()"
+    val hits = keyHits ++ startHits
+    assert(hits.isEmpty,
+      s"${hits.size} stream start(s) bypass StreamStart:\n  ${hits.mkString("\n  ")}")
+    assert(Files.exists(owner))
   }
 
   test("README.md and CLAUDE.md test/suite counts match the test tree") {

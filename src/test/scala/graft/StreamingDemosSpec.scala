@@ -135,6 +135,31 @@ class StreamingDemosSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"s1's batch plan must hold no join or broadcast exchange:\n$plan")
   }
 
+  test("s1: offset and commit logs hold only batch files — no .crc, no temp files") {
+    // Spark's default checkpoint manager leaves a `.N.crc` per log file,
+    // written through the forking Hadoop local FS; s1 starts through
+    // StreamStart, whose java.nio manager writes neither
+    val s = spark.newSession()
+    val root = java.nio.file.Files.createTempDirectory("s1_layout")
+    s.conf.set("spark.sql.streaming.checkpointLocation", root.toString)
+    implicit val sqlCtx = s.sqlContext
+    val input = MemoryStream[Event]
+    val q = Demos.s1BroadcastRules(input.toDF(), () => Seq(Rule("purchase", 150.0, "HIGH")),
+      (_, _, _) => ())
+    try for (i <- 0 until 3) {
+      input.addData(ev(i, i, 7, "purchase", 200.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    def ls(d: java.nio.file.Path) = d.toFile.list().toSet
+    val ckpt = root.resolve(ls(root).toSeq.head)
+    try for (log <- Seq("offsets", "commits"))
+      assert(ls(ckpt.resolve(log)) == Set("0", "1", "2"), s"$log: ${ls(ckpt.resolve(log))}")
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    assert(spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty &&
+      s.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty,
+      "StreamStart must put the session's manager conf back")
+  }
+
   test("s2: watermarked tumbling window emits finalized hourly counts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
