@@ -27,13 +27,14 @@ object StreamingSmoke {
         .option("pathGlobFilter", "events.parquet") // file source needs a dir
         .parquet(sfDir))
 
-    // s1: broadcast-rules alerts, counted across micro-batches.
+    // s1: broadcast-rules alerts, counted across micro-batches (the alerts
+    // past s1's collect cap count through its overflow).
     val alertCount = new AtomicLong(0)
     val q1 = Demos.s1BroadcastRules(
       eventStream,
       () => graft.Tables.rules(spark).collect().toSeq
         .map(r => Rule(r.getString(0), r.getDouble(1), r.getString(2))),
-      (alerts, _, _) => alertCount.addAndGet(alerts.size)
+      (alerts, overflow, _) => alertCount.addAndGet(alerts.size + overflow)
     )
     q1.processAllAvailable(); q1.stop()
     val batchAlerts = graft.SparkEntry.queries("q35_broadcast_rules")(spark, sfDir).count()

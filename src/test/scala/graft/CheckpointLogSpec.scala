@@ -10,6 +10,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -158,6 +159,37 @@ class CheckpointLogSpec extends AnyFunSuite {
       run(1200, stock = true) // stock: replays batch 3, then batch 4
       assert(run.delivered.map(_._1) == Seq(0L, 1L, 2L, 2L, 3L, 3L, 4L), run.delivered.map(_._1))
       run.assertExactlyOnce(1200)
+    }
+  }
+
+  test("a stateful stream through StreamStart writes state-store deltas with no Hadoop .crc, no temp files") {
+    withTmp("nio_state") { ckpt =>
+      val s = spark.newSession()
+      implicit val sqlCtx = s.sqlContext
+      import s.implicits._
+      val input = MemoryStream[streaming.Event]
+      val q = StreamStart(streaming.Demos.s3Dedup(input.toDF()))(_.outputMode("append")
+        .format("memory").queryName("nio_state").option("checkpointLocation", ckpt))
+      try for (i <- 0 until 3) {
+        input.addData(streaming.Event(i, new java.sql.Timestamp(i * 60000L), i % 2, "click", 1.0, "{}"))
+        q.processAllAvailable()
+      } finally q.stop()
+      val versions = (1L to q.lastProgress.batchId + 1).toSet
+      val state = s"$ckpt/state/0"
+      val partitions = names(state).filter(_.forall(_.isDigit))
+      assert(partitions == (0 until s.conf.get("spark.sql.shuffle.partitions").toInt).map(_.toString).toSet,
+        names(state))
+      for (p <- partitions) {
+        val deltas = names(s"$state/$p").filter(_.matches("\\d+\\.delta"))
+        assert(deltas.map(_.stripSuffix(".delta").toLong) == versions, s"partition $p: ${names(s"$state/$p")}")
+      }
+      // Spark 4.1 writes its own `N.delta.crc` state checksums; Hadoop's
+      // `.N.delta.crc` and the manager's `.N.delta.<uuid>.tmp` start with a dot
+      val walk = Files.walk(Paths.get(state))
+      val hidden = try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".") || n.endsWith(".tmp")).toList
+      finally walk.close()
+      assert(hidden.isEmpty, s"state store files: $hidden")
     }
   }
 }

@@ -50,7 +50,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
   private def addFile(name: String, events: Seq[streaming.Event], in: String = "in"): Unit = {
-    val tmp = Files.createTempDirectory("graft_ckpt_w")
+    val tmp = Files.createTempDirectory(root, "w") // deleted with the root
     events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp.resolve("o").toString)
     val part = tmp.resolve("o").toFile.listFiles()
       .find(_.getName.endsWith(".parquet")).get

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * extension ladder, complementing q84's oracle gate (which replays the
   * generator arithmetic in DuckDB).
   */
-class GenSourceSpec extends AnyFunSuite {
+class GenSourceSpec extends AnyFunSuite with TempDirs {
   import SharedSpark.spark
 
   private def read(rows: Long, parts: Int) =
@@ -54,7 +54,7 @@ class GenSourceSpec extends AnyFunSuite {
   }
 
   test("graft-gen streams in rowsPerBatch micro-batches; content equals the batch read") {
-    val dir = java.nio.file.Files.createTempDirectory("gen_stream").toString
+    val dir = tempDir("gen_stream").toString
     val q = spark.readStream.format("graft-gen")
       .option("rows", "1000").option("partitions", "4").option("rowsPerBatch", "300")
       .load()
@@ -74,7 +74,7 @@ class GenSourceSpec extends AnyFunSuite {
   }
 
   test("graft-gen stream restart from checkpoint re-emits nothing (exactly-once)") {
-    val base = java.nio.file.Files.createTempDirectory("gen_restart").toString
+    val base = tempDir("gen_restart").toString
     def run(): Unit = {
       val q = spark.readStream.format("graft-gen")
         .option("rows", "800").option("partitions", "4").option("rowsPerBatch", "250")
@@ -92,7 +92,7 @@ class GenSourceSpec extends AnyFunSuite {
   }
 
   test("graft-gen crash-replayed batch re-admits its logged range once, then continues") {
-    val base = java.nio.file.Files.createTempDirectory("gen_replay").toString
+    val base = tempDir("gen_replay").toString
     val delivered = scala.collection.mutable.Buffer[(Long, Seq[Long])]()
     def run(rows: Long): Unit = {
       val q = spark.readStream.format("graft-gen")
@@ -126,7 +126,7 @@ class GenSourceSpec extends AnyFunSuite {
 
   test("graft-stats streaming sink: one idempotent report per committed epoch") {
     sources.StatsSinkRegistry.epochReports.filterInPlace { case ((k, _), _) => k != "sspec" }
-    val ckpt = java.nio.file.Files.createTempDirectory("stats_stream").toString
+    val ckpt = tempDir("stats_stream").toString
     val q = spark.readStream.format("graft-gen")
       .option("rows", "1000").option("partitions", "4").option("rowsPerBatch", "400")
       .load()

@@ -1,17 +1,15 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.TrainingDataPipeline
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   import SharedSpark.{sf001, spark}
 
   test("training-data pipeline: monotone stages, partitioned output, reproducible") {
-    val out = Files.createTempDirectory("graft_pipeline").toString + "/docs"
+    val out = tempDir("graft_pipeline").toString + "/docs"
     val r = TrainingDataPipeline.run(spark, sf001, out)
 
     // stages only ever remove rows
@@ -31,7 +29,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan.linesIterator.take(6).mkString("\n"))
 
     // deterministic: a second run produces the identical document set
-    val out2 = Files.createTempDirectory("graft_pipeline").toString + "/docs"
+    val out2 = tempDir("graft_pipeline").toString + "/docs"
     val r2 = TrainingDataPipeline.run(spark, sf001, out2)
     assert(r2 == r.copy(outPath = out2))
     val ids1 = back.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq

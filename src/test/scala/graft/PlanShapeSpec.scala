@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scale: broadcast joins for dims, pushed filters at the scan, top-k
   * without a total sort, and whole-stage codegen coverage.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with TempDirs {
   import SharedSpark.{sf001, spark}
 
   private def plan(q: String): String = {
@@ -81,7 +81,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the 100 TB datalake layout (SCALE.md §1): facts partitioned by a
     // dim-like column; a filter on it must prune at PLANNING time (the
     // scan's partition filters), not scan-and-discard
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val ev = Tables.events(spark, sf001)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val df = spark.read.parquet(dir)

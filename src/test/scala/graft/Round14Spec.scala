@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     tids, so all 16 "minhashes" pick the same argmin and every level
   *     produces identical candidates), and recall is monotone.
   */
-class Round14Spec extends AnyFunSuite {
+class Round14Spec extends AnyFunSuite with TempDirs {
   import SharedSpark.{sf01, spark}
 
   test("q251 == s37 replay: reclaimed set matches compactChunkStore; live set matches the compacted store") {
@@ -29,7 +29,7 @@ class Round14Spec extends AnyFunSuite {
 
     // the real s37 lifecycle: admit v0 (all docs), admit v1 (edited delta),
     // then compact — reclaimed = what compaction would delete
-    val dir = java.nio.file.Files.createTempDirectory("q251s37").toString
+    val dir = tempDir("q251s37").toString
     streaming.Demos.chunkStoreBatch(docs, dir, 0L)
     streaming.Demos.chunkStoreBatch(edited, dir, 1L)
     val reclaimed = streaming.Demos.compactChunkStore(spark, dir)

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * schema-adaptive, tables.scala); the preflight instead asserts the
   * POST-normalization invariant all 47 consumers rely on.
   */
-class SchemaPreflightSpec extends AnyFunSuite {
+class SchemaPreflightSpec extends AnyFunSuite with TempDirs {
   import SharedSpark.spark
 
   private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
@@ -142,7 +142,7 @@ class SchemaPreflightSpec extends AnyFunSuite {
 
   test("the schema memo re-infers a rewritten file and a session's parquet confs") {
     import java.nio.file.{Files, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_preflight")
+    val dir = tempDir("graft_preflight")
     // One parquet file (Spark writes a directory; keep its single part).
     def writeFile(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
       val out = dir.resolve(tag)

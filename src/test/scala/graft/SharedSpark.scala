@@ -4,6 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession shared by every suite (forked test JVM). */
 object SharedSpark {
+  /** The suites' warehouse, deleted at JVM exit. */
+  private lazy val warehouse: java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")
@@ -11,8 +18,7 @@ object SharedSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.getPath)
       .appName("graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +7,11 @@ import graft.sources.Sources
 
 /** Round-trips through every source/sink format plus the rate stream
   * (SURVEY.md §2.1 R2/R17 coverage). */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   import SharedSpark.{sf001, spark}
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_sources").toString
+    tempDir("graft_sources").toString
 
   test("csv and json round-trip the customer table losslessly") {
     val customer = Tables.customer(spark, sf001)

@@ -1,13 +1,15 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{IncrementalExecution, MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -15,11 +17,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming._
 
+/** An event whose value may be null, and whose user_id is an int (s1 casts
+  * it to the alert's long). */
+case class NullableEvent(event_id: Long, user_id: Int, event_type: String, value: Option[Double])
+
 /** MemoryStream-driven tests for the Structured Streaming demos s1–s5
   * (SURVEY.md §2.3/§5.4), including the R10 semantics: a rule update
   * between micro-batches affects subsequent batches only.
   */
-class StreamingDemosSpec extends AnyFunSuite {
+class StreamingDemosSpec extends AnyFunSuite with TempDirs {
   import SharedSpark.spark
   import spark.implicits._
 
@@ -31,6 +37,35 @@ class StreamingDemosSpec extends AnyFunSuite {
 
   private def runToCompletion(q: StreamingQuery): Unit = {
     q.processAllAvailable()
+  }
+
+  /** Counts the Spark jobs each streaming batch starts, keyed by the query
+    * and batch ids the engine sets on its thread, so other suites' jobs on
+    * the shared session never count. */
+  private final class BatchJobs extends SparkListener {
+    private val jobs = new ConcurrentHashMap[(String, String), Integer]()
+    override def onJobStart(js: SparkListenerJobStart): Unit = for {
+      p <- Option(js.properties)
+      q <- Option(p.getProperty("sql.streaming.queryId"))
+      b <- Option(p.getProperty("streaming.sql.batchId"))
+    } jobs.merge((q, b), 1, (a: Integer, c: Integer) => a + c)
+    def of(q: StreamingQuery, batch: Long): Int =
+      Option(jobs.get((q.id.toString, batch.toString))).fold(0)(_.intValue)
+  }
+
+  /** Runs `body` with a [[BatchJobs]] listener, and returns what `read`
+    * makes of it once the listener bus has settled (two equal reads 50 ms
+    * apart — PlanAudit.awaitStable's rule). */
+  private def withBatchJobs[A, B](body: => A)(read: (A, BatchJobs) => B): B = {
+    val listener = new BatchJobs
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      def poll(): B = { Thread.sleep(50); read(a, listener) }
+      var (prev, cur, polls) = (poll(), poll(), 2)
+      while (cur != prev && polls < 100) { prev = cur; cur = poll(); polls += 1 }
+      cur
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("s1: broadcast rules fire alerts; rule updates apply to the NEXT batch (R10)") {
@@ -66,21 +101,26 @@ class StreamingDemosSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
     val seen = mutable.Buffer[(Seq[Alert], Long)]()
-    val q = Demos.s1BroadcastRules(
-      input.toDF(),
-      () => Seq(Rule("purchase", 150.0, "HIGH")),
-      (alerts, overflow, _) => seen.synchronized { seen += ((alerts, overflow)) },
-      maxCollect = 2
-    )
-    try {
-      // 4 qualifying alerts in one batch against a cap of 2
-      input.addData(ev(4, 0, 1, "purchase", 200.0), ev(2, 1, 2, "purchase", 300.0),
-        ev(3, 2, 3, "purchase", 250.0), ev(1, 3, 4, "purchase", 400.0))
-      q.processAllAvailable()
-      val (alerts, overflow) = seen.synchronized(seen.head)
-      assert(alerts.map(_.event_id) == Seq(1L, 2L)) // deterministic: lowest ids survive
-      assert(overflow == 2L)
-    } finally q.stop()
+    // the cap-hit batch counts its overflow in the same job as its alerts
+    val jobs = withBatchJobs {
+      val q = Demos.s1BroadcastRules(
+        input.toDF(),
+        () => Seq(Rule("purchase", 150.0, "HIGH")),
+        (alerts, overflow, _) => seen.synchronized { seen += ((alerts, overflow)) },
+        maxCollect = 2
+      )
+      try {
+        // 4 qualifying alerts in one batch against a cap of 2
+        input.addData(ev(4, 0, 1, "purchase", 200.0), ev(2, 1, 2, "purchase", 300.0),
+          ev(3, 2, 3, "purchase", 250.0), ev(1, 3, 4, "purchase", 400.0))
+        q.processAllAvailable()
+        q
+      } finally q.stop()
+    }((q, j) => j.of(q, 0L))
+    val (alerts, overflow) = seen.synchronized(seen.head)
+    assert(alerts.map(_.event_id) == Seq(1L, 2L)) // deterministic: lowest ids survive
+    assert(overflow == 2L)
+    assert(jobs == 1, s"the cap-hit batch ran $jobs Spark jobs")
   }
 
   test("s1: literal rules map gives the broadcast join's alerts in a join-free plan") {
@@ -100,39 +140,81 @@ class StreamingDemosSpec extends AnyFunSuite {
       .select("event_id", "user_id", "event_type", "value", "severity")
       .as[Alert].collect().toSeq
 
-    val plans = mutable.Buffer[SparkPlan]()
+    // s1 builds no query of its own: the only SQL executions its stream
+    // reports are the engine's own streaming batches
+    val executions = mutable.Buffer[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        executions.synchronized { executions += qe }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.synchronized { executions += qe }
     }
-    object Aqe extends AdaptiveSparkPlanHelper
-    def alertPlan = plans.synchronized(plans.toSeq)
-      .find(p => Aqe.find(p)(_.isInstanceOf[TakeOrderedAndProjectExec]).isDefined)
     val input = MemoryStream[Event]
     val seen = mutable.Buffer[Alert]()
     spark.listenerManager.register(listener)
-    try {
+    val (q, jobs) = try withBatchJobs {
       val q = Demos.s1BroadcastRules(input.toDF(), () => rules,
         (alerts, _, _) => seen.synchronized { seen ++= alerts })
       try {
-        input.addData(events: _*)
+        input.addData(events.take(3): _*)
         q.processAllAvailable()
+        input.addData(events.drop(3): _*)
+        q.processAllAvailable()
+        q
       } finally q.stop()
-      // listener events arrive asynchronously
-      val deadline = System.nanoTime() + 10000000000L
-      while (alertPlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } { (q, j) =>
+      (q, q.recentProgress.filter(_.numInputRows > 0).map(p => p.batchId -> j.of(q, p.batchId)).toSeq)
     } finally spark.listenerManager.unregister(listener)
 
     def key(a: Alert) = (a.event_id, a.severity)
     assert(joined.map(key).sorted == Seq((1L, "HIGH"), (1L, "MED"), (2L, "MED"), (3L, "MED")))
     assert(seen.synchronized(seen.toSeq).sortBy(key) == joined.sortBy(key))
-    val plan = alertPlan.getOrElse(fail(s"no alert collect plan among ${plans.size}"))
+    object Aqe extends AdaptiveSparkPlanHelper
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
     val bad = Aqe.collectWithSubqueries(plan) {
       case j: BaseJoinExec => j
       case b: BroadcastExchangeExec => b
     }
     assert(bad.isEmpty, s"s1's batch plan must hold no join or broadcast exchange:\n$plan")
+    val own = executions.synchronized(executions.toSeq).filterNot(_.isInstanceOf[IncrementalExecution])
+    assert(own.isEmpty, s"s1 started ${own.size} SQL executions of its own:\n" +
+      own.map(_.executedPlan.treeString).mkString("\n"))
+    assert(jobs.map(_._1) == Seq(0L, 1L) && jobs.forall(_._2 == 1),
+      s"each data batch must run exactly one Spark job, (batch, jobs) = $jobs")
+  }
+
+  test("s1: edge values — NaN, -0.0, nulls and equal thresholds alert as SQL's value >= threshold") {
+    implicit val sqlCtx = spark.sqlContext
+    val rules = Seq(Rule("purchase", 100.0, "MED"), Rule("purchase", Double.NaN, "NAN"),
+      Rule("click", 0.0, "ZERO"), Rule("view", -0.0, "NEGZERO"), Rule(null, -1e9, "ANY"))
+    val events = Seq(
+      NullableEvent(1, 1, "purchase", Some(Double.NaN)), // NaN sorts above everything
+      NullableEvent(2, 2, "purchase", Some(100.0)), // equal to its threshold
+      NullableEvent(3, 3, "purchase", Some(Double.PositiveInfinity)), // below NaN
+      NullableEvent(4, 4, "click", Some(-0.0)), // -0.0 equals 0.0
+      NullableEvent(5, 5, "view", Some(0.0)), // 0.0 equals -0.0
+      NullableEvent(6, 6, "click", None), // null value never alerts
+      NullableEvent(7, 7, null, Some(500.0)), // null type, and the null-type rule, never match
+      NullableEvent(8, 8, "click", Some(-Double.MinPositiveValue)),
+      NullableEvent(9, 9, "click", Some(Double.MinPositiveValue)))
+    def key(a: Alert) = (a.event_id, a.user_id, a.event_type, a.value.toString, a.severity)
+    val joined = events.toDF()
+      .join(broadcast(rules.toDF()), Seq("event_type"))
+      .where($"value" >= $"threshold")
+      .select("event_id", "user_id", "event_type", "value", "severity")
+      .as[Alert].collect().toSeq.map(key).sorted
+    assert(joined.map(k => (k._1, k._5)) == Seq((1L, "MED"), (1L, "NAN"), (2L, "MED"),
+      (3L, "MED"), (4L, "ZERO"), (5L, "NEGZERO"), (9L, "ZERO")))
+
+    val input = MemoryStream[NullableEvent]
+    val seen = mutable.Buffer[Alert]()
+    val q = Demos.s1BroadcastRules(input.toDF(), () => rules,
+      (alerts, overflow, _) => seen.synchronized { assert(overflow == 0L); seen ++= alerts })
+    try {
+      input.addData(events: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(seen.synchronized(seen.toSeq).map(key).sorted == joined)
   }
 
   test("s1: offset and commit logs hold only batch files — no .crc, no temp files") {
@@ -140,7 +222,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     // written through the forking Hadoop local FS; s1 starts through
     // StreamStart, whose java.nio manager writes neither
     val s = spark.newSession()
-    val root = java.nio.file.Files.createTempDirectory("s1_layout")
+    val root = tempDir("s1_layout")
     s.conf.set("spark.sql.streaming.checkpointLocation", root.toString)
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[Event]
@@ -152,9 +234,8 @@ class StreamingDemosSpec extends AnyFunSuite {
     } finally q.stop()
     def ls(d: java.nio.file.Path) = d.toFile.list().toSet
     val ckpt = root.resolve(ls(root).toSeq.head)
-    try for (log <- Seq("offsets", "commits"))
+    for (log <- Seq("offsets", "commits"))
       assert(ls(ckpt.resolve(log)) == Set("0", "1", "2"), s"$log: ${ls(ckpt.resolve(log))}")
-    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
     assert(spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty &&
       s.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty,
       "StreamStart must put the session's manager conf back")
@@ -434,7 +515,7 @@ class StreamingDemosSpec extends AnyFunSuite {
       VecIngest(r.getLong(0), r.getSeq[Float](1))
     }
     val (b1, b2) = vecs.partition(_.vec_id % 2 == 0)
-    val dir = java.nio.file.Files.createTempDirectory("s34").toString
+    val dir = tempDir("s34").toString
 
     val input = MemoryStream[VecIngest]
     val q = Demos.s34VectorIngest(spark, input.toDF(), cent, dir)
@@ -488,7 +569,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     val cent = ops.Round11.quantized(
         emb.where(col("vec_id") < 8).select(col("vec_id"), col("embedding")))
       .select(col("vec_id").as("j"), col("v").as("c")).localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("s35").toString
+    val dir = tempDir("s35").toString
 
     val input = MemoryStream[VecIngest]
     val q = Demos.s35SemanticDedupIngest(spark, input.toDF(), cent, nlist = 8, dir)
@@ -598,7 +679,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     val all = docs :+ CdcDocIngest(90000L, docs.head.source, docs.head.text)
 
     def runBatches(batches: Seq[Seq[CdcDocIngest]]): (String, Map[(Long, String), (Long, Long, Long, Long)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("s36").toString
+      val dir = tempDir("s36").toString
       val input = MemoryStream[CdcDocIngest]
       val q = Demos.s36CdcDedupIngest(spark, input.toDF(), dir)
       try {
@@ -654,7 +735,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     val b1 = Seq(CdcDocIngest(1L, "s", ta), CdcDocIngest(2L, "s", tb))
     val b2 = Seq(CdcDocIngest(1L, "s", ta2), CdcDocIngest(3L, "s", tc))
 
-    val dir = java.nio.file.Files.createTempDirectory("s37").toString
+    val dir = tempDir("s37").toString
     val input = MemoryStream[CdcDocIngest]
     val q = Demos.s37ChunkStoreIngest(spark, input.toDF(), dir)
     try {
@@ -724,7 +805,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     }.toSet
 
     def run(batches: Seq[Seq[QkDocIngest]]): (String, Set[((String, String), (Long, Double))]) = {
-      val dir = java.nio.file.Files.createTempDirectory("s38").toString
+      val dir = tempDir("s38").toString
       val input = MemoryStream[QkDocIngest]
       val q = Demos.s38QualityKeeperIngest(spark, input.toDF(), dir)
       try {
@@ -751,7 +832,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     val boosted = QkDocIngest(999999L, k0._1._1, k0._1._2,
       (1 to 120).map(i => s"uniq$i").mkString(" "))
     assert(quality(boosted.text) > k0._2._2)
-    val dirB = java.nio.file.Files.createTempDirectory("s38b").toString
+    val dirB = tempDir("s38b").toString
     val inB = MemoryStream[QkDocIngest]
     val qB = Demos.s38QualityKeeperIngest(spark, inB.toDF(), dirB)
     try {
@@ -860,7 +941,7 @@ class StreamingDemosSpec extends AnyFunSuite {
 
   test("s14: foreachBatch upsert — versioned snapshot holds the latest row per user; replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s14").toString + "/snap"
+    val dir = tempDir("graft_s14").toString + "/snap"
     val input = MemoryStream[Event]
     val q = Demos.s14SnapshotUpsert(spark, input.toDF(), dir)
     def snapshot(v: Long): Map[Long, (Long, Double)] =
@@ -886,7 +967,7 @@ class StreamingDemosSpec extends AnyFunSuite {
 
   test("s16: streaming drift monitor — final drift row equals batch q92 exactly; replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s16").toString + "/drift"
+    val dir = tempDir("graft_s16").toString + "/drift"
     val docs = graft.Tables.documents(spark, SharedSpark.sf001)
       .select("doc_id", "text").collect()
       .map(r => DocIngest(r.getLong(0), new Timestamp(0L), r.getString(1), "en"))
@@ -927,7 +1008,7 @@ class StreamingDemosSpec extends AnyFunSuite {
 
   test("s21: streaming CMS monitor — final audit equals batch q122 exactly; replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s21").toString + "/cms"
+    val dir = tempDir("graft_s21").toString + "/cms"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -965,7 +1046,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s22: streaming heavy hitters — SpaceSaving merge matches a " +
     "sequential fold, bounds hold structurally, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s22").toString + "/hh"
+    val dir = tempDir("graft_s22").toString + "/hh"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -1040,7 +1121,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s23: streaming drift monitor — cumulative histogram equals the " +
     "batch decile counts, the reference stays frozen, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s23").toString + "/drift"
+    val dir = tempDir("graft_s23").toString + "/drift"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -1097,7 +1178,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s23: an empty first micro-batch defers the reference freeze — no " +
     "NaN shares for the stream's lifetime (round-9 ADVICE)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_s23e").toString + "/drift"
+    val dir = tempDir("graft_s23e").toString + "/drift"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -1128,7 +1209,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     "merge on the same changelog, deletes drop, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_s25").toString + "/cdc"
+    val dir = tempDir("graft_s25").toString + "/cdc"
     // the q145 changelog over the q145 base, as one ordered stream:
     // base rows arrive first as seq-0 inserts, then D %11, U %13, I %17
     val ords = graft.Tables.orders(spark, SharedSpark.sf001)
@@ -1186,7 +1267,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s26: streaming novelty monitor — final counters equal batch q158, " +
     "state is hash-only and distinct-text-sized, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s26").toString + "/novel"
+    val dir = tempDir("graft_s26").toString + "/novel"
     val docs = graft.Tables.documents(spark, SharedSpark.sf001)
       .select("doc_id", "source", "text").orderBy("doc_id").collect()
       .map(r => DocSrc(r.getLong(0), r.getString(1), r.getString(2)))
@@ -1230,7 +1311,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     "q188, state is language-cardinality-bounded, replay is idempotent") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s28").toString + "/decon"
+    val dir = tempDir("graft_s28").toString + "/decon"
     // the static benchmark gram registry: the eval carve of the corpus,
     // known before ingest (exactly batch q188's bench set)
     val benchGrams = graft.ops.Round10i
@@ -1274,7 +1355,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     "q191, state is langs×rungs-bounded, replay is idempotent") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s29").toString + "/pad"
+    val dir = tempDir("graft_s29").toString + "/pad"
     val docs = graft.Tables.documents(spark, SharedSpark.sf001)
       .select("doc_id", "lang", "text").orderBy("doc_id").collect()
       .map(r => DocLang(r.getLong(0), r.getString(1), r.getString(2)))
@@ -1323,7 +1404,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     "batch q200, state is template-cardinality-bounded, replay is idempotent") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s30").toString + "/red"
+    val dir = tempDir("graft_s30").toString + "/red"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -1368,7 +1449,7 @@ class StreamingDemosSpec extends AnyFunSuite {
     "row-local constraints, state is 3 rows, replay is idempotent") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s31").toString + "/dq"
+    val dir = tempDir("graft_s31").toString + "/dq"
     val custDim = graft.Tables.customer(spark, SharedSpark.sf001)
       .select("c_custkey").localCheckpoint()
     val ords = graft.Tables.orders(spark, SharedSpark.sf001)
@@ -1407,7 +1488,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s32: streaming transition monitor — final matrix equals batch q96, " +
     "derived stationary equals q210, state is bounded, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s32").toString + "/tm"
+    val dir = tempDir("graft_s32").toString + "/tm"
     // global (ts, event_id) order ⇒ per-user event-time order across
     // batches — the documented in-order-ingest contract of the stitch
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
@@ -1464,7 +1545,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s33: streaming seasonal monitor — derived profile equals batch q215, " +
     "state is grid-bounded, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s33").toString + "/sea"
+    val dir = tempDir("graft_s33").toString + "/sea"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -1505,7 +1586,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s27: streaming burst monitor — published bursts equal batch q169, " +
     "state is hour-count-bounded, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s27").toString + "/burst"
+    val dir = tempDir("graft_s27").toString + "/burst"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
@@ -1545,7 +1626,7 @@ class StreamingDemosSpec extends AnyFunSuite {
   test("s24: streaming freshness monitor — merged watermarks equal the " +
     "batch audit, the newest type lags zero, replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_s24").toString + "/fresh"
+    val dir = tempDir("graft_s24").toString + "/fresh"
     val evs = graft.Tables.events(spark, SharedSpark.sf001)
       .select("event_id", "ts", "user_id", "event_type", "value", "props").collect()
       .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),

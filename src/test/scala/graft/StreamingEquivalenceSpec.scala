@@ -25,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly-finalized set — comparable 1:1 with the batch result. The flush
   * event's own window/session/key stays unfinalized or is filtered out.
   */
-class StreamingEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
   import SharedSpark.{sf001, spark}
 
   // Probed from the real file: ts encoding varies across testdata
@@ -69,7 +69,7 @@ class StreamingEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Append the flush file (once) so the watermark passes all real data. */
   private lazy val flushWritten: Unit = {
-    val tmp = Files.createTempDirectory("graft_flush")
+    val tmp = tempDir("graft_flush")
     val flush = spark.createDataFrame(
       java.util.List.of(
         Row(999999998L, flushTsValue, FlushUser, "view", 0.0, "{}")),
