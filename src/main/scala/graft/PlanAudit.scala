@@ -321,7 +321,7 @@ object PlanAudit {
           "Either fix the plan (partition the window; bound the build side — a " +
           "no-op .limit(n<=100) makes a key-bounded build structural; aggregate a " +
           "PRIMITIVE encoded key and rejoin or column-split the payload — the " +
-          "Round10n/Round11 argmin discipline) or add the query to the matching " +
+          "graft.ops.Lloyd argmin discipline) or add the query to the matching " +
           "whitelist with a measured-tiny / bounded-by-construction justification.")
       sys.exit(1)
     }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Lloyd
+import graft.plans.DotProduct
 
 /** Dev measurement harness (VERDICT r9 task #5): MEASURE — don't just
   * argue — the scaling curves of the five bucketed dedup/similarity
@@ -300,7 +302,6 @@ object ScaleCurve {
     * Both plant 1/17 coarser-grid twins (q231's plant) and report planted
     * recall — a curve that loses its planted pairs is pruning wrongly. */
   private def semdedupCurve(spark: SparkSession, sizes: Seq[Long]): Unit = {
-    import graft.plans.DotProduct.{dot => dotC, norm2 => n2C}
     println(f"${"pipeline"}%-20s ${"n_vecs"}%8s ${"cells"}%6s ${"sec"}%8s ${"pairs"}%12s ${"recall"}%7s")
     for (n <- sizes) {
       val qv = graft.ops.Round11.quantized(
@@ -315,13 +316,13 @@ object ScaleCurve {
         val t0 = System.nanoTime()
         val wn = assigned
           .select(col("vec_id"), col("cell"), col("v").cast("array<double>").as("vd"))
-          .withColumn("n2", n2C(col("vd")))
+          .withColumn("n2", DotProduct.norm2(col("vd")))
         val a = wn.select(col("vec_id").as("id_a"), col("cell"),
           col("vd").as("va"), col("n2").as("na"))
         val b = wn.select(col("vec_id").as("id_b"), col("cell"),
           col("vd").as("vb"), col("n2").as("nb"))
         val r = a.join(b, Seq("cell")).where(col("id_a") < col("id_b"))
-          .withColumn("cos_sim", dotC(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+          .withColumn("cos_sim", DotProduct.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
           .agg(count(lit(1)).as("pairs"),
             sum(when(col("cos_sim") > 0.8 &&
               col("id_b") === col("id_a") + 100000000L, 1L).otherwise(0L))
@@ -336,7 +337,7 @@ object ScaleCurve {
       pairwise("semdedup_kmeans", nlist, {
         val c0 = all.where(col("vec_id") < nlist)
           .select(col("vec_id").as("j"), col("v").as("c")).localCheckpoint()
-        graft.ops.Round11.cAssign(all, c0, nlist)
+        Lloyd.assignNarrow(all, c0, nlist)
           .withColumnRenamed("list_id", "cell").localCheckpoint()
       })
       val bBits = math.max(3, (63 - java.lang.Long.numberOfLeadingZeros(
@@ -405,13 +406,12 @@ object ScaleCurve {
   private def annCurve(spark: SparkSession, sizes: Seq[Long],
       want: Set[String] = Set.empty,
       mkVecs: (SparkSession, Long) => DataFrame = vecs): Unit = {
-    import graft.plans.DotProduct.{dot => dotC, norm2 => n2C}
     val K = 5
     println(f"${"pipeline"}%-16s ${"n_vecs"}%8s ${"sec"}%8s ${"rows"}%10s ${"recall@5"}%9s")
     for (n <- sizes) {
       val emb = mkVecs(spark, n)
         .select(col("vec_id"), col("embedding").as("e"))
-        .withColumn("n2", n2C(col("e")))
+        .withColumn("n2", DotProduct.norm2(col("e")))
         .localCheckpoint()
       val q = emb.where(col("vec_id") < 100)
         .select(col("vec_id").as("qid"), col("e").as("qe"), col("n2").as("qn"))
@@ -434,7 +434,7 @@ object ScaleCurve {
 
       val brute = timed("brute_topk", () =>
         emb.join(broadcast(q), col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim", dotC(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K),
         None)
 
@@ -444,12 +444,12 @@ object ScaleCurve {
           k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
       for (bits <- Seq(4, 8)) timed(s"lsh_bucket$bits", () => {
         val be = emb.withColumn("bucket",
-          (0 until bits).map(j => when(dotC(col("e"), hyper(j)) > 0, 1L << j).otherwise(0L))
+          (0 until bits).map(j => when(DotProduct.dot(col("e"), hyper(j)) > 0, 1L << j).otherwise(0L))
             .reduce(_ + _)).localCheckpoint()
         val bq = be.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("bucket"), col("n2").as("qn"))
         be.join(broadcast(bq), Seq("bucket")).where(col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim", dotC(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K)
       }, Some(brute))
 
@@ -463,7 +463,7 @@ object ScaleCurve {
         val be = emb.select(col("vec_id"), col("e"), col("n2"),
             posexplode(array((0 until l).map(t =>
               (0 until bits).map(j =>
-                when(dotC(col("e"), hyper(t * bits + j)) > 0, 1L << j).otherwise(0L))
+                when(DotProduct.dot(col("e"), hyper(t * bits + j)) > 0, 1L << j).otherwise(0L))
                 .reduce(_ + _)): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
           .localCheckpoint()
@@ -476,7 +476,7 @@ object ScaleCurve {
           .repartition(32)
           .join(emb, "vec_id")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotC(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K)
       }, Some(brute))
 
@@ -495,7 +495,7 @@ object ScaleCurve {
         val be = emb.select(col("vec_id"), col("e"), col("n2"),
             posexplode(array((0 until l).map(t =>
               (0 until bits).map(j =>
-                when(dotC(col("e"), hyperD(t, j)) > 0, 1L << j).otherwise(0L))
+                when(DotProduct.dot(col("e"), hyperD(t, j)) > 0, 1L << j).otherwise(0L))
                 .reduce(_ + _)): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
           .localCheckpoint()
@@ -508,7 +508,7 @@ object ScaleCurve {
           .repartition(32)
           .join(emb, "vec_id")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotC(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K)
       }, Some(brute))
 
@@ -536,7 +536,7 @@ object ScaleCurve {
           .repartition(32) // the q97 probe-side lever: spread the re-rank CPU
           .join(emb, "vec_id")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotC(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K)
       }, Some(brute))
 
@@ -558,8 +558,8 @@ object ScaleCurve {
         val qprobe = emb.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"), col("e"), col("n2"))
           .crossJoin(broadcast(centroids.select(col("list_id"), col("ce"))))
-          .withColumn("d", col("n2") + n2C(col("ce"))
-            - lit(2.0) * dotC(col("e"), col("ce")))
+          .withColumn("d", col("n2") + DotProduct.norm2(col("ce"))
+            - lit(2.0) * DotProduct.dot(col("e"), col("ce")))
           .withColumn("pr", row_number().over(
             Window.partitionBy("qid").orderBy(col("d"), col("list_id"))))
           .where(col("pr") <= 8)
@@ -578,7 +578,7 @@ object ScaleCurve {
           .repartition(32)
           .join(emb, "vec_id")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotC(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("e")) / sqrt(col("qn") * col("n2")))
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K)
       }, Some(brute))
 
@@ -620,7 +620,7 @@ object ScaleCurve {
           .join(emb.select(col("vec_id").as("vid"), col("e").as("ve"),
             col("n2").as("vn")), "vid")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotC(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
           .withColumn("rr", row_number().over(
             Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vid"))))
           .where(col("rr") <= K)
@@ -642,7 +642,7 @@ object ScaleCurve {
           .join(emb.select(col("vec_id").as("vid"), col("e").as("ve"),
             col("n2").as("vn")), "vid")
           .join(broadcast(q), "qid")
-          .withColumn("cos_sim", dotC(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
+          .withColumn("cos_sim", DotProduct.dot(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
           .withColumn("rr", row_number().over(
             Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vid"))))
           .where(col("rr") <= K)
@@ -657,52 +657,18 @@ object ScaleCurve {
       // per-(query, probed-list) LUTs, ADC over the probed lists' codes
       // only (nprobe/nlist of the corpus), optional exact top-50 re-rank.
       //
-      // Every argmin uses a PRIMITIVE long key (dist*k + j): min(struct)
-      // / min(array) / min_by / first(array) all fall back to
-      // SortAggregate (probed in-session), which SORTS the xk candidate
-      // expansion WITH the vector payload -- measured 28-77 s at 5k
-      // vectors; the primitive key keeps HashAggregate + map-side
-      // combine and the vector array rejoins by id afterward.
+      // Every argmin is the Lloyd kernel's (graft.ops.Lloyd: primitive
+      // long key, shape rule and the wide-encode negative result).
       // Overflow bounds (int64-safe, the q219 discipline): coarse dist
       // <= 64*(2e6)^2 = 2.56e14, *64+j <= 1.7e16; subspace dist <=
       // 4*(4e6)^2 = 6.4e13, *256+j <= 1.7e16; ADC sum <= 16*6.4e13 ~ 1e15.
-      def distD(dim: Int, a: String, b: String): String = (1 to dim)
-        .map(i => s"(element_at($a, $i) - element_at($b, $i)) * (element_at($a, $i) - element_at($b, $i))")
-        .mkString(" + ")
-      def ivfPq(kc: Int, nprobe: Int, rerank: Boolean,
-          wideEncode: Boolean = false): DataFrame = {
+      def ivfPq(kc: Int, nprobe: Int, rerank: Boolean): DataFrame = {
         val nlist = 64
         val qv = emb.select(col("vec_id"),
             expr("transform(e, x -> CAST(FLOOR(x * 1e6) AS BIGINT))").as("v"))
           .repartition(32).localCheckpoint()
-        val sample = qv.where(col("vec_id") < 5000)
-        // 64-dim distance through the native DotProduct (small generated
-        // code — the unrolled 64-term string tripled per-plan codegen
-        // time): n2+n2−2·dot on the long grid stays ≤ 2.56e14 < 2^53, so
-        // the double arithmetic is EXACT and the long cast is lossless.
-        def cDist(a: Column, b: Column): Column = {
-          val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-          n2C(ad) + n2C(bd) - lit(2.0) * dotC(ad, bd)
-        }
-        def cAssign(xs: DataFrame, cs: DataFrame): DataFrame =
-          xs.join(broadcast(cs), lit(true))
-            .groupBy("vec_id")
-            .agg(min(cDist(col("v"), col("c")).cast("long") * lit(nlist.toLong) + col("j")).as("key"))
-            .select(col("vec_id"), pmod(col("key"), lit(nlist.toLong)).as("list_id"))
-            .join(xs, Seq("vec_id"))
-        def cUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
-          val sums = (1 to 64).map(i => sum(expr(s"element_at(v, $i)")).as(s"sx$i"))
-          val newC = assigned.groupBy(col("list_id").as("j"))
-            .agg(count(lit(1)).as("n"), sums: _*)
-            .select(col("j"), array((1 to 64).map(i =>
-              floor(col(s"sx$i").cast("double") / col("n")).cast("long")): _*).as("cnew"))
-          prev.join(newC, Seq("j"), "left")
-            .select(col("j"), coalesce(col("cnew"), col("c")).as("c"))
-        }
-        val seeds = sample.where(col("vec_id") < nlist)
-          .select(col("vec_id").as("j"), col("v").as("c"))
-        val c1 = cUpdate(cAssign(sample, seeds), seeds).localCheckpoint()
-        val resid = cAssign(qv, c1)
+        val (asg, c1) = Lloyd.coarse(qv, qv.where(col("vec_id") < 5000), nlist)
+        val resid = asg
           .join(broadcast(c1.withColumnRenamed("j", "list_id")), Seq("list_id"))
           .select(col("vec_id"), col("list_id"),
             zip_with(col("v"), col("c"), (a, b) => a - b).as("r"))
@@ -717,69 +683,21 @@ object ScaleCurve {
             posexplode(expr("transform(sequence(0, 15), s -> slice(r, 4 * s + 1, 4))")))
           .withColumnsRenamed(Map("pos" -> "s", "col" -> "v"))
         def pAssign(xs: DataFrame, cs: DataFrame): DataFrame =
-          xs.join(broadcast(cs), Seq("s"))
-            .groupBy("vec_id", "list_id", "s")
-            .agg(min(expr(distD(4, "v", "c")) * lit(kc.toLong) + col("j")).as("key"))
-            .select(col("vec_id"), col("list_id"), col("s"),
-              pmod(col("key"), lit(kc.toLong)).cast("int").as("code"))
-        def pUpdate(assigned: DataFrame, xs: DataFrame, prev: DataFrame): DataFrame = {
-          val sums = (1 to 4).map(i => sum(expr(s"element_at(v, $i)")).as(s"sx$i"))
-          val newC = assigned.join(xs, Seq("vec_id", "list_id", "s"))
-            .groupBy(col("s"), col("code").as("j"))
-            .agg(count(lit(1)).as("n"), sums: _*)
-            .select(col("s"), col("j"), array((1 to 4).map(i =>
-              floor(col(s"sx$i").cast("double") / col("n")).cast("long")): _*).as("cnew"))
-          prev.join(newC, Seq("s", "j"), "left")
-            .select(col("s"), col("j"), coalesce(col("cnew"), col("c")).as("c"))
-        }
+          Lloyd.assignCarried(xs, cs, Seq("s"), Seq("vec_id", "list_id", "s"), kc, 4)
         val psample = sub.where(col("vec_id") < 5000)
         val p0 = psample.where(col("vec_id") < kc)
-          .select(col("s"), col("vec_id").cast("int").as("j"), col("v").as("c"))
-        val p1 = pUpdate(pAssign(psample, p0), psample, p0).localCheckpoint()
-        // ENCODE batching — MEASURED NEGATIVE RESULT (round 12, VERDICT
-        // #7): the hypothesis was that the per-(vec, s) join against the
-        // 256-candidate codebook (N·16·kc ≈ 1B rows at 250k vectors) pays
-        // per-row machinery 16× that a "wide" form could amortize — one
-        // 64-wide codebook row per candidate j and ALL 16 subspace argmin
-        // keys computed per (vec, j) row (N·kc rows, 16× fewer, identical
-        // arithmetic and codes). Measured at 250k×64 under the same
-        // machine weather, the wide form is ~5× SLOWER, not faster:
-        // rr50 wide 216.9 s (BroadcastNestedLoopJoin) / 181.2 s
-        // (constant-key BroadcastHashJoin — join strategy is NOT the
-        // cause) vs 37–38 s for the round-11 narrow form. The 16-wide
-        // HashAggregate update (16 min functions × 8 element_at + mults
-        // each) generates a function past JIT-able size, so the hot loop
-        // runs deoptimized — the narrow single-primitive-min update is
-        // tiny and JITs. Kept behind wideEncode=true as the measured
-        // control; the narrow form stays the production path (per-subspace
-        // BLAS batching remains the off-Spark answer, SCALE.md §12).
-        val p1w = p1.groupBy("j").agg(
-            transform(array_sort(collect_list(struct(col("s"), col("c")))),
-              x => x("c")).as("cs"))
-          .select(col("j"), flatten(col("cs")).as("c64"))
-        def subKey(sIdx: Int): Column = min(
-          (0 until 4).map { i =>
-            val d = expr(s"element_at(r, ${4 * sIdx + i + 1}) - element_at(c64, ${4 * sIdx + i + 1})")
-            d * d
-          }.reduce(_ + _) * lit(kc.toLong) + col("j")).as(s"k$sIdx")
-        val packed = (if (wideEncode)
-          residC.withColumn("one", lit(1))
-            .join(broadcast(p1w.withColumn("one", lit(1))), "one")
-            .groupBy("vec_id", "list_id")
-            .agg(subKey(0), (1 until 16).map(subKey): _*)
-            .select(col("vec_id"), col("list_id"),
-              array((0 until 16).map(sIdx =>
-                pmod(col(s"k$sIdx"), lit(kc.toLong)).cast("int")): _*).as("ca"))
-        else // the round-11 per-(vec, s) form — the measured winner
-          pAssign(sub.repartition(32).localCheckpoint(), p1)
-            .groupBy("vec_id", "list_id")
-            .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-              x => x("code")).as("ca")))
+          .select(col("s"), col("vec_id").as("j"), col("v").as("c"))
+        val p1 = Lloyd.update(pAssign(psample, p0), p0, Seq("s"), Lloyd.carried(4))
+          .localCheckpoint()
+        val packed = pAssign(sub.repartition(32).localCheckpoint(), p1)
+          .groupBy("vec_id", "list_id")
+          .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
+            x => x("code")).as("ca"))
           .repartition(32) // same lever for the ADC lookup scan below
         val qq = qv.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"), col("v").as("qv"))
         val probed = qq.join(broadcast(c1), lit(true))
-          .withColumn("cdist", cDist(col("qv"), col("c")))
+          .withColumn("cdist", DotProduct.gridDist(col("qv"), col("c")))
           .withColumn("pr", row_number().over(
             Window.partitionBy("qid").orderBy(col("cdist"), col("j"))))
           .where(col("pr") <= nprobe)
@@ -790,7 +708,7 @@ object ScaleCurve {
           .withColumnsRenamed(Map("pos" -> "s", "col" -> "v"))
           .join(broadcast(p1), Seq("s"))
           .select(col("qid"), col("list_id"),
-            (col("s") * kc + col("j")).as("idx"), expr(distD(4, "v", "c")).as("ld"))
+            (col("s") * kc + col("j")).as("idx"), Lloyd.sqDist(4).as("ld"))
           .groupBy("qid", "list_id")
           .agg(transform(array_sort(collect_list(struct(col("idx"), col("ld")))),
             x => x("ld")).as("la"))
@@ -809,7 +727,7 @@ object ScaleCurve {
             .join(emb.select(col("vec_id").as("vid"), col("e").as("ve"),
               col("n2").as("vn")), "vid")
             .join(broadcast(q), "qid")
-            .withColumn("cos_sim", dotC(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
+            .withColumn("cos_sim", DotProduct.dot(col("qe"), col("ve")) / sqrt(col("qn") * col("vn")))
             .withColumn("rr", row_number().over(
               Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vid"))))
             .where(col("rr") <= K)
@@ -817,12 +735,6 @@ object ScaleCurve {
       }
       timed("ivfpq128_probe8", () => ivfPq(kc = 256, nprobe = 8, rerank = false), Some(brute))
       timed("ivfpq128_rr50", () => ivfPq(kc = 256, nprobe = 8, rerank = true), Some(brute))
-      // the wide-encode control — measured ~5× SLOWER (negative result
-      // above); opt-in by explicit name only so the default sweep never
-      // pays ~200 s for a known-worse variant
-      if (want("ivfpq128_rr50w"))
-        timed("ivfpq128_rr50w", () =>
-          ivfPq(kc = 256, nprobe = 8, rerank = true, wideEncode = true), Some(brute))
       // PQ codebook-CAPACITY sweep (round 14): the `clustered` regime
       // showed the rr50 recall decay is the fixed-size codebook, not the
       // routing (plain IVF holds 1.000) — these rows measure the capacity
@@ -894,11 +806,6 @@ object ScaleCurve {
     * honest Θ(N·nlist) bend the semdedup curve already names). */
   private def knnGraphCurve(spark: SparkSession, sizes: Seq[Long],
       mkVecs: (SparkSession, Long) => DataFrame = vecs): Unit = {
-    import graft.plans.DotProduct.{dot => dotC, norm2 => n2C}
-    def cDist(a: Column, b: Column): Column = {
-      val (ad, bd) = (a.cast("array<double>"), b.cast("array<double>"))
-      n2C(ad) + n2C(bd) - lit(2.0) * dotC(ad, bd)
-    }
     println(f"${"pipeline"}%-16s ${"n_vecs"}%8s ${"nlist"}%6s ${"sec"}%8s ${"edges"}%10s ${"recall@3"}%9s")
     for (n <- sizes) {
       val nlist = math.max(8, (n / 500).toInt)
@@ -916,7 +823,7 @@ object ScaleCurve {
         .select(col("vec_id").as("aid"), col("v").as("av"))
       val brute = qv.crossJoin(broadcast(carve))
         .where(col("vec_id") =!= col("aid"))
-        .withColumn("d2", cDist(col("v"), col("av")).cast("long"))
+        .withColumn("d2", DotProduct.gridDist(col("v"), col("av")))
         .withColumn("r", row_number().over(
           Window.partitionBy("aid").orderBy(col("d2"), col("vec_id"))))
         .where(col("r") <= 3)
@@ -927,7 +834,7 @@ object ScaleCurve {
         // vector payload rejoins by id (the q234/SCALE §12 discipline)
         val pr = qv.crossJoin(broadcast(cent))
           .select(col("vec_id"), col("j"),
-            cDist(col("v"), col("c")).cast("long").as("cd"))
+            DotProduct.gridDist(col("v"), col("c")).as("cd"))
           .withColumn("probe", row_number().over(
             Window.partitionBy("vec_id").orderBy(col("cd"), col("j"))))
           .where(col("probe") <= np)
@@ -940,7 +847,7 @@ object ScaleCurve {
         val edges = pr.join(qv, Seq("vec_id"))
           .join(memb, Seq("list_id"))
           .where(col("vec_id") =!= col("nbr_id"))
-          .withColumn("d2", cDist(col("v"), col("wv")).cast("long"))
+          .withColumn("d2", DotProduct.gridDist(col("v"), col("wv")))
           .withColumn("r", row_number().over(
             Window.partitionBy("vec_id").orderBy(col("d2"), col("nbr_id"))))
           .where(col("r") <= 3)
@@ -968,7 +875,6 @@ object ScaleCurve {
     * corpus (the silhouette is the audit you run on data with structure),
     * fixed nlist = 64, carve = 100 vectors. */
   private def silhCurve(spark: SparkSession, sizes: Seq[Long]): Unit = {
-    import graft.plans.DotProduct.{dot => dotC, norm2 => n2C}
     val nlist = 64
     println(f"${"pipeline"}%-12s ${"n_vecs"}%8s ${"nlist"}%6s ${"sec"}%8s ${"equal"}%6s")
     for (n <- sizes) {
@@ -977,7 +883,7 @@ object ScaleCurve {
         .repartition(32).localCheckpoint()
       val cent = qv.where(col("vec_id") < nlist)
         .select(col("vec_id").as("j"), col("v").as("c")).localCheckpoint()
-      val wn = graft.ops.Round11.cAssign(qv, cent, nlist)
+      val wn = Lloyd.assignNarrow(qv, cent, nlist)
         .select(col("vec_id"), col("list_id"),
           col("v").cast("array<double>").as("vd"))
         .repartition(32).localCheckpoint()
@@ -1024,8 +930,7 @@ object ScaleCurve {
         wn.select(col("vec_id").as("mid"), col("list_id"), col("vd").as("wd"))
           .crossJoin(broadcast(carve))
           .where(col("mid") =!= col("aid"))
-          .withColumn("d2", (n2C(col("av")) + n2C(col("wd"))
-            - lit(2.0) * dotC(col("av"), col("wd"))).cast("long"))
+          .withColumn("d2", DotProduct.gridDist(col("av"), col("wd")))
           .groupBy("aid", "own_list", "list_id")
           .agg(sum("d2").as("sd2"), count(lit(1)).as("cn"))
           .withColumn("md", col("sd2").cast("double") / col("cn").cast("double"))

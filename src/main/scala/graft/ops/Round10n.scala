@@ -26,14 +26,6 @@ import org.apache.spark.sql.functions._
 object Round10n {
   import Tables._
 
-  /** Σ_i (v[i]−c[i])² over the 8-dim subvectors, UNROLLED into plain
-    * element_at arithmetic — a HOF fold here is interpreted per
-    * (row × centroid) and dominated training (the q206 ADC lesson);
-    * the unrolled form stays inside whole-stage codegen. */
-  private val distE = (1 to 8)
-    .map(i => s"(element_at(v, $i) - element_at(c, $i)) * (element_at(v, $i) - element_at(c, $i))")
-    .mkString(" + ")
-
   /** (vec_id, s ∈ 0..7, v: 8 quantized longs) — the subspace view. */
   private[graft] def pqSub(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
@@ -45,7 +37,7 @@ object Round10n {
   /** Spread a byte-small, CPU-heavy probe table across real tasks before a
     * broadcast-join expansion (the q97/q40/q83 lesson, r16 edition): the
     * embeddings parquet is one split, so every training assign's ×kc
-    * distE expansion + argmin partial — 43M rows for q254's Σkc = 336 —
+    * sqDist expansion + argmin partial — 43M rows for q254's Σkc = 336 —
     * ran INSIDE the single scan task (measured: the 3 assign jobs were
     * 0.8–1.2 s each with 31 idle cores; job trace r16). An explicit
     * numbered repartition is never coalesced by AQE; the width is the
@@ -58,49 +50,36 @@ object Round10n {
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** Assign every (vec_id, s) row to its nearest centroid of `cent`
-    * (columns s, j, c): returns (vec_id, s, code, dist, v1..v8).
-    * r15 opt: the aggregate carries ONLY PRIMITIVES — the encoded argmin
-    * key plus the 8 subvector dims as separate long columns (each is
-    * constant within its (vec_id, s) group, so min(element_at(v, i)) IS
-    * the subvector, bit-for-bit). The previous min("v") over the ARRAY
-    * column forced a SortAggregate (the CLAUDE.md round-11 probe: min
-    * over any non-primitive sorts the whole joined input with its row
-    * payload — here kc·N·8 rows per Lloyd pass); all-primitive mins stay
-    * a hash aggregate with map-side partial combine. [[update]] sums the
-    * v1..v8 columns directly — byte-identical arithmetic. */
-  private def assign(sub: DataFrame, cent: DataFrame): DataFrame =
-    sub.join(broadcast(cent), Seq("s"))
-      .withColumn("key", expr(distE) * lit(65536L) + col("j"))
-      .groupBy("vec_id", "s")
-      .agg(min("key").as("key"),
-        (1 to 8).map(i => min(expr(s"element_at(v, $i)")).as(s"v$i")): _*)
-      .select(col("vec_id") +: col("s") +:
-        (col("key") % 65536).as("code") +: expr("key DIV 65536").as("dist") +:
-        (1 to 8).map(i => col(s"v$i")): _*)
+  /** Nearest-centroid codes of every subvector row (`by` = vec_id, s and
+    * any level key) against the `on`-keyed codebook (j, c): the carried-dims
+    * argmin on the 65536-wide key → `by` ++ (code, dist, v1..v8). */
+  private def assign(sub: DataFrame, cent: DataFrame, on: Seq[String],
+      by: Seq[String]): DataFrame =
+    Lloyd.assignCarried(sub, cent, on, by, 65536, 8)
 
-  /** One Lloyd update: per-(s, code, dim) FLOOR(mean) on the quantized
-    * grid, empty clusters keep their previous centroid. The 8 dimension
-    * sums are UNROLLED into one aggregation (ONE shuffle to the ≤128-row
-    * codebook instead of a posexplode + two shuffles — the round-10
-    * late rework that cut the per-iteration barrier cost in half); the
-    * arithmetic per dimension is byte-identical to the exploded form. */
-  private def update(assigned: DataFrame, prev: DataFrame): DataFrame = {
-    val sums = (1 to 8).map(i => sum(col(s"v$i")).as(s"sx$i"))
-    val newC = assigned
-      .groupBy(col("s"), col("code").as("j"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("s"), col("j"), array((1 to 8).map(i =>
-        floor(col(s"sx$i").cast("double") / col("n")).cast("long")): _*)
-        .as("cnew"))
-    prev.join(newC, Seq("s", "j"), "left")
-      .select(col("s"), col("j"), coalesce(col("cnew"), col("c")).as("c"))
+  /** 2 Lloyd iterations from the seeds `c0` + the final code assignment:
+    * (codes(`by`, code, dist), c2). Only c1/c2 are checkpointed: each is
+    * referenced twice (the next assign + the next update's fallback join),
+    * so an un-checkpointed codebook would re-execute its whole training
+    * lineage per reference — 2^depth blowup. `sub` and the final codes are
+    * map-side re-derivable (parquet scan + explode) and single-consumer
+    * respectively: an eager checkpoint job there is pure barrier latency
+    * (measured round 10: dropping both + the codegen'd sqDist cut
+    * q205/q206 ~3.5 → ~2.9 s warm on the same contended window; the
+    * residual is the 2 training checkpoints + ~6 shuffle barriers,
+    * constant in corpus size). */
+  private def train(sub: DataFrame, c0: DataFrame, on: Seq[String],
+      by: Seq[String]): (DataFrame, DataFrame) = {
+    def step(c: DataFrame) =
+      Lloyd.update(assign(sub, c, on, by), c, on, Lloyd.carried(8)).localCheckpoint()
+    val c2 = step(step(c0))
+    (assign(sub, c2, on, by).select((by ++ Seq("code", "dist")).map(col): _*), c2)
   }
 
   /** The trained codebook after 2 Lloyd iterations + the final code
     * assignment: (codes(vec_id, s, code, dist), centroids(s, j, c)).
-    * Both localCheckpointed — the codebook feeds training output, ADC
-    * LUTs, and the ScaleCurve harness. */
+    * The centroids are localCheckpointed — the codebook feeds training
+    * output, ADC LUTs, and the ScaleCurve harness. */
   private[graft] def pqCodebook(emb: DataFrame): (DataFrame, DataFrame) =
     pqCodebookK(emb, 16)
 
@@ -110,49 +89,10 @@ object Round10n {
     * kc ≤ 65536 (dist ≤ 3.2e13, key < 2.1e18 < 2^63). Everything else is
     * the q205 contract verbatim, so kc = 16 IS q205's training. */
   private[graft] def pqCodebookK(emb: DataFrame, kc: Int): (DataFrame, DataFrame) = {
-    // Only c1/c2 are checkpointed: each is referenced twice (the next
-    // assign + the next update's fallback join), so an un-checkpointed
-    // codebook would re-execute its whole training lineage per reference
-    // — 2^depth blowup. `sub` and the final codes are map-side re-derivable
-    // (parquet scan + explode) and single-consumer respectively: an eager
-    // checkpoint job there is pure barrier latency (measured round 10:
-    // dropping both + the codegen'd distE cut q205/q206 ~3.5 → ~2.9 s
-    // warm on the same contended window; the residual is the 2 training
-    // checkpoints + ~6 shuffle barriers, constant in corpus size).
     val sub = if (kc > 64) spread(pqSub(emb)) else pqSub(emb)
     val c0 = sub.where(col("vec_id") < kc)
       .select(col("s"), col("vec_id").as("j"), col("v").as("c"))
-    val c1 = update(assign(sub, c0), c0).localCheckpoint()
-    val c2 = update(assign(sub, c1), c1).localCheckpoint()
-    (assign(sub, c2).select("vec_id", "s", "code", "dist"), c2)
-  }
-
-  /** assign, CAPACITY-TAGGED: `subK` carries a kc column (the subspace
-    * view replicated per capacity level), `cent` carries (kc, s, j, c).
-    * Per kc slice this is byte-identical to [[assign]] against that
-    * level's codebook — the kc column only rides the keys. */
-  private def assignK(subK: DataFrame, cent: DataFrame): DataFrame =
-    subK.join(broadcast(cent), Seq("kc", "s"))
-      .withColumn("key", expr(distE) * lit(65536L) + col("j"))
-      .groupBy("kc", "vec_id", "s")
-      .agg(min("key").as("key"),
-        (1 to 8).map(i => min(expr(s"element_at(v, $i)")).as(s"v$i")): _*)
-      .select(col("kc") +: col("vec_id") +: col("s") +:
-        (col("key") % 65536).as("code") +: expr("key DIV 65536").as("dist") +:
-        (1 to 8).map(i => col(s"v$i")): _*)
-
-  /** One Lloyd update, capacity-tagged (see [[update]] — same FLOOR-mean
-    * arithmetic, kc added to every key). */
-  private def updateK(assigned: DataFrame, prev: DataFrame): DataFrame = {
-    val sums = (1 to 8).map(i => sum(col(s"v$i")).as(s"sx$i"))
-    val newC = assigned
-      .groupBy(col("kc"), col("s"), col("code").as("j"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("kc"), col("s"), col("j"), array((1 to 8).map(i =>
-        floor(col(s"sx$i").cast("double") / col("n")).cast("long")): _*)
-        .as("cnew"))
-    prev.join(newC, Seq("kc", "s", "j"), "left")
-      .select(col("kc"), col("s"), col("j"), coalesce(col("cnew"), col("c")).as("c"))
+    train(sub, c0, Seq("s"), Seq("vec_id", "s"))
   }
 
   /** ALL capacity levels trained in ONE ladder (the q254 shape): the
@@ -177,9 +117,7 @@ object Round10n {
       .crossJoin(broadcast(levels))
     val c0 = subK.where(col("vec_id") < col("kc"))
       .select(col("kc"), col("s"), col("vec_id").as("j"), col("v").as("c"))
-    val c1 = updateK(assignK(subK, c0), c0).localCheckpoint()
-    val c2 = updateK(assignK(subK, c1), c1).localCheckpoint()
-    (assignK(subK, c2).select("kc", "vec_id", "s", "code", "dist"), c2)
+    train(subK, c0, Seq("kc", "s"), Seq("kc", "vec_id", "s"))
   }
 
   /** Encode a corpus against an ALREADY-TRAINED codebook: ONE broadcast
@@ -189,20 +127,14 @@ object Round10n {
     * is the only cost that scales with N. Measured in ScaleCurve's ann
     * regime as pq_strain_rr50. */
   private[graft] def pqEncode(emb: DataFrame, cent: DataFrame): DataFrame =
-    assign(pqSub(emb), cent).select("vec_id", "s", "code", "dist")
+    assign(pqSub(emb), cent, Seq("s"), Seq("vec_id", "s")).select("vec_id", "s", "code", "dist")
 
-  /** Codes packed to one 8-long array per vector (the production layout:
-    * 8 bytes/vector at nbits=8) — ADC then needs NO per-subspace shuffle. */
-  private[graft] def packedCodes(codes: DataFrame): DataFrame =
-    codes.groupBy("vec_id")
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x("code")).as("ca"))
-
-  /** packedCodes, capacity-tagged: one shuffle packs EVERY level's codes
-    * (kc in the group key), instead of one pack shuffle per level. Per kc
-    * slice the output is byte-identical to [[packedCodes]]. */
-  private[graft] def packedCodesK(codesK: DataFrame): DataFrame =
-    codesK.groupBy("kc", "vec_id")
+  /** Codes packed to one 8-long array per `by` group — per vector, or per
+    * (kc, vector) so one shuffle packs every capacity level (the
+    * production layout: 8 bytes/vector at nbits=8) — ADC then needs NO
+    * per-subspace shuffle. */
+  private[graft] def packedCodes(codes: DataFrame, by: String*): DataFrame =
+    codes.groupBy(by.head, by.tail: _*)
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x("code")).as("ca"))
 
@@ -211,7 +143,7 @@ object Round10n {
   private[graft] def lutArraysK(qsub: DataFrame, cent: DataFrame, kc: Int): DataFrame =
     qsub.join(broadcast(cent), Seq("s"))
       .select(col("qid"), (col("s") * kc + col("j")).as("idx"),
-        expr(distE).as("ld"))
+        Lloyd.sqDist(8).as("ld"))
       .groupBy("qid")
       .agg(transform(array_sort(collect_list(struct(col("idx"), col("ld")))),
         x => x("ld")).as("la"))
@@ -226,7 +158,7 @@ object Round10n {
   private[graft] def lutArraysAllK(qsub: DataFrame, centK: DataFrame): DataFrame =
     qsub.join(broadcast(centK), Seq("s"))
       .select(col("kc"), col("qid"),
-        (col("s") * col("kc") + col("j")).as("idx"), expr(distE).as("ld"))
+        (col("s") * col("kc") + col("j")).as("idx"), Lloyd.sqDist(8).as("ld"))
       .groupBy("kc", "qid")
       .agg(transform(array_sort(collect_list(struct(col("idx"), col("ld")))),
         x => x("ld")).as("la"))
@@ -243,7 +175,7 @@ object Round10n {
     val lookupSum = (0 until 8)
       .map(s => s"element_at(la, CAST(${s * kc} + element_at(ca, ${s + 1}) + 1 AS INT))")
       .mkString(" + ")
-    packedCodes(codes)
+    packedCodes(codes, "vec_id")
       .crossJoin(broadcast(lutArraysK(qsub, cent, kc).limit(maxQ)))
       .select(col("qid"), col("vec_id").as("vid"),
         expr(lookupSum).as("adc_dist"))
@@ -267,7 +199,7 @@ object Round10n {
     val lookupSum = (0 until 8)
       .map(s => s"element_at(la, CAST($s * kc + element_at(ca, ${s + 1}) + 1 AS INT))")
       .mkString(" + ")
-    packedCodesK(codesK)
+    packedCodes(codesK, "kc", "vec_id")
       .join(broadcast(lutArraysAllK(qsub, centK)), Seq("kc"))
       .select(col("kc"), col("qid"), col("vec_id").as("vid"),
         expr(lookupSum).as("adc_dist"))

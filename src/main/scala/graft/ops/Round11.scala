@@ -38,92 +38,11 @@ import graft.plans.DotProduct
 object Round11 {
   import Tables._
 
-  /** Σ_i (a[i]−b[i])² unrolled into plain element_at arithmetic — a HOF
-    * fold here is interpreted per (row × centroid) and would dominate
-    * training (the q205/q206 lesson); unrolled stays in codegen. */
-  private def distE(dim: Int, a: String = "v", b: String = "c"): String = (1 to dim)
-    .map(i => s"(element_at($a, $i) - element_at($b, $i)) * (element_at($a, $i) - element_at($b, $i))")
-    .mkString(" + ")
-
   /** (vec_id, v: 64 longs on the 1e6 grid) — FLOOR and ×1e6 are exact IEEE
     * ops, so both engines quantize identically (the q192/q205 bridge). */
   private[graft] def quantized(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))").as("v"))
-
-  /** Nearest coarse centroid per vector: (vec_id, v, list_id). One
-    * broadcast of the ≤nlist-row centroid table + a map-side-combinable
-    * argmin — the .limit() makes the build bound structural for the NLJ
-    * gate (centroids come from filters/checkpoints whose maxRows the
-    * optimizer can't see, so the limit is NOT folded away).
-    *
-    * The aggregate carries ONLY the primitive key: a min("v") alongside
-    * would demote the whole aggregation to SortAggregate (min over any
-    * non-primitive type does — probed round 11, SCALE.md §12), sorting
-    * the ×nlist expansion WITH the vector payload; the payload rejoins
-    * by id instead.
-    *
-    * r16 NEGATIVE RESULT, measured and kept as the decision record: a
-    * "wide" variant carrying the 64 dims as min(element_at(v, i))
-    * columns (no rejoin, 2 fewer jobs per call) was tried and REVERTED —
-    * the 65-slot partial aggregate runs inside the single parquet-scan
-    * task and LOST to the rejoin at bench scale in an interleaved A/B
-    * (q219 2.93→3.49 s, q246 2.54→3.21 s warm floors, same window), was
-    * only a wash at 250k vectors (isolated noop-sink A/B), and was 1.7×
-    * WORSE at the semdedup 250k/500-list point (65·nlist slot updates
-    * per vector). The narrow-key + rejoin form wins or ties everywhere
-    * it was measured. */
-  private[graft] def cAssign(v: DataFrame, cent: DataFrame, nlist: Int): DataFrame =
-    v.crossJoin(broadcast(cent.limit(nlist)))
-      .withColumn("key", DotProduct.gridDist(col("v"), col("c")) * lit(nlist.toLong) + col("j"))
-      .groupBy("vec_id")
-      .agg(min("key").as("key"))
-      .select(col("vec_id"), (col("key") % nlist).as("list_id"))
-      .join(v, Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("list_id"))
-
-  /** One Lloyd update of the coarse codebook: per-(list, dim) FLOOR(mean)
-    * on the quantized grid; empty lists keep their previous centroid. The
-    * 64 dimension sums are unrolled into ONE aggregation (one shuffle to
-    * the ≤nlist-row codebook — the q205 rework). */
-  private[graft] def cUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
-    val sums = (1 to 64).map(i => sum(expr(s"element_at(v, $i)")).as(s"sx$i"))
-    val newC = assigned.groupBy(col("list_id").as("j"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("j"), array((1 to 64).map(i =>
-        floor(col(s"sx$i").cast("double") / col("n")).cast("long")): _*).as("cnew"))
-    prev.join(newC, Seq("j"), "left")
-      .select(col("j"), coalesce(col("cnew"), col("c")).as("c"))
-  }
-
-  /** Assign every (vec_id, list_id, s) residual subvector to its nearest
-    * per-subspace centroid: equi-join on s against the broadcast ≤(16·k)-row
-    * codebook, argmin through the encoded PRIMITIVE key (same SortAggregate
-    * avoidance as cAssign). r16 opt: the 4 subvector dims ride as separate
-    * min(element_at(v, i)) columns — constant within their group, so the
-    * min IS the subvector — which removes [[pUpdate]]'s previous rejoin of
-    * `sub` (an N·16-row shuffle join per training pass; the codes-only
-    * consumer prunes the v columns away). Returns
-    * (vec_id, list_id, s, code, v1..v4). */
-  private def pAssign(sub: DataFrame, cent: DataFrame, k: Int): DataFrame =
-    sub.join(broadcast(cent), Seq("s"))
-      .withColumn("key", expr(distE(4)) * lit(k.toLong) + col("j"))
-      .groupBy("vec_id", "list_id", "s")
-      .agg(min("key").as("key"),
-        (1 to 4).map(i => min(expr(s"element_at(v, $i)")).as(s"v$i")): _*)
-      .select(col("vec_id") +: col("list_id") +: col("s") +:
-        (col("key") % k).as("code") +: (1 to 4).map(i => col(s"v$i")): _*)
-
-  private def pUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
-    val sums = (1 to 4).map(i => sum(col(s"v$i")).as(s"sx$i"))
-    val newC = assigned
-      .groupBy(col("s"), col("code").as("j"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("s"), col("j"), array((1 to 4).map(i =>
-        floor(col(s"sx$i").cast("double") / col("n")).cast("long")): _*).as("cnew"))
-    prev.join(newC, Seq("s", "j"), "left")
-      .select(col("s"), col("j"), coalesce(col("cnew"), col("c")).as("c"))
-  }
 
   /** The full IVF-PQ pipeline, parameterized for the spec's full-probe
     * coverage check: coarse 8-list quantizer (seeds vec_id < 8, one Lloyd
@@ -151,15 +70,10 @@ object Round11 {
   private[graft] def ivfPqTopK(emb: DataFrame, nprobe: Int, k: Int,
       indexFilter: Column = lit(true)): DataFrame = {
     val qv = quantized(emb)
-    // coarse: only c1 is checkpointed — referenced by the final assign,
-    // the residual join, and the query probe (3 consumers; an
-    // un-checkpointed codebook would replay its training lineage per
-    // consumer, the q205 lesson). qv is map-side re-derivable.
-    val c0 = qv.where(col("vec_id") < 8).select(col("vec_id").as("j"), col("v").as("c"))
-    val c1 = cUpdate(cAssign(qv, c0, 8), c0).localCheckpoint()
-    // final assignment + integer residuals (checkpointed: feeds PQ seeds,
-    // two PQ training passes, and the final encode)
-    val resid = cAssign(qv, c1, 8)
+    val (asg, c1) = Lloyd.coarse(qv, 8)
+    // integer residuals (checkpointed: feeds PQ seeds, two PQ training
+    // passes, and the final encode)
+    val resid = asg
       .join(broadcast(c1.select(col("j").as("list_id"), col("c"))), Seq("list_id"))
       .select(col("vec_id"), col("list_id"),
         zip_with(col("v"), col("c"), (a, b) => a - b).as("r"))
@@ -170,8 +84,10 @@ object Round11 {
         expr("slice(r, 4 * s + 1, 4)").as("v"))
     val p0 = sub.where(col("vec_id") < 16)
       .select(col("s"), col("vec_id").as("j"), col("v").as("c"))
-    val p1 = pUpdate(pAssign(sub, p0, 16), p0).localCheckpoint()
-    val packed = pAssign(sub, p1, 16)
+    def pAssign(c: DataFrame) =
+      Lloyd.assignCarried(sub, c, Seq("s"), Seq("vec_id", "list_id", "s"), 16, 4)
+    val p1 = Lloyd.update(pAssign(p0), p0, Seq("s"), Lloyd.carried(4)).localCheckpoint()
+    val packed = pAssign(p1)
       .groupBy("vec_id", "list_id")
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x("code")).as("ca"))
@@ -192,7 +108,7 @@ object Round11 {
         expr("slice(qr, 4 * s + 1, 4)").as("v"))
       .join(broadcast(p1), Seq("s"))
       .select(col("qid"), col("list_id"),
-        (col("s") * 16 + col("j")).as("idx"), expr(distE(4)).as("ld"))
+        (col("s") * 16 + col("j")).as("idx"), Lloyd.sqDist(4).as("ld"))
       .groupBy("qid", "list_id")
       .agg(transform(array_sort(collect_list(struct(col("idx"), col("ld")))),
         x => x("ld")).as("la"))

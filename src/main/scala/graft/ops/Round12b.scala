@@ -55,13 +55,11 @@ object Round12b {
           .select((col("vec_id") + 10000L).as("vec_id"),
             expr("transform(v, x -> x - x % 1000)").as("v"))
         val all = qv.unionAll(twins)
-        val c0 = all.where(col("vec_id") < 8)
-          .select(col("vec_id").as("j"), col("v").as("c"))
-        val c1 = Round11.cUpdate(Round11.cAssign(all, c0, 8), c0).localCheckpoint()
+        val (asg, _) = Lloyd.coarse(all, 8)
         // checkpointed: the assignment feeds BOTH sides of the pairwise
         // self-join (un-checkpointed, each side would replay the argmin
         // lineage — the dupClusters discipline)
-        val withN = Round11.cAssign(all, c1, 8)
+        val withN = asg
           .select(col("vec_id"), col("list_id"),
             col("v").cast("array<double>").as("vd"))
           .withColumn("n2", DotProduct.norm2(col("vd")))
@@ -231,10 +229,8 @@ object Round12b {
     "q234_knn_graph" -> QDef(
       (s, d) => {
         val qv = Round11.quantized(embeddings(s, d))
-        val c0 = qv.where(col("vec_id") < 8)
-          .select(col("vec_id").as("j"), col("v").as("c"))
-        val c1 = Round11.cUpdate(Round11.cAssign(qv, c0, 8), c0).localCheckpoint()
-        val wn = Round11.cAssign(qv, c1, 8)
+        val (asg, _) = Lloyd.coarse(qv, 8)
+        val wn = asg
           .select(col("vec_id"), col("list_id"),
             col("v").cast("array<double>").as("vd"))
           .localCheckpoint() // both sides of the per-cell pairwise join

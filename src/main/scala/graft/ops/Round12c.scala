@@ -267,10 +267,8 @@ object Round12c {
     "q237_cell_medoids" -> QDef(
       (s, d) => {
         val qv = Round11.quantized(embeddings(s, d))
-        val c0 = qv.where(col("vec_id") < 8)
-          .select(col("vec_id").as("j"), col("v").as("c"))
-        val c1 = Round11.cUpdate(Round11.cAssign(qv, c0, 8), c0).localCheckpoint()
-        val wn = Round11.cAssign(qv, c1, 8)
+        val (asg, _) = Lloyd.coarse(qv, 8)
+        val wn = asg
           .select(col("vec_id"), col("list_id"),
             col("v").cast("array<double>").as("vd"))
           .localCheckpoint() // both sides of the per-cell pairwise join

@@ -51,10 +51,8 @@ object Round13 {
     * near-linear in the semdedup ScaleCurve regime). */
   private[graft] def knnCand(emb: DataFrame, nprobe: Int): DataFrame = {
     val qv = Round11.quantized(emb)
-    val c0 = qv.where(col("vec_id") < 8)
-      .select(col("vec_id").as("j"), col("v").as("c"))
-    val c1 = Round11.cUpdate(Round11.cAssign(qv, c0, 8), c0).localCheckpoint()
-    val wn = Round11.cAssign(qv, c1, 8)
+    val (asg, c1) = Lloyd.coarse(qv, 8)
+    val wn = asg
       .select(col("vec_id"), col("list_id"),
         col("v").cast("array<double>").as("vd"))
       .localCheckpoint() // member side + the probe-side payload rejoin

@@ -38,10 +38,8 @@ object Round13b {
     val acc: Column => Column =
       if (decimalAcc) c => c.cast("decimal(38,0)") else identity
     val qv = Round11.quantized(embeddings(s, d))
-    val c0 = qv.where(col("vec_id") < 8)
-      .select(col("vec_id").as("j"), col("v").as("c"))
-    val c1 = Round11.cUpdate(Round11.cAssign(qv, c0, 8), c0).localCheckpoint()
-    val wn = Round11.cAssign(qv, c1, 8)
+    val (asg, _) = Lloyd.coarse(qv, 8)
+    val wn = asg
       .select(col("vec_id"), col("list_id"),
         col("v").cast("array<double>").as("vd"))
       .localCheckpoint() // carve + the stats rollup
@@ -168,10 +166,8 @@ object Round13b {
         import s.implicits._
         val levels = Seq(1, 2, 4, 8).toDF("nprobe")
         val qv = Round11.quantized(embeddings(s, d))
-        val c0 = qv.where(col("vec_id") < 8)
-          .select(col("vec_id").as("j"), col("v").as("c"))
-        val c1 = Round11.cUpdate(Round11.cAssign(qv, c0, 8), c0).localCheckpoint()
-        val wn = Round11.cAssign(qv, c1, 8)
+        val (asg, c1) = Lloyd.coarse(qv, 8)
+        val wn = asg
           .select(col("vec_id"), col("list_id"), col("v"))
           .localCheckpoint() // candidate side
         val q = qv.where(col("vec_id") < 10)

@@ -59,7 +59,7 @@ object Round15 {
   }
 
   /** Unrolled 8-dim squared distance in DuckDB SQL (the oracle twin of
-    * Round10n.distE — a list_zip fold here costs several× more per row
+    * Lloyd.sqDist — a list_zip fold here costs several× more per row
     * and the kc=256 assign pass evaluates it N·8·256 times). */
   private def d8(v: String, c: String): String = (1 to 8)
     .map(i => s"($v[$i] - $c[$i]) * ($v[$i] - $c[$i])")

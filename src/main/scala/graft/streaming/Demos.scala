@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.Encoders
 import org.apache.spark.unsafe.types.UTF8String
+import graft.plans.DotProduct
 
 /** The events record (mirrors the events table / FIXTURES.md). */
 case class Event(
@@ -1796,7 +1797,7 @@ object Demos {
     * centroids are TRAINED OFFLINE and FROZEN (retraining online would
     * move cluster boundaries under already-committed keep/drop verdicts).
     * Each micro-batch: quantize to the 1e6 integer grid, assign with the
-    * batch query's EXACT argmin (`Round11.cAssign` — same key encoding,
+    * batch query's EXACT argmin (`Lloyd.assignNarrow` — same key encoding,
     * same tie-breaks), then drop a vector iff
     *   (a) some already-KEPT committed vector in its cluster clears τ, or
     *   (b) some lower-id batch-mate in its cluster clears τ (q231's
@@ -1830,13 +1831,12 @@ object Demos {
   private[graft] def semanticDedupBatch(batch: DataFrame, centroids: DataFrame,
       nlist: Int, dir: String, batchId: Long, tau: Double): Unit = {
     val spark = batch.sparkSession
-    import graft.plans.DotProduct.{dot => dotC, norm2 => n2C}
     val qv = graft.ops.Round11.quantized(batch.select(col("vec_id"), col("embedding")))
     // checkpointed: consumed by the committed join, BOTH sides of the
     // batch-local pair join, and the kept write (the dupClusters rule)
-    val asg = graft.ops.Round11.cAssign(qv, centroids, nlist)
+    val asg = graft.ops.Lloyd.assignNarrow(qv, centroids, nlist)
       .select(col("vec_id"), col("list_id"), col("v").cast("array<double>").as("vd"))
-      .withColumn("n2", n2C(col("vd")))
+      .withColumn("n2", DotProduct.norm2(col("vd")))
       .localCheckpoint()
     val keptDir = s"$dir/kept"
     // committed prefix = partitions b < batchId ONLY (the s14 version
@@ -1861,7 +1861,7 @@ object Demos {
       val scoped = if (lowerIdOnly) base.where(col("id_y") < col("id_x"))
         else base.where(col("id_y") =!= col("id_x"))
       scoped
-        .where(dotC(col("vx"), col("vy")) / sqrt(col("nx") * col("ny")) > tau)
+        .where(DotProduct.dot(col("vx"), col("vy")) / sqrt(col("nx") * col("ny")) > tau)
         .select(col("id_x").as("vec_id"))
     }
     val drops = dropsVs(commIn, lowerIdOnly = false)

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * this), the counts quoted in README.md / CLAUDE.md must track the code
   * (drifted in rounds 2 and 4), and every main's session comes from
   * GraftSession (nine hand-built sessions had drifted apart in cores,
-  * time zone, extensions and log level), and every program stream starts
-  * through StreamStart.
+  * time zone, extensions and log level), every program stream starts
+  * through StreamStart, and the k-means step lives only in ops/Lloyd.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -177,6 +177,24 @@ class ContractSpec extends AnyFunSuite {
     val hits = keyHits ++ startHits
     assert(hits.isEmpty,
       s"${hits.size} stream start(s) bypass StreamStart:\n  ${hits.mkString("\n  ")}")
+    assert(Files.exists(owner))
+  }
+
+  test("the Lloyd update and encoded argmin key live only in ops/Lloyd.scala") {
+    // copies of the integer-grid k-means step drift apart (six update
+    // bodies and seven argmin keys had accumulated); the DuckDB oracles
+    // and s35's batch twin rely on one arithmetic
+    val owner = Paths.get("src/main/scala/graft/ops/Lloyd.scala")
+    val update = java.util.regex.Pattern.quote("floor(col(s\"sx")
+    val argminKey = raw"""\* lit\([^()]*\) \+ col\("j"\)"""
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toVector
+      if p.toString.endsWith(".scala") && p != owner
+      (line, n) <- read(p.toString).split("\n").zipWithIndex
+      (re, what) <- Seq(update -> "Lloyd update", argminKey -> "encoded argmin key")
+      if re.r.findFirstIn(line).isDefined
+    } yield s"$p:${n + 1}: $what"
+    assert(hits.isEmpty, s"${hits.size} k-means step(s) outside Lloyd:\n  ${hits.mkString("\n  ")}")
     assert(Files.exists(owner))
   }
 

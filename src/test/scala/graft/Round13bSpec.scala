@@ -19,10 +19,7 @@ class Round13bSpec extends AnyFunSuite {
     // the silhouette in plain JVM arithmetic (exact long sums, one
     // long→double conversion, one division — the query's exact ops)
     val qv = ops.Round11.quantized(Tables.embeddings(spark, sf01))
-    val c0 = qv.where(col("vec_id") < 8)
-      .select(col("vec_id").as("j"), col("v").as("c"))
-    val c1 = ops.Round11.cUpdate(ops.Round11.cAssign(qv, c0, 8), c0)
-    val wn = ops.Round11.cAssign(qv, c1, 8).collect()
+    val wn = ops.Lloyd.coarse(qv, 8)._1.collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("list_id"),
         r.getAs[Seq[Long]]("v").toArray))
     def d2(a: Array[Long], b: Array[Long]): Long = {
