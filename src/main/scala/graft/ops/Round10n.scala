@@ -148,9 +148,6 @@ object Round10n {
       .agg(transform(array_sort(collect_list(struct(col("idx"), col("ld")))),
         x => x("ld")).as("la"))
 
-  private[graft] def lutArrays(qsub: DataFrame, cent: DataFrame): DataFrame =
-    lutArraysK(qsub, cent, 16)
-
   /** LUT arrays for ALL capacity levels in one pass: `centK` carries
     * (kc, s, j, c), the output (kc, qid, la) — per kc slice byte-identical
     * to [[lutArraysK]] (idx = s·kc + j just widens to long; array_sort on

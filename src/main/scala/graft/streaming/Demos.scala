@@ -4,9 +4,11 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -364,19 +366,24 @@ object Demos {
   /** s1 — the broadcast-state pattern, streaming-native. The rules
     * "stream" is low-volume control data: each micro-batch re-resolves
     * `currentRules()` on the driver into an `event_type → rules` hash map
-    * that reaches every task in the closure (the MapStateDescriptor
-    * analog). Rules with a null `event_type` never match and are dropped.
-    * Rule updates apply to the NEXT micro-batch, exactly Flink's
-    * eventually-consistent broadcast-state semantics.
+    * (the MapStateDescriptor analog). The map rides once per job in the
+    * task binary, and each task deserializes it. Rules with a null
+    * `event_type` never match and are dropped. Rule updates apply to the
+    * NEXT micro-batch, exactly Flink's eventually-consistent
+    * broadcast-state semantics.
     *
     * A batch is ONE pass over the rows the engine already planned: the
-    * streaming plan projects the four alert columns, and one job over
-    * `batch.queryExecution.toRdd` looks each event's rules up, keeps each
-    * task's `maxCollect` lowest-`event_id` alerts and counts every alert
-    * it finds. No per-batch DataFrame query is built, so no analysis,
-    * planning or SQL execution of its own (an inner `orderBy/limit` query
-    * cost ~40 ms of driver time per batch). A broadcast join measured as a
-    * second job (its own AQE query stage) and a re-plan per batch.
+    * streaming plan projects the four alert columns, and `foreachBatch`
+    * hands them over as a `LogicalRDD` whose `rdd` is the engine's own
+    * output. One `runJob` over that `rdd`, with [[S1Task]] as its
+    * function, looks each event's rules up, keeps each task's
+    * `maxCollect` lowest-`event_id` alerts and counts every alert it
+    * finds. s1 plans nothing of its own: `batch.queryExecution.toRdd`
+    * would re-run the optimizer, planning and codegen over that
+    * `LogicalRDD`, and a per-batch DataFrame query (an inner
+    * `orderBy/limit`) cost ~40 ms of driver time. A broadcast join
+    * measured as a second job (its own AQE query stage) and a re-plan
+    * per batch.
     * `value >= threshold` follows Spark SQL's double ordering (NaN above
     * every number, -0.0 = 0.0), so the alerts equal the SQL join's.
     *
@@ -404,12 +411,26 @@ object Demos {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val rulesByType = currentRules().filter(_.event_type != null).toArray
           .groupBy(r => UTF8String.fromString(r.event_type))
-        val perTask = batch.queryExecution.toRdd
-          .mapPartitions(rows => Iterator.single(s1Alerts(rows, rulesByType, maxCollect)))
-          .collect()
+        val rows = batch.queryExecution.logical match {
+          case r: LogicalRDD => r.rdd
+          case p => throw new IllegalStateException(
+            s"s1 expects foreachBatch to hand it a LogicalRDD batch, got ${p.getClass.getName}")
+        }
+        val perTask = new Array[(Array[Alert], Long)](rows.getNumPartitions)
+        rows.sparkContext.runJob(rows, new S1Task(rulesByType, maxCollect), perTask.indices,
+          (i: Int, r: (Array[Alert], Long)) => perTask(i) = r)
         val kept = perTask.flatMap(_._1).sortBy(_.event_id).take(maxCollect).toSeq
         onBatch(kept, perTask.map(_._2).sum - kept.size, batchId)
       })
+  }
+
+  /** s1's task function. A named class, not a lambda: Spark's
+    * `ClosureCleaner` returns at once for it, where for a lambda it parses
+    * the defining class file (`Demos$` is 114 KB) on every batch. */
+  private final class S1Task(rulesByType: Map[UTF8String, Array[Rule]], cap: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => (Array[Alert], Long)) with Serializable {
+    def apply(tc: TaskContext, rows: Iterator[InternalRow]): (Array[Alert], Long) =
+      s1Alerts(rows, rulesByType, cap)
   }
 
   /** One s1 task: the `cap` lowest-`event_id` alerts of its rows, in row

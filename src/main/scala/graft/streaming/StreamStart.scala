@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
@@ -19,6 +20,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   * back (the prior value, or unset) — the caller's session is left as it
   * was. One lock serialises the set-and-restore across threads.
   * ContractSpec keeps every `writeStream` start in `src/main` on this path.
+  *
+  * [[StreamStart.stop]] is the matching stop: `StreamingQuery.stop()`
+  * returns while the query's cancelled tasks still run, and a file sink's
+  * write tasks can then re-create output the caller has already removed.
   */
 object StreamStart {
 
@@ -33,6 +38,27 @@ object StreamStart {
       conf.set(ManagerKey, classOf[LocalCheckpointFileManager].getName)
       try writer.start()
       finally prior.fold(conf.unset(ManagerKey))(conf.set(ManagerKey, _))
+    }
+  }
+
+  /** Stops `q`, then waits until no task of its jobs still runs. The
+    * engine runs every job of a query in the job group named by its
+    * `runId`. The status tracker hears of jobs through the listener bus,
+    * so "nothing running" must read the same twice, 20 ms apart. */
+  def stop(q: StreamingQuery): Unit = {
+    q.stop()
+    val tracker = q.sparkSession.sparkContext.statusTracker
+    def running: Boolean = tracker.getJobIdsForGroup(q.runId.toString).exists { id =>
+      tracker.getJobInfo(id).exists(j => j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => tracker.getStageInfo(s).exists(_.numActiveTasks > 0)))
+    }
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var idle = 0
+    while (idle < 2) {
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException(s"tasks of stopped query ${q.runId} still run after 60 s")
+      idle = if (running) 0 else idle + 1
+      if (idle < 2) Thread.sleep(20)
     }
   }
 }

@@ -36,7 +36,7 @@ object StreamingSmoke {
         .map(r => Rule(r.getString(0), r.getDouble(1), r.getString(2))),
       (alerts, overflow, _) => alertCount.addAndGet(alerts.size + overflow)
     )
-    q1.processAllAvailable(); q1.stop()
+    q1.processAllAvailable(); StreamStart.stop(q1)
     val batchAlerts = graft.SparkEntry.queries("q35_broadcast_rules")(spark, sfDir).count()
     println(s"[stream-smoke] s1 alerts=${alertCount.get} batch q35=$batchAlerts " +
       (if (alertCount.get == batchAlerts) "OK" else "MISMATCH"))
@@ -45,14 +45,14 @@ object StreamingSmoke {
     // windows; the unfinalized tail is expected to be withheld).
     val q2 = StreamStart(Demos.s2TumblingCounts(eventStream))(
       _.outputMode("append").format("memory").queryName("smoke_s2"))
-    q2.processAllAvailable(); q2.stop()
+    q2.processAllAvailable(); StreamStart.stop(q2)
     val s2n = spark.table("smoke_s2").count()
     println(s"[stream-smoke] s2 finalized windows=$s2n " + (if (s2n > 0) "OK" else "FAIL"))
 
     // s4: stateful pattern detection over the real stream.
     val q4 = StreamStart(Demos.s4PatternDetect(spark, eventStream))(
       _.outputMode("append").format("memory").queryName("smoke_s4"))
-    q4.processAllAvailable(); q4.stop()
+    q4.processAllAvailable(); StreamStart.stop(q4)
     val s4n = spark.table("smoke_s4").count()
     val batchMatches = graft.SparkEntry.queries("q38_pattern_detect")(spark, sfDir)
       .agg(sum("n_matches")).collect()(0).getLong(0)
@@ -62,7 +62,7 @@ object StreamingSmoke {
     // s6: stream-stream interval join vs its batch equivalent.
     val q6 = StreamStart(Demos.s6StreamStreamJoin(eventStream))(
       _.outputMode("append").format("memory").queryName("smoke_s6"))
-    q6.processAllAvailable(); q6.stop()
+    q6.processAllAvailable(); StreamStart.stop(q6)
     val s6n = spark.table("smoke_s6").count()
     val ev = graft.Tables.events(spark, sfDir)
     val c = ev.where(col("event_type") === "click")

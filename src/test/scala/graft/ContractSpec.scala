@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (drifted in rounds 2 and 4), and every main's session comes from
   * GraftSession (nine hand-built sessions had drifted apart in cores,
   * time zone, extensions and log level), every program stream starts
-  * through StreamStart, and the k-means step lives only in ops/Lloyd.
+  * through StreamStart, the k-means step lives only in ops/Lloyd, and s1's
+  * batch body runs its one job without per-batch closure cleaning.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -196,6 +197,23 @@ class ContractSpec extends AnyFunSuite {
     } yield s"$p:${n + 1}: $what"
     assert(hits.isEmpty, s"${hits.size} k-means step(s) outside Lloyd:\n  ${hits.mkString("\n  ")}")
     assert(Files.exists(owner))
+  }
+
+  test("s1's batch body cleans no lambda and re-plans no batch") {
+    // per batch, `mapPartitions(…).collect()` had Spark's ClosureCleaner
+    // parse the class of each of three lambdas (Demos$ is 114 KB), and
+    // `queryExecution.toRdd` re-planned the LogicalRDD the engine hands over
+    val path = "src/main/scala/graft/streaming/Demos.scala"
+    val lines = read(path).split("\n")
+    val start = lines.indexWhere(_.contains("def s1BroadcastRules("))
+    assert(start >= 0, s"$path holds no s1BroadcastRules")
+    val next = lines.indexWhere(raw"^  (/\*\*|def |private )".r.findFirstIn(_).isDefined, start + 1)
+    val hits = for {
+      n <- start until (if (next < 0) lines.length else next)
+      token <- Seq("mapPartitions", ".collect()", "queryExecution.toRdd")
+      if lines(n).contains(token)
+    } yield s"$path:${n + 1}: $token"
+    assert(hits.isEmpty, s"s1BroadcastRules runs per-batch lambda jobs or re-plans:\n  ${hits.mkString("\n  ")}")
   }
 
   test("README.md and CLAUDE.md test/suite counts match the test tree") {

@@ -1,9 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Sources
+import graft.streaming.StreamStart
+
+/** Rows that take a second each to compute and ignore task interrupts, so
+  * a cancelled task finishes its row; the counters count rows begun and
+  * rows done. */
+private object SlowRows {
+  val started = new AtomicInteger(0)
+  val finished = new AtomicInteger(0)
+  def apply(v: Long): Long = {
+    started.incrementAndGet()
+    val end = System.nanoTime() + 1000L * 1000 * 1000
+    while (System.nanoTime() < end)
+      try Thread.sleep(10) catch { case _: InterruptedException => }
+    finished.incrementAndGet()
+    v
+  }
+}
 
 /** Round-trips through every source/sink format plus the rate stream
   * (SURVEY.md §2.1 R2/R17 coverage). */
@@ -65,5 +87,37 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
       }
       assert(spark.read.schema(alerts.schema).parquet(outDir).count() > 0)
     } finally q.stop()
+  }
+
+  test("StreamStart.stop outlasts a file sink's write tasks: output deleted after the stop stays gone") {
+    // StreamingQuery.stop() returns while the query's cancelled tasks still
+    // run; a write task that finishes its row opens its next file, which
+    // re-creates the deleted output directory
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxRecordsPerFile", "1") // a new file per row
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val input = MemoryStream[Long](1)
+    input.addData(1L, 2L, 3L, 4L)
+    val out = Paths.get(tmp(), "out")
+    val slow = udf((v: Long) => SlowRows(v))
+    SlowRows.started.set(0); SlowRows.finished.set(0)
+    val q = Sources.fileSink(input.toDF().select(slow($"value").as("v")), out.toString,
+      tmp() + "/ckpt")
+    try {
+      // stop inside the second row, after which the task opens its second file
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (SlowRows.started.get < 2 && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(SlowRows.started.get >= 2 && Files.exists(out), "the write task never started")
+    } finally StreamStart.stop(q)
+    FileUtils.deleteDirectory(out.toFile)
+    // let a row still in flight finish and its task open the next file (the
+    // status tracker's per-executor running-task count can lag, so the rows
+    // themselves say when the task is done)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (SlowRows.finished.get < SlowRows.started.get && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    Thread.sleep(500)
+    assert(!Files.exists(out), s"a task of the stopped query re-created $out")
   }
 }

@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -215,6 +216,58 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       q.processAllAvailable()
     } finally q.stop()
     assert(seen.synchronized(seen.toSeq).map(key).sorted == joined)
+  }
+
+  test("s1: 10,000 rules, ten per event type, give the broadcast join's alerts") {
+    implicit val sqlCtx = spark.sqlContext
+    val rnd = new scala.util.Random(11)
+    val types = (0 until 1000).map(i => f"t$i%04d")
+    // per type, one threshold in each tenth of the values' 0..1000 range
+    val rules = for (t <- types; j <- 0 until 10)
+      yield Rule(t, j * 100.0 + rnd.nextInt(100), s"$t/$j")
+    val events = (0 until 4000).map { i =>
+      val typ = if (i % 50 == 0) "untyped" else types(rnd.nextInt(types.size))
+      ev(i, i % 600, i % 97, typ, rnd.nextInt(1001).toDouble)
+    }
+    def key(a: Alert) = (a.event_id, a.severity)
+    val joined = events.toDF()
+      .join(broadcast(rules.toDF()), Seq("event_type"))
+      .where($"value" >= $"threshold")
+      .select("event_id", "user_id", "event_type", "value", "severity")
+      .as[Alert].collect().toSeq.sortBy(key)
+    assert(joined.size > 15000, s"only ${joined.size} joined alerts")
+
+    val input = MemoryStream[Event]
+    val seen = mutable.Buffer[Alert]()
+    val q = Demos.s1BroadcastRules(input.toDF(), () => rules,
+      (alerts, overflow, _) => seen.synchronized { assert(overflow == 0L); seen ++= alerts })
+    try for (half <- events.grouped(2000)) {
+      input.addData(half: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(seen.synchronized(seen.toSeq).sortBy(key) == joined)
+  }
+
+  test("foreachBatch hands s1 its batch as a LogicalRDD over the engine's rows") {
+    // s1 runs its job on this LogicalRDD's rdd and has no other path: a
+    // Spark whose ForeachBatchSink hands over another plan fails here
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    val seen = mutable.Buffer[(String, Long)]()
+    val q = StreamStart(input.toDF())(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      val plan = batch.queryExecution.logical
+      val rows = plan match {
+        case r: LogicalRDD => r.rdd.count()
+        case _ => -1L
+      }
+      seen.synchronized { seen += ((plan.getClass.getName, rows)) }
+      ()
+    })
+    try {
+      input.addData(ev(1, 0, 7, "purchase", 200.0), ev(2, 1, 7, "click", 1.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(seen.synchronized(seen.toSeq) == Seq((classOf[LogicalRDD].getName, 2L)))
   }
 
   test("s1: offset and commit logs hold only batch files — no .crc, no temp files") {
