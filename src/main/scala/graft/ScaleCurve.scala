@@ -3,15 +3,42 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Lloyd
-import graft.plans.DotProduct
+import graft.ops.{Curation, LlmExt2, Lloyd, Round11c, Round12b, Round13b, Round9b}
+import graft.plans.{DotProduct, SignHash}
 
-/** Dev measurement harness (VERDICT r9 task #5): MEASURE — don't just
-  * argue — the scaling curves of the five bucketed dedup/similarity
-  * pipelines, on corpora synthesized through the deterministic id
-  * arithmetic of the `graft-gen` DSv2 source (no new testdata needed).
+/** Dev measurement harness: the scaling curves of the shipped dedup,
+  * similarity, ANN and graph operators, on corpora synthesized through
+  * the deterministic id arithmetic of the `graft-gen` DSv2 source (no new
+  * testdata needed). Each regime is a generator ([[docs]], [[vecs]],
+  * [[clusteredVecs]] or raw `graft-gen` events) plus the function the
+  * declared query ships, called with its scale constant as a parameter,
+  * so a row keeps describing the query when the query changes:
   *
-  * Two vocabulary regimes, because candidate volume is a DATA property:
+  *  - `real` | `heaps` | `adv` (pipelines): `minhash_lsh` →
+  *    `LlmExt2.minhashLshPairs` (q46); `simhash_blocked` →
+  *    `LlmExt2.simhashPairs` at 48 bits (q56 passes 16); `incremental` →
+  *    `Curation.deltaMatches` (q75); `prefix_filter` →
+  *    `Mining.ppjoinPairs` (q101); `snm_w8` / `snm_derived` →
+  *    `Round9b.snmPairs` at width 8 (q137's) / at `Round9b.snmWidth`.
+  *  - `snmrecall`: `Round9b.snmPairs` at 8 vs at `Round9b.snmWidth`.
+  *  - `kcore`: `Round11c.cappedEdges` (q225).
+  *  - `semdedup`: `Lloyd.assignNarrow` or `SignHash.fold` cell keys, then
+  *    `Round12b.cellPairs` (q231).
+  *  - `spans`: `Round12c.dupSpans` (q235), `Round12c.cdcDupChunks` (q236).
+  *  - `prefix`: `Round12c.prefixCacheStats` (q238) against the windowed
+  *    form it replaced, kept as the measured control.
+  *  - `knngraph`, `clustered`: the q234/q244 cell graph with the
+  *    `DotProduct.gridDist` kernel; `clustered` adds two `ann` rows.
+  *  - `silh`: `Round13b.silhStats` (q247) against the carve×N pairwise
+  *    pass, both finished by `Round13b.silhouette`.
+  *  - `mhfamily`: `LlmExt2.tokenDict` / `bandSigsFromMh` / `mhMults`
+  *    (q46) against two measured control families.
+  *  - `ann`: `SignHash.bucket` (q52, q220 via `first`, q229 via `prime`),
+  *    `SignHash.word` (q232), `Ann.ivfIndex` / `ivfTopK` (q62),
+  *    `Round10n.pqCodebook` / `pqEncode` / `adcDistances` (q205/q206) and
+  *    an IVF-PQ composition on the `Lloyd` kernel.
+  *
+  * Candidate volume is a DATA property, hence the corpus regimes:
   *  - `real`: two-tier Zipf-ish draw (80% from 2048 hot tokens, 20% from
   *    65536 cold) — the sparse-similarity regime every LSH paper assumes.
   *    (A first cut used a 50-token hot core carrying 80% of the mass:
@@ -27,9 +54,9 @@ import graft.plans.DotProduct
   *
   * Every 10th doc duplicates its block's first doc, so dedup finds real
   * clusters at every size. Usage:
-  *   runMain graft.ScaleCurve [regime] [sizes,csv]
+  *   runMain graft.ScaleCurve [regime] [sizes,csv] [pipelines,csv]
   * defaults: real 5000,50000,250000 (adv caps at 20000 — see above).
-  * Results → SCALE.md §11 (round-10 table).
+  * Results → SCALE.md §11-§12.
   */
 object ScaleCurve {
 
@@ -67,114 +94,24 @@ object ScaleCurve {
         p => tok(xxhash64(col("seed") * 1315423911L + p.cast("long")))), " ").as("text"))
   }
 
-  private val P = 104729L
-
-  /** q56's production shape, unsampled, at the WIDTH a corpus this size
-    * needs: 48-bit fingerprints in 4×12-bit pieces (same hamming ≤ 3
-    * pigeonhole guarantee). q56's 16-bit width is the oracle-tied
-    * test-scale constant; fingerprint width is the standard SimHash
-    * resolution knob and must grow with corpus similarity mass. */
-  private def simhashBlocked(d: DataFrame): DataFrame = {
-    val bits = 48
-    val tf = d
-      .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("cnt"))
-      .withColumn("tid", conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long") % P)
-    val sums = (0 until bits).map { j =>
-      sum(col("cnt") * (lit(2) * (((col("tid") * (2 * j + 3) + (7 * j + 1)) % P) % 2) - 1)).as(s"s$j")
-    }
-    val sims = tf.groupBy("doc_id", "lang").agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), col("lang"),
-        (0 until bits).map(j => when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L))
-          .reduce(_ + _).as("simhash"))
-      .localCheckpoint()
-    val pieces = sims.select(col("doc_id"), col("lang"), col("simhash"),
-      posexplode(transform(sequence(lit(0), lit(3)),
-        p => floor(col("simhash") / pow(lit(2.0), p.cast("double") * 12)).cast("long") % 4096)))
-      .withColumnsRenamed(Map("pos" -> "piece_idx", "col" -> "piece"))
-    pieces.repartition(32).as("x")
-      .join(pieces.as("y"), col("x.lang") === col("y.lang") &&
-        col("x.piece_idx") === col("y.piece_idx") && col("x.piece") === col("y.piece") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .where(col("hamming") <= 3)
-      .distinct()
-  }
-
-  /** q75's production shape: hashed-id band signatures; 1/5 delta probes
-    * 4/5 history; exact verify on the hashed-id arrays. */
-  private def incremental(d: DataFrame): DataFrame = {
-    val withIds = d.select(col("doc_id"), col("lang"),
+  /** q75's shape over hashed-id arrays: [[graft.ops.Curation.deltaMatches]]
+    * (1/5 delta probes 4/5 history, exact verify on the id arrays). */
+  private def incremental(d: DataFrame): DataFrame =
+    Curation.deltaMatches(d.select(col("doc_id"), col("lang"),
       transform(array_distinct(split(col("text"), " ")),
-        t => pmod(xxhash64(t), lit(P))).as("ids"))
-      .localCheckpoint()
-    val sig = graft.ops.LlmExt2.explodeBandSigs(withIds)
-    val hist = sig.where(col("doc_id") % 5 =!= 0)
-    val delta = sig.where(col("doc_id") % 5 === 0)
-    val cand = delta.as("n")
-      .join(hist.as("h"), col("n.band") === col("h.band") &&
-        col("n.sig") === col("h.sig") && col("n.lang") === col("h.lang"))
-      .select(col("n.doc_id").as("new_id"), col("h.doc_id").as("hist_id"))
-      .distinct()
-      .repartition(32)
-    val arrs = withIds.select(col("doc_id"), col("ids"))
-    cand
-      .join(arrs.select(col("doc_id").as("new_id"), col("ids").as("ia")), "new_id")
-      .join(arrs.select(col("doc_id").as("hist_id"), col("ids").as("ib")), "hist_id")
-      .withColumn("nc", size(array_intersect(col("ia"), col("ib"))).cast("long"))
-      .withColumn("j", col("nc") / (size(col("ia")) + size(col("ib")) - col("nc")))
-      .where(col("j") >= 0.6)
-      .select("new_id", "hist_id")
-  }
+        t => pmod(xxhash64(t), lit(LlmExt2.P))).as("ids"))
+      .localCheckpoint())
 
   /** q101's production shape, uncarved: the shared PPJoin+ stack
     * (rarest-first prefix + length + positional filters) at 0.9. */
   private def prefixFilter(d: DataFrame): DataFrame =
     graft.ops.Mining.ppjoinPairs(d).select("doc_a", "doc_b")
 
-  /** q137's shape at block prefix width `w` — `snm_w8` measures the
-    * DECLARED test-scale constant as-is to show where it stops scaling;
-    * `snm_derived` runs the production width derivation first. */
-  private def snmAt(d: DataFrame, width: Int): DataFrame = {
-    val t = d.select(col("doc_id"), col("lang"), col("text"),
-      substring(col("text"), 1, width).as("blk"),
-      array_distinct(split(col("text"), " ")).as("toks"))
-    val win = Window.partitionBy("lang", "blk").orderBy("text", "doc_id")
-    val w = t.select(col("lang"), col("doc_id"), col("toks"),
-      lead("doc_id", 1).over(win).as("id1"), lead("toks", 1).over(win).as("tk1"),
-      lead("doc_id", 2).over(win).as("id2"), lead("toks", 2).over(win).as("tk2"))
-    val p = w.where(col("id1").isNotNull)
-      .select(col("doc_id").as("doc_a"), col("id1").as("doc_b"),
-        col("toks").as("ta"), col("tk1").as("tb"))
-      .unionAll(w.where(col("id2").isNotNull)
-        .select(col("doc_id").as("doc_a"), col("id2").as("doc_b"),
-          col("toks").as("ta"), col("tk2").as("tb")))
-    p.withColumn("nc", size(array_intersect(col("ta"), col("tb"))).cast("long"))
-      .withColumn("j", col("nc") / (size(col("ta")) + size(col("tb")) - col("nc")))
-      .where(col("j") >= 0.6)
-      .select("doc_a", "doc_b")
-  }
-
-  /** q137's PRODUCTION width derivation (the constant `8` is the declared
-    * query's oracle-tied test-scale pin — Round9b.scala documents it):
-    * widen the block prefix in steps of 4 chars until the p99 block size
-    * is bounded. Each candidate width costs one count-rollup + a 1-row
-    * percentile — O(scan) per probe, a handful of probes — and the
-    * resulting block population is what keeps the per-block sort (SNM's
-    * only super-linear term) a constant-size task at any corpus size. */
-  private def derivedWidth(d: DataFrame, bound: Long = 64L): Int =
-    Iterator.iterate(8)(_ + 4).take(15).find { w =>
-      d.groupBy(col("lang"), substring(col("text"), 1, w))
-        .count()
-        .agg(expr("percentile_approx(count, 0.99, 10000)"))
-        .head().getLong(0) <= bound
-    }.getOrElse(64)
-
+  /** q137 at the production width [[Round9b.snmWidth]] derives. */
   private def snmDerived(d: DataFrame): DataFrame = {
-    val w = derivedWidth(d)
+    val w = Round9b.snmWidth(d)
     println(s"    [snm_derived] width=$w")
-    snmAt(d, w)
+    Round9b.snmPairs(d, w)
   }
 
   /** Recall audit for the derived width: pair overlap of the derived-width
@@ -185,9 +122,9 @@ object ScaleCurve {
     println(f"${"n_docs"}%8s ${"width"}%6s ${"pairs_w8"}%10s ${"pairs_wd"}%10s ${"overlap"}%10s ${"recall_vs_w8"}%13s ${"planted_w8"}%10s ${"planted_wd"}%10s")
     for (n <- sizes) {
       val d = docs(spark, n, regime).localCheckpoint()
-      val w8 = snmAt(d, 8).localCheckpoint()
-      val w = derivedWidth(d)
-      val wd = snmAt(d, w).localCheckpoint()
+      val w8 = Round9b.snmPairs(d, 8).select("doc_a", "doc_b").localCheckpoint()
+      val w = Round9b.snmWidth(d)
+      val wd = Round9b.snmPairs(d, w).select("doc_a", "doc_b").localCheckpoint()
       val (nW8, nWd) = (w8.count(), wd.count())
       val overlap = w8.intersect(wd).count()
       // recall on the PLANTED verbatim duplicates (doc 10k+9 copies 10k) —
@@ -208,14 +145,10 @@ object ScaleCurve {
     }
   }
 
-  /** kcore regime (round 12, VERDICT #4): measure q225's edge-build growth
-    * with and without the 16-users-per-cell cap on a synthetic event
-    * stream whose cell density grows linearly with volume (the premise of
-    * the round-11 weak-item: users scale with events, the (hour, type)
-    * cell grid is fixed, so uncapped pair volume is Θ(cell²)·cells —
-    * quadratic in corpus size — while the capped build is ≤ C(16,2)·cells,
-    * flat). Uncapped only runs to 300k events (3.3e9 pairs at 1M is the
-    * point, not a number worth computing). */
+  /** kcore regime: q225's capped edge build ([[Round11c.cappedEdges]]) on
+    * a synthetic event stream whose (hour, type) cell density grows
+    * linearly with volume; capped, edges stay ≤ C(16,2)·cells. The
+    * uncapped control grew exactly quadratically (SCALE.md §12 table). */
   private def kcoreCurve(spark: SparkSession, sizes: Seq[Long]): Unit = {
     println(f"${"variant"}%-10s ${"n_events"}%9s ${"n_cells"}%8s ${"edges"}%12s ${"sec"}%8s")
     for (n <- sizes) {
@@ -226,27 +159,11 @@ object ScaleCurve {
           concat(lit("t"), pmod(xxhash64(col("id") * 104729L), lit(4L))).as("event_type"))
         .distinct()
         .localCheckpoint()
-      def edges(e: DataFrame): DataFrame = e.as("a").join(e.as("b"),
-          col("a.hb") === col("b.hb") &&
-            col("a.event_type") === col("b.event_type") &&
-            col("a.user_id") < col("b.user_id"))
-        .select(col("a.user_id").as("u"), col("b.user_id").as("v"))
-        .distinct()
-      // q225's exact cap: portable md5 rank within the cell, ≤16 survive
-      val capped = ev.withColumn("rk", row_number().over(
-          Window.partitionBy("hb", "event_type").orderBy(
-            md5(concat_ws("#", col("user_id"), col("hb"), col("event_type"))),
-            col("user_id"))))
-        .where(col("rk") <= 16).drop("rk")
       val nCells = ev.select("hb", "event_type").distinct().count()
-      val variants = Seq("capped16" -> capped) ++
-        (if (n <= 300000) Seq("uncapped" -> ev) else Nil)
-      for ((nm, d) <- variants) {
-        val t0 = System.nanoTime()
-        val cnt = edges(d).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"$nm%-10s $n%9d $nCells%8d $cnt%12d $dt%8.2f")
-      }
+      val t0 = System.nanoTime()
+      val cnt = Round11c.cappedEdges(ev).count()
+      val dt = (System.nanoTime() - t0) / 1e9
+      println(f"${"capped16"}%-10s $n%9d $nCells%8d $cnt%12d $dt%8.2f")
     }
   }
 
@@ -299,6 +216,7 @@ object ScaleCurve {
     *    SIGN bits of the vector (the q232 binary-code trick as a
     *    bucketer) — assignment is ONE projection, Θ(N) total; the
     *    measured near-linear scale path.
+    * Every cell key feeds q231's own pairwise stage, `Round12b.cellPairs`.
     * Both plant 1/17 coarser-grid twins (q231's plant) and report planted
     * recall — a curve that loses its planted pairs is pruning wrongly. */
   private def semdedupCurve(spark: SparkSession, sizes: Seq[Long]): Unit = {
@@ -314,15 +232,7 @@ object ScaleCurve {
 
       def pairwise(nm: String, cells: Int, assigned: => DataFrame): Unit = {
         val t0 = System.nanoTime()
-        val wn = assigned
-          .select(col("vec_id"), col("cell"), col("v").cast("array<double>").as("vd"))
-          .withColumn("n2", DotProduct.norm2(col("vd")))
-        val a = wn.select(col("vec_id").as("id_a"), col("cell"),
-          col("vd").as("va"), col("n2").as("na"))
-        val b = wn.select(col("vec_id").as("id_b"), col("cell"),
-          col("vd").as("vb"), col("n2").as("nb"))
-        val r = a.join(b, Seq("cell")).where(col("id_a") < col("id_b"))
-          .withColumn("cos_sim", DotProduct.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+        val r = Round12b.cellPairs(assigned)
           .agg(count(lit(1)).as("pairs"),
             sum(when(col("cos_sim") > 0.8 &&
               col("id_b") === col("id_a") + 100000000L, 1L).otherwise(0L))
@@ -337,18 +247,15 @@ object ScaleCurve {
       pairwise("semdedup_kmeans", nlist, {
         val c0 = all.where(col("vec_id") < nlist)
           .select(col("vec_id").as("j"), col("v").as("c")).localCheckpoint()
-        Lloyd.assignNarrow(all, c0, nlist)
-          .withColumnRenamed("list_id", "cell").localCheckpoint()
+        Lloyd.assignNarrow(all, c0, nlist).localCheckpoint()
       })
       val bBits = math.max(3, (63 - java.lang.Long.numberOfLeadingZeros(
         math.max(1L, n / 500))).toInt)
-      pairwise("semdedup_signbucket", 1 << bBits, all.withColumn("cell",
-        (0 until bBits).map(i =>
-          when(expr(s"element_at(v, ${i + 1})") > 0, 1L << i).otherwise(0L))
-          .reduce(_ + _)).localCheckpoint())
+      pairwise("semdedup_signbucket", 1 << bBits, all.withColumn("list_id",
+        SignHash.fold((1 to bBits).map(i => element_at(col("v"), i)))).localCheckpoint())
       if (n <= 10000)
         pairwise("semdedup_allpairs", 1,
-          all.withColumn("cell", lit(0L)).localCheckpoint())
+          all.withColumn("list_id", lit(0L)).localCheckpoint())
     }
   }
 
@@ -438,14 +345,9 @@ object ScaleCurve {
           .withColumn("rnk", row_number().over(wRank)).where(col("rnk") <= K),
         None)
 
-      // q52's hyperplane-LSH at 8 bits (256 buckets)
-      def hyper(j: Int): org.apache.spark.sql.Column =
-        transform(sequence(lit(0), lit(63)),
-          k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
+      // q52's hyperplane-LSH at 4 and 8 bits (16 and 256 buckets)
       for (bits <- Seq(4, 8)) timed(s"lsh_bucket$bits", () => {
-        val be = emb.withColumn("bucket",
-          (0 until bits).map(j => when(DotProduct.dot(col("e"), hyper(j)) > 0, 1L << j).otherwise(0L))
-            .reduce(_ + _)).localCheckpoint()
+        val be = emb.withColumn("bucket", SignHash.bucket(col("e"), bits)).localCheckpoint()
         val bq = be.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("bucket"), col("n2").as("qn"))
         be.join(broadcast(bq), Seq("bucket")).where(col("vec_id") =!= col("qid"))
@@ -462,9 +364,7 @@ object ScaleCurve {
         val bits = 8
         val be = emb.select(col("vec_id"), col("e"), col("n2"),
             posexplode(array((0 until l).map(t =>
-              (0 until bits).map(j =>
-                when(DotProduct.dot(col("e"), hyper(t * bits + j)) > 0, 1L << j).otherwise(0L))
-                .reduce(_ + _)): _*)))
+              SignHash.bucket(col("e"), bits, first = t * bits)): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
           .localCheckpoint()
         val bq = be.where(col("vec_id") < 100)
@@ -489,14 +389,9 @@ object ScaleCurve {
       for (l <- Seq(4)) timed(s"lsh_multi${l}x8d", () => {
         val bits = 8
         val prime = Seq(2654435761L, 2246822519L, 3266489917L, 668265263L)
-        def hyperD(t: Int, j: Int): org.apache.spark.sql.Column =
-          transform(sequence(lit(0), lit(63)),
-            k => ((lit(j.toLong) * 64 + k) * lit(prime(t)) % 97 - 48).cast("double"))
         val be = emb.select(col("vec_id"), col("e"), col("n2"),
             posexplode(array((0 until l).map(t =>
-              (0 until bits).map(j =>
-                when(DotProduct.dot(col("e"), hyperD(t, j)) > 0, 1L << j).otherwise(0L))
-                .reduce(_ + _)): _*)))
+              SignHash.bucket(col("e"), bits, prime = prime(t))): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
           .localCheckpoint()
         val bq = be.where(col("vec_id") < 100)
@@ -520,10 +415,8 @@ object ScaleCurve {
       // qid-partitioned and rank-limited (WindowGroupLimit pushes the
       // top-50 map-side).
       for (short <- Seq(50, 200)) timed(s"hamming64_rr$short", () => {
-        def word(lo: Int) = expr((1 to 32).map(i =>
-          s"(CASE WHEN element_at(e, ${lo + i}) > 0 THEN ${1L << (i - 1)}L ELSE 0L END)")
-          .mkString(" + "))
-        val ce = emb.select(col("vec_id"), word(0).as("w0"), word(32).as("w1"))
+        val ce = emb.select(col("vec_id"),
+            SignHash.word(col("e"), 0).as("w0"), SignHash.word(col("e"), 32).as("w1"))
           .localCheckpoint()
         val cq = ce.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"), col("w0").as("qw0"), col("w1").as("qw1"))
@@ -549,11 +442,9 @@ object ScaleCurve {
       timed("ivf64_hamming_rr50", () => {
         val (index, centroids) = graft.ops.Ann.ivfIndex(
           emb.select(col("vec_id"), col("e").as("embedding")), nlist = 64)
-        def word(c: String, lo: Int) = expr((1 to 32).map(i =>
-          s"(CASE WHEN element_at($c, ${lo + i}) > 0 THEN ${1L << (i - 1)}L ELSE 0L END)")
-          .mkString(" + "))
         val codes = index.select(col("vec_id"), col("list_id"),
-          word("e", 0).as("w0"), word("e", 32).as("w1")).localCheckpoint()
+          SignHash.word(col("e"), 0).as("w0"), SignHash.word(col("e"), 32).as("w1"))
+          .localCheckpoint()
         // route with the SAME L2 metric the index assignment used
         val qprobe = emb.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"), col("e"), col("n2"))
@@ -566,7 +457,7 @@ object ScaleCurve {
           .select(col("qid"), col("list_id"))
         val qcodes = emb.where(col("vec_id") < 100)
           .select(col("vec_id").as("qid"),
-            word("e", 0).as("qw0"), word("e", 32).as("qw1"))
+            SignHash.word(col("e"), 0).as("qw0"), SignHash.word(col("e"), 32).as("qw1"))
         codes.join(broadcast(qprobe), Seq("list_id"))
           .where(col("vec_id") =!= col("qid"))
           .join(broadcast(qcodes), Seq("qid"))
@@ -866,9 +757,10 @@ object ScaleCurve {
 
   /** silh regime (round 14): q247's two silhouette forms, timed and
     * BIT-COMPARED at growing N — the carve×N pairwise pass (the round-13
-    * internals, which the DuckDB oracle still replays) vs the
-    * sufficient-statistics form ((n_j, Σv, Σv²) per cell — the round-14
-    * declared internals). The identity Σ_m d²(v,m) = n_j·‖v‖² − 2·v·S_j
+    * internals, which the DuckDB oracle still replays; the harness's
+    * reference) vs the sufficient-statistics form q247 ships
+    * (`Round13b.silhStats`: (n_j, Σv, Σv²) per cell), both finished by
+    * `Round13b.silhouette`. The identity Σ_m d²(v,m) = n_j·‖v‖² − 2·v·S_j
     * + Q_j is exact in int64, so `equal` must print true at every size;
     * the COST separates: the carve form touches N·|carve| pairs, the
     * stats form one N×64 explode + a |carve|·nlist·64 join. Clustered
@@ -892,22 +784,12 @@ object ScaleCurve {
           col("vd").as("av"))
         .limit(100).localCheckpoint()
 
-      def finish(stats: DataFrame): Array[(Long, Long, Double, Double, Double)] = {
-        val own = stats.where(col("list_id") === col("own_list") && col("md").isNotNull)
-          .select(col("aid").as("vec_id"), col("md").as("a"))
-        val oth = stats.where(col("list_id") =!= col("own_list"))
-          .groupBy(col("aid").as("vec_id")).agg(min("md").as("b"))
-        carve.select(col("aid").as("vec_id"), col("own_list"))
-          .join(own, Seq("vec_id"), "left")
-          .join(oth, Seq("vec_id"), "left")
-          .withColumn("s", when(col("a").isNull || col("b").isNull, lit(0.0))
-            .otherwise((col("b") - col("a")) / greatest(col("a"), col("b"))))
-          .orderBy("vec_id")
+      def finish(stats: DataFrame): Array[(Long, Long, Double, Double, Double)] =
+        Round13b.silhouette(carve, stats)
           .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("own_list"),
             Option(r.getAs[java.lang.Double]("a")).fold(Double.NaN)(_.doubleValue),
             Option(r.getAs[java.lang.Double]("b")).fold(Double.NaN)(_.doubleValue),
-            r.getAs[Double]("s")))
-      }
+            r.getAs[Double]("silhouette")))
 
       // bit-pattern compare: doubleToLongBits so a null→NaN sentinel
       // compares equal to itself (tuple equality would fail on NaN)
@@ -937,31 +819,8 @@ object ScaleCurve {
           .localCheckpoint()
       }, None)
 
-      timed("silh_stats", () => finish {
-        val sLong = wn.select(col("list_id"), posexplode(col("vd")))
-          .select(col("list_id"), col("pos"), col("col").cast("long").as("vk"))
-          .groupBy("list_id", "pos")
-          .agg(sum("vk").as("sk"), sum(col("vk") * col("vk")).as("qk"))
-          .localCheckpoint()
-        val cell = sLong.groupBy("list_id").agg(sum("qk").as("qj"))
-          .join(wn.groupBy("list_id").agg(count(lit(1)).as("nj")), Seq("list_id"))
-        val av = carve.select(col("aid"), posexplode(col("av")))
-          .select(col("aid"), col("pos"), col("col").cast("long").as("ak"))
-          .localCheckpoint()
-        val a2 = av.groupBy("aid").agg(sum(col("ak") * col("ak")).as("a2"))
-        av.join(broadcast(sLong), Seq("pos"))
-          .groupBy("aid", "list_id").agg(sum(col("ak") * col("sk")).as("dot_s"))
-          .join(broadcast(cell), Seq("list_id"))
-          .join(broadcast(a2), Seq("aid"))
-          .join(broadcast(carve.select(col("aid"), col("own_list"))), Seq("aid"))
-          .withColumn("sd2",
-            col("nj") * col("a2") - lit(2L) * col("dot_s") + col("qj"))
-          .withColumn("md", when(col("list_id") === col("own_list"),
-              when(col("nj") > 1,
-                col("sd2").cast("double") / (col("nj") - 1).cast("double")))
-            .otherwise(col("sd2").cast("double") / col("nj").cast("double")))
-          .localCheckpoint()
-      }, Some(carveForm))
+      timed("silh_stats", () => finish(Round13b.silhStats(wn, carve, decimalAcc = false)),
+        Some(carveForm))
     }
   }
 
@@ -990,7 +849,7 @@ object ScaleCurve {
     // band agreement runs far above the S-curve; measured below.
     val families: Seq[(String, Column => Column)] = Seq(
       "legacy" -> (i => lit(4) * i + 3),
-      "wrap" -> (i => lit(48271) * (i + 1) % P),
+      "wrap" -> (i => lit(48271) * (i + 1) % LlmExt2.P),
       "pow" -> (i => element_at(
         array(graft.ops.LlmExt2.mhMults.map(lit): _*), (i + 1).cast("int"))))
     println(f"${"corpus"}%-6s ${"family"}%-7s ${"n_docs"}%8s ${"sec"}%7s ${"cand_rows"}%13s ${"block_pairs"}%13s ${"cand_pct"}%9s")
@@ -1008,7 +867,7 @@ object ScaleCurve {
         val t0 = System.nanoTime()
         val mh = tokIds.withColumn("mh", transform(sequence(lit(0), lit(15)),
           i => array_min(transform(col("ids"),
-            id => (mult(i) * id + (lit(7) * i + 5)) % P))))
+            id => (mult(i) * id + (lit(7) * i + 5)) % LlmExt2.P))))
         // exact = the collision-FREE band key (two radix-P longs per
         // band: lo = mh1 + P·mh2, hi = mh3 + P·mh4, each < P² < 2^63)
         // vs the legacy lossy 131-chain — isolates how much candidate
@@ -1018,9 +877,9 @@ object ScaleCurve {
               sequence(lit(0), lit(3)),
               b => struct(
                 (element_at(col("mh"), b * 4 + 1)
-                  + element_at(col("mh"), b * 4 + 2) * P).as("lo"),
+                  + element_at(col("mh"), b * 4 + 2) * LlmExt2.P).as("lo"),
                 (element_at(col("mh"), b * 4 + 3)
-                  + element_at(col("mh"), b * 4 + 4) * P).as("hi")))))
+                  + element_at(col("mh"), b * 4 + 4) * LlmExt2.P).as("hi")))))
             .select(col("lang"), col("pos").as("band"),
               col("col.lo").as("sig"), col("col.hi").as("sig2"))
           else mh.select(col("lang"),
@@ -1045,10 +904,10 @@ object ScaleCurve {
     val all: Seq[(String, DataFrame => DataFrame)] = Seq(
       "minhash_lsh" -> ((d: DataFrame) =>
         graft.ops.LlmExt2.minhashLshPairs(d, threshold = 0.6)),
-      "simhash_blocked" -> simhashBlocked _,
+      "simhash_blocked" -> ((d: DataFrame) => LlmExt2.simhashPairs(d, 48)),
       "incremental" -> incremental _,
       "prefix_filter" -> prefixFilter _,
-      "snm_w8" -> ((d: DataFrame) => snmAt(d, 8)),
+      "snm_w8" -> ((d: DataFrame) => Round9b.snmPairs(d, 8)),
       "snm_derived" -> snmDerived _)
     val pipelines = pick.fold(all)(want => all.filter(p => want.contains(p._1)))
     println(f"${"pipeline"}%-16s ${"n_docs"}%8s ${"sec"}%8s ${"pairs"}%10s")

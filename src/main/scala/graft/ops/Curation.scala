@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QDef, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,6 +29,33 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
   import Tables._
+
+  /** q75's dedup core over (doc_id, lang, ids): the delta batch
+    * (doc_id % 5 == 0) probes the history's (lang, band, sig) minhash
+    * band signatures, and each colliding pair is exact-Jaccard verified
+    * on the id arrays. Returns (new_id, hist_id, jaccard), jaccard ≥ 0.6.
+    * Band signatures come from LlmExt2.explodeBandSigs: staged per-row
+    * projections, no per-band exchange — identical values to the
+    * oracle's groupBy form. */
+  private[graft] def deltaMatches(tokIds: DataFrame): DataFrame = {
+    val sig = LlmExt2.explodeBandSigs(tokIds).localCheckpoint()
+    val hist = sig.where(col("doc_id") % 5 =!= 0)
+    val delta = sig.where(col("doc_id") % 5 === 0)
+    val cand = delta.as("n")
+      .join(hist.as("h"), col("n.band") === col("h.band") && col("n.sig") === col("h.sig") &&
+        col("n.lang") === col("h.lang"))
+      .select(col("n.doc_id").as("new_id"), col("h.doc_id").as("hist_id"))
+      .distinct()
+    val idArrs = tokIds.select(col("doc_id"), col("ids"))
+    cand
+      .join(idArrs.select(col("doc_id").as("new_id"), col("ids").as("ids_n")), "new_id")
+      .join(idArrs.select(col("doc_id").as("hist_id"), col("ids").as("ids_h")), "hist_id")
+      .withColumn("n_common", size(array_intersect(col("ids_n"), col("ids_h"))).cast("long"))
+      .withColumn("jaccard",
+        col("n_common") / (size(col("ids_n")) + size(col("ids_h")) - col("n_common")))
+      .where(col("jaccard") >= 0.6)
+      .select("new_id", "hist_id", "jaccard")
+  }
 
   /** Portable deterministic bucket in [0, 100): first 15 hex chars of
     * md5(key) as an int. Identical in DuckDB via
@@ -285,26 +313,7 @@ object Curation {
           .groupBy("doc_id", "lang")
           .agg(collect_list(col("tid").cast("long")).as("ids"))
           .localCheckpoint()
-        // band signatures via LlmExt2.explodeBandSigs: staged per-row
-        // projections, no per-band exchange — identical values to the
-        // oracle's groupBy form.
-        val sig = LlmExt2.explodeBandSigs(tokIds).localCheckpoint()
-        val hist = sig.where(col("doc_id") % 5 =!= 0)
-        val delta = sig.where(col("doc_id") % 5 === 0)
-        val cand = delta.as("n")
-          .join(hist.as("h"), col("n.band") === col("h.band") && col("n.sig") === col("h.sig") &&
-            col("n.lang") === col("h.lang"))
-          .select(col("n.doc_id").as("new_id"), col("h.doc_id").as("hist_id"))
-          .distinct()
-        val idArrs = tokIds.select(col("doc_id"), col("ids"))
-        val verified = cand
-          .join(idArrs.select(col("doc_id").as("new_id"), col("ids").as("ids_n")), "new_id")
-          .join(idArrs.select(col("doc_id").as("hist_id"), col("ids").as("ids_h")), "hist_id")
-          .withColumn("n_common", size(array_intersect(col("ids_n"), col("ids_h"))).cast("long"))
-          .withColumn("jaccard",
-            col("n_common") / (size(col("ids_n")) + size(col("ids_h")) - col("n_common")))
-          .where(col("jaccard") >= 0.6)
-        verified
+        deltaMatches(tokIds)
           .withColumn("rk", row_number().over(
             Window.partitionBy("new_id").orderBy("hist_id")))
           .where(col("rk") === 1)

@@ -4,7 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Extended training-data-pipeline operators beyond SURVEY.md's original
   * q39–q45: the SCALE PATHS for dedup and similarity search, plus deeper
@@ -65,7 +65,7 @@ object LlmExt2 {
       .select(col("tok"), (col("__off") + col("__r")).cast("int").as("tid"))
   }
 
-  private val P = 104729L // prime modulus shared by the hash families
+  private[graft] val P = 104729L // prime modulus shared by the hash families
 
   /** The 16 minhash multipliers: m_i = 69621^(i+1) mod P (Lehmer-style
     * multiplicative chain — 69621 is a classic full-period MINSTD-family
@@ -135,45 +135,66 @@ object LlmExt2 {
       + element_at(mh, b * 4 + 3) * 17161L
       + element_at(mh, b * 4 + 4) * 2248091L)
 
-  /** (doc_id, lang, ids) → one (doc_id, lang, band, sig) row per band, as
-    * staged per-row projections (no 16-rows-per-doc exchange — the
-    * groupBy-sum form this replaced — and no 16× re-evaluation — the
-    * single-expression form this replaced). Shared by q46, q75 and
-    * minhashLshPairs. */
-  /** 16-bit SimHash fingerprints (doc_id, lang, simhash) over whatever doc
-    * set the caller passes — q56's scale form, factored for reuse by q221's
-    * spanning-edge CC: pure-projection md5-hex token hash (portable), ALL
-    * 16 sign sums packed into one statically-unrolled aggregation (each j
-    * is a literal, so the per-j hash arithmetic constant-folds at plan
-    * time). Checkpointed: every consumer self-joins the fingerprints. */
-  private[graft] def simhash16(docs: DataFrame): DataFrame = {
+  /** The distinct (doc_a, doc_b, lang, hamming) pairs of `docs` within
+    * hamming <= 3 of each other's `bits`-wide SimHash — q56's scale form,
+    * also q221/q224's spanning edges (16 bits, the oracle-tied width) and
+    * ScaleCurve's at-scale row (48 bits: width is the SimHash resolution
+    * knob and must grow with corpus similarity mass).
+    *  - Fingerprints: pure-projection md5-hex token hash (portable), ALL
+    *    `bits` sign sums packed into one statically-unrolled aggregation
+    *    (each j is a literal, so the per-j hash arithmetic constant-folds
+    *    at plan time). Checkpointed: the pigeonhole join reads them twice.
+    *  - Candidates: the four (bits/4)-bit pigeonhole pieces (any pair
+    *    within hamming <= 3 agrees on at least one) in one (lang,
+    *    piece_idx, piece) equi-join. The 32-way spread of the probe side:
+    *    the piece table is byte-small (AQE broadcasts the build side and
+    *    coalesces upstream shuffles to ~1 partition), so without it the
+    *    collision-heavy candidate expansion and hamming filter run in one
+    *    task (q97 lesson).
+    *  - Hamming is a pure function of the pair, so filtering BEFORE the
+    *    distinct is value-identical and keeps the distinct's shuffle to
+    *    the survivors instead of the full candidate multiset. */
+  private[graft] def simhashPairs(docs: DataFrame, bits: Int): DataFrame = {
     val tf = docs
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
       .groupBy("doc_id", "lang", "tok")
       .agg(count(lit(1)).as("cnt"))
       .withColumn("tid",
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long") % P)
-    val signSums = (0 until 16).map { j =>
+    val signSums = (0 until bits).map { j =>
       sum(col("cnt") *
         (lit(2) * (((col("tid") * (2 * j + 3) + (7 * j + 1)) % P) % 2) - 1)).as(s"s$j")
     }
-    tf.groupBy("doc_id", "lang")
+    val sims = tf.groupBy("doc_id", "lang")
       .agg(signSums.head, signSums.tail: _*)
       .select(col("doc_id"), col("lang"),
-        (0 until 16).map(j => when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L))
-          .reduce(_ + _).as("simhash"))
+        SignHash.fold((0 until bits).map(j => col(s"s$j"))).as("simhash"))
       .localCheckpoint()
-  }
-
-  /** The four 4-bit pigeonhole pieces of a 16-bit fingerprint: any pair
-    * within hamming <= 3 must agree on at least one piece. */
-  private[graft] def pieces4(sims: DataFrame): DataFrame =
-    sims.select(
+    val pw = bits / 4
+    val pieces = sims.select(
       col("doc_id"), col("lang"), col("simhash"),
       posexplode(transform(sequence(lit(0), lit(3)),
-        p => floor(col("simhash") / pow(lit(2.0), p.cast("double") * 4)).cast("long") % 16))
+        p => floor(col("simhash") / pow(lit(2.0), p.cast("double") * pw)).cast("long") % (1 << pw)))
     ).withColumnsRenamed(Map("pos" -> "piece_idx", "col" -> "piece"))
+    pieces.repartition(32).as("x")
+      .join(pieces.as("y"),
+        col("x.lang") === col("y.lang") &&
+          col("x.piece_idx") === col("y.piece_idx") &&
+          col("x.piece") === col("y.piece") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(
+        col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        col("x.lang").as("lang"),
+        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
+      .where(col("hamming") <= 3)
+      .distinct()
+  }
 
+  /** (doc_id, lang, ids) → one (doc_id, lang, band, sig) row per band, as
+    * staged per-row projections (no 16-rows-per-doc exchange — the
+    * groupBy-sum form this replaced — and no 16× re-evaluation — the
+    * single-expression form this replaced). Shared by q46, q75 and
+    * minhashLshPairs. */
   private[graft] def explodeBandSigs(tokIds: DataFrame): DataFrame =
     tokIds
       .withColumn("__mh", minhashArr(col("ids")))
@@ -478,37 +499,11 @@ object LlmExt2 {
     // Sign-bit quality is unchanged: any fixed pseudo-random tid family
     // works, and both engines compute the identical md5-derived tid.
     "q56_simhash_blocked" -> QDef(
-      (s, d) => {
-        val sims = simhash16(documents(s, d)
-          .where(col("doc_id") % 2 === 0)) // sampled blocking, like q40/q46
-        val pieces = pieces4(sims)
-        // 32-way spread of the probe side: the piece table is byte-small
-        // (AQE broadcasts the build side and coalesces upstream shuffles
-        // to ~1 partition), so without it the collision-heavy candidate
-        // expansion and hamming filter run in one task (q97 lesson).
-        val cand = pieces.repartition(32).as("x")
-          .join(pieces.as("y"),
-            col("x.lang") === col("y.lang") &&
-              col("x.piece_idx") === col("y.piece_idx") &&
-              col("x.piece") === col("y.piece") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(
-            col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-            col("x.lang").as("lang"),
-            col("x.simhash").as("sh_a"), col("y.simhash").as("sh_b"))
-        // hamming is a pure function of (sh_a, sh_b), so filtering BEFORE
-        // the pair-dedup distinct() is value-identical and keeps the
-        // distinct's shuffle to the ≤3-hamming survivors instead of the
-        // full candidate multiset (the dominant cost on a collapsed-vocab
-        // corpus where pieces collide heavily).
-        cand
-          .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-          .where(col("hamming") <= 3)
-          .select("doc_a", "doc_b", "lang", "hamming")
-          .distinct()
+      (s, d) =>
+        simhashPairs(documents(s, d)
+            .where(col("doc_id") % 2 === 0), 16) // sampled blocking, like q40/q46
           .orderBy("hamming", "doc_a", "doc_b")
-          .limit(100)
-      },
+          .limit(100),
       s"""WITH tf AS (SELECT doc_id, lang, tok, COUNT(*) AS cnt FROM
          |  (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents
          |   WHERE doc_id % 2 = 0) t
@@ -702,14 +697,9 @@ object LlmExt2 {
     // ((j·64+k)·2654435761 mod 97) − 48, identical arithmetic both engines.
     "q52_ann_lsh_bucketed" -> QDef(
       (s, d) => {
-        def hyper(j: Int): Column =
-          transform(sequence(lit(0), lit(63)),
-            k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
-        def bucketOf(e: Column): Column =
-          (0 until 3).map(j => when(DotProduct.dot(e, hyper(j)) > 0, 1L << j).otherwise(0L)).reduce(_ + _)
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          .withColumn("bucket", bucketOf(col("e")))
+          .withColumn("bucket", SignHash.bucket(col("e"), 3))
           .withColumn("n2", DotProduct.norm2(col("e")))
         val q = emb.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("bucket"), col("n2").as("qn"))

@@ -4,7 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Round-11 batch 1: the two recall-bearing ANN compositions the round-10
   * measured curves (SCALE.md §11, ann regime) showed were missing.
@@ -266,17 +266,12 @@ object Round11 {
       (s, d) => {
         val L = 4
         val b = 3
-        def hyper(j: Int): Column =
-          transform(sequence(lit(0), lit(63)),
-            k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
-        def bucketOf(e: Column, t: Int): Column =
-          (0 until b).map(jb =>
-            when(DotProduct.dot(e, hyper(t * b + jb)) > 0, 1L << jb).otherwise(0L)).reduce(_ + _)
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
           .withColumn("n2", DotProduct.norm2(col("e")))
         val tabs = emb.select(col("vec_id"), col("e"), col("n2"),
-            posexplode(array((0 until L).map(t => bucketOf(col("e"), t)): _*)))
+            posexplode(array((0 until L).map(t =>
+              SignHash.bucket(col("e"), b, first = t * b)): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
         val qt = tabs.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("t"), col("bucket"))

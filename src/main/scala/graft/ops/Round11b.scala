@@ -24,26 +24,11 @@ object Round11b {
   import Tables._
 
   /** The hamming≤3 simhash spanning-edge stage, shared by q221 (CC input)
-    * and q224 (contrastive positives): q56's 16-bit fingerprints, 4-piece
-    * pigeonhole candidates, 32-way probe spread (the q56/q97 lesson: the
-    * piece table is byte-small, so AQE would coalesce the collision-heavy
-    * expansion onto ~1 task without it). */
+    * and q224 (contrastive positives): q56's 16-bit pigeonhole pairs over
+    * the whole corpus. */
   private[ops] def spanningPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val sims = LlmExt2.simhash16(documents(s, d))
-    val pieces = LlmExt2.pieces4(sims)
-    pieces.repartition(32).as("x")
-      .join(pieces.as("y"),
-        col("x.lang") === col("y.lang") &&
-          col("x.piece_idx") === col("y.piece_idx") &&
-          col("x.piece") === col("y.piece") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .where(col("hamming") <= 3)
-      .select("doc_a", "doc_b")
-      .distinct()
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    LlmExt2.simhashPairs(documents(s, d), 16).select("doc_a", "doc_b")
 
   /** The q221 oracle's candidate-pair chain (portable md5-hex simhash +
     * pigeonhole join), shared with q224's oracle. */

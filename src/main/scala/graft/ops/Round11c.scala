@@ -1,10 +1,10 @@
 package graft.ops
 
 import graft.{QDef, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Round-11 batch 3: two missing operator families.
   *
@@ -25,6 +25,25 @@ import graft.plans.DotProduct
   */
 object Round11c {
   import Tables._
+
+  /** q225's edge build over distinct (user_id, hb, event_type) activity:
+    * distinct (u, v) user pairs, u < v, sharing an (hb, event_type) cell,
+    * with each cell capped at its 16 lowest-ranked members (rank = the
+    * portable md5 of (user, cell), user_id tie-break). Capped, the edge
+    * table is ≤ C(16,2)·cells — linear in the cell count. */
+  private[graft] def cappedEdges(ev: DataFrame): DataFrame = {
+    val capped = ev.withColumn("rk", row_number().over(
+        Window.partitionBy("hb", "event_type").orderBy(
+          md5(concat_ws("#", col("user_id"), col("hb"), col("event_type"))),
+          col("user_id"))))
+      .where(col("rk") <= 16).drop("rk")
+    capped.as("a").join(capped.as("b"),
+        col("a.hb") === col("b.hb") &&
+          col("a.event_type") === col("b.event_type") &&
+          col("a.user_id") < col("b.user_id"))
+      .select(col("a.user_id").as("u"), col("b.user_id").as("v"))
+      .distinct()
+  }
 
   val defs: Vector[(String, QDef)] = Vector(
 
@@ -198,20 +217,9 @@ object Round11c {
     "q225_kcore" -> QDef(
       (s, d) => {
         val k = 3
-        val evAll = events(s, d).select(col("user_id"),
+        val pairs = cappedEdges(events(s, d).select(col("user_id"),
             expr("unix_micros(ts) DIV 3600000000").as("hb"), col("event_type"))
-          .distinct()
-        val ev = evAll.withColumn("rk", row_number().over(
-            Window.partitionBy("hb", "event_type").orderBy(
-              md5(concat_ws("#", col("user_id"), col("hb"), col("event_type"))),
-              col("user_id"))))
-          .where(col("rk") <= 16).drop("rk")
-        val pairs = ev.as("a").join(ev.as("b"),
-            col("a.hb") === col("b.hb") &&
-              col("a.event_type") === col("b.event_type") &&
-              col("a.user_id") < col("b.user_id"))
-          .select(col("a.user_id").as("u"), col("b.user_id").as("v"))
-          .distinct()
+          .distinct())
         var e = pairs.select(col("u").as("x"), col("v").as("y"))
           .unionAll(pairs.select(col("v").as("x"), col("u").as("y")))
           .localCheckpoint() // feeds all 3 peeling rounds
@@ -275,16 +283,12 @@ object Round11c {
     // break on the lowest hyperplane index.
     "q226_lsh_multiprobe" -> QDef(
       (s, d) => {
-        def hyper(j: Int): Column =
-          transform(sequence(lit(0), lit(63)),
-            k => ((lit(j.toLong) * 64 + k) * lit(2654435761L) % 97 - 48).cast("double"))
-        val dots = (0 until 3).map(j => DotProduct.dot(col("e"), hyper(j)))
+        val dots = (0 until 3).map(j => DotProduct.dot(col("e"), SignHash.hyperplane(j)))
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          .withColumn("bucket",
-            (0 until 3).map(j => when(dots(j) > 0, 1L << j).otherwise(0L)).reduce(_ + _))
+          .withColumn("bucket", SignHash.fold(dots))
           .withColumn("n2", DotProduct.norm2(col("e")))
-        val m = (0 until 3).map(j => abs(DotProduct.dot(col("e"), hyper(j))))
+        val m = dots.map(abs)
         val jmin = when(m(0) <= m(1) && m(0) <= m(2), 0)
           .when(m(1) <= m(2), 1).otherwise(2)
         val pw = when(jmin === 0, 1L).when(jmin === 1, 2L).otherwise(4L)

@@ -1,10 +1,9 @@
 package graft.ops
 
 import graft.{QDef, Tables}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Round-12 batch: the three ANN/ER compositions the round-11 verdict named
   * as declared-contract gaps — each one existed only as a ScaleCurve
@@ -92,17 +91,12 @@ object Round12 {
         val L = 4
         val b = 3
         val prime = Seq(2654435761L, 2246822519L, 3266489917L, 668265263L)
-        def hyper(t: Int, j: Int): Column =
-          transform(sequence(lit(0), lit(63)),
-            k => ((lit(j.toLong) * 64 + k) * lit(prime(t)) % 97 - 48).cast("double"))
-        def bucketOf(e: Column, t: Int): Column =
-          (0 until b).map(jb =>
-            when(DotProduct.dot(e, hyper(t, jb)) > 0, 1L << jb).otherwise(0L)).reduce(_ + _)
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
           .withColumn("n2", DotProduct.norm2(col("e")))
         val tabs = emb.select(col("vec_id"), col("e"), col("n2"),
-            posexplode(array((0 until L).map(t => bucketOf(col("e"), t)): _*)))
+            posexplode(array((0 until L).map(t =>
+              SignHash.bucket(col("e"), b, prime = prime(t))): _*)))
           .withColumnsRenamed(Map("pos" -> "t", "col" -> "bucket"))
         val qt = tabs.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("t"), col("bucket"))

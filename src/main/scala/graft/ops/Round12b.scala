@@ -1,10 +1,10 @@
 package graft.ops
 
 import graft.{QDef, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Round-12 batch 2: three embedding-pipeline operators a 100 TB curation
   * stack runs daily, each previously absent from the declared inventory.
@@ -33,6 +33,28 @@ import graft.plans.DotProduct
 object Round12b {
   import Tables._
 
+  /** q231's pairwise stage: every (list_id, id_a, id_b, cos_sim) pair of
+    * an (vec_id, list_id, v) assignment with id_a < id_b in the same cell,
+    * unfiltered. An EQUI-join on list_id — never corpus-level all-pairs.
+    * Checkpointed: the assignment feeds BOTH sides of the self-join
+    * (un-checkpointed, each side would replay the argmin lineage — the
+    * dupClusters discipline). */
+  private[graft] def cellPairs(asg: DataFrame): DataFrame = {
+    val withN = asg
+      .select(col("vec_id"), col("list_id"),
+        col("v").cast("array<double>").as("vd"))
+      .withColumn("n2", DotProduct.norm2(col("vd")))
+      .localCheckpoint()
+    val a = withN.select(col("vec_id").as("id_a"), col("list_id"),
+      col("vd").as("va"), col("n2").as("na"))
+    val b = withN.select(col("vec_id").as("id_b"), col("list_id"),
+      col("vd").as("vb"), col("n2").as("nb"))
+    a.join(b, Seq("list_id"))
+      .where(col("id_a") < col("id_b"))
+      .withColumn("cos_sim", DotProduct.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
+      .select(col("list_id"), col("id_a"), col("id_b"), col("cos_sim"))
+  }
+
   val defs: Vector[(String, QDef)] = Vector(
 
     // --------------------------------------------------------------- q231
@@ -56,23 +78,7 @@ object Round12b {
             expr("transform(v, x -> x - x % 1000)").as("v"))
         val all = qv.unionAll(twins)
         val (asg, _) = Lloyd.coarse(all, 8)
-        // checkpointed: the assignment feeds BOTH sides of the pairwise
-        // self-join (un-checkpointed, each side would replay the argmin
-        // lineage — the dupClusters discipline)
-        val withN = asg
-          .select(col("vec_id"), col("list_id"),
-            col("v").cast("array<double>").as("vd"))
-          .withColumn("n2", DotProduct.norm2(col("vd")))
-          .localCheckpoint()
-        val a = withN.select(col("vec_id").as("id_a"), col("list_id"),
-          col("vd").as("va"), col("n2").as("na"))
-        val b = withN.select(col("vec_id").as("id_b"), col("list_id"),
-          col("vd").as("vb"), col("n2").as("nb"))
-        val pairs = a.join(b, Seq("list_id"))
-          .where(col("id_a") < col("id_b"))
-          .withColumn("cos_sim", DotProduct.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")))
-          .where(col("cos_sim") > 0.8)
-          .select(col("list_id"), col("id_a"), col("id_b"), col("cos_sim"))
+        val pairs = cellPairs(asg).where(col("cos_sim") > 0.8)
         val keeper = pairs.groupBy(col("id_b").as("removed"))
           .agg(min(col("id_a")).as("keeper"))
         keeper.join(
@@ -145,10 +151,9 @@ object Round12b {
     "q232_hamming_ann" -> QDef(
       (s, d) => {
         val emb = embeddings(s, d)
-        def word(lo: Int): Column = expr((1 to 32).map(i =>
-          s"(CASE WHEN element_at(embedding, ${lo + i}) > 0 THEN ${1L << (i - 1)}L ELSE 0L END)")
-          .mkString(" + "))
-        val codes = emb.select(col("vec_id"), word(0).as("w0"), word(32).as("w1"))
+        val codes = emb.select(col("vec_id"),
+            SignHash.word(col("embedding"), 0).as("w0"),
+            SignHash.word(col("embedding"), 32).as("w1"))
           .localCheckpoint() // two consumers: corpus side + query carve
         val q = codes.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("w0").as("qw0"), col("w1").as("qw1"))

@@ -4,7 +4,7 @@ import graft.{Det, QDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Round-12 batch 3: four curation/serving operators a 100 TB training-data
   * platform runs that were absent from the declared inventory.
@@ -460,10 +460,9 @@ object Round12c {
     "q240_ndcg_audit" -> QDef(
       (s, d) => {
         val emb = embeddings(s, d)
-        def word(lo: Int): Column = expr((1 to 32).map(i =>
-          s"(CASE WHEN element_at(embedding, ${lo + i}) > 0 THEN ${1L << (i - 1)}L ELSE 0L END)")
-          .mkString(" + "))
-        val codes = emb.select(col("vec_id"), word(0).as("w0"), word(32).as("w1"))
+        val codes = emb.select(col("vec_id"),
+            SignHash.word(col("embedding"), 0).as("w0"),
+            SignHash.word(col("embedding"), 32).as("w1"))
           .localCheckpoint() // corpus side + query carve
         val qc = codes.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("w0").as("qw0"), col("w1").as("qw1"))

@@ -4,7 +4,7 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.DotProduct
+import graft.plans.{DotProduct, SignHash}
 
 /** Round-13 batch 2: the two clustering/serving TUNING audits still absent
   * from the inventory — both are the numbers a platform derives before
@@ -24,19 +24,11 @@ import graft.plans.DotProduct
 object Round13b {
   import Tables._
 
-  /** q247's whole plan, parameterized by the ACCUMULATOR domain:
-    * `decimalAcc = false` is the declared int64 form (exact through
-    * ~1.4e5 members/cell — nj·a2 ≤ nj·64·(1e6)² must stay < 2^63 — with
-    * a raise_error guard at that bound, round-15 ADVICE); `decimalAcc =
-    * true` is the documented past-the-bound remedy with (Σv, Σ‖v‖²,
-    * dot_s) in DECIMAL(38,0) and sd2 cast back to long for the identical
-    * double division. Round15Spec locks the two forms bit-equal at gate
-    * scale (they overlap everywhere below the bound), so the remedy is
-    * proven, not named. */
+  /** q247's whole plan: the shared q219 coarse stage, a 21-vector carve,
+    * [[silhStats]] in the `decimalAcc` accumulator domain, then the
+    * [[silhouette]] finish. */
   private[graft] def cellSilhouette(s: org.apache.spark.sql.SparkSession,
       d: String, decimalAcc: Boolean = false): DataFrame = {
-    val acc: Column => Column =
-      if (decimalAcc) c => c.cast("decimal(38,0)") else identity
     val qv = Round11.quantized(embeddings(s, d))
     val (asg, _) = Lloyd.coarse(qv, 8)
     val wn = asg
@@ -48,6 +40,25 @@ object Round13b {
         col("vd").as("av"))
       .limit(21)
       .localCheckpoint() // exploded dot leg + the final spine
+    silhouette(carve, silhStats(wn, carve, decimalAcc))
+  }
+
+  /** q247's sufficient-statistics distances: one (aid, own_list, list_id,
+    * md) row per (carve vector, cell), md = the mean grid d² from the carve
+    * vector `av` to the cell's members (own cell without itself; null for
+    * a singleton own cell), over members `wn` (vec_id, list_id, vd) and a
+    * carve (aid, own_list, av). `decimalAcc = false` is the declared int64
+    * form (exact through ~1.4e5 members/cell — nj·a2 ≤ nj·64·(1e6)² must
+    * stay < 2^63 — with a raise_error guard at that bound, round-15
+    * ADVICE); `decimalAcc = true` is the documented past-the-bound remedy
+    * with (Σv, Σ‖v‖², dot_s) in DECIMAL(38,0) and sd2 cast back to long
+    * for the identical double division. Round15Spec locks the two forms
+    * bit-equal at gate scale (they overlap everywhere below the bound), so
+    * the remedy is proven, not named. */
+  private[graft] def silhStats(wn: DataFrame, carve: DataFrame,
+      decimalAcc: Boolean): DataFrame = {
+    val acc: Column => Column =
+      if (decimalAcc) c => c.cast("decimal(38,0)") else identity
     // one N-pass: per-(cell, dim) Σv and Σv², exact longs (or DECIMAL)
     val sLong = wn.select(col("list_id"), posexplode(col("vd")))
       .select(col("list_id"), col("pos"), col("col").cast("long").as("vk"))
@@ -69,7 +80,7 @@ object Round13b {
             "use the DECIMAL accumulator leg (cellSilhouette(decimalAcc = " +
             "true), bit-equal below the bound per Round15Spec)")).cast("long"))
         .otherwise(sd2Raw)
-    val stats = av.join(broadcast(sLong), Seq("pos"))
+    av.join(broadcast(sLong), Seq("pos"))
       .groupBy("aid", "list_id").agg(sum(acc(col("ak")) * col("sk")).as("dot_s"))
       .join(broadcast(cell), Seq("list_id"))
       .join(broadcast(a2), Seq("aid"))
@@ -80,6 +91,13 @@ object Round13b {
             col("sd2").cast("double") / (col("nj") - 1).cast("double")))
         .otherwise(col("sd2").cast("double") / col("nj").cast("double")))
       .localCheckpoint() // own slice + other-cells min
+  }
+
+  /** The silhouette finish over any (aid, own_list, list_id, md) stats
+    * table: a = the own cell's md, b = the least other cell's md,
+    * s = (b − a) / max(a, b), 0 when either is missing. One row per carve
+    * vector: (vec_id, own_list, a, b, silhouette), by vec_id. */
+  private[graft] def silhouette(carve: DataFrame, stats: DataFrame): DataFrame = {
     val own = stats.where(col("list_id") === col("own_list") && col("md").isNotNull)
       .select(col("aid").as("vec_id"), col("md").as("a"))
     val oth = stats.where(col("list_id") =!= col("own_list"))
@@ -264,10 +282,9 @@ object Round13b {
         import s.implicits._
         val widths = Seq(10, 25, 50, 100).toDF("width")
         val emb = embeddings(s, d)
-        def word(lo: Int): Column = expr((1 to 32).map(i =>
-          s"(CASE WHEN element_at(embedding, ${lo + i}) > 0 THEN ${1L << (i - 1)}L ELSE 0L END)")
-          .mkString(" + "))
-        val codes = emb.select(col("vec_id"), word(0).as("w0"), word(32).as("w1"))
+        val codes = emb.select(col("vec_id"),
+            SignHash.word(col("embedding"), 0).as("w0"),
+            SignHash.word(col("embedding"), 32).as("w1"))
           .localCheckpoint() // corpus side + query carve
         val qc = codes.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("w0").as("qw0"), col("w1").as("qw1"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Det, QDef, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -25,6 +26,49 @@ object Round9b {
   import Tables._
 
   private val P = 104729L // house prime (q46/q56/q63 hash family)
+
+  /** q137's sorted-neighborhood core at block prefix `width` over
+    * (doc_id, lang, text): each doc is compared with its next two
+    * neighbours in (text, doc_id) order within its (lang, prefix) block;
+    * returns the (lang, doc_a, doc_b, jaccard) pairs with token-Jaccard
+    * ≥ 0.6. The declared query passes the oracle-tied 8. */
+  private[graft] def snmPairs(docs: DataFrame, width: Int): DataFrame = {
+    val t = docs.select(
+      col("doc_id"), col("lang"), col("text"),
+      substring(col("text"), 1, width).as("blk"),
+      array_distinct(split(col("text"), " ")).as("toks"))
+    val win = Window.partitionBy("lang", "blk").orderBy("text", "doc_id")
+    val w = t.select(col("lang"), col("doc_id"), col("toks"),
+      lead("doc_id", 1).over(win).as("id1"), lead("toks", 1).over(win).as("tk1"),
+      lead("doc_id", 2).over(win).as("id2"), lead("toks", 2).over(win).as("tk2"))
+    val p = w.where(col("id1").isNotNull)
+      .select(col("lang"), col("doc_id").as("doc_a"), col("id1").as("doc_b"),
+        col("toks").as("ta"), col("tk1").as("tb"))
+      .unionAll(w.where(col("id2").isNotNull)
+        .select(col("lang"), col("doc_id").as("doc_a"), col("id2").as("doc_b"),
+          col("toks").as("ta"), col("tk2").as("tb")))
+    p.select(col("lang"), col("doc_a"), col("doc_b"),
+        size(array_intersect(col("ta"), col("tb"))).cast("long").as("nc"),
+        size(col("ta")).cast("long").as("sza"),
+        size(col("tb")).cast("long").as("szb"))
+      .withColumn("jaccard", col("nc") / (col("sza") + col("szb") - col("nc")))
+      .where(col("jaccard") >= 0.6)
+      .select("lang", "doc_a", "doc_b", "jaccard")
+  }
+
+  /** The production block width for [[snmPairs]] (8 is the declared
+    * query's oracle-tied test-scale pin): widen the prefix in steps of 4
+    * chars until the p99 block holds ≤ 64 docs. Each probe costs one
+    * count rollup and a 1-row percentile, O(scan), a handful of probes;
+    * the bounded block population keeps the per-block sort (SNM's only
+    * super-linear term) a constant-size task at any corpus size. */
+  private[graft] def snmWidth(docs: DataFrame): Int =
+    Iterator.iterate(8)(_ + 4).take(15).find { w =>
+      docs.groupBy(col("lang"), substring(col("text"), 1, w))
+        .count()
+        .agg(expr("percentile_approx(count, 0.99, 10000)"))
+        .head().getLong(0) <= 64L
+    }.getOrElse(64)
 
   val defs: Vector[(String, QDef)] = Vector(
 
@@ -200,35 +244,12 @@ object Round9b {
     // The prefix LENGTH 8 is a TEST-SCALE CONSTANT (the q151 convention):
     // on this 31-token corpus it yields a handful of blocks whose size
     // grows O(n) with volume. A production deployment derives block width
-    // from corpus size (widen the prefix until the p99 block fits a
-    // task's memory — each widening multiplies block count by ~|alphabet|)
+    // from corpus size (snmWidth: widen the prefix until the p99 block fits
+    // a task's memory — each widening multiplies block count by ~|alphabet|)
     // and the DECLARED query pins 8 only so the DuckDB oracle replays
     // byte-identical blocks at every tested SF.
     "q137_sorted_neighborhood" -> QDef(
-      (s, d) => {
-        val t = documents(s, d).select(
-          col("doc_id"), col("lang"), col("text"),
-          substring(col("text"), 1, 8).as("blk"),
-          array_distinct(split(col("text"), " ")).as("toks"))
-        val win = Window.partitionBy("lang", "blk").orderBy("text", "doc_id")
-        val w = t.select(col("lang"), col("doc_id"), col("toks"),
-          lead("doc_id", 1).over(win).as("id1"), lead("toks", 1).over(win).as("tk1"),
-          lead("doc_id", 2).over(win).as("id2"), lead("toks", 2).over(win).as("tk2"))
-        val p = w.where(col("id1").isNotNull)
-          .select(col("lang"), col("doc_id").as("doc_a"), col("id1").as("doc_b"),
-            col("toks").as("ta"), col("tk1").as("tb"))
-          .unionAll(w.where(col("id2").isNotNull)
-            .select(col("lang"), col("doc_id").as("doc_a"), col("id2").as("doc_b"),
-              col("toks").as("ta"), col("tk2").as("tb")))
-        p.select(col("lang"), col("doc_a"), col("doc_b"),
-            size(array_intersect(col("ta"), col("tb"))).cast("long").as("nc"),
-            size(col("ta")).cast("long").as("sza"),
-            size(col("tb")).cast("long").as("szb"))
-          .withColumn("jaccard", col("nc") / (col("sza") + col("szb") - col("nc")))
-          .where(col("jaccard") >= 0.6)
-          .select("lang", "doc_a", "doc_b", "jaccard")
-          .orderBy("lang", "doc_a", "doc_b")
-      },
+      (s, d) => snmPairs(documents(s, d), 8).orderBy("lang", "doc_a", "doc_b"),
       """WITH t AS (SELECT doc_id, lang, text, substr(text, 1, 8) AS blk,
         |                  list_distinct(string_split(text, ' ')) AS toks FROM documents),
         |w AS (SELECT lang, doc_id, toks,

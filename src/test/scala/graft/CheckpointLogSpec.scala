@@ -59,7 +59,7 @@ class CheckpointLogSpec extends AnyFunSuite {
           ()
         }
       val q = if (stock) sink(df.writeStream).start() else StreamStart(df)(sink)
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable() finally StreamStart.stop(q)
     }
 
     def times(batch: Long): Int = delivered.count(_._1 == batch)
@@ -173,7 +173,7 @@ class CheckpointLogSpec extends AnyFunSuite {
       try for (i <- 0 until 3) {
         input.addData(streaming.Event(i, new java.sql.Timestamp(i * 60000L), i % 2, "click", 1.0, "{}"))
         q.processAllAvailable()
-      } finally q.stop()
+      } finally StreamStart.stop(q)
       val versions = (1L to q.lastProgress.batchId + 1).toSet
       val state = s"$ckpt/state/0"
       val partitions = names(state).filter(_.forall(_.isDigit))

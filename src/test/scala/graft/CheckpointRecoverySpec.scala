@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.streaming.StreamStart
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,7 +84,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       ev(5, 300, 9, "view") // pusher: watermark -> 04:50, finalizes hr0+hr1
     ))
     val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
+    try q1.processAllAvailable() finally StreamStart.stop(q1)
 
     val afterPhase1 = sink.collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
@@ -98,7 +99,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       ev(8, 1800, 9, "view") // flush: watermark -> 29:50, finalizes hr5
     ))
     val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    try q2.processAllAvailable() finally StreamStart.stop(q2)
 
     val finalRows = sink.collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toVector
@@ -110,7 +111,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // ---- phase 3: restart with NO new data is a no-op ------------------
     val q3 = startQuery()
-    try q3.processAllAvailable() finally q3.stop()
+    try q3.processAllAvailable() finally StreamStart.stop(q3)
     assert(sink.count() == finalRows.size.toLong, "idempotent restart added rows")
   }
 
@@ -134,7 +135,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       // phase 1: user 1's session is OPEN (events at 0 and 5), user 2's too
       addFile("a.parquet", Seq(evV(1, 0, 1, 1.0), evV(2, 5, 1, 2.0), evV(3, 3, 2, 5.0)), "in2")
       val q1 = startS12()
-      try q1.processAllAvailable() finally q1.stop()
+      try q1.processAllAvailable() finally StreamStart.stop(q1)
       // nothing may be committed yet — both sessions live ONLY in RocksDB state
       val out2 = root.resolve("out2").toString
       assert(spark.read.parquet(out2).isEmpty,
@@ -144,7 +145,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       // then a pusher closes everything
       addFile("b.parquet", Seq(evV(4, 10, 1, 3.0), evV(5, 300, 9, 0.0)), "in2")
       val q2 = startS12()
-      try q2.processAllAvailable() finally q2.stop()
+      try q2.processAllAvailable() finally StreamStart.stop(q2)
       val sessions = spark.read.parquet(out2).collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))))
         .toMap
@@ -180,7 +181,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     // ---- phase 1: batches 0-1, then a kill after batch 1's sink write --
     files.take(2).zipWithIndex.foreach { case (f, i) => addFile(s"f$i.parquet", f, "in3") }
     val q1 = startS14()
-    try q1.processAllAvailable() finally q1.stop()
+    try q1.processAllAvailable() finally StreamStart.stop(q1)
     assert(versions == Set("v=0", "v=1"))
     // dropping batch 1's commit marker is a crash between the sink's
     // overwrite of v=1 and the engine's commit: the restart must replay
@@ -191,7 +192,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     // ---- phase 2: restart with more files ------------------------------
     files.drop(2).zipWithIndex.foreach { case (f, i) => addFile(s"f${i + 2}.parquet", f, "in3") }
     val q2 = startS14()
-    try q2.processAllAvailable() finally q2.stop()
+    try q2.processAllAvailable() finally StreamStart.stop(q2)
 
     def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
     val oneShot = root.resolve("s14_oneshot").toString

@@ -12,8 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (drifted in rounds 2 and 4), and every main's session comes from
   * GraftSession (nine hand-built sessions had drifted apart in cores,
   * time zone, extensions and log level), every program stream starts
-  * through StreamStart, the k-means step lives only in ops/Lloyd, and s1's
-  * batch body runs its one job without per-batch closure cleaning.
+  * through StreamStart and every suite stops its streams through it, the
+  * k-means step lives only in ops/Lloyd, the sign-hash kernel only in
+  * plans/SignHash, and s1's batch body runs its one job without per-batch
+  * closure cleaning.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -197,6 +199,43 @@ class ContractSpec extends AnyFunSuite {
     } yield s"$p:${n + 1}: $what"
     assert(hits.isEmpty, s"${hits.size} k-means step(s) outside Lloyd:\n  ${hits.mkString("\n  ")}")
     assert(Files.exists(owner))
+  }
+
+  test("the sign-hash kernel lives only in plans/SignHash.scala") {
+    // six hyperplane families, seven sign folds and five 32-bit sign-word
+    // builders had been copied across the LSH/binary-code queries and
+    // ScaleCurve; the DuckDB oracle SQL strings stay independent replays
+    val owner = Paths.get("src/main/scala/graft/plans/SignHash.scala")
+    val kernel = Seq(
+      java.util.regex.Pattern.quote("2654435761L) % 97") -> "hyperplane literal",
+      raw"% 97 - 48\)\.cast" -> "hyperplane family",
+      raw"> 0, (lit\()?1L << " -> "sign-bucket fold",
+      raw"CASE WHEN element_at\(.*\) > 0 THEN .* ELSE 0L END" -> "sign-word builder")
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toVector
+      if p.toString.endsWith(".scala") && p != owner
+      (line, n) <- read(p.toString).split("\n").zipWithIndex
+      (re, what) <- kernel
+      if re.r.findFirstIn(line).isDefined
+    } yield s"$p:${n + 1}: $what"
+    assert(hits.isEmpty, s"${hits.size} sign-hash copies outside SignHash:\n  ${hits.mkString("\n  ")}")
+    assert(Files.exists(owner))
+  }
+
+  test("suites stop streaming queries only through StreamStart.stop") {
+    // StreamingQuery.stop() returns while the query's cancelled tasks still
+    // run, and a write task that finishes its row re-creates the output
+    // directory a test then deletes; StreamStart.stop waits them out
+    val hits = for {
+      p <- Files.walk(Paths.get("src/test/scala")).iterator().asScala.toVector
+      if p.toString.endsWith(".scala")
+      (line, n) <- read(p.toString).split("\n").zipWithIndex
+      if !line.trim.startsWith("//") && !line.trim.startsWith("*")
+      m <- raw"\b(\w+)\.stop\(\)".r.findAllMatchIn(line)
+      if !Set("spark", "session")(m.group(1))
+    } yield s"$p:${n + 1}: ${m.group(1)}.stop()"
+    assert(hits.isEmpty,
+      s"${hits.size} plain stop(s) of a streaming query:\n  ${hits.mkString("\n  ")}")
   }
 
   test("s1's batch body cleans no lambda and re-plans no batch") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import graft.streaming.StreamStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `graft-gen` DataSource V2 (sources/GraftGenSource): generator
@@ -69,7 +70,7 @@ class GenSourceSpec extends AnyFunSuite with TempDirs {
         s"expected >=4 admission-controlled micro-batches: ${batches.length}")
       assert(batches.forall(_.numInputRows <= 300),
         s"a batch exceeded rowsPerBatch: ${batches.map(_.numInputRows).toSeq}")
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     val _ = dir
   }
 
@@ -82,7 +83,7 @@ class GenSourceSpec extends AnyFunSuite with TempDirs {
         .writeStream.format("parquet")
         .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
         .start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable() finally StreamStart.stop(q)
     }
     run() // drains all 800 rows
     run() // restart: offset log says done; nothing may re-emit
@@ -105,7 +106,7 @@ class GenSourceSpec extends AnyFunSuite with TempDirs {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable() finally StreamStart.stop(q)
     }
     run(800) // batches 0-3: [0,250) [250,500) [500,750) [750,800)
     // a crash after batch 3's sink write but before the engine's commit
@@ -133,7 +134,7 @@ class GenSourceSpec extends AnyFunSuite with TempDirs {
       .writeStream.format("graft-stats")
       .option("key", "sspec").option("checkpointLocation", ckpt)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    try q.processAllAvailable() finally StreamStart.stop(q)
     val epochs = sources.StatsSinkRegistry.epochReports.collect {
       case ((k, e), r) if k == "sspec" => e -> r
     }.toMap

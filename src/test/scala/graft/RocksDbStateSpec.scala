@@ -64,7 +64,7 @@ class RocksDbStateSpec extends AnyFunSuite {
         assert(rows.contains((ts(0), "click", 2L)))
         assert(rows.contains((ts(60), "view", 1L)))
         assert(sawRocksDb(q), "no state operator reported RocksDB metrics")
-      } finally q.stop()
+      } finally StreamStart.stop(q)
     }
   }
 
@@ -84,7 +84,7 @@ class RocksDbStateSpec extends AnyFunSuite {
         assert(matches.map(m => (m.user_id, m.click_event_id, m.purchase_event_id)) ==
           Vector((1L, 1L, 3L)))
         assert(sawRocksDb(q), "no state operator reported RocksDB metrics")
-      } finally q.stop()
+      } finally StreamStart.stop(q)
     }
   }
 
@@ -113,7 +113,7 @@ class RocksDbStateSpec extends AnyFunSuite {
         assert(v(12L) == ((false, 11L)), s"live-claimed dup points at the live canonical: $v")
         assert(v(13L) == ((false, 3L)), s"warm state survives across batches: $v")
         assert(sawRocksDb(q), "no state operator reported RocksDB metrics")
-      } finally q.stop()
+      } finally StreamStart.stop(q)
     }
   }
 
@@ -150,7 +150,7 @@ class RocksDbStateSpec extends AnyFunSuite {
           TwsSession(1L, ts(115).getTime, ts(115).getTime, 1L, 7.0)),
           s"second session wrong: ${again.toVector}")
         assert(sawRocksDb(q), "no state operator reported RocksDB metrics")
-      } finally q.stop()
+      } finally StreamStart.stop(q)
     }
   }
 }

@@ -77,16 +77,8 @@ class Round11Spec extends AnyFunSuite {
     }
     // recompute the spanning edges exactly as the query does and check
     // both endpoints of every edge landed in the same component
-    val sims = ops.LlmExt2.simhash16(Tables.documents(spark, sf01))
-    val pieces = ops.LlmExt2.pieces4(sims)
-    val edges = pieces.as("x")
-      .join(pieces.as("y"),
-        col("x.lang") === col("y.lang") &&
-          col("x.piece_idx") === col("y.piece_idx") &&
-          col("x.piece") === col("y.piece") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .where(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= 3)
-      .select(col("x.doc_id"), col("y.doc_id")).distinct()
+    val edges = ops.LlmExt2.simhashPairs(Tables.documents(spark, sf01), 16)
+      .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(edges.nonEmpty)
     edges.foreach { case (a, b) =>

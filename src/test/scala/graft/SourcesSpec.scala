@@ -86,7 +86,7 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
         Thread.sleep(500); waited += 500
       }
       assert(spark.read.schema(alerts.schema).parquet(outDir).count() > 0)
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("StreamStart.stop outlasts a file sink's write tasks: output deleted after the stop stays gone") {

@@ -95,7 +95,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       val all = seen.synchronized(seen.flatMap(_._2).toVector)
       assert(all.map(_.event_id).sorted == Vector(1L, 3L)) // event 2 was judged by OLD rules
       assert(all.find(_.event_id == 3).get.severity == "MED")
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s1: alert collect is capped — lowest event_ids kept, overflow counted") {
@@ -116,7 +116,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
           ev(3, 2, 3, "purchase", 250.0), ev(1, 3, 4, "purchase", 400.0))
         q.processAllAvailable()
         q
-      } finally q.stop()
+      } finally StreamStart.stop(q)
     }((q, j) => j.of(q, 0L))
     val (alerts, overflow) = seen.synchronized(seen.head)
     assert(alerts.map(_.event_id) == Seq(1L, 2L)) // deterministic: lowest ids survive
@@ -162,7 +162,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         input.addData(events.drop(3): _*)
         q.processAllAvailable()
         q
-      } finally q.stop()
+      } finally StreamStart.stop(q)
     } { (q, j) =>
       (q, q.recentProgress.filter(_.numInputRows > 0).map(p => p.batchId -> j.of(q, p.batchId)).toSeq)
     } finally spark.listenerManager.unregister(listener)
@@ -214,7 +214,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     try {
       input.addData(events: _*)
       q.processAllAvailable()
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     assert(seen.synchronized(seen.toSeq).map(key).sorted == joined)
   }
 
@@ -244,7 +244,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     try for (half <- events.grouped(2000)) {
       input.addData(half: _*)
       q.processAllAvailable()
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     assert(seen.synchronized(seen.toSeq).sortBy(key) == joined)
   }
 
@@ -266,7 +266,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     try {
       input.addData(ev(1, 0, 7, "purchase", 200.0), ev(2, 1, 7, "click", 1.0))
       q.processAllAvailable()
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     assert(seen.synchronized(seen.toSeq) == Seq((classOf[LogicalRDD].getName, 2L)))
   }
 
@@ -284,7 +284,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     try for (i <- 0 until 3) {
       input.addData(ev(i, i, 7, "purchase", 200.0))
       q.processAllAvailable()
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     def ls(d: java.nio.file.Path) = d.toFile.list().toSet
     val ckpt = root.resolve(ls(root).toSeq.head)
     for (log <- Seq("offsets", "commits"))
@@ -308,7 +308,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       val rows = spark.table("s2_out").as[(Timestamp, String, Long)].collect().toSet
       assert(rows.contains((ts(0), "click", 2L)))
       assert(rows.contains((ts(60), "view", 1L)))
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s3: streaming dedup keeps one row per (user_id, event_type)") {
@@ -323,7 +323,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       runToCompletion(q)
       val n = spark.table("s3_out").count()
       assert(n == 2) // one click + one view for user 1
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s3b: bounded-state dedup suppresses within the horizon, evicts state after it") {
@@ -345,7 +345,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       runToCompletion(q)
       assert(spark.table("s3b_out")
         .where($"user_id" === 1 && $"event_type" === "click").count() == 2)
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s4: flatMapGroupsWithState detects click→purchase across micro-batches") {
@@ -365,7 +365,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       runToCompletion(q)
       val matches = spark.table("s4_out").as[PatternMatch].collect().toVector
       assert(matches.map(m => (m.user_id, m.click_event_id, m.purchase_event_id)) == Vector((1L, 1L, 3L)))
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s6: stream-stream join pairs purchases with clicks in the prior 30min") {
@@ -388,7 +388,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         .select("user_id", "click_id", "purchase_id")
         .as[(Long, Long, Long)].collect().toSet
       assert(joined == Set((1L, 1L, 2L)))
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s7: LEFT OUTER stream-stream join emits unmatched clicks only after watermark closes their interval") {
@@ -426,7 +426,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         .as[(Long, Long, Option[Long])].collect().toSet
       assert(rows == Set((1L, 1L, Some(2L)), (2L, 3L, None)),
         s"expected the matched pair plus the late NULL row, got $rows")
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s8: dedup-on-ingest — first arrival claims the signature across batches; idle state evicts") {
@@ -474,7 +474,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         .as[DedupVerdict].collect().map(v => v.doc_id -> (v.is_first, v.canonical_id)).toMap
       assert(after(5L) == ((true, 5L)),
         s"signature idle past the horizon must re-admit (bounded state): $after")
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s9: near-dup candidates — band-sig collisions emit against every stored doc; idle state evicts") {
@@ -512,7 +512,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       runToCompletion(q)
       assert(spark.table("s9_out").as[NearDupCandidate].collect()
         .count(_.new_id == 6L) == 0, "evicted signature must re-admit without candidates")
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s10: decontamination on ingest == the batch contamination rule, across batches") {
@@ -541,7 +541,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         input.addData(b2.toSeq)
         runToCompletion(q)
         seen.synchronized(seen.map(d => d.doc_id -> d.n_bench).toMap)
-      } finally q.stop()
+      } finally StreamStart.stop(q)
 
     // batch twin: the q73/q79 rule over the same docs in one pass
     val want = ops.Curation2.trigrams(base.where(col("doc_id") % 97 =!= 0))
@@ -581,7 +581,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       // all cross-batch knowledge lives in the frozen centroids + the
       // partitioned index table
       assert(q.lastProgress.stateOperators.isEmpty)
-    } finally q.stop()
+    } finally StreamStart.stop(q)
 
     // replay batch 0 with the same batchId: overwrites ONLY b=0, rows identical
     val before = spark.read.parquet(s"$dir/b=0").collect().map(_.toString).sorted.toSeq
@@ -634,7 +634,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       // stateless by design: cross-batch knowledge = frozen centroids +
       // the committed kept table, never stream state
       assert(q.lastProgress.stateOperators.isEmpty)
-    } finally q.stop()
+    } finally StreamStart.stop(q)
 
     // ---- engine-independent JVM replay of the whole protocol ----------
     val centJ: Map[Long, Array[Long]] = cent.collect()
@@ -738,7 +738,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       try {
         batches.foreach { b => input.addData(b); runToCompletion(q) }
         assert(q.lastProgress.stateOperators.isEmpty) // stateless by design
-      } finally q.stop()
+      } finally StreamStart.stop(q)
       dir -> Demos.cdcStats(spark, dir).collect().map(r =>
         (r.getAs[Long]("doc_id"), r.getAs[String]("source")) ->
           (r.getAs[Long]("n_chunks"), r.getAs[Long]("n_toks"),
@@ -795,7 +795,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       input.addData(b1); runToCompletion(q)
       input.addData(b2); runToCompletion(q)
       assert(q.lastProgress.stateOperators.isEmpty) // stateless by design
-    } finally q.stop()
+    } finally StreamStart.stop(q)
 
     // ---- JVM replay: admission (batch order, doc order, chunk order, one
     // global content-addressed store) then latest-version liveness
@@ -864,7 +864,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       try {
         batches.foreach { b => input.addData(b); runToCompletion(q) }
         assert(q.lastProgress.stateOperators.isEmpty) // stateless by design
-      } finally q.stop()
+      } finally StreamStart.stop(q)
       dir -> Demos.keeperView(spark, dir).collect()
         .map(r => (r.getAs[String]("lang"), r.getAs[String]("source")) ->
           (r.getAs[Long]("doc_id"), r.getAs[Double]("quality"))).toSet
@@ -891,7 +891,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     try {
       inB.addData(docs); runToCompletion(qB)
       inB.addData(Seq(boosted)); runToCompletion(qB)
-    } finally qB.stop()
+    } finally StreamStart.stop(qB)
     val afterBoost = Demos.keeperView(spark, dirB).collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[String]("source")) ->
         r.getAs[Long]("doc_id")).toMap
@@ -955,7 +955,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         runToCompletion(q)
         spark.table("s11_out").as[AdmitVerdict].collect()
           .map(v => v.doc_id -> ((v.prior_toks, v.admitted))).toMap
-      } finally q.stop()
+      } finally StreamStart.stop(q)
 
     // ground truth: sequential fold per lang in (batch, event-time, doc_id)
     // arrival order — the s11 contract
@@ -989,7 +989,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         .as[(Long, Timestamp, Timestamp, Long)].collect().toVector
         .filter(_._1 == 1L).sortBy(_._2.getTime)
       assert(sessions.map(s => (s._2, s._4)) == Vector((ts(0), 2L), (ts(50), 1L)))
-    } finally q.stop()
+    } finally StreamStart.stop(q)
   }
 
   test("s14: foreachBatch upsert — versioned snapshot holds the latest row per user; replay is idempotent") {
@@ -1009,7 +1009,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       input.addData(ev(3, 10, 1, "view", 7.0), ev(4, 1, 3, "view", 4.0))
       q.processAllAvailable()
       assert(snapshot(1) == Map(1L -> ((3L, 7.0)), 2L -> ((2L, 2.0)), 3L -> ((4L, 4.0))))
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     // replay batch 1 directly (the post-crash re-execution): the merge must
     // read v=0 — never its own v=1 output — and rewrite v=1 byte-identically
     Demos.upsertBatch(spark,
@@ -1028,7 +1028,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[DocIngest]
     val q = Demos.s16DriftMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1070,7 +1070,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s21CmsMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1112,7 +1112,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s22HeavyHittersMonitor(spark, input.toDF(), dir, nb, m)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1183,7 +1183,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s23DriftMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1281,7 +1281,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s25CdcApply(spark, input.toDF(), dir)
     try Seq(baseB, chg1, chg2, chg3).foreach { c =>
       input.addData(c: _*); q.processAllAvailable()
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == 3L)
@@ -1330,7 +1330,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[DocSrc]
     val q = Demos.s26NoveltyMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1378,7 +1378,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[DocLang]
     val q = Demos.s28DecontamMonitor(spark, input.toDF(), benchGrams, dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1416,7 +1416,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[DocLang]
     val q = Demos.s29PaddingMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1466,7 +1466,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s30RedactionMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1514,7 +1514,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[graft.ops.Order]
     val q = Demos.s31DqMonitor(spark, input.toDF(), custDim, dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1553,7 +1553,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s32TransitionMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1607,7 +1607,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s33SeasonalMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1648,7 +1648,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s27BurstMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)
@@ -1688,7 +1688,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val input = MemoryStream[Event]
     val q = Demos.s24FreshnessMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
-    finally q.stop()
+    finally StreamStart.stop(q)
     val last = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
     assert(last == chunks.length - 1)

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.streaming.StreamStart
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -88,7 +89,7 @@ class StreamingEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll with T
       q.processAllAvailable()
       flushWritten
       q.processAllAvailable()
-    } finally q.stop()
+    } finally StreamStart.stop(q)
     spark.table(name)
   }
 
@@ -164,7 +165,7 @@ class StreamingEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll with T
         q.processAllAvailable()
         spark.table("eq_s9").select("new_id", "hist_id").distinct()
           .as[(Long, Long)].collect().toSet
-      } finally q.stop()
+      } finally StreamStart.stop(q)
 
     // batch twin: identical signature projection, self-joined on
     // (lang, band, sig) with the stream's arrival order (ts, doc_id)

@@ -8,9 +8,9 @@ import org.scalatest.{Outcome, TestSuite}
 
 /** Per-test temp directories: `tempDir(prefix)` makes one under the system
   * temp dir, and each test deletes the ones it made when it ends, pass or
-  * fail. A test must stop its streams before it returns; the delete waits
-  * (up to 10 s) for tasks still running, because a stopped stream's
-  * cancelled write tasks can recreate their output directory. */
+  * fail. A test must stop its streams through `StreamStart.stop` before it
+  * returns: a plain `StreamingQuery.stop()` returns while cancelled write
+  * tasks still run, and those can recreate their output directory. */
 trait TempDirs extends TestSuite {
   private val made = new ConcurrentLinkedQueue[Path]()
 
@@ -22,12 +22,6 @@ trait TempDirs extends TestSuite {
 
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
-    finally if (!made.isEmpty) {
-      val tracker = SharedSpark.spark.sparkContext.statusTracker
-      val deadline = System.nanoTime() + 10000000000L
-      while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      Iterator.continually(made.poll()).takeWhile(_ != null)
-        .foreach(d => FileUtils.deleteQuietly(d.toFile))
-    }
+    finally Iterator.continually(made.poll()).takeWhile(_ != null)
+      .foreach(d => FileUtils.deleteQuietly(d.toFile))
 }
