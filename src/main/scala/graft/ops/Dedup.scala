@@ -97,9 +97,7 @@ object Dedup {
 
     var converged = consistent(labels)
     var i = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && i < maxIter) {
-      val tR0 = System.nanoTime()
       val propagated = labels
         .join(edges, col("node") === col("src"))
         .select(col("dst").as("node"), col("label"))
@@ -145,7 +143,6 @@ object Dedup {
       labels = next
       converged = consistent(labels)
       i += 1
-      if (dbg) println(f"[cc] round $i ${(System.nanoTime() - tR0) / 1e9}%.2f s converged=$converged")
     }
     // Unconverged labels would silently over- or under-dedup downstream
     // (dedupByCluster keeps docs whose cluster merge never propagated).

@@ -710,10 +710,10 @@ object Demos {
     * the batch audit — the same prefilter/verify split, with the bloom as
     * the MapStateDescriptor analog.
     *
-    * Driver-side materialization is BOUNDED exactly as in s1: at most
-    * `maxCollect` verdicts per batch (lowest doc_id first, planned as
-    * TakeOrderedAndProject), with the count of capped-away verdicts in
-    * `overflow` (second scan only when the cap is hit).
+    * Driver-side materialization is BOUNDED: the batch collects at most
+    * `maxCollect` verdicts, lowest doc_id first (`orderBy("doc_id")` +
+    * `limit`). Only when that cap is hit does a second job, a `count()`
+    * of all verdicts, fill `overflow` with the number capped away.
     */
   def s10DecontaminateOnIngest(
       docs: DataFrame,
@@ -839,37 +839,27 @@ object Demos {
   /** s14 — the `foreachBatch` exactly-once UPSERT pattern: maintain a
     * "latest event per user" snapshot table from the stream. Each
     * micro-batch merges the previous snapshot VERSION with the batch and
-    * writes version `batchId`. Exactly-once falls out of determinism +
-    * idempotence, the documented foreachBatch contract: a replayed batch
-    * N re-reads the highest version BELOW N (never its own possibly
-    * half-written output) and overwrites v=N with identical bytes.
-    * Production points this at a transactional table format's MERGE; the
-    * versioned-parquet form demonstrates the identical protocol with the
-    * directory overwrite as the commit. StreamingDemosSpec drives it over
-    * a stream AND replays a batch directly to prove idempotence.
+    * writes version `batchId` ([[VersionedSink.snapshot]]: exactly-once
+    * from determinism + idempotence, the documented foreachBatch
+    * contract). Production points this at a transactional table format's
+    * MERGE; the versioned-parquet form demonstrates the identical protocol
+    * with the directory overwrite as the commit. StreamingDemosSpec drives
+    * it over a stream AND replays a batch directly to prove idempotence.
     */
   def s14SnapshotUpsert(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(upsertBatch(spark, _, dir, _))
 
-  /** One snapshot-merge step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One snapshot-merge step. */
   private[graft] def upsertBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val cols = Seq("user_id", "ts", "event_id", "event_type", "value").map(col)
-    // the newest snapshot STRICTLY below this batch: a replay of batch N
-    // must never read N's own (possibly uncommitted) output
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v").select(cols: _*)
-      case None    => batch.select(cols: _*).limit(0)
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val cols = Seq("user_id", "ts", "event_id", "event_type", "value").map(col)
+      val base = s.prev("").map(_.select(cols: _*)).getOrElse(batch.select(cols: _*).limit(0))
+      val latest = Window.partitionBy("user_id")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      s.write("", base.unionByName(batch.select(cols: _*))
+        .withColumn("rn", row_number().over(latest)).where(col("rn") === 1).drop("rn"))
     }
-    val latest = Window.partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    base.unionByName(batch.select(cols: _*))
-      .withColumn("rn", row_number().over(latest)).where(col("rn") === 1).drop("rn")
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s16 — streaming corpus-drift monitor: the ingest-time twin of batch
     * q92. Each micro-batch of documents updates an EXACT versioned
@@ -877,55 +867,44 @@ object Demos {
     * md5 type carve, then publishes the drift row (n_terms, t_a, t_b, l1)
     * that snapshot implies — the always-on monitor SCALE.md's sketched-
     * drift note calls for, with every retained counter exact and
-    * replayable. Commit protocol = s14's versioned overwrite: a replayed
-    * batch reads only versions STRICTLY below its id and rewrites its
-    * own version byte-identically, so the monitor is exactly-once under
-    * retries; once the whole corpus has streamed, the last drift row
+    * replayable. Once the whole corpus has streamed, the last drift row
     * equals batch q92 EXACTLY (integer counters + the same decimal-space
     * L1 numerator and final double division).
     */
   def s16DriftMonitor(spark: SparkSession, docs: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(driftBatch(spark, _, dir, _))
 
-  /** One drift-monitor step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One drift-monitor step. */
   private[graft] def driftBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    // the micro-batch's sampled token-type count delta (q92's carve)
-    val delta = batch
-      .select((col("doc_id") % 2).as("half"),
-        explode(split(col("text"), " ")).as("tok"))
-      .where(conv(substring(md5(col("tok")), 1, 15), 16, 10)
-        .cast("long") % 7 === 0)
-      .groupBy("tok").agg(
-        count(when(col("half") === 0, 1)).as("c_a"),
-        count(when(col("half") === 1, 1)).as("c_b"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
-      case None    => delta.limit(0)
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      // the micro-batch's sampled token-type count delta (q92's carve)
+      val delta = batch
+        .select((col("doc_id") % 2).as("half"),
+          explode(split(col("text"), " ")).as("tok"))
+        .where(conv(substring(md5(col("tok")), 1, 15), 16, 10)
+          .cast("long") % 7 === 0)
+        .groupBy("tok").agg(
+          count(when(col("half") === 0, 1)).as("c_a"),
+          count(when(col("half") === 1, 1)).as("c_b"))
+      val base = s.prev("counts").getOrElse(delta.limit(0))
+      val counts = s.write("counts", base.unionByName(delta).groupBy("tok")
+        .agg(sum("c_a").as("c_a"), sum("c_b").as("c_b")))
+      // publish the drift row the new snapshot implies — q92's arithmetic:
+      // exact DECIMAL(19,0)-operand products, one final double division
+      val totals = counts.agg(sum("c_a").as("t_a"), sum("c_b").as("t_b"))
+      s.write("drift", counts.crossJoin(totals)
+        .agg(
+          sum(abs(col("c_a").cast("decimal(19,0)") * col("t_b").cast("decimal(19,0)")
+            - col("c_b").cast("decimal(19,0)") * col("t_a").cast("decimal(19,0)")))
+            .as("l1_num"),
+          max(col("t_a")).as("t_a"), max(col("t_b")).as("t_b"),
+          count(lit(1)).as("n_terms"))
+        .select(
+          col("n_terms"), col("t_a"), col("t_b"),
+          (col("l1_num").cast("double") /
+            (col("t_a").cast("double") * col("t_b").cast("double"))).as("l1")))
     }
-    base.unionByName(delta).groupBy("tok")
-      .agg(sum("c_a").as("c_a"), sum("c_b").as("c_b"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    // publish the drift row the new snapshot implies — q92's arithmetic:
-    // exact DECIMAL(19,0)-operand products, one final double division
-    val counts = spark.read.parquet(s"$dir/v=$batchId/counts")
-    val totals = counts.agg(sum("c_a").as("t_a"), sum("c_b").as("t_b"))
-    counts.crossJoin(totals)
-      .agg(
-        sum(abs(col("c_a").cast("decimal(19,0)") * col("t_b").cast("decimal(19,0)")
-          - col("c_b").cast("decimal(19,0)") * col("t_a").cast("decimal(19,0)")))
-          .as("l1_num"),
-        max(col("t_a")).as("t_a"), max(col("t_b")).as("t_b"),
-        count(lit(1)).as("n_terms"))
-      .select(
-        col("n_terms"), col("t_a"), col("t_b"),
-        (col("l1_num").cast("double") /
-          (col("t_a").cast("double") * col("t_b").cast("double"))).as("l1"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/drift")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s17 — rolling-active-window claims: the streaming form of batch
     * q102's 7-day rolling distinct-user count. Keyed by user, the state
@@ -1149,58 +1128,47 @@ object Demos {
     * and this demo exercises it batch-by-batch. Alongside, a probe-carve
     * (user_id % 97) exact-count snapshot feeds the published audit rows
     * (user, exact, est, overcount), so once the whole stream has passed,
-    * the audit equals batch q122 EXACTLY. Commit protocol = s14/s16's
-    * versioned overwrite: a replayed batch reads only versions strictly
-    * below its id and rewrites its own byte-identically (exactly-once
-    * under retries). State on disk is O(d·w + |probe users|) rows at any
-    * stream size — the sketch IS the bounded state — and history is
-    * bounded too: after each commit, versions older than the immediate
-    * predecessor are pruned (VersionedSink.pruneVersions), so at most two live on disk.
+    * the audit equals batch q122 EXACTLY. State on disk is
+    * O(d·w + |probe users|) rows at any stream size — the sketch IS the
+    * bounded state.
     */
   def s21CmsMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(cmsBatch(spark, _, dir, _))
 
-  /** One CMS-monitor step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One CMS-monitor step. */
   private[graft] def cmsBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val P = 104729L
-    val rows = spark.range(0, 4).toDF("i")
-    val ev = batch.select(col("user_id"))
-    val deltaCounters = ev.crossJoin(rows)
-      .select(col("i"),
-        (((col("i") * 4 + 3) * col("user_id") + col("i") * 7 + 5) % P % 256)
-          .as("bucket"))
-      .groupBy("i", "bucket").agg(count(lit(1)).as("c"))
-    val deltaExact = ev.where(col("user_id") % 97 === 0)
-      .groupBy("user_id").agg(count(lit(1)).as("exact"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val (baseC, baseE) = prevVersions.lastOption match {
-      case Some(v) => (spark.read.parquet(s"$dir/v=$v/counters"),
-        spark.read.parquet(s"$dir/v=$v/exact"))
-      case None => (deltaCounters.limit(0), deltaExact.limit(0))
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val P = 104729L
+      val rows = spark.range(0, 4).toDF("i")
+      val ev = batch.select(col("user_id"))
+      val deltaCounters = ev.crossJoin(rows)
+        .select(col("i"),
+          (((col("i") * 4 + 3) * col("user_id") + col("i") * 7 + 5) % P % 256)
+            .as("bucket"))
+        .groupBy("i", "bucket").agg(count(lit(1)).as("c"))
+      val deltaExact = ev.where(col("user_id") % 97 === 0)
+        .groupBy("user_id").agg(count(lit(1)).as("exact"))
+      // sketch merge = counter addition; probe-exact merge likewise
+      val counters = s.write("counters",
+        s.prev("counters").getOrElse(deltaCounters.limit(0))
+          .unionByName(deltaCounters).groupBy("i", "bucket")
+          .agg(sum("c").as("c")))
+      val exact = s.write("exact",
+        s.prev("exact").getOrElse(deltaExact.limit(0))
+          .unionByName(deltaExact).groupBy("user_id")
+          .agg(sum("exact").as("exact")))
+      // publish the audit rows the new snapshot implies — q122's arithmetic
+      s.write("audit", exact.crossJoin(rows)
+        .select(col("user_id"), col("exact"), col("i"),
+          (((col("i") * 4 + 3) * col("user_id") + col("i") * 7 + 5) % P % 256)
+            .as("bucket"))
+        .join(counters, Seq("i", "bucket"))
+        .groupBy("user_id", "exact")
+        .agg(min("c").as("est"))
+        .select(col("user_id"), col("exact"), col("est"),
+          (col("est") - col("exact")).as("overcount")))
     }
-    // sketch merge = counter addition; probe-exact merge likewise
-    baseC.unionByName(deltaCounters).groupBy("i", "bucket")
-      .agg(sum("c").as("c"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counters")
-    baseE.unionByName(deltaExact).groupBy("user_id")
-      .agg(sum("exact").as("exact"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/exact")
-    // publish the audit rows the new snapshot implies — q122's arithmetic
-    val counters = spark.read.parquet(s"$dir/v=$batchId/counters")
-    spark.read.parquet(s"$dir/v=$batchId/exact").crossJoin(rows)
-      .select(col("user_id"), col("exact"), col("i"),
-        (((col("i") * 4 + 3) * col("user_id") + col("i") * 7 + 5) % P % 256)
-          .as("bucket"))
-      .join(counters, Seq("i", "bucket"))
-      .groupBy("user_id", "exact")
-      .agg(min("c").as("est"))
-      .select(col("user_id"), col("exact"), col("est"),
-        (col("est") - col("exact")).as("overcount"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/audit")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s22 — streaming heavy-hitters monitor: the ingest-time twin of batch
     * q127, and the place where the summary genuinely becomes a SKETCH. The
@@ -1214,54 +1182,45 @@ object Demos {
     * estimate. Invariants (spec-locked, structural): est ≥ exact for every
     * retained key, any key with exact count > err(bucket) is PROVABLY
     * retained, and state is ≤ 16·m counter rows + 16 err rows at any
-    * stream size. Commit protocol = s14/s16/s21's versioned overwrite with
-    * predecessor-only history.
+    * stream size.
     */
   def s22HeavyHittersMonitor(
       spark: SparkSession, events: DataFrame, dir: String,
       buckets: Int = 16, m: Int = 5): StreamingQuery =
     VersionedSink.start(events, dir)(hhBatch(spark, _, dir, _, buckets, m))
 
-  /** One heavy-hitters merge step (factored out so the spec can replay a
-    * batch with the same batchId and fold the same merge driver-side;
-    * buckets/m are parameters so the spec can force eviction on the
-    * 15-user sf0.001 fixture). */
+  /** One heavy-hitters merge step; buckets/m are parameters so the spec
+    * can force eviction on the 15-user sf0.001 fixture. */
   private[graft] def hhBatch(
       spark: SparkSession, batch: DataFrame, dir: String, batchId: Long,
-      buckets: Int = 16, m: Int = 5): Unit = {
-    val delta = batch
-      .select(col("user_id"), (col("user_id") % buckets).as("bucket"))
-      .groupBy("bucket", "user_id").agg(count(lit(1)).as("dn"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val (baseC, baseE) = prevVersions.lastOption match {
-      case Some(v) => (spark.read.parquet(s"$dir/v=$v/counters"),
-        spark.read.parquet(s"$dir/v=$v/err"))
-      case None => (
-        delta.select(col("bucket"), col("user_id"), col("dn").as("est")).limit(0),
+      buckets: Int = 16, m: Int = 5): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = batch
+        .select(col("user_id"), (col("user_id") % buckets).as("bucket"))
+        .groupBy("bucket", "user_id").agg(count(lit(1)).as("dn"))
+      val baseC = s.prev("counters").getOrElse(
+        delta.select(col("bucket"), col("user_id"), col("dn").as("est")).limit(0))
+      val baseE = s.prev("err").getOrElse(
         delta.select(col("bucket"), lit(0L).as("err")).limit(0))
+      // SpaceSaving merge: a key absent from the retained summary re-enters
+      // at the bucket's error floor (its evicted estimate was ≤ err).
+      val combined = baseC
+        .join(delta, Seq("bucket", "user_id"), "full_outer")
+        .join(baseE, Seq("bucket"), "left")
+        .select(col("bucket"), col("user_id"),
+          (coalesce(col("est"), col("err"), lit(0L)) +
+            coalesce(col("dn"), lit(0L))).as("est"),
+          coalesce(col("err"), lit(0L)).as("err0"))
+      val byBucket = Window.partitionBy("bucket")
+        .orderBy(col("est").desc, col("user_id"))
+      val ranked = combined.withColumn("rk", row_number().over(byBucket))
+      s.write("counters", ranked.where(col("rk") <= m)
+        .select("bucket", "user_id", "est"))
+      // err rises to the largest evicted estimate (monotone per bucket)
+      s.write("err", ranked.groupBy("bucket")
+        .agg(greatest(max("err0"),
+          coalesce(max(when(col("rk") > m, col("est"))), lit(0L))).as("err")))
     }
-    // SpaceSaving merge: a key absent from the retained summary re-enters
-    // at the bucket's error floor (its evicted estimate was ≤ err).
-    val combined = baseC
-      .join(delta, Seq("bucket", "user_id"), "full_outer")
-      .join(baseE, Seq("bucket"), "left")
-      .select(col("bucket"), col("user_id"),
-        (coalesce(col("est"), col("err"), lit(0L)) +
-          coalesce(col("dn"), lit(0L))).as("est"),
-        coalesce(col("err"), lit(0L)).as("err0"))
-    val byBucket = Window.partitionBy("bucket")
-      .orderBy(col("est").desc, col("user_id"))
-    val ranked = combined.withColumn("rk", row_number().over(byBucket))
-    ranked.where(col("rk") <= m)
-      .select("bucket", "user_id", "est")
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counters")
-    // err rises to the largest evicted estimate (monotone per bucket)
-    ranked.groupBy("bucket")
-      .agg(greatest(max("err0"),
-        coalesce(max(when(col("rk") > m, col("est"))), lit(0L))).as("err"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/err")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s23 — streaming distribution-drift monitor: the ingest-time twin of
     * batch q135's KS test. The FIRST micro-batch freezes a reference
@@ -1274,57 +1233,45 @@ object Demos {
     * ingest-drift alarm a pipeline gates new data on. Shares are raw IEEE
     * quotients of exact int64 counts. State on disk is ≤ 10 histogram +
     * 10 reference rows at ANY stream size (the reference rides forward
-    * into each version so pruned history never orphans it). Commit
-    * protocol = s14/s16/s21/s22's versioned overwrite with
-    * predecessor-only history (exactly-once under replays).
+    * into each version so pruned history never orphans it).
     */
   def s23DriftMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(valueDriftBatch(spark, _, dir, _))
 
-  /** One drift-monitor step (factored out so the spec can replay a batch
-    * with the same batchId and assert identical output). */
+  /** One drift-monitor step. */
   private[graft] def valueDriftBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val delta = batch
-      .select(((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-        .cast("long")).as("v"))
-      .withColumn("decile", expr("v DIV 5000"))
-      .groupBy("decile").agg(count(lit(1)).as("n"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val (baseH, ref0) = prevVersions.lastOption match {
-      case Some(v) => (spark.read.parquet(s"$dir/v=$v/hist"),
-        spark.read.parquet(s"$dir/v=$v/ref"))
-      case None => (delta.limit(0), delta) // first batch freezes the reference
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = batch
+        .select(((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
+          .cast("long")).as("v"))
+        .withColumn("decile", expr("v DIV 5000"))
+        .groupBy("decile").agg(count(lit(1)).as("n"))
+      val baseH = s.prev("hist").getOrElse(delta.limit(0))
+      val ref0 = s.prev("ref").getOrElse(delta) // first batch freezes the reference
+      // Round-9 ADVICE: an EMPTY first micro-batch must not freeze an empty
+      // reference — rt would be 0 and every subsequent ref_share/drift NaN
+      // for the stream's lifetime. While the stored reference is still empty,
+      // keep deferring the freeze to the first non-empty batch (the emptiness
+      // probe is a ≤10-row action on the versioned state, constant cost).
+      val ref = if (ref0.isEmpty) delta else ref0
+      // histogram merge = bucket-count addition
+      val hist = s.write("hist", baseH.unionByName(delta).groupBy("decile").agg(sum("n").as("n")))
+      val refR = s.write("ref", ref).select(col("decile"), col("n").as("ref_n"))
+      // publish the audit the new snapshot implies — exact counts, raw
+      // share quotients, one full-outer join of two ≤10-row tables
+      val joined = hist.select(col("decile"), col("n").as("cur_n"))
+        .join(refR, Seq("decile"), "full_outer")
+        .select(col("decile"),
+          coalesce(col("ref_n"), lit(0L)).as("ref_n"),
+          coalesce(col("cur_n"), lit(0L)).as("cur_n"))
+      val tots = joined.agg(sum("ref_n").as("rt"), sum("cur_n").as("ct"))
+      s.write("audit", joined.crossJoin(broadcast(tots))
+        .select(col("decile"), col("ref_n"), col("cur_n"),
+          (col("ref_n").cast("double") / col("rt").cast("double")).as("ref_share"),
+          (col("cur_n").cast("double") / col("ct").cast("double")).as("cur_share"))
+        .withColumn("drift", abs(col("ref_share") - col("cur_share"))))
     }
-    // Round-9 ADVICE: an EMPTY first micro-batch must not freeze an empty
-    // reference — rt would be 0 and every subsequent ref_share/drift NaN
-    // for the stream's lifetime. While the stored reference is still empty,
-    // keep deferring the freeze to the first non-empty batch (the emptiness
-    // probe is a ≤10-row action on the versioned state, constant cost).
-    val ref = if (ref0.isEmpty) delta else ref0
-    // histogram merge = bucket-count addition
-    baseH.unionByName(delta).groupBy("decile").agg(sum("n").as("n"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/hist")
-    ref.write.mode("overwrite").parquet(s"$dir/v=$batchId/ref")
-    // publish the audit the new snapshot implies — exact counts, raw
-    // share quotients, one full-outer join of two ≤10-row tables
-    val hist = spark.read.parquet(s"$dir/v=$batchId/hist")
-    val refR = spark.read.parquet(s"$dir/v=$batchId/ref")
-      .select(col("decile"), col("n").as("ref_n"))
-    val joined = hist.select(col("decile"), col("n").as("cur_n"))
-      .join(refR, Seq("decile"), "full_outer")
-      .select(col("decile"),
-        coalesce(col("ref_n"), lit(0L)).as("ref_n"),
-        coalesce(col("cur_n"), lit(0L)).as("cur_n"))
-    val tots = joined.agg(sum("ref_n").as("rt"), sum("cur_n").as("ct"))
-    joined.crossJoin(broadcast(tots))
-      .select(col("decile"), col("ref_n"), col("cur_n"),
-        (col("ref_n").cast("double") / col("rt").cast("double")).as("ref_share"),
-        (col("cur_n").cast("double") / col("ct").cast("double")).as("cur_share"))
-      .withColumn("drift", abs(col("ref_share") - col("cur_share")))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/audit")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s24 — streaming freshness monitor: the ingest-time twin of batch
     * q147. Per-type high-water marks and row counts merge trivially
@@ -1332,36 +1279,26 @@ object Demos {
     * row per event type at ANY stream volume; each commit publishes the
     * audit rows (type, n, tmax, lag behind the table-wide high-water
     * mark) — the "which producer stalled" alarm, updated per micro-batch.
-    * Commit protocol = s14/s16/s21–s23's versioned overwrite with
-    * predecessor-only history (exactly-once under replays).
     */
   def s24FreshnessMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(freshnessBatch(spark, _, dir, _))
 
-  /** One freshness-monitor step (factored out so the spec can replay a
-    * batch with the same batchId and assert identical output). */
+  /** One freshness-monitor step. */
   private[graft] def freshnessBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val delta = batch
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .groupBy("event_type").agg(count(lit(1)).as("n"), max("us").as("tmax"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/state")
-      case None    => delta.limit(0)
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = batch
+        .select(col("event_type"), unix_micros(col("ts")).as("us"))
+        .groupBy("event_type").agg(count(lit(1)).as("n"), max("us").as("tmax"))
+      // watermark merge: counts add, high-water marks take max
+      val state = s.write("state", s.prev("state").getOrElse(delta.limit(0))
+        .unionByName(delta).groupBy("event_type")
+        .agg(sum("n").as("n"), max("tmax").as("tmax")))
+      val g = state.agg(max("tmax").as("gmax"))
+      s.write("audit", state.crossJoin(broadcast(g))
+        .select(col("event_type"), col("n"), col("tmax"),
+          (col("gmax") - col("tmax")).as("lag_us")))
     }
-    // watermark merge: counts add, high-water marks take max
-    base.unionByName(delta).groupBy("event_type")
-      .agg(sum("n").as("n"), max("tmax").as("tmax"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/state")
-    val state = spark.read.parquet(s"$dir/v=$batchId/state")
-    val g = state.agg(max("tmax").as("gmax"))
-    state.crossJoin(broadcast(g))
-      .select(col("event_type"), col("n"), col("tmax"),
-        (col("gmax") - col("tmax")).as("lag_us"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/audit")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s25 — streaming CDC apply: the ingest twin of batch q145's
     * merge-apply. The stream is a changelog of (k, seq, op ∈ I/U/D,
@@ -1373,45 +1310,37 @@ object Demos {
     * replace in place, so the snapshot never grows with change volume.
     * Assumes the standard changelog contract — per-key seq is monotone in
     * arrival order.
-    * Commit protocol = s14/s16/s21–s24's versioned overwrite with
-    * predecessor-only history (exactly-once under replays).
     */
   def s25CdcApply(spark: SparkSession, changes: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(changes, dir)(cdcApplyBatch(spark, _, dir, _))
 
-  /** One CDC-apply step (factored out so the spec can replay a batch with
-    * the same batchId and assert identical output). */
+  /** One CDC-apply step. */
   private[graft] def cdcApplyBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val cols = Seq("k", "seq", "op", "price", "status").map(col)
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    // Deletes persist as TOMBSTONES (op='D' rows, price null, status
-    // retained): q145's batch merge resolves a D→U key to the updated row
-    // with the BASE's status, and only a tombstone carrying that status
-    // lets the incremental apply reproduce it. This is the standard CDC
-    // compaction design — the live view is op != 'D'; production prunes
-    // tombstones past the changelog's max-reorder horizon, so state is
-    // O(live keys + recent deletes), never O(changes).
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v").select(cols: _*)
-      case None    => batch.select(cols: _*).limit(0)
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val cols = Seq("k", "seq", "op", "price", "status").map(col)
+      // Deletes persist as TOMBSTONES (op='D' rows, price null, status
+      // retained): q145's batch merge resolves a D→U key to the updated row
+      // with the BASE's status, and only a tombstone carrying that status
+      // lets the incremental apply reproduce it. This is the standard CDC
+      // compaction design — the live view is op != 'D'; production prunes
+      // tombstones past the changelog's max-reorder horizon, so state is
+      // O(live keys + recent deletes), never O(changes).
+      val base = s.prev("").map(_.select(cols: _*)).getOrElse(batch.select(cols: _*).limit(0))
+      // latest-op-wins per key in ONE keyed aggregation (no window sort):
+      // winner op/price by seq (a replayed batch ties with its own prior
+      // effect at EQUAL values, so either pick is byte-identical); status =
+      // the EARLIEST non-null status (q145's coalesce(base.status,
+      // op.status): the base wins while its lineage lives — U/D carry null)
+      s.write("", base.unionByName(batch.select(cols: _*))
+        .groupBy("k")
+        .agg(
+          max(col("seq")).as("seq"),
+          max_by(col("op"), col("seq")).as("op"),
+          max_by(col("price"), col("seq")).as("price"),
+          min_by(col("status"), when(col("status").isNotNull, col("seq"))).as("status"))
+        .select(cols: _*))
     }
-    // latest-op-wins per key in ONE keyed aggregation (no window sort):
-    // winner op/price by seq (a replayed batch ties with its own prior
-    // effect at EQUAL values, so either pick is byte-identical); status =
-    // the EARLIEST non-null status (q145's coalesce(base.status,
-    // op.status): the base wins while its lineage lives — U/D carry null)
-    base.unionByName(batch.select(cols: _*))
-      .groupBy("k")
-      .agg(
-        max(col("seq")).as("seq"),
-        max_by(col("op"), col("seq")).as("op"),
-        max_by(col("price"), col("seq")).as("price"),
-        min_by(col("status"), when(col("status").isNotNull, col("seq"))).as("status"))
-      .select(cols: _*)
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s26 — streaming per-source novelty monitor: the ingest twin of batch
     * q158. Each micro-batch of documents is split into corpus-wide FIRST
@@ -1419,10 +1348,7 @@ object Demos {
     * snapshot carries (a) the seen-set as xxhash64(text) keys — the 8-byte
     * state design the 100 TB posture calls for: state is O(distinct
     * texts) longs, never O(docs) strings — and (b) the cumulative
-    * per-source (n_docs, novel_docs) counters. Commit protocol = s14's
-    * versioned overwrite (a replayed batch reads only versions STRICTLY
-    * below its id and rewrites its own version byte-identically ⇒
-    * exactly-once under retries). Once the corpus has streamed in doc_id
+    * per-source (n_docs, novel_docs) counters. Once the corpus has streamed in doc_id
     * order, the final counters equal batch q158's exactly (q158 keys
     * first-occurrence on exact text; the hash key is collision-free on
     * real corpora at 64 bits and the spec's equality assertion would
@@ -1431,37 +1357,27 @@ object Demos {
   def s26NoveltyMonitor(spark: SparkSession, docs: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(noveltyBatch(spark, _, dir, _))
 
-  /** One novelty-monitor step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One novelty-monitor step. */
   private[graft] def noveltyBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val withH = batch.select(col("doc_id"), col("source"), xxhash64(col("text")).as("h"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val (seen, counts0) = prevVersions.lastOption match {
-      case Some(v) => (
-        spark.read.parquet(s"$dir/v=$v/seen"),
-        spark.read.parquet(s"$dir/v=$v/counts"))
-      case None => (
-        withH.select("h").limit(0),
-        withH.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), count(lit(1)).as("novel_docs")).limit(0))
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val withH = batch.select(col("doc_id"), col("source"), xxhash64(col("text")).as("h"))
+      val seen = s.prev("seen").getOrElse(withH.select("h").limit(0))
+      val counts0 = s.prev("counts").getOrElse(withH.groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), count(lit(1)).as("novel_docs")).limit(0))
+      // a batch may itself carry duplicates: only the batch's lowest doc_id
+      // per hash can be the corpus-wide first occurrence
+      val firstInBatch = withH.groupBy("h").agg(min("doc_id").as("first_id"))
+      val delta = withH
+        .join(firstInBatch, "h")
+        .join(seen.select(col("h"), lit(1).as("dup")), Seq("h"), "left")
+        .withColumn("novel", col("dup").isNull && col("doc_id") === col("first_id"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), count(when(col("novel"), 1)).as("novel_docs"))
+      s.write("counts", counts0.unionByName(delta).groupBy("source")
+        .agg(sum("n_docs").as("n_docs"), sum("novel_docs").as("novel_docs")))
+      s.write("seen", seen.unionByName(withH.select("h")).distinct())
     }
-    // a batch may itself carry duplicates: only the batch's lowest doc_id
-    // per hash can be the corpus-wide first occurrence
-    val firstInBatch = withH.groupBy("h").agg(min("doc_id").as("first_id"))
-    val delta = withH
-      .join(firstInBatch, "h")
-      .join(seen.select(col("h"), lit(1).as("dup")), Seq("h"), "left")
-      .withColumn("novel", col("dup").isNull && col("doc_id") === col("first_id"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), count(when(col("novel"), 1)).as("novel_docs"))
-    counts0.unionByName(delta).groupBy("source")
-      .agg(sum("n_docs").as("n_docs"), sum("novel_docs").as("novel_docs"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    seen.unionByName(withH.select("h")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/seen")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s27 — streaming burst monitor: the ingest twin of batch q169. Each
     * micro-batch's (event_type, hour) count delta merges into a versioned
@@ -1470,40 +1386,32 @@ object Demos {
     * types × time range, never event volume), and each commit publishes
     * the burst hours the merged table implies under q169's pure-integer
     * predicate (2·cnt·trail_n > 3·trail_sum over the trailing-5-hour
-    * frame). Commit protocol = s14's versioned overwrite ⇒ exactly-once
-    * under retries; once the whole stream is in, the published bursts
-    * equal batch q169 EXACTLY. */
+    * frame). Once the whole stream is in, the published bursts equal
+    * batch q169 EXACTLY. */
   def s27BurstMonitor(spark: SparkSession, events: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(burstBatch(spark, _, dir, _))
 
-  /** One burst-monitor step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One burst-monitor step. */
   private[graft] def burstBatch(
-      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val delta = graft.Tables.normalizeTs(batch)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
-      case None    => delta.limit(0)
+      spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = graft.Tables.normalizeTs(batch)
+        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
+        .agg(count(lit(1)).as("cnt"))
+      val counts = s.write("counts", s.prev("counts").getOrElse(delta.limit(0))
+        .unionByName(delta)
+        .groupBy("event_type", "hour").agg(sum("cnt").as("cnt")))
+      // publish the burst hours the merged snapshot implies — q169's
+      // integer predicate over the trailing-5-hour frame
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("hour").rowsBetween(-5, -1)
+      s.write("bursts", counts
+        .withColumn("trail_sum", sum("cnt").over(w))
+        .withColumn("trail_n", count(lit(1)).over(w))
+        .where(col("trail_n") >= 3 &&
+          col("cnt") * col("trail_n") * 2 > col("trail_sum") * 3)
+        .select("event_type", "hour", "cnt", "trail_sum", "trail_n"))
     }
-    base.unionByName(delta)
-      .groupBy("event_type", "hour").agg(sum("cnt").as("cnt"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    // publish the burst hours the merged snapshot implies — q169's
-    // integer predicate over the trailing-5-hour frame
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type").orderBy("hour").rowsBetween(-5, -1)
-    spark.read.parquet(s"$dir/v=$batchId/counts")
-      .withColumn("trail_sum", sum("cnt").over(w))
-      .withColumn("trail_n", count(lit(1)).over(w))
-      .where(col("trail_n") >= 3 &&
-        col("cnt") * col("trail_n") * 2 > col("trail_sum") * 3)
-      .select("event_type", "hour", "cnt", "trail_sum", "trail_n")
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/bursts")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s28 — streaming n-gram decontamination monitor: the ingest twin of
     * batch q188. The benchmark gram set is STATIC (eval sets change by
@@ -1514,39 +1422,32 @@ object Demos {
     * and the per-lang (n_docs, n_contaminated) delta merges into a
     * versioned exact snapshot (counts merge by sum — associative, the
     * s24 mergeable-summary argument; state is bounded by the language
-    * cardinality, never doc volume). Commit protocol = s14's versioned
-    * overwrite ⇒ exactly-once under retries; once the whole corpus is
-    * in, the snapshot equals batch q188's counts EXACTLY. */
+    * cardinality, never doc volume). Once the whole corpus is in, the
+    * snapshot equals batch q188's counts EXACTLY. */
   def s28DecontamMonitor(spark: SparkSession, docs: DataFrame,
       benchGrams: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(decontamBatch(spark, _, benchGrams, dir, _))
 
-  /** One decontamination step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One decontamination step. */
   private[graft] def decontamBatch(spark: SparkSession, batch: DataFrame,
-      benchGrams: DataFrame, dir: String, batchId: Long): Unit = {
-    val cand = graft.ops.Round10i.docToks(batch)
-      .where(col("doc_id") % 50 =!= 0)
-    val hit = graft.ops.Round10i.docGrams(batch)
-      .where(col("doc_id") % 50 =!= 0)
-      .join(broadcast(benchGrams.select("gram")), Seq("gram"), "left_semi")
-      .select("doc_id").distinct()
-    val delta = cand
-      .join(hit.withColumn("contam", lit(1)), Seq("doc_id"), "left")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("contam"), lit(0L)).as("n_contaminated"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
-      case None    => delta.limit(0)
+      benchGrams: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val cand = graft.ops.Round10i.docToks(batch)
+        .where(col("doc_id") % 50 =!= 0)
+      val hit = graft.ops.Round10i.docGrams(batch)
+        .where(col("doc_id") % 50 =!= 0)
+        .join(broadcast(benchGrams.select("gram")), Seq("gram"), "left_semi")
+        .select("doc_id").distinct()
+      val delta = cand
+        .join(hit.withColumn("contam", lit(1)), Seq("doc_id"), "left")
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          coalesce(sum("contam"), lit(0L)).as("n_contaminated"))
+      s.write("counts", s.prev("counts").getOrElse(delta.limit(0))
+        .unionByName(delta)
+        .groupBy("lang")
+        .agg(sum("n_docs").as("n_docs"), sum("n_contaminated").as("n_contaminated")))
     }
-    base.unionByName(delta)
-      .groupBy("lang")
-      .agg(sum("n_docs").as("n_docs"), sum("n_contaminated").as("n_contaminated"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s29 — streaming padding-waste monitor: the ingest twin of batch
     * q191. Each micro-batch aggregates its docs into the shared
@@ -1556,30 +1457,23 @@ object Demos {
     * max_len by max — all associative, the s24 mergeable-summary
     * argument; state is bounded by langs × rungs, never doc volume).
     * waste and pad_share are DERIVED per publish from the merged exact
-    * sums, so they equal batch q191's numbers at every version. Commit
-    * protocol = s14's versioned overwrite ⇒ exactly-once under retries;
-    * once the whole corpus is in, the snapshot equals batch q191 EXACTLY. */
+    * sums, so they equal batch q191's numbers at every version. Once the
+    * whole corpus is in, the snapshot equals batch q191 EXACTLY. */
   def s29PaddingMonitor(spark: SparkSession, docs: DataFrame,
       dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(paddingBatch(spark, _, dir, _))
 
-  /** One padding-waste step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One padding-waste step. */
   private[graft] def paddingBatch(spark: SparkSession, batch: DataFrame,
-      dir: String, batchId: Long): Unit = {
-    val delta = graft.ops.Round10j.padBucketCounts(batch)
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
-      case None    => delta.limit(0)
+      dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = graft.ops.Round10j.padBucketCounts(batch)
+      s.write("counts", s.prev("counts").getOrElse(delta.limit(0))
+        .unionByName(delta)
+        .groupBy("lang", "cap")
+        .agg(sum("n_docs").as("n_docs"), sum("sum_tok").as("sum_tok"),
+          max("max_len").as("max_len")))
     }
-    base.unionByName(delta)
-      .groupBy("lang", "cap")
-      .agg(sum("n_docs").as("n_docs"), sum("sum_tok").as("sum_tok"),
-        max("max_len").as("max_len"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s30 — streaming redaction monitor: the ingest twin of batch q200.
     * Each micro-batch masks digit runs in its props payloads and folds
@@ -1589,39 +1483,32 @@ object Demos {
     * TEMPLATE cardinality (what redaction is for: the payload space
     * collapses to its templates — 1/type on this fixture), never event
     * volume; q200's per-type rollup (incl. n_templates = row count per
-    * type) derives exactly from the snapshot at every version. Commit
-    * protocol = s14's versioned overwrite ⇒ exactly-once under retries. */
+    * type) derives exactly from the snapshot at every version. */
   def s30RedactionMonitor(spark: SparkSession, events: DataFrame,
       dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(redactionBatch(spark, _, dir, _))
 
-  /** One redaction step (factored out so the spec can replay a batch
-    * with the same batchId and assert byte-identical output). */
+  /** One redaction step. */
   private[graft] def redactionBatch(spark: SparkSession, batch: DataFrame,
-      dir: String, batchId: Long): Unit = {
-    val delta = batch
-      .select(col("event_type"), col("props"),
-        regexp_replace(col("props"), "[0-9]+", "#").as("red"))
-      .groupBy("event_type", "red")
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("props") =!= col("red"), 1L).otherwise(0L)).as("n_hit"),
-        sum(size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long"))
-          .as("n_runs"),
-        sum((length(col("props")) - length(col("red"))).cast("long") +
-          size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long"))
-          .as("n_chars_masked"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
-      case None    => delta.limit(0)
+      dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = batch
+        .select(col("event_type"), col("props"),
+          regexp_replace(col("props"), "[0-9]+", "#").as("red"))
+        .groupBy("event_type", "red")
+        .agg(count(lit(1)).as("n_events"),
+          sum(when(col("props") =!= col("red"), 1L).otherwise(0L)).as("n_hit"),
+          sum(size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long"))
+            .as("n_runs"),
+          sum((length(col("props")) - length(col("red"))).cast("long") +
+            size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long"))
+            .as("n_chars_masked"))
+      s.write("counts", s.prev("counts").getOrElse(delta.limit(0))
+        .unionByName(delta)
+        .groupBy("event_type", "red")
+        .agg(sum("n_events").as("n_events"), sum("n_hit").as("n_hit"),
+          sum("n_runs").as("n_runs"), sum("n_chars_masked").as("n_chars_masked")))
     }
-    base.unionByName(delta)
-      .groupBy("event_type", "red")
-      .agg(sum("n_events").as("n_events"), sum("n_hit").as("n_hit"),
-        sum("n_runs").as("n_runs"), sum("n_chars_masked").as("n_chars_masked"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s31 — streaming data-quality monitor: the ingest twin of batch
     * q202's constraint suite, covering its ROW-LOCAL constraints (FK
@@ -1633,44 +1520,37 @@ object Demos {
     * PK-uniqueness deliberately stays out: it is NOT mergeable from
     * per-batch counters (a duplicate can straddle batches) — in a live
     * pipeline it composes with the s8 keyed-dedup GroupState pattern
-    * instead. State = 3 counter rows; commit protocol = s14's versioned
-    * overwrite ⇒ exactly-once under retries. */
+    * instead. State = 3 counter rows. */
   def s31DqMonitor(spark: SparkSession, orders: DataFrame,
       customerDim: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(orders, dir)(dqBatch(spark, _, customerDim, dir, _))
 
-  /** One DQ step (factored out so the spec can replay a batch with the
-    * same batchId and assert byte-identical output). */
+  /** One DQ step. */
   private[graft] def dqBatch(spark: SparkSession, batch: DataFrame,
-      customerDim: DataFrame, dir: String, batchId: Long): Unit = {
-    val agg = batch.agg(
-      count(lit(1)).as("n"),
-      sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L))
-        .as("v_status"),
-      sum(when(col("o_orderdate") < lit("1990-01-01").cast("date") ||
-        col("o_orderdate") > lit("2005-12-31").cast("date"), 1L)
-        .otherwise(0L)).as("v_date"))
-    val fk = batch.join(broadcast(customerDim),
-        col("o_custkey") === col("c_custkey"), "left_anti")
-      .agg(count(lit(1)).as("v_fk"))
-    val delta = agg.crossJoin(fk).selectExpr(
-      """stack(3,
-        |  'orders_fk_customer', n, v_fk,
-        |  'orders_status_accepted', n, v_status,
-        |  'orders_date_range', n, v_date)
-        |AS (`constraint`, n_checked, n_violations)""".stripMargin)
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/counts")
-      case None    => delta.limit(0)
+      customerDim: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val agg = batch.agg(
+        count(lit(1)).as("n"),
+        sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L))
+          .as("v_status"),
+        sum(when(col("o_orderdate") < lit("1990-01-01").cast("date") ||
+          col("o_orderdate") > lit("2005-12-31").cast("date"), 1L)
+          .otherwise(0L)).as("v_date"))
+      val fk = batch.join(broadcast(customerDim),
+          col("o_custkey") === col("c_custkey"), "left_anti")
+        .agg(count(lit(1)).as("v_fk"))
+      val delta = agg.crossJoin(fk).selectExpr(
+        """stack(3,
+          |  'orders_fk_customer', n, v_fk,
+          |  'orders_status_accepted', n, v_status,
+          |  'orders_date_range', n, v_date)
+          |AS (`constraint`, n_checked, n_violations)""".stripMargin)
+      s.write("counts", s.prev("counts").getOrElse(delta.limit(0))
+        .unionByName(delta)
+        .groupBy("constraint")
+        .agg(sum("n_checked").as("n_checked"),
+          sum("n_violations").as("n_violations")))
     }
-    base.unionByName(delta)
-      .groupBy("constraint")
-      .agg(sum("n_checked").as("n_checked"),
-        sum("n_violations").as("n_violations"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s32 — streaming transition-matrix maintenance: the ingest twin of
     * batch q96/q210. State per version: the event-type transition COUNT
@@ -1681,55 +1561,47 @@ object Demos {
     * Batch-boundary transitions are stitched from the stored per-user
     * last event to the batch's per-user first. Assumes per-user
     * event-time-ordered arrival (compose with upstream watermark
-    * reordering otherwise — the s2 shape). Commit protocol = s14's
-    * versioned overwrite ⇒ exactly-once under retries; the stationary
-    * distribution is DERIVED from any committed version by q210's
+    * reordering otherwise — the s2 shape). The stationary distribution
+    * is DERIVED from any committed version by q210's
     * exact-integer power iteration (spec-proven equal). */
   def s32TransitionMonitor(spark: SparkSession, events: DataFrame,
       dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(transitionBatch(spark, _, dir, _))
 
-  /** One transition-matrix step (factored out so the spec can replay a
-    * batch with the same batchId and assert byte-identical output). */
+  /** One transition-matrix step. */
   private[graft] def transitionBatch(spark: SparkSession, batch: DataFrame,
-      dir: String, batchId: Long): Unit = {
-    val wAsc = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val wDesc = Window.partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val intra = batch
-      .withColumn("to_type", lead("event_type", 1).over(wAsc))
-      .where(col("to_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val marked = batch
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("rn", row_number().over(wAsc))
-      .withColumn("rnd", row_number().over(wDesc))
-    val first = marked.where(col("rn") === 1)
-      .select(col("user_id"), col("event_type").as("first_type"))
-    val lastE = marked.where(col("rnd") === 1)
-      .select("user_id", "ts", "event_id", "event_type")
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val (baseC, baseL) = prevVersions.lastOption match {
-      case Some(v) => (spark.read.parquet(s"$dir/v=$v/counts"),
-        spark.read.parquet(s"$dir/v=$v/last"))
-      case None => (intra.limit(0), lastE.limit(0))
+      dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val wAsc = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      val wDesc = Window.partitionBy("user_id")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      val intra = batch
+        .withColumn("to_type", lead("event_type", 1).over(wAsc))
+        .where(col("to_type").isNotNull)
+        .groupBy(col("event_type").as("from_type"), col("to_type"))
+        .agg(count(lit(1)).as("n"))
+      val marked = batch
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        .withColumn("rn", row_number().over(wAsc))
+        .withColumn("rnd", row_number().over(wDesc))
+      val first = marked.where(col("rn") === 1)
+        .select(col("user_id"), col("event_type").as("first_type"))
+      val lastE = marked.where(col("rnd") === 1)
+        .select("user_id", "ts", "event_id", "event_type")
+      val baseC = s.prev("counts").getOrElse(intra.limit(0))
+      val baseL = s.prev("last").getOrElse(lastE.limit(0))
+      val boundary = baseL
+        .select(col("user_id"), col("event_type").as("from_type"))
+        .join(first, Seq("user_id"))
+        .groupBy(col("from_type"), col("first_type").as("to_type"))
+        .agg(count(lit(1)).as("n"))
+      s.write("counts", baseC.unionByName(intra).unionByName(boundary)
+        .groupBy("from_type", "to_type").agg(sum("n").as("n")))
+      // max-merge the per-user last event: stored ∪ batch, keep the latest
+      s.write("last", baseL.unionByName(lastE)
+        .withColumn("rk", row_number().over(wDesc))
+        .where(col("rk") === 1).drop("rk"))
     }
-    val boundary = baseL
-      .select(col("user_id"), col("event_type").as("from_type"))
-      .join(first, Seq("user_id"))
-      .groupBy(col("from_type"), col("first_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    baseC.unionByName(intra).unionByName(boundary)
-      .groupBy("from_type", "to_type").agg(sum("n").as("n"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/counts")
-    // max-merge the per-user last event: stored ∪ batch, keep the latest
-    baseL.unionByName(lastE)
-      .withColumn("rk", row_number().over(wDesc))
-      .where(col("rk") === 1).drop("rk")
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/last")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s33 — streaming seasonal-profile maintenance: the ingest twin of
     * batch q215. State per version: the ≤168-row (dow, hr) cell table
@@ -1737,35 +1609,28 @@ object Demos {
     * both sum-mergeable, so every version's derived profile (avg =
     * decimal-sum→double ÷ n, load ratio = n·168/total) equals batch
     * q215 over everything ingested. Day-of-week is the q215 arithmetic
-    * form ((epoch_days + 4) % 7), never an engine calendar function.
-    * Commit protocol = s14's versioned overwrite ⇒ exactly-once. */
+    * form ((epoch_days + 4) % 7), never an engine calendar function. */
   def s33SeasonalMonitor(spark: SparkSession, events: DataFrame,
       dir: String): StreamingQuery =
     VersionedSink.start(events, dir)(seasonalBatch(spark, _, dir, _))
 
-  /** One seasonal step (factored out so the spec can replay a batch with
-    * the same batchId and assert byte-identical output). */
+  /** One seasonal step. */
   private[graft] def seasonalBatch(spark: SparkSession, batch: DataFrame,
-      dir: String, batchId: Long): Unit = {
-    val delta = batch.select(
-        expr("(datediff(CAST(ts AS DATE), DATE '1970-01-01') + 4) % 7")
-          .cast("long").as("dow"),
-        hour(col("ts")).cast("long").as("hr"),
-        col("value"))
-      .groupBy("dow", "hr")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(graft.Det.D)).as("sum_v"))
-    val prevVersions = VersionedSink.committed(spark, dir, "v=", batchId)
-    val base = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v/cells")
-      case None    => delta.limit(0)
+      dir: String, batchId: Long): Unit =
+    VersionedSink.snapshot(spark, dir, batchId) { s =>
+      val delta = batch.select(
+          expr("(datediff(CAST(ts AS DATE), DATE '1970-01-01') + 4) % 7")
+            .cast("long").as("dow"),
+          hour(col("ts")).cast("long").as("hr"),
+          col("value"))
+        .groupBy("dow", "hr")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(graft.Det.D)).as("sum_v"))
+      s.write("cells", s.prev("cells").getOrElse(delta.limit(0))
+        .unionByName(delta)
+        .groupBy("dow", "hr")
+        .agg(sum("n").as("n"), sum("sum_v").cast(graft.Det.D).as("sum_v")))
     }
-    base.unionByName(delta)
-      .groupBy("dow", "hr")
-      .agg(sum("n").as("n"), sum("sum_v").cast(graft.Det.D).as("sum_v"))
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId/cells")
-    VersionedSink.pruneVersions(spark, dir, "v=", batchId)
-  }
 
   /** s34 — streaming vector ingest: the ANN family's ingest twin (the q75
     * history-probe pattern applied to embeddings). The coarse quantizer is
@@ -1775,18 +1640,14 @@ object Demos {
     * assigns its vectors to the persisted centroids (`Ann.assignVectors`:
     * one broadcast of the nlist-row table + a per-vector argmin — the
     * batch build's exact math and tie-breaks) and appends the assigned
-    * rows as the index partition `b=<batchId>`.
-    *
-    * Exactly-once falls out of determinism + idempotence, like s14: a
-    * replayed batch N overwrites ONLY its own `b=N` directory with
-    * byte-identical rows (assignment is deterministic given the frozen
-    * centroids), never touching other partitions — so the commit is the
-    * directory overwrite and no version chain is needed. Per-batch work is
+    * rows as this batch's partition of the index log
+    * ([[VersionedSink.log]]; assignment is deterministic given the frozen
+    * centroids, so a replay rewrites identical rows). Per-batch work is
     * O(batch), never O(index): ingest writes deltas, not snapshots.
     *
     * State: the frozen centroid table (nlist rows — O(1) in corpus size);
     * the index itself is DATA in the partitioned table, not stream state.
-    * Once the whole corpus has streamed, `ingestedIndex(dir)` equals the
+    * Once the whole corpus has streamed, the log view of `dir` equals the
     * assignment pass of `Ann.ivfIndex` on the same corpus with the same
     * centroids, so ingest-then-query == batch q62 (StreamingDemosSpec
     * locks equality, replay idempotence, and the bounded-state claim). */
@@ -1794,8 +1655,7 @@ object Demos {
       centroids: DataFrame, dir: String): StreamingQuery =
     VersionedSink.start(vectors, dir)(vectorIngestBatch(_, centroids, dir, _))
 
-  /** One ingest step (factored out so the spec can replay a batch with the
-    * same batchId and assert byte-identical output). */
+  /** One ingest step. */
   private[graft] def vectorIngestBatch(batch: DataFrame,
       centroids: DataFrame, dir: String, batchId: Long): Unit = {
     val emb = batch
@@ -1803,15 +1663,9 @@ object Demos {
       // guardedNorm2: a malformed vector fails the batch loudly instead of
       // silently vanishing from the index (ADVICE round 11)
       .withColumn("n2", graft.ops.Ann.guardedNorm2(col("e"), col("vec_id")))
-    graft.ops.Ann.assignVectors(emb, centroids)
-      .write.mode("overwrite").parquet(s"$dir/b=$batchId")
+    VersionedSink.log(batch.sparkSession, dir, batchId)
+      .write("", graft.ops.Ann.assignVectors(emb, centroids))
   }
-
-  /** The queryable view of an s34 index directory: the union of every
-    * committed batch partition, schema-identical to `Ann.ivfIndex`'s
-    * assignment output (feed it straight to `Ann.ivfTopKLargeQ`). */
-  private[graft] def ingestedIndex(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).drop("b")
 
   /** s35 — semantic dedup on ingest: q231's streaming twin (SemDeDup,
     * Abbas et al. 2023), the s34 posture applied to dedup. The coarse
@@ -1831,11 +1685,9 @@ object Demos {
     * rule is the paper's greedy (kept-only comparisons) and the batch
     * rule can drop strictly more — the documented semantic difference.
     *
-    * Exactly-once falls out of determinism + idempotence (the s14/s34
-    * argument): the verdict for batch N is a pure function of (frozen
-    * centroids, committed partitions b < N, batch rows), so a replayed
-    * batch N overwrites ONLY its own `kept/b=N` + `drops/b=N` directories
-    * with byte-identical rows. Per-batch cost is O(batch × cluster
+    * Verdicts go to the `kept` and `drops` logs; the verdict for batch N
+    * is a pure function of (frozen centroids, committed `kept` partitions
+    * below N, batch rows). Per-batch cost is O(batch × cluster
     * population), never O(index): the committed side is read only for
     * the ≤nlist clusters present in the batch (broadcast semi-join
     * pushdown), and at 100 TB the kept table is list_id-partitioned so
@@ -1847,11 +1699,10 @@ object Demos {
       tau: Double = 0.8): StreamingQuery =
     VersionedSink.start(vectors, dir)(semanticDedupBatch(_, centroids, nlist, dir, _, tau))
 
-  /** One dedup-admission step (factored out so the spec can replay a
-    * batch with the same batchId and assert byte-identical output). */
+  /** One dedup-admission step. */
   private[graft] def semanticDedupBatch(batch: DataFrame, centroids: DataFrame,
       nlist: Int, dir: String, batchId: Long, tau: Double): Unit = {
-    val spark = batch.sparkSession
+    val log = VersionedSink.log(batch.sparkSession, dir, batchId)
     val qv = graft.ops.Round11.quantized(batch.select(col("vec_id"), col("embedding")))
     // checkpointed: consumed by the committed join, BOTH sides of the
     // batch-local pair join, and the kept write (the dupClusters rule)
@@ -1859,14 +1710,7 @@ object Demos {
       .select(col("vec_id"), col("list_id"), col("v").cast("array<double>").as("vd"))
       .withColumn("n2", DotProduct.norm2(col("vd")))
       .localCheckpoint()
-    val keptDir = s"$dir/kept"
-    // committed prefix = partitions b < batchId ONLY (the s14 version
-    // rule): on restart the engine replays batch N while b=N already
-    // exists on disk — reading it would compare the batch against itself
-    val prev = VersionedSink.committed(spark, keptDir, "b=", batchId)
-    val committed =
-      if (prev.isEmpty) asg.limit(0)
-      else spark.read.parquet(prev.map(p => s"$keptDir/b=$p"): _*)
+    val committed = log.committed("kept").getOrElse(asg.limit(0))
     // cluster pushdown: only the ≤nlist clusters present in this batch
     val clusters = asg.select("list_id").distinct()
     val commIn = committed.join(broadcast(clusters), Seq("list_id"))
@@ -1888,18 +1732,10 @@ object Demos {
     val drops = dropsVs(commIn, lowerIdOnly = false)
       .unionAll(dropsVs(batchLower, lowerIdOnly = true))
       .distinct()
-    asg.join(drops, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$keptDir/b=$batchId")
-    asg.join(drops, Seq("vec_id"), "left_semi")
-      .select("vec_id", "list_id")
-      .write.mode("overwrite").parquet(s"$dir/drops/b=$batchId")
+    log.write("kept", asg.join(drops, Seq("vec_id"), "left_anti"))
+    log.write("drops", asg.join(drops, Seq("vec_id"), "left_semi")
+      .select("vec_id", "list_id"))
   }
-
-  /** The verdict views of an s35 directory. */
-  private[graft] def semanticKept(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/kept").drop("b")
-  private[graft] def semanticDrops(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/drops").drop("b")
 
   /** s36 — CDC chunk dedup on ingest: q236's streaming twin (the s35
     * admission posture applied to storage-level text dedup). Each
@@ -1907,20 +1743,18 @@ object Demos {
     * (`Round12c.cdcChunkTable` — same rolling hash, same boundary rule),
     * and each chunk occurrence gets a verdict: DUPLICATE iff its chunk
     * key was committed by an earlier batch OR a batch-mate precedes it in
-    * the (doc_id, chunk_id) admission order; else NOVEL. Novel keys are
-    * committed to `chunks/b=N`, per-doc savings rows to `stats/b=N`.
+    * the (doc_id, chunk_id) admission order; else NOVEL. Novel keys go to
+    * the `chunks` log, per-doc savings rows to the `stats` log.
     *
     * Batching-invariance: when batch boundaries respect doc_id order
     * (admission order is (batchId, doc_id)), the verdict for every chunk
     * occurrence equals the sequential doc_id-order scan's — so the union
     * of per-doc stats is a pure function of the corpus, independent of
     * HOW it was batched (StreamingDemosSpec locks 1-batch == 3-batch ==
-    * the JVM sequential replay). Exactly-once is the s14/s35 argument:
-    * batch N's output is a pure function of (committed b < N, batch
-    * rows), so a replay overwrites `chunks/b=N` + `stats/b=N` with
-    * content-identical rows (spec-locked via sorted-row compare; parquet
-    * file bytes/row order across a replay are not pinned — idempotence
-    * is at the row-content level). No stream state: cross-batch knowledge is the
+    * the JVM sequential replay). A replay rewrites content-identical rows
+    * (spec-locked via sorted-row compare; parquet file bytes/row order
+    * across a replay are not pinned — idempotence is at the row-content
+    * level). No stream state: cross-batch knowledge is the
     * committed chunk-key store, read per batch (at 100 TB it is
     * key-partitioned parquet and the membership probe is a broadcast of
     * the BATCH's keys against it — the batch side is always the small
@@ -1930,24 +1764,17 @@ object Demos {
       dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(cdcDedupBatch(_, dir, _))
 
-  /** One CDC-dedup admission step (factored out so the spec can replay a
-    * batch with the same batchId and assert byte-identical output). */
+  /** One CDC-dedup admission step. */
   private[graft] def cdcDedupBatch(batch: DataFrame, dir: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
+    val log = VersionedSink.log(batch.sparkSession, dir, batchId)
     // checkpointed: consumed by the novel-key write AND the stats rollup
     // (un-checkpointed, the chunker windows would replay per consumer)
     val chunks = graft.ops.Round12c.cdcChunkTable(batch)
       .withColumn("ck", md5(col("ctext")))
       .localCheckpoint()
-    val chunkDir = s"$dir/chunks"
-    // committed prefix = partitions b < batchId ONLY (the s14 version
-    // rule): a replayed batch must not compare against its own output
-    val prev = VersionedSink.committed(spark, chunkDir, "b=", batchId)
-    val committed =
-      if (prev.isEmpty) chunks.select(col("ck")).limit(0)
-      else spark.read.parquet(prev.map(p => s"$chunkDir/b=$p"): _*)
-        .select(col("ck"))
+    val committed = log.committed("chunks").map(_.select(col("ck")))
+      .getOrElse(chunks.select(col("ck")).limit(0))
     // batch-local admission order: first occurrence per key by
     // (doc_id, chunk_id); later occurrences are duplicates even if novel
     val w = Window.partitionBy("ck").orderBy("doc_id", "chunk_id")
@@ -1956,27 +1783,21 @@ object Demos {
       .join(committed.withColumn("seen", lit(1)).distinct(), Seq("ck"), "left")
       .withColumn("is_dup", col("seen").isNotNull || col("rnk") > 1)
       .localCheckpoint()
-    marked.where(!col("is_dup")).select("ck")
-      .write.mode("overwrite").parquet(s"$chunkDir/b=$batchId")
-    marked.groupBy("doc_id", "source")
+    log.write("chunks", marked.where(!col("is_dup")).select("ck"))
+    log.write("stats", marked.groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_chunks"),
         sum(col("ctoks")).as("n_toks"),
         sum(when(col("is_dup"), 1L).otherwise(0L)).as("dup_chunks"),
-        sum(when(col("is_dup"), col("ctoks")).otherwise(0L)).as("dup_toks"))
-      .write.mode("overwrite").parquet(s"$dir/stats/b=$batchId")
+        sum(when(col("is_dup"), col("ctoks")).otherwise(0L)).as("dup_toks")))
   }
-
-  /** The verdict view of an s36 directory: per-doc dedup stats. */
-  private[graft] def cdcStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/stats").drop("b")
 
   /** s37 — chunk-store COMPACTION: the s14 snapshot-upsert posture applied
     * to the CDC chunk store (round-13; VERDICT r12 #6). s36 admits novel
     * chunks but nothing reclaims a chunk superseded when a doc is
     * RE-ingested with edited text. s37's ingest records, per batch, BOTH
-    * the novel-chunk store partition (`store/b=N` — content-addressed, the
-    * s36 admission rule) AND the batch docs' full chunk REFERENCE lists
-    * (`refs/b=N`); a doc's latest ref set supersedes its earlier ones (the
+    * the novel chunks (the `store` log — content-addressed, the s36
+    * admission rule) AND the batch docs' full chunk REFERENCE lists (the
+    * `refs` log); a doc's latest ref set supersedes its earlier ones (the
     * s14 latest-version-wins rule at doc granularity). compactChunkStore()
     * then rebuilds the live store as a PURE FUNCTION of the committed
     * directory: live ck = referenced by some doc's latest ref set; every
@@ -1984,9 +1805,8 @@ object Demos {
     * surgical — an edit kills only the chunks overlapping the edit window
     * (the resync property the s36 spec locks), so re-ingesting a
     * lightly-edited doc reclaims O(edit) chunks, not O(doc).
-    * Exactly-once: batch writes are idempotent `b=N` overwrites (s36's
-    * argument); compact writes `compacted/v=V` with V = max committed
-    * batch — a replayed compact rewrites content-identical rows
+    * Compaction writes snapshot version V = max committed batch under
+    * `compacted` — a replayed compact rewrites content-identical rows
     * (spec-locked via sorted-row compare). At 100 TB: refs and store are
     * ck-partitioned parquet, `latest` is a doc-keyed rollup, the live set
     * is one semi-join — all hash shuffles, no windows wider than a doc. */
@@ -1994,35 +1814,28 @@ object Demos {
       dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(chunkStoreBatch(_, dir, _))
 
-  /** One chunk-store admission step (factored so the spec can replay a
-    * batch with the same batchId and assert content-identical output). */
+  /** One chunk-store admission step. */
   private[graft] def chunkStoreBatch(batch: DataFrame, dir: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
+    val log = VersionedSink.log(batch.sparkSession, dir, batchId)
     val chunks = graft.ops.Round12c.cdcChunkTable(batch)
       .withColumn("ck", md5(col("ctext")))
       .localCheckpoint() // refs write + novel-store write
-    chunks.select("doc_id", "source", "chunk_id", "ck", "ctoks")
-      .write.mode("overwrite").parquet(s"$dir/refs/b=$batchId")
-    val storeDir = s"$dir/store"
-    val prev = VersionedSink.committed(spark, storeDir, "b=", batchId)
-    val committed =
-      if (prev.isEmpty) chunks.select(col("ck")).limit(0)
-      else spark.read.parquet(prev.map(p => s"$storeDir/b=$p"): _*)
-        .select(col("ck"))
+    log.write("refs", chunks.select("doc_id", "source", "chunk_id", "ck", "ctoks"))
+    val committed = log.committed("store").map(_.select(col("ck")))
+      .getOrElse(chunks.select(col("ck")).limit(0))
     val w = Window.partitionBy("ck").orderBy("doc_id", "chunk_id")
-    chunks.withColumn("rnk", row_number().over(w))
+    log.write("store", chunks.withColumn("rnk", row_number().over(w))
       .join(committed.withColumn("seen", lit(1)).distinct(), Seq("ck"), "left")
       .where(col("seen").isNull && col("rnk") === 1)
-      .select("ck", "ctext", "ctoks")
-      .write.mode("overwrite").parquet(s"$storeDir/b=$batchId")
+      .select("ck", "ctext", "ctoks"))
   }
 
   /** s38 — quality-keeper admission: q245's streaming twin (the keeper
     * rule real curation stacks run, applied at ingest). Cluster key =
     * (lang, source); every batch scores its docs with q50's quality
     * expression (`Round13.withQuality` — the batch query's EXACT
-    * arithmetic) and writes a FULL keeper snapshot `keepers/b=N` =
+    * arithmetic) and writes a FULL keeper snapshot under `keepers` =
     * argmax(quality, tie min doc_id) over (latest committed snapshot ∪
     * batch) — the s14 versioned-snapshot posture, so a better-quality
     * member arriving later REPLACES the committed keeper, and the
@@ -2032,9 +1845,7 @@ object Demos {
     * equality join → min id): no struct min/max (the SortAggregate
     * trap), no stream state — cross-batch knowledge is the committed
     * snapshot, keeper-count-sized (≤ |clusters| rows, broadcast-scale at
-    * any corpus size). History is bounded too: each snapshot folds every
-    * earlier one, so after a commit snapshots older than the predecessor
-    * are pruned (`VersionedSink.pruneVersions`) — at most two on disk.
+    * any corpus size).
     *
     * LATEST-VERSION-WINS (round 15 — unified with s37's chunk-store
     * rule): the snapshot carries each keeper's admission batch as `ver`,
@@ -2056,60 +1867,49 @@ object Demos {
       dir: String): StreamingQuery =
     VersionedSink.start(docs, dir)(qualityKeeperBatch(_, dir, _))
 
-  /** One keeper-admission step (factored so the spec can replay a batch
-    * with the same batchId and assert content-identical output). */
+  /** One keeper-admission step. */
   private[graft] def qualityKeeperBatch(batch: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val cand = graft.ops.Round13.withQuality(batch)
-      .select(col("lang"), col("source"), col("doc_id"), col("quality"),
-        lit(batchId).as("ver"))
-    val kdir = s"$dir/keepers"
-    // latest committed snapshot ONLY (it already folds everything earlier
-    // — the s14 version rule; a replayed batch must not see its own write)
-    val all0 = (VersionedSink.committed(spark, kdir, "b=", batchId).lastOption match {
-      case Some(v) => spark.read.parquet(s"$kdir/b=$v")
-        .select("lang", "source", "doc_id", "quality", "ver")
-      case None => cand.limit(0)
-    }).unionAll(cand)
-    // latest-version-wins per doc BEFORE the argmax (s37's rule): a
-    // re-ingested edit replaces the committed row — demotion included.
-    // Two-pass primitive form, same as the argmax below (no struct
-    // max_by — the SortAggregate trap); (doc_id, ver) is unique because
-    // the snapshot holds one row per doc and a batch ingests each doc
-    // at most once (the shared per-batch ingest contract).
-    val all = all0
-      .join(all0.groupBy("doc_id").agg(max("ver").as("ver")),
-        Seq("doc_id", "ver"))
-      .localCheckpoint() // both argmax passes + the ver rejoin
-    val mx = all.groupBy("lang", "source").agg(max("quality").as("q"))
-    all.join(mx, Seq("lang", "source"))
-      .where(col("quality") === col("q"))
-      .groupBy("lang", "source", "q").agg(min("doc_id").as("doc_id"))
-      .select(col("lang"), col("source"), col("doc_id"), col("q").as("quality"))
-      // rejoin the kept doc's ver (doc_id is unique in `all`) so the next
-      // batch's latest-version re-key sees the keeper's true admission age
-      .join(all.select(col("doc_id"), col("ver")), Seq("doc_id"))
-      .select("lang", "source", "doc_id", "quality", "ver")
-      .write.mode("overwrite").parquet(s"$kdir/b=$batchId")
-    VersionedSink.pruneVersions(spark, kdir, "b=", batchId)
-  }
+      batchId: Long): Unit =
+    VersionedSink.snapshot(batch.sparkSession, s"$dir/keepers", batchId) { s =>
+      val cand = graft.ops.Round13.withQuality(batch)
+        .select(col("lang"), col("source"), col("doc_id"), col("quality"),
+          lit(batchId).as("ver"))
+      // the latest committed snapshot already folds everything earlier
+      val all0 = s.prev("").map(_.select("lang", "source", "doc_id", "quality", "ver"))
+        .getOrElse(cand.limit(0)).unionAll(cand)
+      // latest-version-wins per doc BEFORE the argmax (s37's rule): a
+      // re-ingested edit replaces the committed row — demotion included.
+      // Two-pass primitive form, same as the argmax below (no struct
+      // max_by — the SortAggregate trap); (doc_id, ver) is unique because
+      // the snapshot holds one row per doc and a batch ingests each doc
+      // at most once (the shared per-batch ingest contract).
+      val all = all0
+        .join(all0.groupBy("doc_id").agg(max("ver").as("ver")),
+          Seq("doc_id", "ver"))
+        .localCheckpoint() // both argmax passes + the ver rejoin
+      val mx = all.groupBy("lang", "source").agg(max("quality").as("q"))
+      s.write("", all.join(mx, Seq("lang", "source"))
+        .where(col("quality") === col("q"))
+        .groupBy("lang", "source", "q").agg(min("doc_id").as("doc_id"))
+        .select(col("lang"), col("source"), col("doc_id"), col("q").as("quality"))
+        // rejoin the kept doc's ver (doc_id is unique in `all`) so the next
+        // batch's latest-version re-key sees the keeper's true admission age
+        .join(all.select(col("doc_id"), col("ver")), Seq("doc_id"))
+        .select("lang", "source", "doc_id", "quality", "ver"))
+    }
 
   /** The verdict view of an s38 directory: the latest keeper snapshot. */
-  private[graft] def keeperView(spark: SparkSession, dir: String): DataFrame = {
-    val kdir = s"$dir/keepers"
-    val vmax = VersionedSink.committed(spark, kdir, "b=", Long.MaxValue).max
-    spark.read.parquet(s"$kdir/b=$vmax")
-  }
+  private[graft] def keeperView(spark: SparkSession, dir: String): DataFrame =
+    VersionedSink.latest(spark, s"$dir/keepers")
 
   /** Rebuild the live chunk store from the committed directory (a pure
     * function of refs + store — rerunnable, content-identical): writes
-    * `compacted/v=V` (the live store) and RETURNS the reclaimed rows
+    * the live store as version V of `compacted` and RETURNS the reclaimed rows
     * (ck, ctoks) — the chunks no doc's latest version references. */
   private[graft] def compactChunkStore(spark: SparkSession, dir: String): DataFrame = {
     val refs = spark.read.parquet(s"$dir/refs")
       .withColumn("b", col("b").cast("long"))
-    val store = spark.read.parquet(s"$dir/store").drop("b")
+    val store = VersionedSink.logView(spark, dir, "store")
       .localCheckpoint() // live write + reclaim anti-join
     val vmax = refs.agg(max("b")).collect()(0).getLong(0)
     val latest = refs.groupBy("doc_id").agg(max("b").as("b"))
@@ -2117,13 +1917,13 @@ object Demos {
       .select("ck").distinct()
       .localCheckpoint() // live write + reclaim anti-join
     store.join(live, Seq("ck"), "left_semi")
-      .write.mode("overwrite").parquet(s"$dir/compacted/v=$vmax")
+      .write.mode("overwrite").parquet(VersionedSink.versionDir(s"$dir/compacted", vmax))
     store.join(live, Seq("ck"), "left_anti").select("ck", "ctoks")
   }
 
   /** The LIVE view of an s25 snapshot version: tombstones excluded. */
   private[graft] def cdcLiveView(spark: SparkSession, dir: String, version: Long): DataFrame =
-    spark.read.parquet(s"$dir/v=$version")
+    spark.read.parquet(VersionedSink.versionDir(dir, version))
       .where(col("op") =!= "D")
       .select("k", "seq", "price", "status")
 

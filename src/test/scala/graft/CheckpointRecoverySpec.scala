@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.StreamStart
+import TempDirs.versions
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -169,8 +170,6 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("maxFilesPerTrigger", "1") // one file per batch
         .parquet(root.resolve("in3").toString),
       dir)
-    def versions: Set[String] =
-      new java.io.File(dir).list().filter(_.startsWith("v=")).toSet
     // users 1-3 get newer rows in later files; user 4 only appears late
     val files = Seq(
       Seq(ev(1, 0, 1, "view"), ev(2, 1, 2, "view"), ev(3, 2, 3, "click")),
@@ -182,7 +181,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     files.take(2).zipWithIndex.foreach { case (f, i) => addFile(s"f$i.parquet", f, "in3") }
     val q1 = startS14()
     try q1.processAllAvailable() finally StreamStart.stop(q1)
-    assert(versions == Set("v=0", "v=1"))
+    assert(versions(dir) == Seq(0L, 1L))
     // dropping batch 1's commit marker is a crash between the sink's
     // overwrite of v=1 and the engine's commit: the restart must replay
     // batch 1 through the wrapper's checkpoint against v=0 only
@@ -197,7 +196,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
     val oneShot = root.resolve("s14_oneshot").toString
     streaming.Demos.upsertBatch(spark, files.flatten.toDF(), oneShot, 0L)
-    assert(versions == Set("v=2", "v=3"), s"history not pruned to two versions: $versions")
+    assert(versions(dir) == Seq(2L, 3L), s"history not pruned to two versions: ${versions(dir)}")
     assert(sorted(spark.read.parquet(s"$dir/v=3")) == sorted(spark.read.parquet(s"$oneShot/v=0")),
       "restarted stream's snapshot diverged from the one-shot upsert")
   }

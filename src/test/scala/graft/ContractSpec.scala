@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * time zone, extensions and log level), every program stream starts
   * through StreamStart and every suite stops its streams through it, the
   * k-means step lives only in ops/Lloyd, the sign-hash kernel only in
-  * plans/SignHash, and s1's batch body runs its one job without per-batch
-  * closure cleaning.
+  * plans/SignHash, the versioned-sink layout only in
+  * streaming/VersionedSink, and s1's batch body runs its one job without
+  * per-batch closure cleaning.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -219,6 +220,24 @@ class ContractSpec extends AnyFunSuite {
       if re.r.findFirstIn(line).isDefined
     } yield s"$p:${n + 1}: $what"
     assert(hits.isEmpty, s"${hits.size} sign-hash copies outside SignHash:\n  ${hits.mkString("\n  ")}")
+    assert(Files.exists(owner))
+  }
+
+  test("the versioned-sink layout lives only in streaming/VersionedSink.scala") {
+    // 16 snapshot steps and 3 ingest logs had each spelled out the version
+    // paths, the read-below rule and the prune; a step that builds its own
+    // path can read its own half-written output on replay
+    val owner = Paths.get("src/main/scala/graft/streaming/VersionedSink.scala")
+    val layout = raw"""/v=|"v="|/b=|"b="""".r
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toVector
+      if p.toString.endsWith(".scala") && p != owner
+      (line, n) <- read(p.toString).split("\n").zipWithIndex
+      if !Seq("//", "*", "/*").exists(line.trim.startsWith)
+      if layout.findFirstIn(line).isDefined
+    } yield s"$p:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"${hits.size} version path(s) outside VersionedSink:\n  ${hits.mkString("\n  ")}")
     assert(Files.exists(owner))
   }
 

@@ -17,6 +17,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming._
+import TempDirs.versions
 
 /** An event whose value may be null, and whose user_id is an int (s1 casts
   * it to the alert's long). */
@@ -593,7 +594,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val queries = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val got = ops.Ann.ivfTopKLargeQ(
-        Demos.ingestedIndex(spark, dir), cent, queries, k = 5, nprobe = 16)
+        VersionedSink.logView(spark, dir, ""), cent, queries, k = 5, nprobe = 16)
       .select(col("qid"), col("vec_id").as("vid"), col("cos_sim"), col("rnk"))
       .orderBy("qid", "rnk").collect().toSeq
     val want = SparkEntry.queries("q62_ivf_ann")(spark, sf001).collect().toSeq
@@ -686,11 +687,11 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(dropsBatchRule == dropsJ, "online and batch rules diverged on chain-free data")
     assert(dropsJ.nonEmpty && dropsJ.contains(20005L), "plant failed to fire")
 
-    val gotDrops = Demos.semanticDrops(spark, dir)
+    val gotDrops = VersionedSink.logView(spark, dir, "drops")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(gotDrops == dropsJ,
       s"missing=${(dropsJ -- gotDrops).take(3)} extra=${(gotDrops -- dropsJ).take(3)}")
-    val gotKept = Demos.semanticKept(spark, dir)
+    val gotKept = VersionedSink.logView(spark, dir, "kept")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(gotKept == kept.map(_._1).toSet)
 
@@ -739,7 +740,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         batches.foreach { b => input.addData(b); runToCompletion(q) }
         assert(q.lastProgress.stateOperators.isEmpty) // stateless by design
       } finally StreamStart.stop(q)
-      dir -> Demos.cdcStats(spark, dir).collect().map(r =>
+      dir -> VersionedSink.logView(spark, dir, "stats").collect().map(r =>
         (r.getAs[Long]("doc_id"), r.getAs[String]("source")) ->
           (r.getAs[Long]("n_chunks"), r.getAs[Long]("n_toks"),
             r.getAs[Long]("dup_chunks"), r.getAs[Long]("dup_toks"))).toMap
@@ -874,9 +875,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(oneShot == expected, "1-batch snapshot diverged from the JVM argmax fold")
     assert(twoWay == expected, "2-batch snapshot diverged — admission is not batching-invariant")
     // keeper history is pruned: only the latest snapshot and its predecessor survive
-    def keeperSnapshots(d: String): Set[String] =
-      new java.io.File(s"$d/keepers").list().filter(_.startsWith("b=")).toSet
-    assert(keeperSnapshots(dir2) == Set("b=0", "b=1"))
+    assert(versions(s"$dir2/keepers") == Seq(0L, 1L))
 
     // a later better member REPLACES the committed keeper: re-ingest the
     // worst (lang, source) member boosted past its keeper (distinct-token
@@ -910,7 +909,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         Seq.fill(100)("the").mkString(" "))
       assert(quality(worse.text) < quality(boosted.text))
       Demos.qualityKeeperBatch(Seq(worse).toDF(), dirB, 2L)
-      assert(keeperSnapshots(dirB) == Set("b=1", "b=2"), "keeper history not pruned")
+      assert(versions(s"$dirB/keepers") == Seq(1L, 2L), "keeper history not pruned")
       val afterDemote = Demos.keeperView(spark, dirB).collect()
         .map(r => (r.getAs[String]("lang"), r.getAs[String]("source")) ->
           (r.getAs[Long]("doc_id"), r.getAs[Double]("quality"))).toMap
@@ -926,10 +925,10 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
 
     // replay batch 1 with the same batchId: content-identical (exactly-once)
     import spark.implicits._
-    val before = spark.read.parquet(s"$dir2/keepers/b=1").collect()
+    val before = spark.read.parquet(s"$dir2/keepers/v=1").collect()
       .map(_.toString).sorted.toSeq
     Demos.qualityKeeperBatch(docs.drop(20).toDF(), dir2, 1L)
-    val after = spark.read.parquet(s"$dir2/keepers/b=1").collect()
+    val after = spark.read.parquet(s"$dir2/keepers/v=1").collect()
       .map(_.toString).sorted.toSeq
     assert(before == after)
   }
@@ -1029,8 +1028,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s16DriftMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
     def driftRow(v: Long) = spark.read.parquet(s"$dir/v=$v/drift").collect()(0)
     val got = driftRow(last)
@@ -1042,9 +1040,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       s"streamed drift $got != batch q92 $want")
     // history is pruned to at most two retained versions (predecessor kept
     // for replay), and the surviving rows are well-formed monitors
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last),
       s"expected pruned history (v=${last - 1}, v=$last), got $surviving")
     val l1s = surviving.map(driftRow)
@@ -1071,8 +1067,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s21CmsMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
     def audit(v: Long) = spark.read.parquet(s"$dir/v=$v/audit").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -1083,9 +1078,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     // the counter snapshot stays d*w-bounded, history is pruned to two
     // retained versions, and est >= exact holds on every surviving version
     assert(spark.read.parquet(s"$dir/v=$last/counters").count() <= 4 * 256)
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last),
       s"expected pruned history (v=${last - 1}, v=$last), got $surviving")
     surviving.foreach(v => audit(v).foreach { case (u, ex, est, over) =>
@@ -1113,8 +1106,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s22HeavyHittersMonitor(spark, input.toDF(), dir, nb, m)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
     def state(v: Long): (Map[(Long, Long), Long], Map[Long, Long]) = (
       spark.read.parquet(s"$dir/v=$v/counters").collect()
@@ -1162,9 +1154,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(gotE.values.exists(_ > 0L), "no eviction happened — m too large for the fixture")
 
     // pruned history + idempotent replay
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     Demos.hhBatch(spark, chunks.last.toSeq.toDF(), dir, last, nb, m)
     assert(state(last) == ((gotC, gotE)),
@@ -1184,8 +1174,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s23DriftMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def decile(e: Event): Long =
@@ -1217,9 +1206,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     }
     // bounded state (≤ 10 deciles each) and pruned history
     assert(gotHist.size <= 10 && gotRef.size <= 10)
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     // replay the committed last batch (post-crash re-execution)
     Demos.valueDriftBatch(spark, chunks.last.toSeq.toDF(), dir, last)
@@ -1282,8 +1269,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     try Seq(baseB, chg1, chg2, chg3).foreach { c =>
       input.addData(c: _*); q.processAllAvailable()
     } finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == 3L)
 
     // q145's merge rules applied in one shot (latest-op-wins, D drops,
@@ -1308,9 +1294,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(chg1.exists(_.k % 13 == 0), "fixture must exercise the D→U overlap")
     assert(chg3.forall(c => got.contains(c.k)) && chg3.nonEmpty)
     // bounded state: exactly the live keys, pruned history
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     // replay the committed last batch (post-crash re-execution)
     Demos.cdcApplyBatch(spark, chg3.toDF(), dir, last)
@@ -1331,8 +1315,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s26NoveltyMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def counters(v: Long): Map[String, (Long, Long)] =
@@ -1351,9 +1334,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       .select("text").distinct().count()
     assert(seenDf.count() == nDistinctTexts, "seen-set not distinct-text-sized")
     // versioned history pruned to the last two snapshots
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     // replay the committed last batch (post-crash re-execution)
     Demos.noveltyBatch(spark, chunks.last.toSeq.toDF(), dir, last)
@@ -1379,8 +1360,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s28DecontamMonitor(spark, input.toDF(), benchGrams, dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def counters(v: Long): Map[String, (Long, Long)] =
@@ -1395,9 +1375,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(spark.read.parquet(s"$dir/v=$last/counts").count() ==
       got.size.toLong, "state not language-cardinality-bounded")
     // versioned history pruned to the last two snapshots
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     // replay the committed last batch (post-crash re-execution)
     Demos.decontamBatch(spark, chunks.last.toSeq.toDF(), benchGrams, dir, last)
@@ -1417,8 +1395,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s29PaddingMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def snapshot(v: Long): Map[(String, Int), (Long, Long, Long)] =
@@ -1444,9 +1421,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     // state: one row per (lang, cap) bucket, never doc-volume-scaled
     assert(got.size <= 5 * 4, "state not langs×rungs-bounded")
     // versioned history pruned to the last two snapshots
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     // replay the committed last batch (post-crash re-execution)
     Demos.paddingBatch(spark, chunks.last.toSeq.toDF(), dir, last)
@@ -1467,8 +1442,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s30RedactionMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     // derive q200's per-type rollup from the (event_type, template) snapshot
@@ -1489,9 +1463,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(spark.read.parquet(s"$dir/v=$last/counts").count() ==
       expected.values.map(_._5).sum, "state not template-cardinality-bounded")
     // versioned history pruned to the last two snapshots
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     // replay the committed last batch (post-crash re-execution)
     Demos.redactionBatch(spark, chunks.last.toSeq.toDF(), dir, last)
@@ -1515,8 +1487,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s31DqMonitor(spark, input.toDF(), custDim, dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def counters(v: Long): Map[String, (Long, Long)] =
@@ -1530,9 +1501,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected, s"streamed DQ counters $got != batch q202 $expected")
     assert(got.size == 3, "state not 3 counter rows")
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     Demos.dqBatch(spark, chunks.last.toSeq.toDF(), custDim, dir, last)
     assert(counters(last) == got, "replaying the committed last batch changed the counters")
@@ -1554,8 +1523,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s32TransitionMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def matrix(v: Long): Map[(String, String), Long] =
@@ -1587,9 +1555,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(stationary(got) == q210, "derived stationary != batch q210")
 
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     Demos.transitionBatch(spark, chunks.last.toSeq.toDF(), dir, last)
     assert(matrix(last) == got, "replaying the committed last batch changed the matrix")
@@ -1608,8 +1574,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s33SeasonalMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     // derive q215's full row (n, avg, load_ratio) from the cell state
@@ -1628,9 +1593,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
         ((r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
     assert(got == expected, "streamed seasonal profile != batch q215")
     assert(got.size <= 168, "state not grid-bounded")
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     Demos.seasonalBatch(spark, chunks.last.toSeq.toDF(), dir, last)
     assert(profile(last) == got, "replaying the committed last batch changed the profile")
@@ -1649,8 +1612,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s27BurstMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def bursts(v: Long): Set[(String, Long, Long, Long, Long)] =
@@ -1689,8 +1651,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     val q = Demos.s24FreshnessMonitor(spark, input.toDF(), dir)
     try chunks.foreach { c => input.addData(c.toSeq: _*); q.processAllAvailable() }
     finally StreamStart.stop(q)
-    val last = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).max
+    val last = versions(dir).max
     assert(last == chunks.length - 1)
 
     def us(e: Event): Long = {
@@ -1707,9 +1668,7 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     assert(got.values.exists(_._3 == 0L), "some type must own the high-water mark")
     // bounded state, pruned history, idempotent replay
     assert(spark.read.parquet(s"$dir/v=$last/state").count() <= 5)
-    val surviving = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-      .sorted.toSeq
+    val surviving = versions(dir)
     assert(surviving == Seq(last - 1, last))
     Demos.freshnessBatch(spark, chunks.last.toSeq.toDF(), dir, last)
     assert(audit(last) == got, "replaying the committed last batch changed the audit")

@@ -25,3 +25,11 @@ trait TempDirs extends TestSuite {
     finally Iterator.continually(made.poll()).takeWhile(_ != null)
       .foreach(d => FileUtils.deleteQuietly(d.toFile))
 }
+
+object TempDirs {
+  /** The snapshot versions under `dir`, ascending, listed with plain
+    * `java.io.File` rather than the code under test. */
+  def versions(dir: String): Seq[Long] =
+    new java.io.File(dir).list().toSeq
+      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).sorted
+}
