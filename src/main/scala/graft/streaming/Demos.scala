@@ -313,8 +313,9 @@ case class InitSeen(sig: Long, canonical_id: Long, tsMillis: Long)
   * corpus already holds. The initial state (one `SeenDoc` per signature,
   * canonical = first doc in event-time order — exactly what s8 would
   * have left in the store) is loaded through `handleInitialState` on the
-  * job's FIRST batch, then live ingest proceeds under s8's rules:
-  * intra-batch event-time order, first-arrival across batches.
+  * job's FIRST batch, then live ingest runs s8's claim fold
+  * ([[Demos.claimSignature]]): intra-batch event-time order, first-arrival
+  * across batches. No timer: the warm-started seen-set is kept.
   */
 class DedupWarmStartProcessor
     extends StatefulProcessorWithInitialState[Long, DocSigned, DedupVerdict, SeenDoc] {
@@ -328,21 +329,9 @@ class DedupWarmStartProcessor
 
   override def handleInputRows(
       key: Long, rows: Iterator[DocSigned], tv: TimerValues): Iterator[DedupVerdict] = {
-    val docsSorted = rows.toVector.sortBy(d => (d.ts.getTime, d.doc_id))
-    val out = Vector.newBuilder[DedupVerdict]
-    var s = if (seen.exists()) Option(seen.get()) else None
-    for (d <- docsSorted) {
-      s match {
-        case None =>
-          s = Some(SeenDoc(d.doc_id, d.ts.getTime))
-          out += DedupVerdict(d.doc_id, key, is_first = true, d.doc_id)
-        case Some(prev) =>
-          s = Some(prev.copy(tsMillis = math.max(prev.tsMillis, d.ts.getTime)))
-          out += DedupVerdict(d.doc_id, key, is_first = false, prev.canonical_id)
-      }
-    }
-    s.foreach(seen.update)
-    out.result().iterator
+    val (s, out) = Demos.claimSignature(key, rows, if (seen.exists()) Option(seen.get()) else None)
+    seen.update(s)
+    out
   }
 }
 
@@ -358,7 +347,7 @@ class DedupWarmStartProcessor
   *  - s2 = R12+R14: watermark + tumbling event-time window.
   *  - s3 = R9 dedup with watermark-bounded state.
   *  - s4 = R9+R11+R13: the literal KeyedBroadcastProcessFunction
-  *    translation — per-key GroupState + event-time timeout.
+  *    translation — per-key state + [[KeyedState]]'s idle timer.
   *  - s5 = R14 session windows.
   */
 object Demos {
@@ -497,39 +486,24 @@ object Demos {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
   /** s4 — the KeyedBroadcastProcessFunction#processElement translation:
-    * per-key mutable state (ValueState[LastEvent]) + event-time timer for
-    * state cleanup, emitting click→purchase matches. */
+    * per-key mutable state (ValueState[LastEvent]) with the cleanup timer
+    * of [[KeyedState]] (R13), emitting click→purchase matches. */
   def s4PatternDetect(spark: SparkSession, events: DataFrame): Dataset[PatternMatch] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, PatternMatch](OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) {
-            // R13: the timer fired — drop idle per-key state.
-            state.remove()
-            Iterator.empty
-          } else {
-            // Micro-batch group iterators carry no order guarantee; impose
-            // event-time order so cross-batch and intra-batch behavior agree.
-            val evs = it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
-            val out = Vector.newBuilder[PatternMatch]
-            var last = state.getOption
-            for (e <- evs) {
-              if (e.event_type == "purchase" && last.exists(_.event_type == "click"))
-                out += PatternMatch(uid, last.get.event_id, e.event_id, e.ts)
-              last = Some(LastEvent(e.event_type, e.event_id, e.ts.getTime))
-            }
-            last.foreach { l =>
-              state.update(l)
-              // Clean up state one hour of event time after the last event.
-              state.setTimeoutTimestamp(l.tsMillis + 3600 * 1000L)
-            }
-            out.result().iterator
-          }
+    KeyedState.fold(events.withWatermark("ts", "10 minutes").as[Event])(_.user_id)(
+        (l: LastEvent) => l.tsMillis) { (uid, it, prev, _) =>
+      // Micro-batch group iterators carry no order guarantee; impose
+      // event-time order so cross-batch and intra-batch behavior agree.
+      val evs = it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
+      val out = Vector.newBuilder[PatternMatch]
+      var last = prev
+      for (e <- evs) {
+        if (e.event_type == "purchase" && last.exists(_.event_type == "click"))
+          out += PatternMatch(uid, last.get.event_id, e.event_id, e.ts)
+        last = Some(LastEvent(e.event_type, e.event_id, e.ts.getTime))
       }
+      (last.get, out.result().iterator)
+    }
   }
 
   /** s6 — watermarked stream-stream join: each purchase is joined to the
@@ -605,47 +579,41 @@ object Demos {
     * has been emitted, append mode cannot revise it, so a later batch
     * carrying an earlier-event-time duplicate is marked `is_first = false`
     * against the already-claimed canonical (StreamingDemosSpec locks this
-    * in). Per-key GroupState holds only (canonical_id, tsMillis) — O(1)
-    * per distinct content — and an event-time timer evicts signatures idle
-    * for an hour, the same bounded-state trade as s3DedupBounded: a
-    * duplicate arriving after eviction is re-admitted (at 100 TB an
-    * unbounded seen-set is a state-store, not a stream).
+    * in). Per-key state holds only (canonical_id, tsMillis) — O(1) per
+    * distinct content — under [[KeyedState]]'s idle timer, the same
+    * bounded-state trade as s3DedupBounded: a duplicate arriving after
+    * eviction is re-admitted (at 100 TB an unbounded seen-set is a
+    * state-store, not a stream).
     */
   def s8DedupBySignature(spark: SparkSession, docs: DataFrame): Dataset[DedupVerdict] = {
     import spark.implicits._
-    docs
+    val signed = docs
       .withWatermark("ts", "10 minutes")
       .withColumn("sig", xxhash64(col("text"))) // codegen'd, projection-only
       .as[DocSigned]
-      .groupByKey(_.sig)
-      .flatMapGroupsWithState[SeenDoc, DedupVerdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (sig: Long, it: Iterator[DocSigned], state: GroupState[SeenDoc]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // impose event-time order so intra- and cross-batch agree
-            val docsSorted = it.toVector.sortBy(d => (d.ts.getTime, d.doc_id))
-            val out = Vector.newBuilder[DedupVerdict]
-            var seen = state.getOption
-            for (d <- docsSorted) {
-              seen match {
-                case None =>
-                  seen = Some(SeenDoc(d.doc_id, d.ts.getTime))
-                  out += DedupVerdict(d.doc_id, sig, is_first = true, d.doc_id)
-                case Some(s) =>
-                  seen = Some(s.copy(tsMillis = math.max(s.tsMillis, d.ts.getTime)))
-                  out += DedupVerdict(d.doc_id, sig, is_first = false, s.canonical_id)
-              }
-            }
-            seen.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.tsMillis + 3600 * 1000L)
-            }
-            out.result().iterator
-          }
+    KeyedState.fold(signed)(_.sig)((s: SeenDoc) => s.tsMillis)(
+      (sig, it, prev, _) => claimSignature(sig, it, prev))
+  }
+
+  /** s8's claim fold, shared with s13's [[DedupWarmStartProcessor]]: in
+    * event-time order (so intra- and cross-batch agree) the first arrival
+    * claims `sig`, and every later doc is a duplicate pointing at the
+    * canonical. Returns the signature's state and the verdicts. */
+  private[streaming] def claimSignature(sig: Long, docs: Iterator[DocSigned],
+      prev: Option[SeenDoc]): (SeenDoc, Iterator[DedupVerdict]) = {
+    val out = Vector.newBuilder[DedupVerdict]
+    var seen = prev
+    for (d <- docs.toVector.sortBy(d => (d.ts.getTime, d.doc_id))) {
+      seen match {
+        case None =>
+          seen = Some(SeenDoc(d.doc_id, d.ts.getTime))
+          out += DedupVerdict(d.doc_id, sig, is_first = true, d.doc_id)
+        case Some(s) =>
+          seen = Some(s.copy(tsMillis = math.max(s.tsMillis, d.ts.getTime)))
+          out += DedupVerdict(d.doc_id, sig, is_first = false, s.canonical_id)
       }
+    }
+    (seen.get, out.result().iterator)
   }
 
   /** s9 — NEAR-dup candidates on ingest: the streaming form of the
@@ -662,37 +630,27 @@ object Demos {
     * the batch band-join on the same data. State per signature is the doc
     * ids that claimed it — O(cluster size), the same growth as the batch
     * bucket; a production cap would keep only the first K (dedup needs
-    * one collision, not all), and the event-time timer evicts signatures
-    * idle for an hour, as in s8.
+    * one collision, not all). Idle signatures are evicted by
+    * [[KeyedState]]'s timer.
     */
   def s9NearDupCandidates(spark: SparkSession, docs: DataFrame): Dataset[NearDupCandidate] = {
     import spark.implicits._
-    graft.ops.LlmExt2.withBandSigs(
+    val banded = graft.ops.LlmExt2.withBandSigs(
         docs.withWatermark("ts", "10 minutes"),
         col("doc_id"), col("ts"), col("lang"))
       .as[DocBandSig]
-      .groupByKey(d => (d.lang, d.band, d.sig))
-      .flatMapGroupsWithState[BandSeen, NearDupCandidate](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Int, Long), it: Iterator[DocBandSig], state: GroupState[BandSeen]) =>
-          val (lang, band, sig) = key
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // intra-batch ties in event-time order, as s8
-            val arrived = it.toVector.sortBy(d => (d.ts.getTime, d.doc_id))
-            val out = Vector.newBuilder[NearDupCandidate]
-            var seen = state.getOption.getOrElse(BandSeen(Nil, 0L))
-            for (d <- arrived) {
-              seen.docIds.foreach(h => out += NearDupCandidate(d.doc_id, h, lang, band, sig))
-              seen = BandSeen(d.doc_id :: seen.docIds, math.max(seen.lastTsMillis, d.ts.getTime))
-            }
-            state.update(seen)
-            state.setTimeoutTimestamp(seen.lastTsMillis + 3600 * 1000L)
-            out.result().iterator
-          }
-      }
+    KeyedState.fold(banded)(d => (d.lang, d.band, d.sig))((s: BandSeen) => s.lastTsMillis) {
+      case ((lang, band, sig), it, prev, _) =>
+        // intra-batch ties in event-time order, as s8
+        val arrived = it.toVector.sortBy(d => (d.ts.getTime, d.doc_id))
+        val out = Vector.newBuilder[NearDupCandidate]
+        var seen = prev.getOrElse(BandSeen(Nil, 0L))
+        for (d <- arrived) {
+          seen.docIds.foreach(h => out += NearDupCandidate(d.doc_id, h, lang, band, sig))
+          seen = BandSeen(d.doc_id :: seen.docIds, math.max(seen.lastTsMillis, d.ts.getTime))
+        }
+        (seen, out.result().iterator)
+    }
   }
 
   /** s10 — decontamination on ingest: the broadcast-state pattern (s1)
@@ -918,53 +876,41 @@ object Demos {
     * State is bounded two ways: claimed wends strictly below the current
     * watermark day can never be re-claimed (any surviving event has
     * epday >= watermark day, and claims only reach forward), so they are
-    * pruned every invocation; and an event-time timer evicts users idle
-    * for an hour, as s8. Per-user state is therefore O(watermark horizon
-    * + window length) days — a state store at 100 TB, same trade as s8's
-    * seen-set.
+    * pruned every invocation; and [[KeyedState]]'s timer evicts idle
+    * users. Per-user state is therefore O(watermark horizon + window
+    * length) days — a state store at 100 TB, same trade as s8's seen-set.
     */
   def s17RollingActive(spark: SparkSession, events: DataFrame): Dataset[WendClaim] = {
     import spark.implicits._
-    events
+    val days = events
       .withWatermark("ts", "10 minutes")
       .select(col("user_id"), col("ts"),
         datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).as("epday"))
       .as[EventDay]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[WendSeen, WendClaim](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[EventDay], state: GroupState[WendSeen]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // intra-batch ties in event-time order, as s8 (the claim SET
-            // is order-free; the order only fixes which event claims)
-            val arrived = it.toVector.sortBy(e => (e.ts.getTime, e.epday))
-            var seen = state.getOption.getOrElse(WendSeen(Nil, 0L))
-            val out = Vector.newBuilder[WendClaim]
-            for (e <- arrived) {
-              var w = e.epday
-              while (w <= e.epday + 6) {
-                if (!seen.wends.contains(w)) {
-                  out += WendClaim(uid,
-                    java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(w.toLong)))
-                  seen = seen.copy(wends = w :: seen.wends)
-                }
-                w += 1
-              }
-              seen = seen.copy(
-                lastTsMillis = math.max(seen.lastTsMillis, e.ts.getTime))
-            }
-            // watermark-final wends are unreachable by any future event
-            // (late rows below the watermark never reach this operator)
-            val wmDay = (state.getCurrentWatermarkMs() / 86400000L).toInt
-            seen = seen.copy(wends = seen.wends.filter(_ >= wmDay))
-            state.update(seen)
-            state.setTimeoutTimestamp(seen.lastTsMillis + 3600 * 1000L)
-            out.result().iterator
+    KeyedState.fold(days)(_.user_id)((s: WendSeen) => s.lastTsMillis) { (uid, it, prev, wmMs) =>
+      // intra-batch ties in event-time order, as s8 (the claim SET
+      // is order-free; the order only fixes which event claims)
+      val arrived = it.toVector.sortBy(e => (e.ts.getTime, e.epday))
+      var seen = prev.getOrElse(WendSeen(Nil, 0L))
+      val out = Vector.newBuilder[WendClaim]
+      for (e <- arrived) {
+        var w = e.epday
+        while (w <= e.epday + 6) {
+          if (!seen.wends.contains(w)) {
+            out += WendClaim(uid,
+              java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(w.toLong)))
+            seen = seen.copy(wends = w :: seen.wends)
           }
+          w += 1
+        }
+        seen = seen.copy(
+          lastTsMillis = math.max(seen.lastTsMillis, e.ts.getTime))
       }
+      // watermark-final wends are unreachable by any future event
+      // (late rows below the watermark never reach this operator)
+      val wmDay = (wmMs / 86400000L).toInt
+      (seen.copy(wends = seen.wends.filter(_ >= wmDay)), out.result().iterator)
+    }
   }
 
   /** s18 — last-touch attribution on ingest: the streaming form of batch
@@ -975,37 +921,25 @@ object Demos {
     * micro-batch events are walked in (ts, event_id) order, ACROSS
     * batches the carry is arrival-order (append mode cannot revise an
     * emitted credit) — on the single-batch file source the result equals
-    * batch q110 exactly (StreamingEquivalenceSpec). An event-time timer
-    * evicts users idle for an hour, as s8.
+    * batch q110 exactly (StreamingEquivalenceSpec). Idle users are
+    * evicted by [[KeyedState]]'s timer.
     */
   def s18AttributionTracker(spark: SparkSession, events: DataFrame): Dataset[Credit] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchState, Credit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[TouchState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrived = it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
-            var st = state.getOption.getOrElse(TouchState(null, 0L))
-            val out = Vector.newBuilder[Credit]
-            for (e <- arrived) {
-              if (e.event_type == "purchase")
-                out += Credit(uid, e.event_id,
-                  if (st.touch == null) "none" else st.touch)
-              else st = st.copy(touch = e.event_type)
-              st = st.copy(lastMs = math.max(st.lastMs, e.ts.getTime))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + 3600 * 1000L)
-            out.result().iterator
-          }
+    KeyedState.fold(events.withWatermark("ts", "10 minutes").as[Event])(_.user_id)(
+        (s: TouchState) => s.lastMs) { (uid, it, prev, _) =>
+      val arrived = it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
+      var st = prev.getOrElse(TouchState(null, 0L))
+      val out = Vector.newBuilder[Credit]
+      for (e <- arrived) {
+        if (e.event_type == "purchase")
+          out += Credit(uid, e.event_id,
+            if (st.touch == null) "none" else st.touch)
+        else st = st.copy(touch = e.event_type)
+        st = st.copy(lastMs = math.max(st.lastMs, e.ts.getTime))
       }
+      (st, out.result().iterator)
+    }
   }
 
   /** s19 — peak-drop monitoring on ingest: the streaming form of batch
@@ -1015,38 +949,26 @@ object Demos {
     * strictly deeper than the last, so the alert stream is sparse even on
     * a noisy series). On the single-batch file source the deepest alert
     * per user equals q114's max_drop exactly and users with zero drop
-    * alert never (StreamingEquivalenceSpec). Event-time timer evicts
-    * users idle for an hour, as s8/s18.
+    * alert never (StreamingEquivalenceSpec). Idle users are evicted by
+    * [[KeyedState]]'s timer.
     */
   def s19PeakDropMonitor(spark: SparkSession, events: DataFrame): Dataset[DropAlert] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[PeakState, DropAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[PeakState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrived = it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
-            var st = state.getOption.getOrElse(PeakState(Long.MinValue, 0L, 0L))
-            val out = Vector.newBuilder[DropAlert]
-            for (e <- arrived) {
-              val cents = math.round(e.value * 100) // exact on 2-decimal data
-              val peak = math.max(st.peakCents, cents)
-              val drop = peak - cents
-              if (drop > st.maxDropCents) out += DropAlert(uid, e.event_id, drop)
-              st = PeakState(peak, math.max(st.maxDropCents, drop),
-                math.max(st.lastMs, e.ts.getTime))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + 3600 * 1000L)
-            out.result().iterator
-          }
+    KeyedState.fold(events.withWatermark("ts", "10 minutes").as[Event])(_.user_id)(
+        (s: PeakState) => s.lastMs) { (uid, it, prev, _) =>
+      val arrived = it.toVector.sortBy(e => (e.ts.getTime, e.event_id))
+      var st = prev.getOrElse(PeakState(Long.MinValue, 0L, 0L))
+      val out = Vector.newBuilder[DropAlert]
+      for (e <- arrived) {
+        val cents = math.round(e.value * 100) // exact on 2-decimal data
+        val peak = math.max(st.peakCents, cents)
+        val drop = peak - cents
+        if (drop > st.maxDropCents) out += DropAlert(uid, e.event_id, drop)
+        st = PeakState(peak, math.max(st.maxDropCents, drop),
+          math.max(st.lastMs, e.ts.getTime))
       }
+      (st, out.result().iterator)
+    }
   }
 
   /** s20 — activity-streak tracking on ingest: the streaming form of
@@ -1060,64 +982,52 @@ object Demos {
     * whose newest day is below watermarkDay - 1 can never be extended or
     * bridged by a surviving event (late rows below the watermark never
     * reach this operator), so its days are pruned — the best summary
-    * alone survives — and an event-time timer evicts users idle for an
-    * hour, as s8/s17/s19. Per-user state is therefore O(watermark
-    * horizon) days, a state store at 100 TB — the same trade as s17's
-    * claim set.
+    * alone survives — and [[KeyedState]]'s timer evicts idle users.
+    * Per-user state is therefore O(watermark horizon) days, a state store
+    * at 100 TB — the same trade as s17's claim set.
     */
   def s20StreakTracker(spark: SparkSession, events: DataFrame): Dataset[StreakRecord] = {
     import spark.implicits._
-    events
+    val epdays = events
       .withWatermark("ts", "10 minutes")
       .select(col("user_id"), col("ts"),
         datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).as("epday"))
       .as[EventDay]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[StreakState, StreakRecord](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[EventDay], state: GroupState[StreakState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrived = it.toVector
-            var st = state.getOption.getOrElse(StreakState(Nil, 0, 0, 0, 0L))
-            val days =
-              (arrived.map(_.epday) ++ st.days).distinct.sorted
-            // islands of consecutive days, ascending by start
-            val islands = Vector.newBuilder[(Int, Int)]
-            if (days.nonEmpty) {
-              var s0 = days.head
-              var prev = days.head
-              for (d <- days.tail) {
-                if (d == prev + 1) prev = d
-                else { islands += ((s0, prev)); s0 = d; prev = d }
-              }
-              islands += ((s0, prev))
-            }
-            val out = Vector.newBuilder[StreakRecord]
-            for ((a, b) <- islands.result()) {
-              val len = b - a + 1
-              if (len > st.bestLen || (len == st.bestLen && a < st.bestStart)) {
-                st = st.copy(bestLen = len, bestStart = a, bestEnd = b)
-                out += StreakRecord(uid, len,
-                  java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(a.toLong)),
-                  java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(b.toLong)))
-              }
-            }
-            // prune islands no surviving event can extend or bridge: any
-            // future event has epday >= watermark day, and can only touch
-            // an island whose newest day is >= that day - 1
-            val wmDay = (state.getCurrentWatermarkMs() / 86400000L).toInt
-            val kept = islands.result().filter(_._2 >= wmDay - 1)
-              .flatMap { case (a, b) => a to b }
-            val lastMs = (st.lastMs +: arrived.map(_.ts.getTime)).max
-            st = st.copy(days = kept.toList, lastMs = lastMs)
-            state.update(st)
-            state.setTimeoutTimestamp(lastMs + 3600 * 1000L)
-            out.result().iterator
-          }
+    KeyedState.fold(epdays)(_.user_id)((s: StreakState) => s.lastMs) { (uid, it, prevState, wmMs) =>
+      val arrived = it.toVector
+      var st = prevState.getOrElse(StreakState(Nil, 0, 0, 0, 0L))
+      val days =
+        (arrived.map(_.epday) ++ st.days).distinct.sorted
+      // islands of consecutive days, ascending by start
+      val islands = Vector.newBuilder[(Int, Int)]
+      if (days.nonEmpty) {
+        var s0 = days.head
+        var prev = days.head
+        for (d <- days.tail) {
+          if (d == prev + 1) prev = d
+          else { islands += ((s0, prev)); s0 = d; prev = d }
+        }
+        islands += ((s0, prev))
       }
+      val out = Vector.newBuilder[StreakRecord]
+      for ((a, b) <- islands.result()) {
+        val len = b - a + 1
+        if (len > st.bestLen || (len == st.bestLen && a < st.bestStart)) {
+          st = st.copy(bestLen = len, bestStart = a, bestEnd = b)
+          out += StreakRecord(uid, len,
+            java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(a.toLong)),
+            java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(b.toLong)))
+        }
+      }
+      // prune islands no surviving event can extend or bridge: any
+      // future event has epday >= watermark day, and can only touch
+      // an island whose newest day is >= that day - 1
+      val wmDay = (wmMs / 86400000L).toInt
+      val kept = islands.result().filter(_._2 >= wmDay - 1)
+        .flatMap { case (a, b) => a to b }
+      val lastMs = (st.lastMs +: arrived.map(_.ts.getTime)).max
+      (st.copy(days = kept.toList, lastMs = lastMs), out.result().iterator)
+    }
   }
 
   /** s21 — streaming Count-Min-Sketch monitor: the ingest-time twin of

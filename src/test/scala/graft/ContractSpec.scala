@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * through StreamStart and every suite stops its streams through it, the
   * k-means step lives only in ops/Lloyd, the sign-hash kernel only in
   * plans/SignHash, the versioned-sink layout only in
-  * streaming/VersionedSink, and s1's batch body runs its one job without
+  * streaming/VersionedSink, the idle-timer protocol only in
+  * streaming/KeyedState, and s1's batch body runs its one job without
   * per-batch closure cleaning.
   */
 class ContractSpec extends AnyFunSuite {
@@ -238,6 +239,24 @@ class ContractSpec extends AnyFunSuite {
     } yield s"$p:${n + 1}: ${line.trim}"
     assert(hits.isEmpty,
       s"${hits.size} version path(s) outside VersionedSink:\n  ${hits.mkString("\n  ")}")
+    assert(Files.exists(owner))
+  }
+
+  test("the idle-timer protocol lives only in streaming/KeyedState.scala") {
+    // seven GroupState demos had each spelled out the timed-out removal,
+    // the event-time timeout and the one-hour timer; a copy that sets its
+    // timer from another field or horizon evicts keys the others keep
+    val owner = Paths.get("src/main/scala/graft/streaming/KeyedState.scala")
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toVector
+      if p.toString.endsWith(".scala") && p != owner
+      (line, n) <- read(p.toString).split("\n").zipWithIndex
+      if !Seq("//", "*", "/*").exists(line.trim.startsWith)
+      token <- Seq("hasTimedOut", "setTimeoutTimestamp", "EventTimeTimeout")
+      if line.contains(token)
+    } yield s"$p:${n + 1}: $token"
+    assert(hits.isEmpty,
+      s"${hits.size} idle-timer step(s) outside KeyedState:\n  ${hits.mkString("\n  ")}")
     assert(Files.exists(owner))
   }
 

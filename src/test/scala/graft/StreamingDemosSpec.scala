@@ -516,6 +516,61 @@ class StreamingDemosSpec extends AnyFunSuite with TempDirs {
     } finally StreamStart.stop(q)
   }
 
+  test("s4, s17–s20: a key idle past the watermark + 1 h horizon is forgotten, a younger one kept") {
+    import org.apache.spark.sql.functions.col
+    // batch 1: user 1's events at 22:50 (timer 23:50), user 2's at 23:05
+    // (timer 00:05); pushers take the watermark to 00:01 the next day, 71 min
+    // past user 1's last event and 56 min past user 2's; then both users
+    // send the same final event at 00:35. Day d is 2024-01-01 plus d days.
+    def day(d: Int) = java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString
+    // UTC instants, so the event days do not depend on the JVM's zone
+    def at(id: Long, minute: Int, uid: Long, typ: String, v: Double): Event = Event(id,
+      Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z").plusSeconds(minute * 60L)),
+      uid, typ, v, """{"k": 1}""")
+    /** `first` is each user's batch-1 event and `last` the final one, as
+      * (type, value); `forgotten` and `kept` are the final batch's `column`
+      * values for user 1 and user 2. */
+    case class IdleCase(name: String, run: org.apache.spark.sql.DataFrame => Dataset[_],
+        first: (String, Double), last: (String, Double), column: String,
+        forgotten: Seq[String], kept: Seq[String])
+    val cases = Seq(
+      IdleCase("s4", Demos.s4PatternDetect(spark, _), ("click", 1.0), ("purchase", 1.0),
+        "purchase_event_id", Seq(), Seq("202")),
+      IdleCase("s17", Demos.s17RollingActive(spark, _), ("view", 1.0), ("view", 1.0),
+        "wend", (1 to 7).map(day), Seq(day(7))),
+      IdleCase("s18", Demos.s18AttributionTracker(spark, _), ("click", 1.0), ("purchase", 1.0),
+        "channel", Seq("none"), Seq("click")),
+      IdleCase("s19", Demos.s19PeakDropMonitor(spark, _), ("view", 10.0), ("view", 8.0),
+        "dropCents", Seq(), Seq("200")),
+      IdleCase("s20", Demos.s20StreakTracker(spark, _), ("view", 1.0), ("view", 1.0),
+        "len", Seq("1"), Seq("2")))
+    for (c <- cases) {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[Event]
+      val q = c.run(input.toDF())
+        .writeStream.outputMode("append").format("memory").queryName(s"${c.name}_idle").start()
+      def out(): Seq[(Long, String)] = spark.table(s"${c.name}_idle")
+        .select(col("user_id"), col(c.column).cast("string")).as[(Long, String)].collect().toSeq
+      try {
+        input.addData(at(101, 22 * 60 + 50, 1, c.first._1, c.first._2),
+          at(102, 23 * 60 + 5, 2, c.first._1, c.first._2))
+        runToCompletion(q)
+        input.addData(at(90, 24 * 60 + 10, 9, "view", 1.0))
+        runToCompletion(q)
+        input.addData(at(91, 24 * 60 + 11, 9, "view", 1.0))
+        runToCompletion(q)
+        val before = out()
+        input.addData(at(201, 24 * 60 + 35, 1, c.last._1, c.last._2),
+          at(202, 24 * 60 + 35, 2, c.last._1, c.last._2))
+        runToCompletion(q)
+        val fin = out().diff(before)
+        def of(u: Long) = fin.filter(_._1 == u).map(_._2).sorted
+        assert(of(1) == c.forgotten, s"${c.name}: user 1, idle past the horizon, must start afresh: $fin")
+        assert(of(2) == c.kept, s"${c.name}: user 2, within the horizon, must keep its state: $fin")
+      } finally StreamStart.stop(q)
+    }
+  }
+
   test("s10: decontamination on ingest == the batch contamination rule, across batches") {
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     implicit val sqlCtx = spark.sqlContext
