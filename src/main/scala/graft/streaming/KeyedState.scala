@@ -10,11 +10,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the timer protocol:
   *   - a key whose timer fired is removed and emits nothing;
   *   - otherwise `step(key, rows, prev, watermarkMs)` folds the key's rows
-  *     of this micro-batch into its state (`prev` is `None` for a new key)
-  *     and returns `(next, output)`; `next` is stored, and the key's timer
-  *     is set to `lastMs(next) + IdleMs`, where `lastMs` is the newest
-  *     event time the state holds. A key idle for [[IdleMs]] of event time
-  *     is evicted once the watermark passes that timestamp.
+  *     of this micro-batch (never empty) into its state (`prev` is `None`
+  *     for a new key) and returns `(next, output)`; `next` is stored, and
+  *     the key's timer is set to `lastMs(next) + IdleMs`, where `lastMs` is
+  *     the newest event time the state holds. A key idle for [[IdleMs]] of
+  *     event time is evicted once the watermark passes that timestamp.
   * The event-time timeout needs a watermark on `rows`.
   */
 object KeyedState {
